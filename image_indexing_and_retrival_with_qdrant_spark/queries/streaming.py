@@ -32,25 +32,28 @@ __all__ = ["stream_tumbling_5min", "stream_click_purchase_band",
            "stream_session_windows", "stream_stateful_dedup"]
 
 
-def _drain_to_table(stream_df, spark: SparkSession, mode: str,
-                    state_partitions: int = 4, post=None) -> DataFrame:
-    """Run a bounded stream to completion into a memory sink; return
-    the materialized result (collected before the query object goes
-    away, so the frame survives the sink).
+_STATE_PARTITIONS = 4
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for
-    the stream's lifetime (restored after): a stateful streaming
-    operator creates one state-store instance — and for
-    ``applyInPandasWithState`` one Python state worker — per shuffle
-    partition per micro-batch, so the partition count is a deliberate
-    state-sizing decision, not a default to inherit. The fixture
-    streams carry a few thousand rows; 32 state stores is pure
-    structural overhead (measured: the heaviest drain drops ~2×). At
-    scale, size it to state volume / executor memory (SCALE.md
-    §Streaming) — the conf is fixed at the query's FIRST start and
-    pinned by its checkpoint thereafter."""
+
+def _drain_to_table(stream_df, spark: SparkSession, mode: str) -> DataFrame:
+    """Run a bounded stream to completion into a memory sink and return
+    the sink table. The sink view stays readable after ``q.stop()`` and
+    is never dropped, so the frame outlives the query object with no
+    second copy of the rows, and a reduction on it runs as a Spark job
+    whose result alone reaches Python.
+
+    ``_STATE_PARTITIONS`` scopes ``spark.sql.shuffle.partitions`` to
+    the drain (restored after): a stateful streaming operator
+    creates one state-store instance per shuffle partition per
+    micro-batch, so the partition count is a deliberate state-sizing
+    decision, not a default to inherit. The fixture streams carry a few
+    thousand rows; 32 state stores is pure structural overhead
+    (measured: the heaviest drain drops ~2×). At scale, size it to
+    state volume / executor memory (SCALE.md §Streaming) — the conf is
+    fixed at the query's FIRST start and pinned by its checkpoint
+    thereafter."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
     try:
         name = f"strq_{uuid.uuid4().hex[:8]}"
         q = (
@@ -62,13 +65,7 @@ def _drain_to_table(stream_df, spark: SparkSession, mode: str,
             q.processAllAvailable()
         finally:
             q.stop()
-        out = spark.table(name)
-        if post is not None:
-            # reduce on the sink table BEFORE materializing — a
-            # corpus-sized sink output aggregates executor-side and
-            # only the reduced rows round-trip the driver
-            out = post(out)
-        return local_literal_df(spark, out.collect(), out.schema)
+        return spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -186,13 +183,14 @@ def stream_click_purchase_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``) under the
-    oracle: the events file is delivered TWICE as two micro-batches
-    (``maxFilesPerTrigger=1`` forces the state to carry across batch
-    boundaries), and the in-flight seen-id dedup must emit each event
-    exactly once — per-type counts equal the original table's. This is
-    the append-only-sink analog of MERGE ingest (SURVEY.md §1.4) with
-    the state machinery value-checked, not just behavior-tested."""
+    """Stateful streaming dedup (native ``StreamingDeduplicateExec``)
+    under the oracle: the events file is delivered TWICE as two
+    micro-batches (``maxFilesPerTrigger=1`` forces the state to carry
+    across batch boundaries), and the in-flight seen-id dedup must emit
+    each event exactly once — per-type counts equal the original
+    table's. This is the append-only-sink analog of MERGE ingest
+    (SURVEY.md §1.4) with the state machinery value-checked, not just
+    behavior-tested."""
     import os
     import shutil
     import tempfile
@@ -214,17 +212,10 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = spark.read.parquet(src).schema
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        # state_partitions=16 here, not the light-agg default: the
-        # dedup ships EVERY row through Arrow to a Python state
-        # worker, so worker parallelism (not state-store count) is
-        # the binding constraint for this query. The per-type count
-        # reduces ON the sink table (post=), so the corpus-sized
-        # deduped output never round-trips the driver.
         return _drain_to_table(
             streaming_dedup(stream, key_col="user_id", id_col="event_id"),
-            spark, "append", state_partitions=16,
-            post=lambda df: df.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("n_events")))
+            spark, "append",
+        ).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -1,17 +1,28 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``
-(SURVEY.md §2.7 upgrade path; guide: 'custom stateful operators').
+"""Stateful streaming operators (SURVEY.md §2.7 upgrade path; guide:
+'custom stateful operators').
 
 ``streaming_dedup``: exactly-once *semantic* dedup inside the stream —
-emits only the first occurrence of each id per key group, holding the
-seen-id set as typed group state. This is the streaming analog of the
-MERGE ingest mode: where foreachBatch dedups against the *sink*,
-this dedups in-flight (useful when the sink is append-only, e.g. a
-message bus or immutable object store).
+emits only the first occurrence of each id per key, with the seen
+(key, id) pairs held across micro-batches. It is Spark's native
+streaming ``dropDuplicates``, which plans as
+``StreamingDeduplicateExec``: the state lives in the JVM state store,
+so a drain starts no Python worker and ships no Arrow batches. This is
+the streaming analog of the MERGE ingest mode: where foreachBatch
+dedups against the *sink*, this dedups in-flight (useful when the sink
+is append-only, e.g. a message bus or immutable object store).
 
-State growth: the seen-id set is unbounded by design here (exact
-dedup); production variants bound it with event-time TTL
-(ProcessingTimeTimeout + watermark) or swap the set for a Bloom
-filter column once the per-key cardinality passes a threshold.
+State growth: the seen set is unbounded by design here (exact dedup).
+``dropDuplicatesWithinWatermark`` is the bounded-state option: it
+expires a pair once the event-time watermark passes it, at the price
+of letting a redelivery later than the watermark through.
+
+Checkpoints: this operator's state layout differs from the
+``applyInPandasWithState`` one it replaced, so a checkpoint written by
+the old Python operator cannot be resumed; such a query needs a fresh
+checkpoint location.
+
+``streaming_running_totals`` stays on ``applyInPandasWithState``: a
+per-key typed state (count + sum) emitted in update mode.
 """
 
 from __future__ import annotations
@@ -29,28 +40,7 @@ __all__ = ["streaming_dedup", "streaming_running_totals"]
 def streaming_dedup(events: DataFrame, key_col: str = "user_id",
                     id_col: str = "event_id") -> DataFrame:
     """Keep the first occurrence of each ``id_col`` per ``key_col``."""
-    out_schema = events.schema
-    cols = [f.name for f in events.schema.fields]
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        seen = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            fresh = pdf[~pdf[id_col].isin(seen)].drop_duplicates([id_col])
-            seen.update(fresh[id_col].tolist())
-            if len(fresh):
-                yield fresh[cols]
-        state.update((sorted(seen),))
-
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType="ids array<long>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return events.dropDuplicates([key_col, id_col])
 
 
 def streaming_running_totals(events: DataFrame, key_col: str = "user_id",
