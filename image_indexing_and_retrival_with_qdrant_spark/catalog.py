@@ -65,6 +65,7 @@ import json
 import math
 import os
 import shutil
+from dataclasses import replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,6 +74,7 @@ from pyspark.sql.types import ArrayType, BinaryType
 from .filters import as_predicate
 from .functions.localframe import local_literal_df
 from .functions.vector import as_double, l2_normalize, mean_pool_flat
+from .search_plan import SearchKnobs, SearchPlan, overlay_recall, plan_search
 
 __all__ = ["Collection", "Prefetch", "create_collection",
            "collection_exists", "list_aliases", "update_aliases",
@@ -117,6 +119,15 @@ _LIST_THRESHOLD = os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "512")
 # impossible without hooking the write sites. Schemas are
 # session-independent (plain Spark types, no nanos sidecars here).
 _SCHEMA_CACHE: dict[str, tuple[int, "object"]] = {}
+
+
+def _query_frame(spark: SparkSession, vecs: list,
+                 vec_col: str = "query_vec") -> DataFrame:
+    """A batch's broadcast query side: one ``(query_idx, vec_col)`` row
+    per query vector."""
+    return local_literal_df(
+        spark, [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        f"query_idx int, {vec_col} array<double>")
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -2153,82 +2164,36 @@ class Collection:
                 rotation=cfg.get("opq_rotation"))
         raise ValueError(f"unknown quantization {q!r}")
 
-    def _quant_shortlist(self, spark: SparkSession, qv: list[float],
-                         m: int, id_col: str,
+    def _quant_shortlist(self, spark: SparkSession, qvs: list, m: int,
+                         id_col: str,
                          probe_ids: list[int] | None = None,
                          cfg: dict | None = None,
                          space: str | None = None,
-                         with_scores: bool = False) -> DataFrame:
-        """ids of the m best points under the quantized metric. With
+                         with_scores: bool = False,
+                         batch: bool = False) -> DataFrame:
+        """The m best points under the quantized metric: ids for one
+        query, ``(query_idx, id)`` pairs for a ``batch``. With
         ``probe_ids`` (the composed IVF+quantization path) the codes
         scan is reduced to a literal ``centroid_id IN (...)`` —
         statically partition-pruned on the cells codes layout, so the
         probe reads (nprobe/kc) of an already-4-32×-smaller sidecar.
         ``cfg``/``space`` select a named space's sidecar + train
-        params (default: the collection-level quantizer)."""
-        from .operators.bq import bq_search
-        from .operators.sq import sq_search
+        params (default: the collection-level quantizer).
+        ``with_scores`` keeps the quantized ranking score as ``score``
+        (QuantizationSearchParams(rescore=False) — sq/pq/opq; callers
+        reject bq, whose Hamming rank is not a similarity).
 
-        cfg = self.meta if cfg is None else cfg
-        codes = _read_parquet(spark, self._codes_path_for(space))
-        if probe_ids is not None:
-            codes = codes.filter(
-                F.col("centroid_id").isin([int(i) for i in probe_ids]))
-        if "centroid_id" in codes.columns:
-            codes = codes.drop("centroid_id")
-        if cfg["quantization"] == "sq":
-            short = sq_search(codes, cfg["sq_mins"],
-                              cfg["sq_steps"], qv, k=m, id_col=id_col)
-        elif cfg["quantization"] in ("pq", "opq"):
-            # ADC over the code sidecar; OPQ rotates the query
-            # driver-side (same left-to-right fold as the encode side)
-            from .operators.pq import pq_search
-
-            short = pq_search(codes, cfg["pq_codebooks"],
-                              self._pq_query_vec(cfg, qv), k=m,
-                              id_col=id_col)
-        else:
-            short = bq_search(codes, qv, k=m, id_col=id_col)
-        if with_scores:
-            # QuantizationSearchParams(rescore=False): the quantized
-            # ranking score IS the result score (sq/pq/opq — callers
-            # reject bq, whose Hamming rank is not a similarity)
-            return short.select(id_col, "score")
-        return short.select(id_col)
-
-    @staticmethod
-    def _pq_query_vec(cfg: dict, qv: list) -> list[float]:
-        """The query in code-space coordinates: identity for PQ, the
-        frozen OPQ rotation for ``quantization="opq"`` (zero-mean
-        ``pca_project_py`` — the plain left-to-right double loop,
-        float-identical to the fold-shape row rotation)."""
-        R = cfg.get("opq_rotation")
-        if R is None:
-            return [float(x) for x in qv]
-        from .operators.pca import pca_project_py
-
-        d = len(R)
-        w = [[R[i][j] for i in range(d)] for j in range(d)]
-        return pca_project_py([0.0] * d, w, [float(x) for x in qv])
-
-    def _quant_shortlist_batch(self, spark: SparkSession,
-                               qvs: list[list[float]], m: int, id_col: str,
-                               probe_ids: list[int] | None = None,
-                               cfg: dict | None = None,
-                               space: str | None = None,
-                               with_scores: bool = False) -> DataFrame:
-        """(query_idx, id) pairs of each query's m best points under
-        the quantized metric — ONE codes pass for the whole batch
-        (broadcast query set + per-query window top-m with map-side
-        pruning), the batch analog of :meth:`_quant_shortlist`. SQ
+        One query ranks with the literal ``sq_search`` / ``pq_search``
+        / ``bq_search`` plans. A batch makes ONE codes pass (broadcast
+        query set + per-query window top-m with map-side pruning): SQ
         dequantizes each code row ONCE into an array (the per-row work
-        is shared by all queries, unlike the single-query literal
-        unroll) and ranks by the same left-to-right dequantize-dot
-        ROUND(...,6); BQ ranks by the same exact-integer Hamming sum.
-        With ``probe_ids`` the scan is partition-pruned to the probed
-        cells (the composed batch path)."""
-        from .operators.bq import bq_query_words
+        is shared by all queries) and ranks by the same left-to-right
+        dequantize-dot ROUND(...,6); BQ ranks by the same
+        exact-integer Hamming sum."""
+        from .operators.bq import bq_query_words, bq_search
         from .operators.knn import dot_unrolled
+        from .operators.pq import pq_search
+        from .operators.sq import sq_search
         from .operators.topk import grouped_topk
 
         cfg = self.meta if cfg is None else cfg
@@ -2238,6 +2203,21 @@ class Collection:
                 F.col("centroid_id").isin([int(i) for i in probe_ids]))
         if "centroid_id" in codes.columns:
             codes = codes.drop("centroid_id")
+        score = ["score"] if with_scores else []
+        if not batch:
+            (qv,) = qvs
+            if cfg["quantization"] == "sq":
+                short = sq_search(codes, cfg["sq_mins"],
+                                  cfg["sq_steps"], qv, k=m, id_col=id_col)
+            elif cfg["quantization"] in ("pq", "opq"):
+                # ADC over the code sidecar; OPQ rotates the query
+                # driver-side (same left-to-right fold as the encode side)
+                short = pq_search(codes, cfg["pq_codebooks"],
+                                  self._pq_query_vec(cfg, qv), k=m,
+                                  id_col=id_col)
+            else:
+                short = bq_search(codes, qv, k=m, id_col=id_col)
+            return short.select(id_col, *score)
         if cfg["quantization"] == "sq":
             from .functions.vector import _UNROLL_MAX_DIM, _lit_array_sql
 
@@ -2256,25 +2236,20 @@ class Collection:
                     f" DOUBLE) + 0.5D) * {float(st)!r}D))"
                     for j, (mn, st) in enumerate(zip(mins, steps), start=1)
                 ) + ")")
-            queries = local_literal_df(
-                spark,
-                [(i, [float(x) for x in v]) for i, v in enumerate(qvs)],
-                "query_idx int, query_vec array<double>")
             scored = (codes.withColumn("__deq", deq)
-                      .join(F.broadcast(queries))
+                      .join(F.broadcast(_query_frame(spark, qvs)))
                       .select("query_idx", F.col(id_col),
                               F.round(dot_unrolled(
                                   "__deq", "query_vec", len(mins)),
                                   6).alias("qscore")))
             order = [("qscore", False), (id_col, True)]
         elif cfg["quantization"] in ("pq", "opq"):
-            # ONE codes pass for the whole batch: each query ships its
-            # ADC lookup table as a flat array column (n_blocks ×
-            # k_codes doubles, computed driver-side with the same
-            # left-to-right python dot the single-query literal form
-            # embeds), and the per-row score is the same left-assoc
-            # element_at sum over the row's codes — bit-equal to
-            # pq_search on each query separately.
+            # each query ships its ADC lookup table as a flat array
+            # column (n_blocks × k_codes doubles, computed driver-side
+            # with the same left-to-right python dot the single-query
+            # literal form embeds), and the per-row score is the same
+            # left-assoc element_at sum over the row's codes — bit-equal
+            # to pq_search on each query separately.
             cbs = cfg["pq_codebooks"]
             n_blocks, kc = len(cbs), len(cbs[0])
             subdim = len(cbs[0][0])
@@ -2314,12 +2289,23 @@ class Collection:
             order = [("hamming", True), (id_col, True)]
         out = grouped_topk(scored, ["query_idx"], order, m,
                            local_prune=True)
-        if with_scores:
-            # batch rescore=False: the quantized rank IS the score
-            # (sq/pq/opq — callers reject bq's Hamming rank)
-            return out.select("query_idx", id_col,
-                              F.col(order[0][0]).alias("score"))
-        return out.select("query_idx", id_col)
+        return out.select("query_idx", id_col,
+                          *[F.col(order[0][0]).alias(c) for c in score])
+
+    @staticmethod
+    def _pq_query_vec(cfg: dict, qv: list) -> list[float]:
+        """The query in code-space coordinates: identity for PQ, the
+        frozen OPQ rotation for ``quantization="opq"`` (zero-mean
+        ``pca_project_py`` — the plain left-to-right double loop,
+        float-identical to the fold-shape row rotation)."""
+        R = cfg.get("opq_rotation")
+        if R is None:
+            return [float(x) for x in qv]
+        from .operators.pca import pca_project_py
+
+        d = len(R)
+        w = [[R[i][j] for i in range(d)] for j in range(d)]
+        return pca_project_py([0.0] * d, w, [float(x) for x in qv])
 
     # -- PCA transform (FAISS "PCA,IVF" as collection config) -------------
 
@@ -2415,17 +2401,19 @@ class Collection:
                     * len(cfg["pca_centroids"]), 4)
                 self._save_meta()
 
-    def _pca_shortlist(self, spark: SparkSession, qv: list[float],
-                       m: int, id_col: str, cfg: dict,
-                       space: str | None,
-                       nprobe: int | None) -> DataFrame:
-        """ids of the ``m`` best points under the space's metric in the
-        COMPRESSED space: project the query driver-side (r doubles),
-        probe the ``nprobe`` nearest compressed-space cells (a literal
-        ``pcell IN`` — statically partition-pruned; None probes every
-        cell, which drops nothing), rank the r/d-sized sidecar with
-        the ordinary dense top-m plan. Callers exact-rescore the
-        shortlist at full width via literal ``id IN``.
+    def _pca_shortlist(self, spark: SparkSession, qvs: list, m: int,
+                       id_col: str, cfg: dict, space: str | None,
+                       nprobe: int | None,
+                       batch: bool = False) -> DataFrame:
+        """The ``m`` best points under the space's metric in the
+        COMPRESSED space — ids for one query, ``(query_idx, id)``
+        pairs for a ``batch``: project each query driver-side (r
+        doubles), probe the ``nprobe`` nearest compressed-space cells
+        (a literal ``pcell IN`` — statically partition-pruned; a batch
+        probes the union; None probes every cell, which drops
+        nothing), rank the r/d-sized sidecar with the ordinary dense
+        top-m plan (one sidecar pass for a whole batch). Callers
+        exact-rescore the shortlist at full width via literal ``id IN``.
 
         Cosine spaces rank the compressed stage by EUCLID: PCA is an
         orthogonal projection, so it preserves L2 geometry — and on
@@ -2433,86 +2421,47 @@ class Collection:
         (``||a−b||² = 2 − 2cos``) — while compressed-space cosine
         would divide by zero for any point projecting onto the
         training mean. The rescore is the space's true metric."""
-        from .operators.knn import dense_knn
+        from .operators.knn import dense_knn, dense_knn_batch
         from .operators.pca import pca_project_py
 
-        pq = pca_project_py(cfg["pca_mu"], cfg["pca_w"], qv)
+        pqs = [pca_project_py(cfg["pca_mu"], cfg["pca_w"], v) for v in qvs]
         side = _read_parquet(spark, self._pca_path_for(space))
         cents = cfg.get("pca_centroids") or []
         if cents and nprobe is not None and nprobe < len(cents):
-            probe = sorted(
-                range(len(cents)),
-                key=lambda i: (_sq_dist(pq, cents[i]), i))[:nprobe]
-            side = side.filter(
-                F.col("pcell").isin([int(i) for i in probe]))
+            side = side.filter(F.col("pcell").isin(
+                self._probe(spark, pqs, nprobe, batch, cents)))
         side = side.drop("pcell")
-        qdf = local_literal_df(
-            spark, [(pq,)], "query_vec array<double>")
         metric = cfg.get("metric", "cosine")
-        short = dense_knn(side, qdf, k=m, id_col=id_col,
-                          vec_col="pvec", payload_cols=(),
-                          metric="euclid" if metric == "cosine"
-                          else metric,
-                          prenormalized=False,
-                          dim=int(cfg["pca_dim"]))
-        return short.select(id_col)
+        kw = dict(k=m, id_col=id_col, vec_col="pvec", payload_cols=(),
+                  metric="euclid" if metric == "cosine" else metric,
+                  prenormalized=False, dim=int(cfg["pca_dim"]))
+        if not batch:
+            qdf = local_literal_df(spark, [(pqs[0],)],
+                                   "query_vec array<double>")
+            return dense_knn(side, qdf, **kw).select(id_col)
+        return dense_knn_batch(side, _query_frame(spark, pqs),
+                               query_id_col="query_idx",
+                               local_prune=True, **kw
+                               ).select("query_idx", id_col)
 
-    def _pca_shortlist_batch(self, spark: SparkSession,
-                             qvs: list[list[float]], m: int,
-                             id_col: str, cfg: dict, space: str | None,
-                             nprobe: int | None) -> DataFrame:
-        """(query_idx, id) pairs of each query's m best compressed-
-        space points — ONE sidecar pass for the whole batch (broadcast
-        projected query set + per-query window top-m), pruned to the
-        probe UNION when ``nprobe`` narrows (the `_quant_shortlist_
-        batch` shape over the projected layout)."""
-        from .operators.knn import dense_knn_batch
-        from .operators.pca import pca_project_py
-
-        pqs = [pca_project_py(cfg["pca_mu"], cfg["pca_w"], v)
-               for v in qvs]
-        side = _read_parquet(spark, self._pca_path_for(space))
-        cents = cfg.get("pca_centroids") or []
-        if cents and nprobe is not None and nprobe < len(cents):
-            probe: set = set()
-            for pq in pqs:
-                probe.update(sorted(
-                    range(len(cents)),
-                    key=lambda i: (_sq_dist(pq, cents[i]), i))[:nprobe])
-            side = side.filter(
-                F.col("pcell").isin(sorted(int(i) for i in probe)))
-        side = side.drop("pcell")
-        queries = local_literal_df(
-            spark, [(i, [float(x) for x in v]) for i, v in enumerate(pqs)],
-            "query_idx int, query_vec array<double>")
-        metric = cfg.get("metric", "cosine")
-        short = dense_knn_batch(side, queries, k=m, id_col=id_col,
-                                vec_col="pvec", query_id_col="query_idx",
-                                payload_cols=(),
-                                metric="euclid" if metric == "cosine"
-                                else metric,
-                                prenormalized=False,
-                                dim=int(cfg["pca_dim"]),
-                                local_prune=True)
-        return short.select("query_idx", id_col)
-
-    def _maxsim_stage1(self, corpus: DataFrame, pooled_q: list[float],
+    def _maxsim_stage1(self, corpus: DataFrame, pooled_qs: list,
                        m: int, id_col: str, vec_col: str,
-                       dim: int) -> DataFrame:
+                       dim: int, batch: bool = False) -> DataFrame:
         """Stage 1 of two-stage MaxSim: keep the ``m`` candidates whose
         MEAN-POOLED vector is most cosine-similar to the mean-pooled
         query. Pure Catalyst (pooling is a projection over the scan, no
-        Python), top-m is a TakeOrderedAndProject heap, and the ≤m-row
-        keep-list broadcasts back — the corpus never shuffles. Exact
+        Python); one query's top-m is a TakeOrderedAndProject heap, a
+        ``batch`` joins the broadcast Q-row pooled-query frame and
+        keeps each query's top-m with map-side pruning (ONE pass for
+        all queries). The keep-list — for a batch the UNION of the
+        per-query shortlists, so each query ranks a superset of its
+        own — comes back as a literal ``id IN (...)`` filter, not a
+        join: the predicate pushes into the parquet scan, so stage 2's
+        fetch of the heavy flat vectors is row-group-pruned instead of
+        re-reading every vector byte to discard 99 %+ post-scan
+        (measured at shape: BASELINE.md §MaxSim-at-shape). Exact
         MaxSim then rescores only the survivors (callers guarantee
         ``m ≥ k``).
-
-        The keep-list comes back as a literal ``id IN (...)`` filter,
-        not a join: the predicate pushes into the parquet scan, so
-        stage 2's fetch of the heavy flat vectors is row-group-pruned
-        instead of re-reading every vector byte to discard 99 %+
-        post-scan (measured at shape: BASELINE.md §MaxSim-at-shape;
-        same pattern as the IVF probe's centroid shortlist).
 
         When the collection carries the write-time ``{vec}__pooled``
         sidecar (round 5, `_prep_vec`), stage 1 scans ONLY that
@@ -2520,80 +2469,62 @@ class Collection:
         compute-at-read pooling remains as the fallback for
         collections written without it (same values either way)."""
         from .functions.vector import cosine, mean_pool_flat
-        from .operators.topk import global_topk
+        from .operators.topk import global_topk, grouped_topk
 
         if vec_col + "__pooled" in corpus.columns:
             pooled = F.col(vec_col + "__pooled").cast("array<double>")
         else:
             pooled = mean_pool_flat(F.col(vec_col).cast("array<double>"), dim)
-        qlit = F.array(*[F.lit(float(x)) for x in pooled_q])
-        keep = global_topk(
-            corpus.select(F.col(id_col),
-                          cosine(pooled, qlit).alias("__ps")),
-            [("__ps", False), (id_col, True)], m,
-        ).select(id_col)
-        ids = [r[id_col] for r in keep.collect()]  # ≤ m rows
-        return corpus.filter(F.col(id_col).isin(ids))
-
-    def _maxsim_stage1_batch(self, corpus: DataFrame,
-                             pooled_qs: list[list[float]], m: int,
-                             id_col: str, vec_col: str,
-                             dim: int) -> DataFrame:
-        """Batched stage 1 (round 6): ONE pass over the pooled column
-        ranks every query's candidates — pooled docs join the
-        broadcast Q-row pooled-query frame, grouped top-m per query
-        with map-side pruning — and the UNION of the per-query
-        shortlists comes back as one literal ``id IN (...)`` filter
-        (row-group-pruned, same pattern as the single-query stage 1).
-        Stage 2 then batch-scores ≤ Q·m docs instead of the corpus;
-        each query ranks over the union, a superset of its own
-        shortlist, so per-query recall is ≥ the single-query
-        two-stage at the same depth."""
-        from .functions.vector import cosine, mean_pool_flat
-        from .operators.topk import grouped_topk
-
-        if vec_col + "__pooled" in corpus.columns:
-            pooled = F.col(vec_col + "__pooled").cast("array<double>")
+        if not batch:
+            (pooled_q,) = pooled_qs
+            qlit = F.array(*[F.lit(float(x)) for x in pooled_q])
+            keep = global_topk(
+                corpus.select(F.col(id_col),
+                              cosine(pooled, qlit).alias("__ps")),
+                [("__ps", False), (id_col, True)], m,
+            ).select(id_col)
         else:
-            pooled = mean_pool_flat(F.col(vec_col).cast("array<double>"),
-                                    dim)
-        spark = corpus.sparkSession
-        qdf = local_literal_df(
-            spark,
-            [(i, [float(x) for x in q]) for i, q in enumerate(pooled_qs)],
-            "query_idx int, __pq array<double>")
-        scored = (corpus.select(F.col(id_col), pooled.alias("__pd"))
-                  .join(F.broadcast(qdf))
-                  .select(id_col, "query_idx",
-                          cosine(F.col("__pd"), F.col("__pq"))
-                          .alias("__ps")))
-        keep = grouped_topk(scored, ["query_idx"],
-                            [("__ps", False), (id_col, True)], m,
-                            rank_col=None, local_prune=True)
-        ids = [r[id_col] for r in
-               keep.select(id_col).distinct().collect()]  # ≤ Q·m rows
+            qdf = _query_frame(corpus.sparkSession, pooled_qs, "__pq")
+            scored = (corpus.select(F.col(id_col), pooled.alias("__pd"))
+                      .join(F.broadcast(qdf))
+                      .select(id_col, "query_idx",
+                              cosine(F.col("__pd"), F.col("__pq"))
+                              .alias("__ps")))
+            keep = grouped_topk(scored, ["query_idx"],
+                                [("__ps", False), (id_col, True)], m,
+                                rank_col=None, local_prune=True
+                                ).select(id_col).distinct()
+        ids = [r[id_col] for r in keep.collect()]  # ≤ Q·m rows
         return corpus.filter(F.col(id_col).isin(ids))
 
     def _mv_quant_shortlist(self, spark: SparkSession,
-                            query_flat: list[float], m: int,
+                            queries_flat: list, m: int,
                             id_col: str, cfg: dict,
                             space: str | None,
                             ids: list | None = None,
-                            probe: list[int] | None = None) -> list:
+                            probe: list[int] | None = None,
+                            batch: bool = False) -> list:
         """Quantized-tier shortlist for MULTIVECTOR spaces: rank the
         SQ codes sidecar by approximate MaxSim (decode to bucket
         centers inside the Arrow-batched scorer — the codes never
-        inflate to floats JVM-side), keep the top ``m``, return their
-        ids for the exact full-width rescore's literal ``IN``. The
-        sidecar read is restricted first: to the graph beam's ``ids``
-        (hnsw_config collections), or to the probed ``probe`` cells
-        (statically partition-pruned on the shared IVF layout), else
-        the flat codes scan — in every case the bytes are 1/4 of the
-        fp32 flat column (1/2 of fp16). Scores round to 6 before
-        ranking (ties by id), the shortlist-determinism discipline
-        every oracle-twinned tier uses (registry.py docstring)."""
-        from .operators.maxsim import maxsim_score_codes_const_udf
-        from .operators.topk import global_topk
+        inflate to floats JVM-side), keep the top ``m`` per query,
+        return the ids (for a ``batch``, the union of the per-query
+        shortlists) for the exact full-width rescore's literal
+        ``IN``. A batch scores every query in ONE Arrow pass (the
+        multi-query capture scorer) with map-side-pruned per-query
+        top-m. The sidecar read is restricted first: to the graph
+        beam's ``ids`` (hnsw_config collections), or to the probed
+        ``probe`` cells (statically partition-pruned on the shared
+        IVF layout), else the flat codes scan — in every case the
+        bytes are 1/4 of the fp32 flat column (1/2 of fp16). Scores
+        round to 6 before ranking (ties by id), the
+        shortlist-determinism discipline every oracle-twinned tier
+        uses (registry.py docstring)."""
+        from .operators.maxsim import (
+            maxsim_score_codes_const_udf,
+            maxsim_score_codes_multi_udf,
+        )
+        from .operators.topk import global_topk, grouped_topk
 
         codes = _read_parquet(spark, self._codes_path_for(space))
         if probe is not None and "centroid_id" in codes.columns:
@@ -2601,41 +2532,27 @@ class Collection:
                 F.col("centroid_id").isin([int(i) for i in probe]))
         if ids is not None:
             codes = codes.filter(F.col(id_col).isin(ids))
-        score = maxsim_score_codes_const_udf(
-            int(cfg["dim"]), [float(x) for x in cfg["sq_mins"]],
-            [float(x) for x in cfg["sq_steps"]], query_flat,
-        )(F.col("codes"))
-        scored = codes.select(F.col(id_col),
-                              F.round(score, 6).alias("score"))
-        keep = global_topk(scored, [("score", False), (id_col, True)],
-                           m).select(id_col)
+        sq = (int(cfg["dim"]), [float(x) for x in cfg["sq_mins"]],
+              [float(x) for x in cfg["sq_steps"]])
+        order = [("score", False), (id_col, True)]
+        if not batch:
+            (query_flat,) = queries_flat
+            score = maxsim_score_codes_const_udf(*sq, query_flat)(
+                F.col("codes"))
+            scored = codes.select(F.col(id_col),
+                                  F.round(score, 6).alias("score"))
+            keep = global_topk(scored, order, m).select(id_col)
+        else:
+            arr = maxsim_score_codes_multi_udf(*sq, queries_flat)(
+                F.col("codes"))
+            scored = codes.select(
+                F.col(id_col), F.posexplode(arr).alias("query_idx", "__s"),
+            ).select(id_col, "query_idx",
+                     F.round(F.col("__s"), 6).alias("score"))
+            keep = grouped_topk(scored, ["query_idx"], order, m,
+                                rank_col=None, local_prune=True
+                                ).select(id_col).distinct()
         return [r[id_col] for r in keep.collect()]
-
-    def _mv_quant_shortlist_batch(self, spark: SparkSession,
-                                  queries_flat: list[list[float]],
-                                  m: int, id_col: str, cfg: dict,
-                                  space: str | None) -> list:
-        """Batched twin of ``_mv_quant_shortlist``: every query scores
-        the codes sidecar in ONE Arrow pass (the multi-query capture
-        scorer), per-query top-m with map-side pruning, union of the
-        shortlists back as ids for the exact batch rescore."""
-        from .operators.maxsim import maxsim_score_codes_multi_udf
-        from .operators.topk import grouped_topk
-
-        codes = _read_parquet(spark, self._codes_path_for(space))
-        arr = maxsim_score_codes_multi_udf(
-            int(cfg["dim"]), [float(x) for x in cfg["sq_mins"]],
-            [float(x) for x in cfg["sq_steps"]], queries_flat,
-        )(F.col("codes"))
-        scored = codes.select(
-            F.col(id_col), F.posexplode(arr).alias("query_idx", "__s"),
-        ).select(id_col, "query_idx",
-                 F.round(F.col("__s"), 6).alias("score"))
-        keep = grouped_topk(scored, ["query_idx"],
-                            [("score", False), (id_col, True)], m,
-                            rank_col=None, local_prune=True)
-        return [r[id_col] for r in
-                keep.select(id_col).distinct().collect()]
 
     def _post_write(self, spark: SparkSession, incoming: DataFrame | None,
                     id_col: str, vec_col: str, rewrote: bool,
@@ -2929,54 +2846,6 @@ class Collection:
 
     # -- query_points analog ---------------------------------------------
 
-    def _resolve_recall_target(self, recall_target: float,
-                               nprobe: int | None, exact: bool,
-                               oversampling: float,
-                               rescore: int | None = None,
-                               k: int | None = None,
-                               using: str | None = None,
-                               vec_col: str = "embedding",
-                               hnsw_ef: int | None = None,
-                               ) -> tuple[int | None, bool, float,
-                                          int | None, int | None]:
-        """Overlay recall-target routing (routing.py — the measured
-        BASELINE.md curves) onto the caller's knobs. Explicit knobs
-        win: an ``exact=True`` / ``nprobe=`` / ``rescore=`` from the
-        caller is never overridden; the target only fills what was
-        left unset (``oversampling`` counts as unset at its 4.0
-        default). For flat multivector spaces the target maps to the
-        two-stage rescore depth from the measured pooling-faithful
-        curve (routing.py provenance notes)."""
-        from .routing import route_for_recall
-
-        cfg = self._vector_cfg(using, vec_col)
-        q = cfg.get("quantization")
-        if q in ("pq", "opq") and "pq_codebooks" not in cfg:
-            q = None  # untrained quantizer: nothing to spend a miss on
-        if q and self.has_index() and cfg.get(
-                "codes_layout") != "cells":
-            # no composed codes layout on disk (pre-round-6 sidecar):
-            # the indexed read path can't spend a quantized miss
-            # budget, so route index-only at the full target
-            q = None
-        r = route_for_recall(
-            recall_target, indexed=self.has_index(),
-            quantization=q,
-            k_centroids=int(self.meta.get("k_centroids") or 16),
-            multivector=bool(cfg.get("multivector")), k=k,
-            hnsw=self._has_hnsw() and os.path.isdir(self._hnsw_graphs))
-        if not exact and nprobe is None:
-            if r["exact"]:
-                exact = True
-            nprobe = r["nprobe"]
-            if r["oversampling"] is not None and oversampling == 4.0:
-                oversampling = r["oversampling"]
-            if r["rescore"] is not None and rescore is None:
-                rescore = r["rescore"]
-            if r.get("hnsw_ef") is not None and hnsw_ef is None:
-                hnsw_ef = r["hnsw_ef"]
-        return nprobe, exact, oversampling, rescore, hnsw_ef
-
     def _pruned_postings(self, spark: SparkSession, name: str,
                          terms, id_col: str) -> DataFrame | None:
         """The probe side of the posting layout: None when the space
@@ -3013,63 +2882,69 @@ class Collection:
         tset = sorted({int(t) for t in terms})
         return _read_parquet(spark, path).filter(F.col("idx").isin(tset))
 
-    def _sparse_search(self, spark: SparkSession, query_vector,
+    def _sparse_search(self, spark: SparkSession, query_vectors: list,
                        name: str, k: int = 5, query_filter=None,
                        score_threshold=None, id_col: str = "id",
-                       offset: int = 0,
-                       with_vectors: bool = False) -> DataFrame:
+                       offset: int = 0, with_vectors: bool = False,
+                       batch: bool = False) -> DataFrame:
         """Search one sparse space (Qdrant ``query=SparseVector(...)``
-        + ``using=<sparse name>``). The query is ``(indices, values)``
+        + ``using=<sparse name>``). Each query is ``(indices, values)``
         or ``{"indices": ..., "values": ...}``; scoring is the sparse
         dot product via the broadcast-pruned posting explode
-        (`operators/sparse.py::sparse_knn`), with the space's declared
-        ``modifier`` applied — IDF statistics always come from the
-        WHOLE collection (Qdrant computes them at index time), so a
-        request filter narrows candidates without changing df/N.
-        Payload joins back onto the ≤k+offset-row hit list
-        (broadcast); the corpus never re-shuffles."""
+        (`operators/sparse.py::sparse_knn`; a ``batch`` shares ONE
+        posting pass, `sparse_knn_batch`, results tagged
+        ``query_idx``), with the space's declared ``modifier`` applied
+        — IDF statistics always come from the WHOLE collection (Qdrant
+        computes them at index time), so a request filter narrows
+        candidates without changing df/N. Payload joins back onto the
+        ≤k+offset-row hit list (broadcast); the corpus never
+        re-shuffles."""
         from pyspark.sql import Window
 
-        from .operators.sparse import sparse_knn
+        from .operators.sparse import sparse_knn, sparse_knn_batch
 
-        if isinstance(query_vector, dict):
-            qi, qv = query_vector["indices"], query_vector["values"]
-        else:
-            qi, qv = query_vector
-        if len(qi) != len(qv):
+        qs = [(q["indices"], q["values"]) if isinstance(q, dict)
+              else (list(q[0]), list(q[1])) for q in query_vectors]
+        if not batch and len(qs[0][0]) != len(qs[0][1]):
             raise ValueError("sparse query indices/values length mismatch")
         idx_c, val_c = name + "__sidx", name + "__sval"
         table = self.read(spark)
         query_filter = as_predicate(query_filter)
-        mod = self.meta["sparse_vectors"][name].get("modifier")
-        posting = self._pruned_postings(spark, name, qi, id_col)
+        scfg = self.meta["sparse_vectors"][name]
+        terms = {int(t) for qi, _ in qs for t in qi}
+        # a filtered batch keeps the array form: per-request candidate
+        # joins would fan out
+        posting = (self._pruned_postings(spark, name, terms, id_col)
+                   if query_filter is None or not batch else None)
         if posting is not None:
             # layout probe: postings already collection-wide, so IDF
             # stats need no separate frame; a filter restricts the
-            # CANDIDATES via an id join (df/N unchanged — Qdrant
-            # computes them at index time)
-            cand = (table.filter(F.col(idx_c).isNotNull())
-                    .filter(query_filter).select(id_col)
-                    if query_filter is not None else None)
-            hits = sparse_knn(
-                None, list(qi), list(qv), k=k + (offset or 0),
-                id_col=id_col, modifier=mod, postings=posting,
-                candidates=cand,
-                df_stats=self._pruned_df_stats(spark, name, qi),
-                n_points=self.meta["sparse_vectors"][name].get("n_points"))
+            # CANDIDATES via an id join (df/N unchanged)
+            src, kw = None, dict(
+                postings=posting,
+                df_stats=self._pruned_df_stats(spark, name, terms),
+                n_points=scfg.get("n_points"))
+            if query_filter is not None:
+                kw["candidates"] = (table.filter(F.col(idx_c).isNotNull())
+                                    .filter(query_filter).select(id_col))
         else:
             full = table.filter(F.col(idx_c).isNotNull()).select(
                 F.col(id_col), F.col(idx_c).alias("indices"),
                 F.col(val_c).alias("values"))
-            enc = full if query_filter is None else (
+            src = full if query_filter is None else (
                 table.filter(F.col(idx_c).isNotNull()).filter(query_filter)
                 .select(F.col(id_col), F.col(idx_c).alias("indices"),
                         F.col(val_c).alias("values")))
-            hits = sparse_knn(
-                enc, list(qi), list(qv), k=k + (offset or 0), id_col=id_col,
-                modifier=mod,
-                stats_corpus=full if (mod and query_filter is not None)
-                else None)
+            kw = dict(stats_corpus=full if (scfg.get("modifier")
+                                            and query_filter is not None)
+                      else None)
+        if batch:
+            hits = sparse_knn_batch(src, qs, k=k, id_col=id_col,
+                                    modifier=scfg.get("modifier"), **kw)
+        else:
+            hits = sparse_knn(src, list(qs[0][0]), list(qs[0][1]),
+                              k=k + (offset or 0), id_col=id_col,
+                              modifier=scfg.get("modifier"), **kw)
         if score_threshold is not None:
             hits = hits.filter(F.col("score") >= score_threshold)
         if offset:
@@ -3082,7 +2957,8 @@ class Collection:
         side = table.select(*[c for c in table.columns if c not in drop
                               or c == id_col])
         out = side.join(F.broadcast(hits), on=id_col)
-        return out.orderBy(F.col("score").desc(), F.col(id_col))
+        return out.orderBy(*(["query_idx"] if batch else []),
+                           F.col("score").desc(), F.col(id_col))
 
     def search(self, spark: SparkSession, query_vector: list,
                k: int = 5, query_filter=None, score_threshold=None,
@@ -3106,7 +2982,11 @@ class Collection:
         multivector MaxSim. Both branches honor
         ``query_filter``/``score_threshold`` and project payload
         columns (the multivector call surface is identical in the
-        reference, ``qdrant_query_with_colpali.py:109-114``).
+        reference, ``qdrant_query_with_colpali.py:109-114``). The tier
+        comes from `search_plan.plan_search`, the same planner
+        :meth:`search_batch` uses; a single search runs its
+        single-query operator leaves (TakeOrderedAndProject, literal
+        shortlists).
 
         For ``normalize`` collections the query vector is L2-normalized
         here (per subvector on the multivector path) — Qdrant does the
@@ -3147,47 +3027,68 @@ class Collection:
         point for quantized ones, and the exact scan at ≥0.999
         (measurements are not proofs). Explicit ``exact``/``nprobe``
         always win; the target fills only what was left unset."""
-        from pyspark.sql import functions as F
+        return self._query_points(
+            spark, [query_vector], None,
+            SearchKnobs(k, exact, nprobe, oversampling, rescore,
+                        recall_target, quantization_params, hnsw_ef,
+                        formula),
+            query_filter, score_threshold, id_col, vec_col, using,
+            with_vectors, with_payload, shard_key_selector, offset,
+            prefetch_limit)
 
-        from .operators.knn import dense_knn
-        from .operators.maxsim import maxsim_knn
+    def search_batch(self, spark: SparkSession,
+                     query_vectors: list, k: int = 5,
+                     query_filter=None, score_threshold=None,
+                     id_col: str = "id", vec_col: str = "embedding",
+                     nprobe: int | None = None,
+                     exact: bool = False,
+                     using: str | None = None,
+                     oversampling: float = 4.0,
+                     rescore: int | None = None,
+                     recall_target: float | None = None,
+                     with_vectors: bool = False,
+                     with_payload=True,
+                     quantization_params: dict | None = None,
+                     hnsw_ef: int | None = None
+                     ) -> DataFrame:
+        """Qdrant's ``query_batch_points`` analog: one result frame
+        keyed by ``query_idx``, ranked per query. All queries share ONE
+        corpus pass (broadcast query set + per-group top-k with
+        map-side pruning) — N queries cost one scan, not N. With an IVF
+        layout, the scan prunes to the *union* of every query's nprobe
+        cells (still a literal IN — static partition pruning); graph,
+        codes and PCA shortlists rank every query in one sidecar pass
+        and each query rescores only ITS candidate pairs. The tier
+        comes from the same planner as :meth:`search`, so
+        ``recall_target=`` / ``quantization_params=`` / ``hnsw_ef=``
+        route exactly as there (the whole batch shares one resolved
+        tier — per-query tiers would defeat the single-pass plan).
+        ``query_filter`` may be a list with one filter per query
+        (Qdrant's per-request filters, dense spaces)."""
+        qs = list(query_vectors)
+        return self._query_points(
+            spark, qs, len(qs),
+            SearchKnobs(k, exact, nprobe, oversampling, rescore,
+                        recall_target, quantization_params, hnsw_ef),
+            query_filter, score_threshold, id_col, vec_col, using,
+            with_vectors, with_payload)
 
-        if isinstance(with_vectors, (list, tuple, set)):
-            # Qdrant's vector-name selector (query_points accepts it on
-            # every endpoint): run the search plain, then attach exactly
-            # the named spaces' columns — ≤k-row result side broadcast,
-            # ordering restored
-            base = self.search(
-                spark, query_vector, k=k, query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                vec_col=vec_col, nprobe=nprobe, exact=exact,
-                using=using, oversampling=oversampling, offset=offset,
-                shard_key_selector=shard_key_selector, rescore=rescore,
-                formula=formula, prefetch_limit=prefetch_limit,
-                recall_target=recall_target, with_payload=with_payload,
-                quantization_params=quantization_params,
-                hnsw_ef=hnsw_ef)
-            asc = (self._ranks_ascending(using, vec_col)
-                   and formula is None)
-            return self._attach_query_vectors(
-                spark, base, with_vectors, using, vec_col, id_col,
-                [F.col("score").asc() if asc else F.col("score").desc(),
-                 F.col(id_col).asc()])
-
-        if with_payload is not True:
-            full = self.search(
-                spark, query_vector, k=k, query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                vec_col=vec_col, nprobe=nprobe, exact=exact,
-                using=using, oversampling=oversampling, offset=offset,
-                shard_key_selector=shard_key_selector, rescore=rescore,
-                formula=formula, prefetch_limit=prefetch_limit,
-                recall_target=recall_target, with_vectors=with_vectors,
-                quantization_params=quantization_params,
-                hnsw_ef=hnsw_ef)
-            return self._apply_with_payload(
-                full, with_payload, id_col, vec_col)
-
+    def _query_points(self, spark: SparkSession, qs: list,
+                      n_queries: int | None, knobs: SearchKnobs,
+                      query_filter, score_threshold, id_col: str,
+                      vec_col: str, using: str | None, with_vectors,
+                      with_payload, shard_key_selector=None,
+                      offset: int = 0,
+                      prefetch_limit: int | None = None) -> DataFrame:
+        """The one front door of :meth:`search` (``n_queries`` None)
+        and :meth:`search_batch`. Handles, for Q ≥ 1 queries: the
+        sparse-space dispatch, Qdrant's ``with_payload`` selector, and
+        the ``with_vectors`` vector-name list (search plain, then
+        attach exactly the named spaces' columns — ≤k-row result side
+        broadcast, ordering restored per query)."""
+        batch = n_queries is not None
+        pick = isinstance(with_vectors, (list, tuple, set))
+        wv = False if pick else with_vectors
         sv = self.meta.get("sparse_vectors") or {}
         if sv and (using in sv or (using is None
                                    and "dim" not in self.meta
@@ -3196,18 +3097,47 @@ class Collection:
                 raise ValueError(
                     f"collection has sparse spaces {sorted(sv)}; "
                     "pass using=<name>")
-            if (nprobe is not None or exact or rescore is not None
-                    or formula is not None or recall_target is not None
-                    or quantization_params is not None):
-                raise ValueError(
-                    "sparse search takes no dense-tier knobs "
-                    "(nprobe/exact/rescore/formula/recall_target/"
-                    "quantization_params)")
-            return self._sparse_search(
-                spark, query_vector, using or next(iter(sv)), k=k,
+            plan_search({"sparse": True}, replace(
+                knobs, per_query=batch and isinstance(query_filter,
+                                                      (list, tuple))),
+                n_queries)
+            out = self._sparse_search(
+                spark, qs, using or next(iter(sv)), k=knobs.k,
                 query_filter=query_filter,
                 score_threshold=score_threshold, id_col=id_col,
-                offset=offset, with_vectors=with_vectors)
+                offset=offset, with_vectors=wv, batch=batch)
+        elif batch:
+            out = self._search_planned(
+                spark, qs, n_queries, knobs, query_filter,
+                score_threshold, id_col, vec_col, using, wv)
+        else:
+            out = self._search_one(
+                spark, qs[0], knobs, query_filter, score_threshold,
+                id_col, vec_col, using, wv, shard_key_selector, offset,
+                prefetch_limit)
+        if with_payload is not True:
+            out = self._apply_with_payload(out, with_payload, id_col,
+                                           vec_col)
+        if pick:
+            asc = (self._ranks_ascending(using, vec_col)
+                   and knobs.formula is None)
+            out = self._attach_query_vectors(
+                spark, out, with_vectors, using, vec_col, id_col,
+                [*([F.col("query_idx").asc()] if batch else []),
+                 F.col("score").asc() if asc else F.col("score").desc(),
+                 F.col(id_col).asc()])
+        return out
+
+    def _search_one(self, spark: SparkSession, query_vector,
+                    knobs: SearchKnobs, query_filter, score_threshold,
+                    id_col: str, vec_col: str, using: str | None,
+                    with_vectors: bool, shard_key_selector, offset: int,
+                    prefetch_limit: int | None) -> DataFrame:
+        """The single-search-only features around the planned search:
+        query-by-id, ``formula`` rescoring (with ``prefetch_limit``)
+        and ``offset`` paging. The formula/offset prefetch runs with
+        the recall-target knobs already resolved."""
+        from pyspark.sql import Window
 
         if isinstance(query_vector, (int, str)):
             # Qdrant query-by-id (``query_points(query=point_id)``):
@@ -3232,540 +3162,87 @@ class Collection:
             excl = F.col(id_col) != F.lit(point_id)
             qf = as_predicate(query_filter)
             query_filter = excl if qf is None else (qf & excl)
-
-        if recall_target is not None:
-            nprobe, exact, oversampling, rescore, hnsw_ef = \
-                self._resolve_recall_target(
-                    recall_target, nprobe, exact, oversampling,
-                    rescore=rescore, k=k, using=using, vec_col=vec_col,
-                    hnsw_ef=hnsw_ef)
-
+        args = (query_filter, score_threshold, id_col, vec_col, using)
+        k, formula = knobs.k, knobs.formula
+        if formula is None and not offset:
+            return self._search_planned(spark, [query_vector], None, knobs,
+                                        *args, with_vectors,
+                                        shard_key_selector)
+        if knobs.recall_target is not None:
+            knobs = replace(overlay_recall(self._plan_facts(
+                self._vector_cfg(using, vec_col)), knobs),
+                recall_target=None)
+        if k is None:
+            raise ValueError("formula rescoring requires a finite k"
+                             if formula is not None
+                             else "offset requires a finite k")
         if formula is not None:
             # Qdrant FormulaQuery: prefetch with the collection's
             # metric, rescore the shortlist with a formula over the
-            # prescore (`score`) and payload fields, return top-k by
-            # the formula value. The rescore is one Catalyst
-            # projection over the ≤prefetch_limit-row shortlist —
-            # corpus cost is entirely the prefetch tier's.
+            # prescore (`score`) and payload fields in one Catalyst
+            # projection; offset pages the BOOSTED order, so the
+            # prefetch depth covers the whole paged range
             from .operators.formula import formula_rescore
 
-            if k is None:
-                raise ValueError("formula rescoring requires a finite k")
-            # offset pages the BOOSTED order below, so the prefetch
-            # depth must cover the whole paged range
-            pre_k = (prefetch_limit if prefetch_limit is not None
-                     else max(50, (k + offset) * 10))
-            pre = self.search(
-                spark, query_vector, k=pre_k, query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                vec_col=vec_col, nprobe=nprobe, exact=exact, using=using,
-                oversampling=oversampling,
-                shard_key_selector=shard_key_selector, rescore=rescore,
-                quantization_params=quantization_params,
-                hnsw_ef=hnsw_ef)
-            payload = [c for c in pre.columns if c not in (id_col, "score")]
+            pre = self._search_planned(
+                spark, [query_vector], None, replace(
+                    knobs, formula=None, k=prefetch_limit
+                    if prefetch_limit is not None
+                    else max(50, (k + offset) * 10)),
+                *args, False, shard_key_selector)
             out = formula_rescore(
                 pre, formula, k=k + offset, id_col=id_col,
-                boosted_col="score", payload_cols=payload)
-            if offset:
-                from pyspark.sql import Window
-
-                w = Window.orderBy(F.col("score").desc(),
-                                   F.col(id_col).asc())
-                out = (out.withColumn("__rn", F.row_number().over(w))
-                       .filter(F.col("__rn") > offset).drop("__rn"))
-            return out
-
-        if offset:
-            if k is None:
-                raise ValueError("offset requires a finite k")
-            deep = self.search(
-                spark, query_vector, k=k + offset, query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                vec_col=vec_col, nprobe=nprobe, exact=exact, using=using,
-                oversampling=oversampling,
-                shard_key_selector=shard_key_selector, rescore=rescore,
-                quantization_params=quantization_params,
-                hnsw_ef=hnsw_ef)
-            from pyspark.sql import Window
-
-            cfg0 = self._vector_cfg(using, vec_col)
-            from .operators.knn import _DISTANCE_METRICS
-            asc = cfg0.get("metric", "cosine") in _DISTANCE_METRICS
-            order = (F.col("score").asc() if asc else F.col("score").desc())
-            w = Window.orderBy(order, F.col(id_col).asc())
-            return (deep.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") > offset).drop("__rn"))
-        query_filter = as_predicate(query_filter)
-        shard_pred = self._shard_predicate(shard_key_selector)
-        if shard_pred is not None:
-            query_filter = (shard_pred if query_filter is None
-                            else (shard_pred & query_filter))
-        cfg = self._vector_cfg(using, vec_col)
-        vec_col = cfg["vec_col"]
-        # a point without this space's vector (delete_vectors, or a
-        # named space it never carried) is not searchable in it —
-        # Qdrant semantics; the IsNotNull pushes to the scan
-        corpus = self.read(spark).filter(F.col(vec_col).isNotNull())
-        dim = cfg.get("dim")
-        not_payload = self._vector_columns(vec_col) | {id_col}
-        if with_vectors:
-            # Qdrant query_points(with_vectors=True): the searched
-            # space's stored vector rides along as an output column
-            # (sidecars — n_vecs/__pooled — stay internal); it flows
-            # through every branch as payload, so the cost is k rows
-            not_payload -= {vec_col}
-
-        def probe_cells(routing_qv: list[float]) -> list[int]:
-            # nearest-nprobe centroids picked driver-side
-            # (≤ k_centroids rows); returned as literal ints so every
-            # downstream scan filter is statically partition-pruned
-            cents = self._centroids(spark)
-            np_ = len(cents) if nprobe is None else nprobe
-            return sorted(
-                range(len(cents)),
-                key=lambda i: (_sq_dist(routing_qv, cents[i]), i),
-            )[:np_]  # exhaustive probe ≡ exact scan
-
-        def routed(routing_qv: list[float]) -> DataFrame:
-            # route through the IVF layout: corpus scan reduced to a
-            # literal centroid_id IN (...) — statically partition-
-            # pruned on the partitionBy(centroid_id) layout
-            return _read_parquet(spark, self._ivf_points).filter(
-                F.col("centroid_id").isin(
-                    [int(i) for i in probe_cells(routing_qv)])
-            ).drop("centroid_id")
-
-        if hnsw_ef is not None and not self.meta.get("hnsw"):
-            raise ValueError(
-                "hnsw_ef needs a collection created with hnsw_config")
-        if cfg.get("multivector"):
-            qp = dict(quantization_params or {})
-            unknown = sorted(set(qp)
-                             - {"ignore", "rescore", "oversampling"})
-            if unknown:
-                raise ValueError(
-                    f"unknown quantization_params key(s) {unknown}")
-            if qp and not cfg.get("quantization"):
-                raise ValueError(
-                    "quantization_params need a quantized space")
-            if qp.get("rescore", True) is False:
-                raise ValueError(
-                    "multivector quantized search always rescores "
-                    "(approximate MaxSim ranks are not returned)")
-            if qp.get("oversampling") is not None:
-                oversampling = float(qp["oversampling"])
-            qv = [[float(x) for x in v] for v in query_vector]
-            if cfg.get("normalize"):
-                qv = [_unit(v) for v in qv]
-            had_filter = query_filter is not None
-            payload = [c for c in corpus.columns if c not in not_payload]
-            if _is_nested(corpus, vec_col):  # compatibility reader
-                qdf = local_literal_df(
-                    spark, [(qv,)], "query_vectors array<array<double>>")
-                return maxsim_knn(
-                    corpus, qdf, k=k, id_col=id_col, mv_col=vec_col,
-                    payload_cols=payload, prefilter=query_filter,
-                    score_threshold=score_threshold,
-                )
-            pooled_q = [sum(v[j] for v in qv) / len(qv)
-                        for j in range(len(qv[0]))]
-            graphed, cand_ids = False, None
-            graph_able = (self._has_hnsw() and self.has_index()
-                          and not exact and k is not None
-                          and os.path.isdir(self._hnsw_graphs)
-                          and (recall_target is None
-                               or hnsw_ef is not None))
-            gstats = None
-            if graph_able and query_filter is not None:
-                # filter-aware graph routing (_hnsw_filter_stats): a
-                # non-selective filter keeps the walk — beam widened
-                # by 1/match-fraction, candidates post-filtered at the
-                # exact-MaxSim rescore (the filter applies below,
-                # before scoring); a selective one returns None and
-                # routes index-only
-                gstats = self._hnsw_filter_stats(corpus, query_filter)
-            if graph_able and (query_filter is None
-                               or gstats is not None):
-                # the reference's ACTUAL configuration — multivector
-                # points behind the server's HNSW: graphs were built
-                # over the pooled routing vectors (the coarse stage of
-                # the PLAID-style index), so the beam IS stage 1 —
-                # its ≤ef×nprobe candidates go straight to exact
-                # MaxSim, replacing both the probed-cells scan and
-                # the pooled top-m prune
-                from .operators.hnsw import hnsw_layout_search
-
-                ef = (int(hnsw_ef) if hnsw_ef is not None
-                      else max(rescore or 0, 4 * k, 64))
-                if gstats is not None:
-                    m_, n_ = gstats
-                    ef = -(-ef * n_ // m_)  # ceil(ef / match frac)
-                cand = hnsw_layout_search(
-                    _read_parquet(spark, self._hnsw_graphs), pooled_q,
-                    ef=ef,
-                    segments=self._hnsw_segments(probe_cells(pooled_q)),
-                    id_type=corpus.schema[id_col].dataType
-                    .simpleString(),
-                    normalize=cfg.get("metric", "cosine") == "cosine",
-                ).collect()
-                cand_ids = sorted({r["vec_id"] for r in cand})
-                corpus = corpus.filter(F.col(id_col).isin(cand_ids))
-                graphed = True
-            elif self.has_index() and not exact:
-                # coarse stage routes on the mean-pooled query (cells
-                # were carved over mean-pooled doc vectors); exact
-                # MaxSim scores the probed cells
-                corpus = routed(pooled_q)
-            if query_filter is not None:
-                # before stage 1, so the prune depth is spent inside
-                # the filtered slice (and Catalyst pushes it to scan)
-                corpus = corpus.filter(query_filter)
-                query_filter = None
-            if (not had_filter and cfg.get("quantization") == "sq"
-                    and "sq_mins" in cfg and not exact
-                    and k is not None and recall_target is None
-                    and not qp.get("ignore")):
-                # quantized tier (multivector × sq): rank the int8
-                # codes sidecar — restricted to the graph beam's
-                # candidates, or the probed cells (partition-pruned),
-                # or the flat codes scan — with approximate MaxSim
-                # over decoded bucket centers, keep max(k, rescore |
-                # ceil(k·oversampling)), and let the exact MaxSim
-                # below rescore ONLY those at full width. Cuts the
-                # heavy flat-vector read to the shortlist (the dense
-                # _quant_shortlist posture at ColPali byte shape).
-                # Filter-correct rule: any query_filter skips this
-                # tier (codes carry no payload); recall_target routes
-                # stay on the measured pooled two-stage curve.
-                m = (max(k, rescore) if rescore is not None
-                     else max(k, int(math.ceil(k * oversampling))))
-                probe = None
-                if not graphed and self.has_index() \
-                        and cfg.get("codes_layout") == "cells":
-                    probe = probe_cells(pooled_q)
-                short = self._mv_quant_shortlist(
-                    spark, [x for v in qv for x in v], m, id_col,
-                    cfg, cfg["vec_col"] if self.meta.get("vectors")
-                    else None, ids=cand_ids, probe=probe)
-                corpus = corpus.filter(F.col(id_col).isin(short))
-                rescore = None  # the codes tier IS the shortlist stage
-            if (rescore is not None and not exact and k is not None
-                    and not graphed):
-                corpus = self._maxsim_stage1(
-                    corpus, pooled_q, max(k, rescore), id_col, vec_col, dim)
-            # query captured in the scorer closure (never joined on as
-            # a column): the scan carries only doc bytes — at ColPali
-            # shape the query array is tens of KB per row otherwise
-            # (BASELINE.md §MaxSim-at-shape)
-            return maxsim_knn(
-                corpus, None, k=k, id_col=id_col, mv_col=vec_col,
-                payload_cols=payload, prefilter=query_filter,
-                score_threshold=score_threshold, flat_dim=dim,
-                query_flat=[x for v in qv for x in v],
-            )
-        qv = [float(x) for x in query_vector]
-        if cfg.get("normalize"):
-            qv = _unit(qv)
-        space = cfg["vec_col"] if self.meta.get("vectors") else None
-        # Filter-aware graph routing, dense side: an hnsw collection
-        # under a NON-selective filter keeps its graph walk (beam
-        # widened by 1/match-fraction below, candidates post-filtered
-        # at the exact rescore); rescore=False and ignore=True opt out
-        # (the noscore path returns codes-sidecar rows a filter can't
-        # restrict; ignore asked for original-vector search).
-        gstats = None
-        qp0 = dict(quantization_params or {})
-        if (query_filter is not None and self._has_hnsw()
-                and self.has_index() and not exact and k is not None
-                and os.path.isdir(self._hnsw_graphs)
-                and (recall_target is None or hnsw_ef is not None)
-                and not qp0.get("ignore")
-                and qp0.get("rescore", True) is not False):
-            gstats = self._hnsw_filter_stats(corpus, query_filter)
-        # The quantized shortlist ranks the CODES sidecar, which has
-        # no payload columns — a query_filter can't restrict it, so a
-        # selective filter would eat shortlist slots and under-fill
-        # the results (k matches existing but fewer returned). With a
-        # filter present, route filter-correct instead: the widened
-        # graph walk when the filter is non-selective (gstats above —
-        # the code-graph's candidates still exact-rescore at full
-        # width WITH the filter), else index-only within probed cells
-        # (exact scoring, filter pushed to the cells scan) or the
-        # exact scan — Qdrant's filtered search likewise never drops
-        # matches to quantization.
-        quantize = (cfg.get("quantization")
-                    if query_filter is None or gstats is not None
-                    else None)
-        if quantize in ("pq", "opq") and "pq_codebooks" not in cfg:
-            quantize = None  # untrained (< pq_codes rows): exact scan
-        # Qdrant SearchParams.quantization (QuantizationSearchParams):
-        # per-request quantizer control — ignore=True searches the
-        # original vectors, oversampling overrides the knob, and
-        # rescore=False returns the quantized ranking scores directly
-        # (no full-vector stage at all).
-        qp = dict(quantization_params or {})
-        unknown = sorted(set(qp) - {"ignore", "rescore", "oversampling"})
-        if unknown:
-            raise ValueError(
-                f"unknown quantization_params key(s) {unknown}")
-        if qp.get("ignore"):
-            quantize = None
-        if qp.get("oversampling") is not None:
-            oversampling = float(qp["oversampling"])
-        if qp.get("rescore", True) is False:
-            from .operators.knn import _DISTANCE_METRICS
-
-            if not quantize or exact:
-                raise ValueError(
-                    "quantization_params rescore=False needs an "
-                    "active quantizer (trained, not ignored, no "
-                    "filter, exact=False)")
-            if quantize == "bq":
-                raise ValueError(
-                    "rescore=False supports sq/pq/opq (the binary "
-                    "Hamming rank is not a similarity score)")
-            if cfg.get("metric", "cosine") in _DISTANCE_METRICS:
-                raise ValueError(
-                    "rescore=False returns inner-product-shaped "
-                    "quantized scores; distance-metric collections "
-                    "must rescore")
-            if k is None:
-                raise ValueError("rescore=False requires a finite k")
-            probe = (probe_cells(qv)
-                     if (self.has_index()
-                         and cfg.get("codes_layout") == "cells")
-                     else None)
-            short = self._quant_shortlist(spark, qv, k, id_col,
-                                          probe_ids=probe, cfg=cfg,
-                                          space=space,
-                                          with_scores=True)
-            if score_threshold is not None:
-                short = short.filter(F.col("score") >= score_threshold)
-            payload = [c for c in corpus.columns if c not in not_payload]
-            hits = short
-            if payload:
-                # payload joins back onto the ≤k-row hit list (the
-                # _sparse_search pattern); the corpus fetch is
-                # semi-join-pruned to those ids
-                pay = corpus.select(id_col, *payload).join(
-                    F.broadcast(short.select(id_col)), on=id_col)
-                hits = short.join(F.broadcast(pay), on=id_col,
-                                  how="left")
-            return hits.orderBy(F.col("score").desc(),
-                                F.col(id_col).asc())
-        if (cfg.get("transform") == "pca" and cfg.get("pca_mu")
-                and not exact and query_filter is None
-                and k is not None):
-            # PCA-transformed space (transform="pca" — the FAISS
-            # "PCA,IVF" pattern as collection config): probe nprobe
-            # compressed-space cells of the projected sidecar, rank
-            # there (r/d of the bytes), exact-rescore the oversampled
-            # shortlist at full width via literal id IN (row-group-
-            # pruned main-table fetch). Untrained (below threshold) or
-            # filtered searches take the exact scan — the same
-            # filter-correctness rule as quantization.
-            m = max(k, int(math.ceil(k * oversampling)))
-            short = self._pca_shortlist(spark, qv, m, id_col,
-                                        cfg=cfg, space=space,
-                                        nprobe=nprobe)
-            ids = [r[id_col] for r in short.collect()]
-            corpus = corpus.filter(F.col(id_col).isin(ids))
-        elif (self._has_hnsw() and self.has_index() and not exact
-                and (query_filter is None or gstats is not None)
-                and k is not None and os.path.isdir(self._hnsw_graphs)
-                and (recall_target is None or hnsw_ef is not None)
-                and (self.meta.get("quantization") is None or quantize)):
-            # the recall_target guard: when the router found no
-            # trusted ef at the sub-target it set none — honor that
-            # by taking the index-only path below (exact within
-            # probed cells) instead of walking graphs at a default ef
-            # per-segment HNSW graphs over the IVF cells (hnsw_config
-            # — the reference backend's actual index): probe the
-            # nprobe nearest cells, WALK their graphs (partition-
-            # pruned read of the sidecar, beam ef per segment) instead
-            # of scanning them, exact-rescore the bounded candidate
-            # union via literal id IN. SELECTIVE filtered searches
-            # skip this branch (gstats None — a selective filter
-            # would eat beam slots faster than widening can repay)
-            # and route index-only below — exact scoring inside
-            # probed cells with the filter pushed to the scan;
-            # non-selective ones stay here with the beam widened by
-            # 1/match-fraction and the filter applied at the rescore
-            # (_hnsw_filter_stats' crossover rule). QUANTIZED
-            # collections walk graphs built over the CODES sidecar
-            # (decode per segment, _hnsw_quant_parts; the sidecar is
-            # 4-32× smaller), still exact-rescoring at full width —
-            # unless quantization_params ignore=True asked for
-            # original-vector search, which routes index-only below
-            # (the walk's geometry IS the quantized one).
-            from .operators.hnsw import hnsw_layout_search
-
-            gq = self._hnsw_quant_parts()
-            ef = (int(hnsw_ef) if hnsw_ef is not None
-                  else max(4 * k, 64,
-                           int(math.ceil(k * oversampling))
-                           if gq is not None else 0))
-            if gstats is not None:
-                # widened beam for the post-filtered walk: the filter
-                # keeps m of n corpus rows, so ceil(ef·n/m) candidates
-                # leave ~ef AFTER filtering — integer ceiling so the
-                # oracle twin re-derives the same ef exactly
-                m_, n_ = gstats
-                ef = -(-ef * n_ // m_)
-            cand = hnsw_layout_search(
-                _read_parquet(spark, self._hnsw_graphs),
-                qv if gq is None else self._pq_query_vec(cfg, qv),
-                ef=ef,
-                segments=self._hnsw_segments(probe_cells(qv)),
-                id_type=corpus.schema[id_col].dataType.simpleString(),
-                normalize=(cfg.get("metric", "cosine") == "cosine"
-                           if gq is None else True),
-                decode=None if gq is None else gq[2],
-            ).collect()
-            corpus = corpus.filter(F.col(id_col).isin(
-                sorted({r["vec_id"] for r in cand})))
-        elif (self.has_index() and not exact
-                and quantize
-                and cfg.get("codes_layout") == "cells"):
-            # composed IVF + quantization (Qdrant's index-over-
-            # quantized-vectors semantics): probe the nprobe nearest
-            # cells, rank the CODES within them (partition-pruned scan
-            # of the 4-32×-smaller sidecar), exact-rescore the
-            # oversampled shortlist with full vectors. The shortlist
-            # comes back as a literal id IN (...) (≤ k·oversampling
-            # rows driver-side, the _maxsim_stage1 pattern) so the
-            # main-table fetch is row-group-pruned too.
-            m = max(k or 1, int(math.ceil((k or 1) * oversampling)))
-            short = self._quant_shortlist(spark, qv, m, id_col,
-                                          probe_ids=probe_cells(qv))
-            ids = [r[id_col] for r in short.collect()]
-            corpus = corpus.filter(F.col(id_col).isin(ids))
-        elif self.has_index() and not exact:
-            corpus = routed(qv)
-        elif quantize and not exact:
-            # quantized prefetch + exact rescore (Qdrant search_params
-            # quantization semantics): the probe ranks compressed
-            # codes, the oversampled shortlist is re-scored with full
-            # vectors — scan cost moves to the 4x/32x-smaller sidecar
-            # (the space's OWN sidecar for named collections)
-            m = max(k or 1, int(math.ceil((k or 1) * oversampling)))
-            short = self._quant_shortlist(spark, qv, m, id_col,
-                                          cfg=cfg, space=space)
-            corpus = corpus.join(F.broadcast(short), on=id_col)
-        qdf = local_literal_df(
-            spark, [(qv,)], "query_vec array<double>")
-        payload = [c for c in corpus.columns if c not in not_payload]
-        return dense_knn(
-            corpus, qdf, k=k, id_col=id_col, vec_col=vec_col,
-            payload_cols=payload, prefilter=query_filter,
-            score_threshold=score_threshold,
-            prenormalized=bool(cfg.get("normalize")),
-            dim=dim, metric=cfg.get("metric", "cosine"),
-        )
-
-    def search_batch(self, spark: SparkSession,
-                     query_vectors: list, k: int = 5,
-                     query_filter=None, score_threshold=None,
-                     id_col: str = "id", vec_col: str = "embedding",
-                     nprobe: int | None = None,
-                     exact: bool = False,
-                     using: str | None = None,
-                     oversampling: float = 4.0,
-                     rescore: int | None = None,
-                     recall_target: float | None = None,
-                     with_vectors: bool = False,
-                     with_payload=True,
-                     quantization_params: dict | None = None,
-                     hnsw_ef: int | None = None
-                     ) -> DataFrame:
-        """Qdrant's ``query_batch_points`` analog (dense collections):
-        one result frame keyed by ``query_idx``, ranked per query.
-        All queries share ONE corpus pass (broadcast query set +
-        per-group top-k with map-side pruning) — N queries cost one
-        scan, not N. With an IVF layout, the scan prunes to the
-        *union* of every query's nprobe cells (still a literal IN —
-        static partition pruning). ``recall_target=`` routes exactly
-        as in :meth:`search` (the whole batch shares one resolved
-        tier — per-query tiers would defeat the single-pass plan)."""
-        from .operators.knn import dense_knn_batch
-
-        if isinstance(with_vectors, (list, tuple, set)):
-            # vector-name selector, batch form: attach after the
-            # single-pass batch search; ordering restored per query
-            base = self.search_batch(
-                spark, query_vectors, k=k, query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                vec_col=vec_col, nprobe=nprobe, exact=exact,
-                using=using, oversampling=oversampling, rescore=rescore,
-                recall_target=recall_target, with_payload=with_payload,
-                quantization_params=quantization_params,
-                hnsw_ef=hnsw_ef)
+                boosted_col="score",
+                payload_cols=[c for c in pre.columns
+                              if c not in (id_col, "score")])
+            asc = False
+        else:
+            out = self._search_planned(
+                spark, [query_vector], None, replace(knobs, k=k + offset),
+                *args, False, shard_key_selector)
             asc = self._ranks_ascending(using, vec_col)
-            return self._attach_query_vectors(
-                spark, base, with_vectors, using, vec_col, id_col,
-                [F.col("query_idx").asc(),
-                 F.col("score").asc() if asc else F.col("score").desc(),
-                 F.col(id_col).asc()])
+        if not offset:
+            return out
+        w = Window.orderBy(F.col("score").asc() if asc
+                           else F.col("score").desc(), F.col(id_col).asc())
+        return (out.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") > offset).drop("__rn"))
 
-        if with_payload is not True:
-            full = self.search_batch(
-                spark, query_vectors, k=k, query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                vec_col=vec_col, nprobe=nprobe, exact=exact,
-                using=using, oversampling=oversampling, rescore=rescore,
-                recall_target=recall_target, with_vectors=with_vectors,
-                quantization_params=quantization_params)
-            return self._apply_with_payload(
-                full, with_payload, id_col, vec_col)
-        sv = self.meta.get("sparse_vectors") or {}
-        if sv and (using in sv or (using is None
-                                   and "dim" not in self.meta
-                                   and not self.meta.get("vectors"))):
-            if using is None and len(sv) > 1:
-                raise ValueError(
-                    f"collection has sparse spaces {sorted(sv)}; "
-                    "pass using=<name>")
-            if (nprobe is not None or exact or rescore is not None
-                    or recall_target is not None
-                    or quantization_params is not None):
-                raise ValueError(
-                    "sparse search takes no dense-tier knobs "
-                    "(nprobe/exact/rescore/recall_target/"
-                    "quantization_params)")
-            if isinstance(query_filter, (list, tuple)):
-                raise ValueError(
-                    "per-request filters are dense-batch-only; sparse "
-                    "batches take one shared filter")
-            return self._sparse_search_batch(
-                spark, query_vectors, using or next(iter(sv)), k=k,
-                query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                with_vectors=with_vectors)
-        if recall_target is not None:
-            nprobe, exact, oversampling, rescore, hnsw_ef = \
-                self._resolve_recall_target(
-                    recall_target, nprobe, exact, oversampling,
-                    rescore=rescore, k=k, using=using, vec_col=vec_col,
-                    hnsw_ef=hnsw_ef)
+    def _plan_facts(self, cfg: dict) -> dict:
+        """The searched space's config plus the layout facts the
+        planner reads (`search_plan.plan_search`)."""
+        return {**cfg, "indexed": self.has_index(),
+                "graphs": (self._has_hnsw()
+                           and os.path.isdir(self._hnsw_graphs)),
+                "hnsw_config": bool(self.meta.get("hnsw")),
+                "collection_quantization": self.meta.get("quantization"),
+                "graph_quantized": self._hnsw_quant_parts() is not None,
+                "n_cells": int(self.meta.get("k_centroids") or 16)}
+
+    def _search_planned(self, spark: SparkSession, qs: list,
+                        n_queries: int | None, knobs: SearchKnobs,
+                        query_filter, score_threshold, id_col: str,
+                        vec_col: str, using: str | None,
+                        with_vectors: bool,
+                        shard_key_selector=None) -> DataFrame:
+        """Plan one dense or multivector search and run it for Q ≥ 1
+        query vectors. The shared filter ANDs with the shard-key
+        predicate; a batch's per-query filter list compiles to ONE
+        CASE-over-query_idx predicate on the scored rows (scoring is
+        row-local, so filtering candidates before or after scoring is
+        the same set; the scan can't prune on a per-query predicate,
+        so the single-pass plan is preserved). A point without the
+        searched space's vector is not searchable in it (Qdrant
+        semantics; the IsNotNull pushes to the scan). With
+        ``with_vectors`` the space's stored vector rides along as an
+        output column (sidecars stay internal)."""
         cfg = self._vector_cfg(using, vec_col)
         vec_col = cfg["vec_col"]
         per_query = None
-        if isinstance(query_filter, (list, tuple)):
-            # Qdrant query_batch_points: each request carries its own
-            # filter. Compiled to ONE CASE-over-query_idx predicate on
-            # the scored rows (scoring is row-local, so filtering
-            # candidates before or after scoring is the same set);
-            # the scan itself can't prune on a per-query predicate,
-            # so the single-pass plan is preserved.
-            if len(query_filter) != len(query_vectors):
-                raise ValueError(
-                    f"{len(query_filter)} filters for "
-                    f"{len(query_vectors)} query vectors")
-            if cfg.get("multivector"):
-                raise ValueError("per-query filters support dense "
-                                 "collections (pass one shared filter "
-                                 "for multivector batches)")
+        if n_queries is not None and isinstance(query_filter, (list, tuple)):
+            if len(query_filter) != len(qs):
+                raise ValueError(f"{len(query_filter)} filters for "
+                                 f"{len(qs)} query vectors")
             per_query = F.lit(False)
             for i, f in enumerate(query_filter):
                 p = as_predicate(f)
@@ -3773,266 +3250,243 @@ class Collection:
                     F.col("query_idx") == i,
                     F.lit(True) if p is None else p).otherwise(per_query)
             query_filter = None
-        else:
-            query_filter = as_predicate(query_filter)
-        if cfg.get("multivector"):
-            return self._search_batch_maxsim(
-                spark, query_vectors, cfg, k=k, query_filter=query_filter,
-                score_threshold=score_threshold, id_col=id_col,
-                rescore=None if exact else rescore, exact=exact,
-                oversampling=oversampling,
-                quantization_params=quantization_params)
-        qvs = [[float(x) for x in v] for v in query_vectors]
+        query_filter = as_predicate(query_filter)
+        shard_pred = self._shard_predicate(shard_key_selector)
+        if shard_pred is not None:
+            query_filter = (shard_pred if query_filter is None
+                            else (shard_pred & query_filter))
+        corpus = self.read(spark).filter(F.col(vec_col).isNotNull())
+        plan = plan_search(
+            self._plan_facts(cfg),
+            replace(knobs, filtered=query_filter is not None,
+                    per_query=per_query is not None),
+            n_queries, lambda: self._hnsw_filter_stats(corpus, query_filter))
+        not_payload = self._vector_columns(vec_col) | {id_col}
+        if with_vectors:
+            not_payload -= {vec_col}
+        if plan.multivector:
+            return self._run_maxsim(spark, plan, qs, cfg, corpus,
+                                    query_filter, score_threshold, id_col,
+                                    not_payload, knobs.k)
+        return self._run_dense(spark, plan, qs, cfg, corpus, query_filter,
+                               per_query, score_threshold, id_col,
+                               not_payload, knobs.k)
+
+    def _probe(self, spark: SparkSession, qvs: list, nprobe: int | None,
+               batch: bool = False, cents: list | None = None) -> list[int]:
+        """The nearest-``nprobe`` cells of ``cents`` (default: the IVF
+        centroids; None nprobe: every cell — exhaustive probe ≡ exact
+        scan), picked driver-side and returned as literal ints so every
+        downstream scan filter is statically partition-pruned: one
+        query's cells nearest first, a batch's sorted union."""
+        cents = self._centroids(spark) if cents is None else cents
+        np_ = len(cents) if nprobe is None else nprobe
+        cells = [sorted(range(len(cents)),
+                        key=lambda i: (_sq_dist(qv, cents[i]), i))[:np_]
+                 for qv in qvs]
+        if not batch:
+            return [int(i) for i in cells[0]]
+        return sorted({int(i) for c in cells for i in c})
+
+    def _hnsw_walk(self, spark: SparkSession, route_qvs: list,
+                   walk_qvs: list, plan: SearchPlan, id_type: str,
+                   normalize: bool, decode=None) -> list:
+        """Per-segment HNSW beam search over each query's probed cells
+        (partition-pruned read of the graph sidecar, beam ``plan.ef``
+        per segment) → candidate rows. A batch shares one pass over the
+        probe-union of the sidecar (and one deserialize per segment)
+        while every query walks only ITS cells; its rows carry
+        ``query_id``."""
+        from .operators.hnsw import (
+            hnsw_layout_search,
+            hnsw_layout_search_batch,
+        )
+
+        graphs = _read_parquet(spark, self._hnsw_graphs)
+        # list the segment directory ONCE for a batch — per-query
+        # listdir would scan O(batch × segments) entries
+        names = (os.listdir(self._hnsw_graphs) if plan.batch and (
+            self.meta.get("hnsw") or {}).get("max_segment_size") else None)
+        segs = [self._hnsw_segments(self._probe(spark, [v], plan.nprobe),
+                                    names=names) for v in route_qvs]
+        kw = dict(ef=plan.ef, id_type=id_type, normalize=normalize,
+                  decode=decode)
+        if plan.batch:
+            return hnsw_layout_search_batch(
+                graphs, list(enumerate(walk_qvs)),
+                query_segments=dict(enumerate(segs)), **kw).collect()
+        return hnsw_layout_search(graphs, walk_qvs[0], segments=segs[0],
+                                  **kw).collect()
+
+    def _run_dense(self, spark: SparkSession, plan: SearchPlan, qs: list,
+                   cfg: dict, corpus: DataFrame, query_filter, per_query,
+                   score_threshold, id_col: str, not_payload: set,
+                   k: int | None) -> DataFrame:
+        """Run a dense plan. Shortlist tiers narrow the corpus before
+        the exact rescore: one query by a literal ``id IN`` (row-group
+        pruned main-table fetch; the flat codes shortlist joins
+        broadcast), a batch by ``include_pairs`` — each query rescores
+        only ITS candidates — plus the distinct-id ``IN``. The leaf is
+        ``dense_knn`` (TakeOrderedAndProject) for one query and
+        ``dense_knn_batch`` (grouped top-k) for a batch."""
+        from .operators.knn import dense_knn, dense_knn_batch
+
+        vec_col, batch = cfg["vec_col"], plan.batch
+        qvs = [[float(x) for x in v] for v in qs]
         if cfg.get("normalize"):
             qvs = [_unit(v) for v in qvs]
-        corpus = self.read(spark).filter(F.col(vec_col).isNotNull())
-
-        def probe_union() -> list[int]:
-            cents = self._centroids(spark)
-            np_ = len(cents) if nprobe is None else nprobe
-            probe = set()
-            for qv in qvs:
-                probe.update(sorted(
-                    range(len(cents)),
-                    key=lambda i: (_sq_dist(qv, cents[i]), i),
-                )[:np_])
-            return sorted(int(i) for i in probe)
-
-        space = cfg["vec_col"] if self.meta.get("vectors") else None
-        # filter present (shared OR per-query) → quantized prefetch
-        # can't stay filter-correct (codes carry no payload); route
-        # index-only / exact instead — same rule as single-query
-        q_ = (cfg.get("quantization")
-              if query_filter is None and per_query is None else None)
-        if q_ in ("pq", "opq") and "pq_codebooks" not in cfg:
-            q_ = None  # untrained (< pq_codes rows): exact scan
-        # Qdrant QuantizationSearchParams, batch form (one dict for
-        # the whole batch — per-request params would defeat the
-        # single-pass plan): ignore/oversampling/rescore all mirror
-        # search(); rescore=False returns each query's quantized
-        # ranking scores from ONE codes pass.
-        qp = dict(quantization_params or {})
-        unknown = sorted(set(qp) - {"ignore", "rescore", "oversampling"})
-        if unknown:
-            raise ValueError(
-                f"unknown quantization_params key(s) {unknown}")
-        if hnsw_ef is not None and not self.meta.get("hnsw"):
-            raise ValueError(
-                "hnsw_ef needs a collection created with hnsw_config")
-        if qp.get("ignore"):
-            q_ = None
-        if qp.get("oversampling") is not None:
-            oversampling = float(qp["oversampling"])
-        no_rescore = qp.get("rescore", True) is False
-        if no_rescore:
-            from .operators.knn import _DISTANCE_METRICS
-
-            if not q_ or exact:
-                raise ValueError(
-                    "quantization_params rescore=False needs an "
-                    "active quantizer (trained, not ignored, no "
-                    "filter, exact=False)")
-            if q_ == "bq":
-                raise ValueError(
-                    "rescore=False supports sq/pq/opq (the binary "
-                    "Hamming rank is not a similarity score)")
-            if cfg.get("metric", "cosine") in _DISTANCE_METRICS:
-                raise ValueError(
-                    "rescore=False returns inner-product-shaped "
-                    "quantized scores; distance-metric collections "
-                    "must rescore")
-            if k is None:
-                raise ValueError("rescore=False requires a finite k")
-        composed = bool(q_ and self.has_index()
-                        and cfg.get("codes_layout") == "cells")
-        if no_rescore:
-            short = self._quant_shortlist_batch(
-                spark, qvs, k, id_col,
-                probe_ids=probe_union() if composed else None,
-                cfg=cfg, space=space, with_scores=True)
-            if score_threshold is not None:
-                short = short.filter(F.col("score") >= score_threshold)
-            nr_not_payload = self._vector_columns(vec_col) | {id_col}
-            if with_vectors:
-                nr_not_payload -= {vec_col}
-            payload = [c for c in corpus.columns
-                       if c not in nr_not_payload]
-            hits = short
-            if payload:
-                pay = corpus.select(id_col, *payload).join(
-                    F.broadcast(short.select(id_col).distinct()),
-                    on=id_col)
-                hits = short.join(F.broadcast(pay), on=id_col,
-                                  how="left")
-            return hits.orderBy(F.col("query_idx").asc(),
-                                F.col("score").desc(),
-                                F.col(id_col).asc())
+        space = vec_col if self.meta.get("vectors") else None
         include_pairs = None
-        if (cfg.get("transform") == "pca" and cfg.get("pca_mu")
-                and not exact and query_filter is None
-                and per_query is None):
-            # PCA-transformed space, batch form: ONE pass over the
-            # projected sidecar ranks every query's compressed
-            # shortlist; each query exact-rescores only ITS pairs,
-            # the distinct-id keep-list row-group-prunes the
-            # full-width fetch (the batched-quantized shape)
-            m = max(k or 1, int(math.ceil((k or 1) * oversampling)))
-            include_pairs = self._pca_shortlist_batch(
-                spark, qvs, m, id_col, cfg=cfg, space=space,
-                nprobe=nprobe)
-            include_pairs = local_literal_df(
-                spark, include_pairs.collect(), include_pairs.schema)
-            ids = [r[id_col] for r in
-                   include_pairs.select(id_col).distinct().collect()]
-            corpus = corpus.filter(F.col(id_col).isin(ids))
-        elif (self._has_hnsw() and self.has_index() and not exact
-                and query_filter is None
-                and per_query is None and k is not None
-                and os.path.isdir(self._hnsw_graphs)
-                and (recall_target is None or hnsw_ef is not None)
-                and (self.meta.get("quantization") is None or q_)):
-            # batched graph tier: every query probes ITS OWN nprobe
-            # cells but the whole batch shares one pass over the
-            # probe-union of the graph sidecar (and one deserialize
-            # per segment) — batch ≡ per-query single searches, the
-            # quantized-batch discipline. Each query then rescores
-            # only ITS candidate pairs. Quantized collections walk
-            # code graphs (decode per segment) exactly like single
-            # search; ignore=True skips this branch (q_ is None).
-            from .operators.hnsw import hnsw_layout_search_batch
-
+        if plan.tier == "noscore":
+            # QuantizationSearchParams(rescore=False): the codes
+            # ranking IS the result; payload joins back onto the
+            # ≤k-row hit list, the corpus fetch semi-join-pruned to it
+            hits = short = self._quant_shortlist(
+                spark, qvs, k, id_col, probe_ids=self._probe(
+                    spark, qvs, plan.nprobe, batch)
+                if plan.probe_codes else None,
+                cfg=cfg, space=space, with_scores=True, batch=batch)
+            if score_threshold is not None:
+                hits = short = short.filter(F.col("score") >= score_threshold)
+            payload = [c for c in corpus.columns if c not in not_payload]
+            if payload:
+                ids = short.select(id_col)
+                pay = corpus.select(id_col, *payload).join(
+                    F.broadcast(ids.distinct() if batch else ids),
+                    on=id_col)
+                hits = short.join(F.broadcast(pay), on=id_col, how="left")
+            return hits.orderBy(
+                *([F.col("query_idx").asc()] if batch else []),
+                F.col("score").desc(), F.col(id_col).asc())
+        if plan.tier in ("pca", "composed", "quant"):
+            # rank the compressed sidecar (PCA projection, or the 4-32×
+            # smaller codes — probed cells only when composed with the
+            # IVF layout), exact-rescore the oversampled shortlist
+            if plan.tier == "pca":
+                short = self._pca_shortlist(spark, qvs, plan.m, id_col, cfg,
+                                            space, plan.nprobe, batch)
+            else:
+                short = self._quant_shortlist(
+                    spark, qvs, plan.m, id_col, probe_ids=self._probe(
+                        spark, qvs, plan.nprobe, batch)
+                    if plan.tier == "composed" else None,
+                    cfg=cfg, space=space, batch=batch)
+            if batch:
+                include_pairs = local_literal_df(spark, short.collect(),
+                                                 short.schema)
+                short = include_pairs.select(id_col).distinct()
+            if plan.tier == "quant" and not batch:
+                corpus = corpus.join(F.broadcast(short), on=id_col)
+            else:
+                corpus = corpus.filter(F.col(id_col).isin(
+                    [r[id_col] for r in short.collect()]))
+        elif plan.tier == "hnsw":
+            # walk the probed cells' graphs instead of scanning them,
+            # exact-rescore the bounded candidate union. Quantized
+            # collections walk graphs built over the CODES sidecar
+            # (decoded per segment, _hnsw_quant_parts)
             gq = self._hnsw_quant_parts()
-            cents = self._centroids(spark)
-            np_ = len(cents) if nprobe is None else nprobe
-            # list the segment directory ONCE for the whole batch —
-            # per-query listdir would scan O(batch × segments) entries
-            seg_names = (os.listdir(self._hnsw_graphs)
-                         if (self.meta.get("hnsw") or {})
-                         .get("max_segment_size") else None)
-            qsegs = {
-                i: self._hnsw_segments(sorted(
-                    range(len(cents)),
-                    key=lambda c: (_sq_dist(qv, cents[c]), c))[:np_],
-                    names=seg_names)
-                for i, qv in enumerate(qvs)}
-            ef = (int(hnsw_ef) if hnsw_ef is not None
-                  else max(4 * k, 64,
-                           int(math.ceil(k * oversampling))
-                           if gq is not None else 0))
             id_type = corpus.schema[id_col].dataType.simpleString()
-            walk_qs = (qvs if gq is None
-                       else [self._pq_query_vec(cfg, v) for v in qvs])
-            cand = hnsw_layout_search_batch(
-                _read_parquet(spark, self._hnsw_graphs),
-                list(enumerate(walk_qs)), ef=ef, query_segments=qsegs,
-                id_type=id_type,
-                normalize=(cfg.get("metric", "cosine") == "cosine"
-                           if gq is None else True),
-                decode=None if gq is None else gq[2],
-            ).collect()
-            include_pairs = local_literal_df(
-                spark, [(int(r["query_id"]), r["vec_id"]) for r in cand],
-                f"query_idx int, {id_col} {id_type}")
+            cand = self._hnsw_walk(
+                spark, qvs, qvs if gq is None
+                else [self._pq_query_vec(cfg, v) for v in qvs], plan,
+                id_type, cfg.get("metric", "cosine") == "cosine"
+                if gq is None else True, None if gq is None else gq[2])
+            if batch:
+                include_pairs = local_literal_df(
+                    spark, [(int(r["query_id"]), r["vec_id"]) for r in cand],
+                    f"query_idx int, {id_col} {id_type}")
             corpus = corpus.filter(F.col(id_col).isin(
                 sorted({r["vec_id"] for r in cand})))
-        elif not exact and q_ and (composed or not self.has_index()):
-            # batched quantized prefetch + exact rescore: ONE pass
-            # over the codes sidecar ranks every query's shortlist
-            # (partition-pruned to the probe union when composed);
-            # each query rescores only ITS pairs. The distinct-id
-            # keep-list (≤ |batch|·m, driver-side literal) row-group-
-            # prunes the full-precision fetch — the _maxsim_stage1
-            # pattern, batch-shaped. Reached on quantized collections
-            # whose graphs are absent (or hnsw_config unset).
-            m = max(k or 1, int(math.ceil((k or 1) * oversampling)))
-            include_pairs = self._quant_shortlist_batch(
-                spark, qvs, m, id_col,
-                probe_ids=probe_union() if composed else None,
-                cfg=cfg, space=space)
-            include_pairs = local_literal_df(
-                spark, include_pairs.collect(), include_pairs.schema)
-            ids = [r[id_col] for r in
-                   include_pairs.select(id_col).distinct().collect()]
-            corpus = corpus.filter(F.col(id_col).isin(ids))
-        elif self.has_index() and not exact:
-            corpus = _read_parquet(spark, self._ivf_points).filter(
-                F.col("centroid_id").isin(probe_union())
-            ).drop("centroid_id")
-        queries = local_literal_df(
-            spark, [(i, [float(x) for x in v]) for i, v in enumerate(qvs)],
-            "query_idx int, query_vec array<double>",
-        )
-        batch_not_payload = self._vector_columns(vec_col) | {id_col}
-        if with_vectors:
-            batch_not_payload -= {vec_col}
-        payload = [c for c in corpus.columns
-                   if c not in batch_not_payload]
+        elif plan.tier == "ivf":
+            corpus = self._ivf_scan(spark, qvs, plan.nprobe, batch)
+        payload = [c for c in corpus.columns if c not in not_payload]
+        kw = dict(k=k, id_col=id_col, vec_col=vec_col, payload_cols=payload,
+                  prefilter=query_filter, score_threshold=score_threshold,
+                  prenormalized=bool(cfg.get("normalize")),
+                  dim=cfg.get("dim"), metric=cfg.get("metric", "cosine"))
+        if not batch:
+            return dense_knn(corpus, local_literal_df(
+                spark, [(qvs[0],)], "query_vec array<double>"), **kw)
         return dense_knn_batch(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-            query_id_col="query_idx", payload_cols=payload,
-            prefilter=query_filter, score_threshold=score_threshold,
-            prenormalized=bool(cfg.get("normalize")),
-            dim=cfg.get("dim"), local_prune=True,
-            include_pairs=include_pairs,
-            per_query_filter=per_query,
-            metric=cfg.get("metric", "cosine"),
-        )
+            corpus, _query_frame(spark, qvs), query_id_col="query_idx",
+            local_prune=True,
+            include_pairs=include_pairs, per_query_filter=per_query, **kw)
 
-    def _sparse_search_batch(self, spark: SparkSession, query_vectors,
-                             name: str, k: int = 5, query_filter=None,
-                             score_threshold=None, id_col: str = "id",
-                             with_vectors: bool = False) -> DataFrame:
-        """Batched search over one sparse space: every request shares
-        ONE posting pass (`operators/sparse.py::sparse_knn_batch`),
-        results tagged ``query_idx`` and ranked per request — the
-        sparse twin of the dense batched scan. IDF statistics stay
-        collection-wide under a filter, as in single search."""
-        from .operators.sparse import sparse_knn_batch
+    def _ivf_scan(self, spark: SparkSession, qvs: list,
+                  nprobe: int | None, batch: bool) -> DataFrame:
+        """The IVF layout scan reduced to a literal ``centroid_id IN
+        (...)`` — statically partition-pruned on the
+        partitionBy(centroid_id) layout."""
+        return _read_parquet(spark, self._ivf_points).filter(
+            F.col("centroid_id").isin(self._probe(spark, qvs, nprobe, batch))
+        ).drop("centroid_id")
 
-        qs = []
-        for q in query_vectors:
-            if isinstance(q, dict):
-                qs.append((q["indices"], q["values"]))
-            else:
-                qs.append((list(q[0]), list(q[1])))
-        idx_c, val_c = name + "__sidx", name + "__sval"
-        table = self.read(spark)
-        query_filter = as_predicate(query_filter)
-        mod = self.meta["sparse_vectors"][name].get("modifier")
-        all_terms = {int(t) for qi_, _ in qs for t in qi_}
-        posting = (self._pruned_postings(spark, name, all_terms, id_col)
-                   if query_filter is None else None)
-        if posting is not None:
-            # batched layout probe: one pruned posting pass shared by
-            # every request (the filtered batch path keeps the array
-            # form — per-request candidate joins would fan out)
-            hits = sparse_knn_batch(
-                None, qs, k=k, id_col=id_col, modifier=mod,
-                postings=posting,
-                df_stats=self._pruned_df_stats(spark, name, all_terms),
-                n_points=self.meta["sparse_vectors"][name].get("n_points"))
-        else:
-            full = table.filter(F.col(idx_c).isNotNull()).select(
-                F.col(id_col), F.col(idx_c).alias("indices"),
-                F.col(val_c).alias("values"))
-            enc = full if query_filter is None else (
-                table.filter(F.col(idx_c).isNotNull()).filter(query_filter)
-                .select(F.col(id_col), F.col(idx_c).alias("indices"),
-                        F.col(val_c).alias("values")))
-            hits = sparse_knn_batch(
-                enc, qs, k=k, id_col=id_col, modifier=mod,
-                stats_corpus=full if (mod and query_filter is not None)
-                else None)
-        if score_threshold is not None:
-            hits = hits.filter(F.col("score") >= score_threshold)
-        drop = self._vector_columns()
-        if with_vectors:
-            drop = drop - {idx_c, val_c}
-        side = table.select(*[c for c in table.columns
-                              if c not in drop or c == id_col])
-        out = side.join(F.broadcast(hits), on=id_col)
-        return out.orderBy("query_idx", F.col("score").desc(),
-                           F.col(id_col))
+    def _run_maxsim(self, spark: SparkSession, plan: SearchPlan, qs: list,
+                    cfg: dict, corpus: DataFrame, query_filter,
+                    score_threshold, id_col: str, not_payload: set,
+                    k: int | None) -> DataFrame:
+        """Run a multivector plan: route on the mean-pooled query (the
+        cells were carved, and the graphs built, over mean-pooled doc
+        vectors), apply the filter (before any shortlist, so its depth
+        is spent inside the filtered slice), shortlist, then exact
+        MaxSim with the query set captured in the scorer closure —
+        never joined on as a column, so the scan carries only doc bytes
+        (at ColPali shape a query array is tens of KB per row,
+        BASELINE.md §MaxSim-at-shape) and docs cross Arrow once
+        regardless of Q."""
+        from .operators.maxsim import maxsim_knn, maxsim_knn_batch
+
+        vec_col, dim, batch = cfg["vec_col"], cfg.get("dim"), plan.batch
+        qvs = [[[float(x) for x in v] for v in q] for q in qs]
+        if cfg.get("normalize"):
+            qvs = [[_unit(v) for v in q] for q in qvs]
+        flats = [[x for v in q for x in v] for q in qvs]
+        pooled = [[sum(v[j] for v in q) / len(q) for j in range(len(q[0]))]
+                  for q in qvs]
+        payload = [c for c in corpus.columns if c not in not_payload]
+        if _is_nested(corpus, vec_col):  # compatibility reader
+            if batch:
+                raise ValueError("batched MaxSim needs the flat layout; "
+                                 "re-upsert or loop search()")
+            qdf = local_literal_df(
+                spark, [(qvs[0],)], "query_vectors array<array<double>>")
+            return maxsim_knn(
+                corpus, qdf, k=k, id_col=id_col, mv_col=vec_col,
+                payload_cols=payload, prefilter=query_filter,
+                score_threshold=score_threshold)
+        cand_ids = None
+        if plan.tier == "hnsw":
+            # the reference's ACTUAL configuration: the beam over the
+            # pooled routing graphs IS stage 1 — its candidates go
+            # straight to exact MaxSim
+            cand = self._hnsw_walk(
+                spark, pooled, pooled, plan,
+                corpus.schema[id_col].dataType.simpleString(),
+                cfg.get("metric", "cosine") == "cosine")
+            cand_ids = sorted({r["vec_id"] for r in cand})
+            corpus = corpus.filter(F.col(id_col).isin(cand_ids))
+        elif plan.tier == "ivf":
+            corpus = self._ivf_scan(spark, pooled, plan.nprobe, batch)
+        if query_filter is not None:
+            corpus = corpus.filter(query_filter)
+        if plan.shortlist == "codes":
+            # rank the int8 codes by approximate MaxSim — restricted to
+            # the beam's candidates or the probed cells — and exact-
+            # rescore ONLY the shortlist at full width
+            corpus = corpus.filter(F.col(id_col).isin(self._mv_quant_shortlist(
+                spark, flats, plan.m, id_col, cfg,
+                vec_col if self.meta.get("vectors") else None,
+                ids=cand_ids, probe=self._probe(spark, pooled, plan.nprobe)
+                if plan.probe_codes else None, batch=batch)))
+        elif plan.shortlist == "pooled":
+            corpus = self._maxsim_stage1(corpus, pooled, plan.m, id_col,
+                                         vec_col, dim, batch=batch)
+        kw = dict(k=k, id_col=id_col, mv_col=vec_col, payload_cols=payload,
+                  score_threshold=score_threshold, flat_dim=dim)
+        if batch:
+            return maxsim_knn_batch(corpus, None, queries_flat=flats, **kw)
+        return maxsim_knn(corpus, None, query_flat=flats[0], **kw)
 
     def _ranks_ascending(self, using: str | None, vec_col: str) -> bool:
         """Whether a space's scores rank ascending (distance metrics)
@@ -4469,7 +3923,7 @@ class Collection:
             qf = as_predicate(query_filter)
             flt = excl if qf is None else (qf & excl)
             hits = self._sparse_search(
-                spark, ([i for i, _ in items], [v for _, v in items]),
+                spark, [([i for i, _ in items], [v for _, v in items])],
                 using, k=k, query_filter=flt,
                 score_threshold=score_threshold, id_col=id_col)
             return self._apply_with_payload(
@@ -4935,89 +4389,6 @@ class Collection:
         return (out.join(F.broadcast(sel),
                          out[group_by] == sel["__gid"], "left")
                 .drop("__gid"))
-
-    def _search_batch_maxsim(self, spark: SparkSession, query_vectors,
-                             cfg: dict, k: int, query_filter,
-                             score_threshold, id_col: str,
-                             rescore: int | None = None,
-                             exact: bool = False,
-                             oversampling: float = 4.0,
-                             quantization_params: dict | None = None
-                             ) -> DataFrame:
-        """Batched MaxSim: every query's subvectors normalize/flatten
-        like the single-query path, then one corpus pass scores all
-        (doc x query) pairs (operators.maxsim.maxsim_knn_batch).
-
-        ``rescore=N`` (round 6) makes it batched TWO-STAGE: one
-        pooled-column pass ranks all queries' candidates
-        (`_maxsim_stage1_batch`), stage 2 batch-scores only the union
-        of shortlists. At ColPali shape the batch reads 1/n_vecs of
-        the bytes once for stage 1 plus ≤ Q·N shortlist rows — not Q
-        exact scans, and not even one."""
-        from .operators.maxsim import maxsim_knn_batch
-
-        qp = dict(quantization_params or {})
-        unknown = sorted(set(qp) - {"ignore", "rescore", "oversampling"})
-        if unknown:
-            raise ValueError(
-                f"unknown quantization_params key(s) {unknown}")
-        if qp and not cfg.get("quantization"):
-            raise ValueError("quantization_params need a quantized space")
-        if qp.get("rescore", True) is False:
-            raise ValueError(
-                "multivector quantized search always rescores "
-                "(approximate MaxSim ranks are not returned)")
-        if qp.get("oversampling") is not None:
-            oversampling = float(qp["oversampling"])
-        vec_col = cfg["vec_col"]
-        corpus = self.read(spark).filter(F.col(vec_col).isNotNull())
-        if _is_nested(corpus, vec_col):
-            raise ValueError("batched MaxSim needs the flat layout; "
-                             "re-upsert or loop search()")
-        dim = cfg.get("dim")
-        flats, pooled_qs = [], []
-        for mv in query_vectors:
-            qv = [[float(x) for x in v] for v in mv]
-            if cfg.get("normalize"):
-                qv = [_unit(v) for v in qv]
-            flats.append([x for v in qv for x in v])
-            pooled_qs.append([sum(v[j] for v in qv) / len(qv)
-                              for j in range(len(qv[0]))])
-        if (query_filter is None and cfg.get("quantization") == "sq"
-                and "sq_mins" in cfg and not exact and k is not None
-                and not qp.get("ignore")):
-            # batched quantized tier (multivector × sq): ONE pass over
-            # the int8 codes sidecar scores every query (codes cross
-            # Arrow once — no Q-way duplication), per-query top-m, and
-            # the UNION of shortlists feeds the exact batch rescore —
-            # each query ranks the union, a superset of its own
-            # shortlist. Same filter-correct rule as the single-query
-            # tier: any filter skips the codes (no payload there).
-            m = (max(k, rescore) if rescore is not None
-                 else max(k, int(math.ceil(k * oversampling))))
-            ids = self._mv_quant_shortlist_batch(
-                spark, flats, m, id_col, cfg,
-                cfg["vec_col"] if self.meta.get("vectors") else None)
-            corpus = corpus.filter(F.col(id_col).isin(ids))
-            rescore = None  # the codes tier IS the shortlist stage
-        if query_filter is not None and rescore is not None:
-            # before stage 1, like the single-query path: the prune
-            # depth is spent inside the filtered slice
-            corpus = corpus.filter(query_filter)
-            query_filter = None
-        if rescore is not None and k is not None:
-            corpus = self._maxsim_stage1_batch(
-                corpus, pooled_qs, max(k, rescore), id_col, vec_col, dim)
-        payload = [c for c in corpus.columns
-                   if c not in self._vector_columns(vec_col) | {id_col}]
-        # whole batch captured in the scorer closure: docs cross Arrow
-        # once regardless of Q (no Q-way doc duplication via the join)
-        return maxsim_knn_batch(
-            corpus, None, k=k, id_col=id_col, mv_col=vec_col,
-            payload_cols=payload, prefilter=query_filter,
-            score_threshold=score_threshold, flat_dim=dim,
-            queries_flat=flats,
-        )
 
     # -- point management (Qdrant client surface beyond the reference) ----
 

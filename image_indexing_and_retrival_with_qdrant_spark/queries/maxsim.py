@@ -242,7 +242,7 @@ def maxsim_recall_routed_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _batch_two_stage_oracle() -> str:
     """Batched two-stage twin: per-query pooled-cosine top-200, UNION
     of shortlists, exact MaxSim per query over the union, top-3 per
-    query — mirroring `_maxsim_stage1_batch` + `maxsim_knn_batch`
+    query — mirroring batched `_maxsim_stage1` + `maxsim_knn_batch`
     (each query ranks the whole union, a superset of its own
     shortlist)."""
     pd = [_pool_dim("e.emb", j) for j in range(1, _DIM + 1)]
@@ -303,7 +303,7 @@ def maxsim_batch_two_stage_top3(spark: SparkSession,
     batch-scored with exact MaxSim, ranks returned per query. The
     at-100-TB shape for N-query ColPali workloads: stage 1 reads
     1/n_vecs of the bytes once (not per query), stage 2 reads ≤ Q·N
-    rows (`catalog.py::_maxsim_stage1_batch`). Oracle mirrors both
+    rows (`catalog.py::_maxsim_stage1`, batch leaf). Oracle mirrors both
     stages per query including the union-superset ranking."""
     import shutil
     import tempfile

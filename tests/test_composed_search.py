@@ -71,7 +71,7 @@ def test_composed_exhaustive_equals_exact(spark, composed):
 def test_composed_probe_is_partition_pruned(spark, composed):
     """The codes scan inside the composed path must carry a
     centroid_id partition filter — only probed bucket dirs open."""
-    short = composed._quant_shortlist(spark, QV, 10, "id",
+    short = composed._quant_shortlist(spark, [QV], 10, "id",
                                       probe_ids=[0, 2])
     plan = short._jdf.queryExecution().executedPlan().toString()
     assert "centroid_id" in plan, plan
@@ -215,8 +215,8 @@ def test_batch_exact_skips_codes(spark, composed):
 def test_batch_codes_scan_partition_pruned(spark, composed):
     """The batched shortlist's codes scan carries the probe's
     centroid_id partition filter."""
-    short = composed._quant_shortlist_batch(spark, [QV, QV2], 10, "id",
-                                            probe_ids=[0, 2])
+    short = composed._quant_shortlist(spark, [QV, QV2], 10, "id",
+                                      probe_ids=[0, 2], batch=True)
     plan = short._jdf.queryExecution().executedPlan().toString()
     assert "centroid_id" in plan, plan
     rows = short.collect()

@@ -146,6 +146,21 @@ def test_hnsw_ef_validation(spark, root):
         c.search(spark, qv, k=3, hnsw_ef=16)
 
 
+
+def test_batch_hnsw_ef_validation_with_payload_selector(spark, root):
+    """A with_payload selector must not drop hnsw_ef: on a collection
+    without hnsw_config a batch raises, as single search does."""
+    c = create_collection(root, "plain_wp", dim=8, normalize=False)
+    c.upsert(spark, _points(spark, n=20, seed=6, prefix="w"),
+             mode="merge")
+    qv = [0.0] * 8
+    for wp in (False, {"exclude": []}):
+        with pytest.raises(ValueError, match="hnsw_ef"):
+            c.search(spark, qv, k=3, with_payload=wp, hnsw_ef=16)
+        with pytest.raises(ValueError, match="hnsw_ef"):
+            c.search_batch(spark, [qv, qv], k=3, with_payload=wp,
+                           hnsw_ef=16)
+
 def test_snapshot_carries_graphs(spark, coll):
     snap = coll.create_snapshot()
     assert any(".hnsw" in p for p in os.listdir(coll._snap_dir(snap)))

@@ -1,5 +1,6 @@
 """Flat vs nested MaxSim scorers must agree exactly."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import (
@@ -84,6 +85,46 @@ def test_search_batch_multivector(spark, tmp_path):
     single = coll.search(spark, q0, k=2).collect()
     assert [(r.id, r.score) for r in single] == [got[(0, 1)], got[(0, 2)]]
 
+
+
+def _mv_batch_collection(spark, tmp_path):
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        create_collection,
+    )
+
+    coll = create_collection(str(tmp_path), "mvb", dim=2, multivector=True,
+                             normalize=False)
+    coll.upsert(spark, spark.createDataFrame(
+        [(1, [[1.0, 0.0], [0.0, 1.0]]), (2, [[0.5, 0.5]]),
+         (3, [[2.0, 0.0]])],
+        "id int, embedding array<array<double>>"))
+    return coll
+
+
+def test_search_batch_multivector_with_vectors(spark, tmp_path):
+    """with_vectors=True on a multivector batch: the searched space's
+    stored vector rides along per hit, exactly as in single search."""
+    coll = _mv_batch_collection(spark, tmp_path)
+    qs = [[[1.0, 0.0]], [[0.0, 1.0], [1.0, 0.0]]]
+    df = coll.search_batch(spark, qs, k=2, with_vectors=True)
+    assert "embedding" in df.columns, df.columns
+    out = df.collect()
+    for i, q in enumerate(qs):
+        single = coll.search(spark, q, k=2, with_vectors=True).collect()
+        assert [(r.id, r.score, r.embedding) for r in out
+                if r.query_idx == i] == \
+            [(r.id, r.score, r.embedding) for r in single]
+
+
+def test_search_batch_multivector_hnsw_ef_needs_hnsw_config(spark, tmp_path):
+    """hnsw_ef on a multivector collection created without
+    hnsw_config raises for a batch, as it does for single search."""
+    coll = _mv_batch_collection(spark, tmp_path)
+    q = [[1.0, 0.0]]
+    with pytest.raises(ValueError, match="hnsw_ef needs"):
+        coll.search(spark, q, k=2, hnsw_ef=16)
+    with pytest.raises(ValueError, match="hnsw_ef needs"):
+        coll.search_batch(spark, [q, q], k=2, hnsw_ef=16)
 
 def test_query_capture_matches_query_column(spark, sf_smoke):
     """maxsim_knn(query_flat=...) (query captured in the UDF closure —

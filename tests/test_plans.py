@@ -354,3 +354,23 @@ def test_opq_adc_probe_is_exchange_free(spark, sf_smoke):
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan
     assert "Join" not in plan
+
+
+def test_collection_search_keeps_single_query_leaf(spark, tmp_path):
+    """Collection.search runs the single-query leaf — dense exact is
+    a TakeOrderedAndProject heap, no Window — while a 2-query
+    search_batch keeps its grouped top-k (a per-query Window)."""
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        create_collection,
+    )
+
+    coll = create_collection(str(tmp_path), "leaf", dim=4, normalize=False)
+    coll.upsert(spark, spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0, float(i % 3)]) for i in range(20)],
+        "id long, embedding array<double>"))
+    q0, q1 = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]
+    single = formatted_plan(coll.search(spark, q0, k=3, exact=True))
+    assert "TakeOrderedAndProject" in single and "Window" not in single
+    batch = formatted_plan(coll.search_batch(spark, [q0, q1], k=3,
+                                             exact=True))
+    assert "Window" in batch, batch
