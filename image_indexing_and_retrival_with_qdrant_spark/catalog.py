@@ -72,7 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType
 
 from .filters import as_predicate
-from .functions.localframe import local_literal_df
+from .functions.localframe import literal_in, local_literal_df
 from .functions.vector import as_double, l2_normalize, mean_pool_flat
 from .search_plan import SearchKnobs, SearchPlan, overlay_recall, plan_search
 
@@ -2287,8 +2287,7 @@ class Collection:
                       .select("query_idx", F.col(id_col),
                               ham.alias("hamming")))
             order = [("hamming", True), (id_col, True)]
-        out = grouped_topk(scored, ["query_idx"], order, m,
-                           local_prune=True)
+        out = grouped_topk(scored, ["query_idx"], order, m)
         return out.select("query_idx", id_col,
                           *[F.col(order[0][0]).alias(c) for c in score])
 
@@ -2440,8 +2439,7 @@ class Collection:
                                    "query_vec array<double>")
             return dense_knn(side, qdf, **kw).select(id_col)
         return dense_knn_batch(side, _query_frame(spark, pqs),
-                               query_id_col="query_idx",
-                               local_prune=True, **kw
+                               query_id_col="query_idx", **kw
                                ).select("query_idx", id_col)
 
     def _maxsim_stage1(self, corpus: DataFrame, pooled_qs: list,
@@ -2492,10 +2490,9 @@ class Collection:
                               .alias("__ps")))
             keep = grouped_topk(scored, ["query_idx"],
                                 [("__ps", False), (id_col, True)], m,
-                                rank_col=None, local_prune=True
-                                ).select(id_col).distinct()
+                                rank_col=None).select(id_col).distinct()
         ids = [r[id_col] for r in keep.collect()]  # ≤ Q·m rows
-        return corpus.filter(F.col(id_col).isin(ids))
+        return corpus.filter(literal_in(id_col, ids))
 
     def _mv_quant_shortlist(self, spark: SparkSession,
                             queries_flat: list, m: int,
@@ -2531,7 +2528,7 @@ class Collection:
             codes = codes.filter(
                 F.col("centroid_id").isin([int(i) for i in probe]))
         if ids is not None:
-            codes = codes.filter(F.col(id_col).isin(ids))
+            codes = codes.filter(literal_in(id_col, ids))
         sq = (int(cfg["dim"]), [float(x) for x in cfg["sq_mins"]],
               [float(x) for x in cfg["sq_steps"]])
         order = [("score", False), (id_col, True)]
@@ -2550,8 +2547,7 @@ class Collection:
             ).select(id_col, "query_idx",
                      F.round(F.col("__s"), 6).alias("score"))
             keep = grouped_topk(scored, ["query_idx"], order, m,
-                                rank_col=None, local_prune=True
-                                ).select(id_col).distinct()
+                                rank_col=None).select(id_col).distinct()
         return [r[id_col] for r in keep.collect()]
 
     def _post_write(self, spark: SparkSession, incoming: DataFrame | None,
@@ -2844,6 +2840,16 @@ class Collection:
                else [selector])
         return F.col(sk).isin(sel)
 
+    def _with_shards(self, query_filter, selector) -> Column | None:
+        """``query_filter`` (any form ``as_predicate`` takes) AND the
+        shard prune of ``selector`` — every read surface that takes a
+        ``shard_key_selector`` narrows through this."""
+        pred = as_predicate(query_filter)
+        shard_pred = self._shard_predicate(selector)
+        if shard_pred is None:
+            return pred
+        return shard_pred if pred is None else shard_pred & pred
+
     # -- query_points analog ---------------------------------------------
 
     def _pruned_postings(self, spark: SparkSession, name: str,
@@ -3103,7 +3109,8 @@ class Collection:
                 n_queries)
             out = self._sparse_search(
                 spark, qs, using or next(iter(sv)), k=knobs.k,
-                query_filter=query_filter,
+                query_filter=self._with_shards(query_filter,
+                                               shard_key_selector),
                 score_threshold=score_threshold, id_col=id_col,
                 offset=offset, with_vectors=wv, batch=batch)
         elif batch:
@@ -3250,11 +3257,7 @@ class Collection:
                     F.col("query_idx") == i,
                     F.lit(True) if p is None else p).otherwise(per_query)
             query_filter = None
-        query_filter = as_predicate(query_filter)
-        shard_pred = self._shard_predicate(shard_key_selector)
-        if shard_pred is not None:
-            query_filter = (shard_pred if query_filter is None
-                            else (shard_pred & query_filter))
+        query_filter = self._with_shards(query_filter, shard_key_selector)
         corpus = self.read(spark).filter(F.col(vec_col).isNotNull())
         plan = plan_search(
             self._plan_facts(cfg),
@@ -3378,8 +3381,8 @@ class Collection:
             if plan.tier == "quant" and not batch:
                 corpus = corpus.join(F.broadcast(short), on=id_col)
             else:
-                corpus = corpus.filter(F.col(id_col).isin(
-                    [r[id_col] for r in short.collect()]))
+                corpus = corpus.filter(literal_in(
+                    id_col, [r[id_col] for r in short.collect()]))
         elif plan.tier == "hnsw":
             # walk the probed cells' graphs instead of scanning them,
             # exact-rescore the bounded candidate union. Quantized
@@ -3396,8 +3399,8 @@ class Collection:
                 include_pairs = local_literal_df(
                     spark, [(int(r["query_id"]), r["vec_id"]) for r in cand],
                     f"query_idx int, {id_col} {id_type}")
-            corpus = corpus.filter(F.col(id_col).isin(
-                sorted({r["vec_id"] for r in cand})))
+            corpus = corpus.filter(literal_in(
+                id_col, sorted({r["vec_id"] for r in cand})))
         elif plan.tier == "ivf":
             corpus = self._ivf_scan(spark, qvs, plan.nprobe, batch)
         payload = [c for c in corpus.columns if c not in not_payload]
@@ -3410,7 +3413,6 @@ class Collection:
                 spark, [(qvs[0],)], "query_vec array<double>"), **kw)
         return dense_knn_batch(
             corpus, _query_frame(spark, qvs), query_id_col="query_idx",
-            local_prune=True,
             include_pairs=include_pairs, per_query_filter=per_query, **kw)
 
     def _ivf_scan(self, spark: SparkSession, qvs: list,
@@ -3465,7 +3467,7 @@ class Collection:
                 corpus.schema[id_col].dataType.simpleString(),
                 cfg.get("metric", "cosine") == "cosine")
             cand_ids = sorted({r["vec_id"] for r in cand})
-            corpus = corpus.filter(F.col(id_col).isin(cand_ids))
+            corpus = corpus.filter(literal_in(id_col, cand_ids))
         elif plan.tier == "ivf":
             corpus = self._ivf_scan(spark, pooled, plan.nprobe, batch)
         if query_filter is not None:
@@ -3474,11 +3476,12 @@ class Collection:
             # rank the int8 codes by approximate MaxSim — restricted to
             # the beam's candidates or the probed cells — and exact-
             # rescore ONLY the shortlist at full width
-            corpus = corpus.filter(F.col(id_col).isin(self._mv_quant_shortlist(
+            short = self._mv_quant_shortlist(
                 spark, flats, plan.m, id_col, cfg,
                 vec_col if self.meta.get("vectors") else None,
                 ids=cand_ids, probe=self._probe(spark, pooled, plan.nprobe)
-                if plan.probe_codes else None, batch=batch)))
+                if plan.probe_codes else None, batch=batch)
+            corpus = corpus.filter(literal_in(id_col, short))
         elif plan.shortlist == "pooled":
             corpus = self._maxsim_stage1(corpus, pooled, plan.m, id_col,
                                          vec_col, dim, batch=batch)
@@ -4902,10 +4905,7 @@ class Collection:
         if not self._has_data(spark):
             return 0
         df = _read_parquet(spark, self.path)
-        pred = as_predicate(count_filter)
-        shard_pred = self._shard_predicate(shard_key_selector)
-        if shard_pred is not None:
-            pred = shard_pred if pred is None else (shard_pred & pred)
+        pred = self._with_shards(count_filter, shard_key_selector)
         if pred is not None:
             df = df.filter(pred)
         return df.count()

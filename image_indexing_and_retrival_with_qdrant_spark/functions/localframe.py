@@ -28,16 +28,24 @@ larger SF. ``_MAX_LITERAL_ROWS`` / ``_MAX_LITERAL_CHARS`` cap the
 path: above either bound the rows fall back to ``createDataFrame``
 (the pre-round-11 behavior for those sites), which distributes the
 pickled rows instead of parsing them.
+
+``literal_in`` applies the same rendering to a candidate-id filter:
+``Column.isin`` sends every value as its own py4j literal (measured
+0.48 s for the ~900-id candidate union of one HNSW search), while
+``literal_in`` renders one ``col IN (...)`` string the JVM parses in
+one call. The analyzed and optimized plans are the same ``In`` /
+``InSet`` either way.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-__all__ = ["local_literal_df"]
+__all__ = ["literal_in", "local_literal_df"]
 
 # Query frames are 1-64 rows; the widest intended win (a 64-row batch
 # of 64-d query vectors) renders ~80 KB. Both caps sit well above
@@ -89,3 +97,19 @@ def local_literal_df(spark: SparkSession, rows: list,
     names = ", ".join(f"`{f.name}`" for f in schema.fields)
     df = spark.sql(f"SELECT * FROM (VALUES {values}) AS t({names})")
     return df.to(schema)
+
+
+def literal_in(col: str, values) -> Column:
+    """``F.col(col).isin(values)`` as ONE JVM-parsed ``IN`` literal
+    (see module docstring). ``col`` names a top-level column (it is
+    backtick-quoted, so any name works); ``values`` are str/int/float/
+    bool. An empty ``values`` matches nothing; values no SQL literal
+    can express fall back to ``isin``."""
+    values = list(values)
+    if not values:
+        return F.lit(False)
+    try:
+        items = ", ".join(_render(v) for v in values)
+    except _Unrenderable:
+        return F.col(col).isin(values)
+    return F.expr(f"`{col.replace('`', '``')}` IN ({items})")

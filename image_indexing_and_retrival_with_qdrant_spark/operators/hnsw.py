@@ -763,10 +763,11 @@ def hnsw_layout_search(layout: DataFrame, qvec, ef: int,
             "vec_id": [ids[p] for _, p in res],
         })
 
-    from .skew import pin_group_parallelism
-
-    return pin_group_parallelism(layout, "segment").groupBy(
-        "segment").applyInPandas(
+    # no pin_group_parallelism here (unlike the builds): a walk's work
+    # is proportional to the bytes it deserializes, so AQE sizing the
+    # exchange by bytes is right, and each extra Python task costs a
+    # fixed ~0.2-0.27 s of worker CPU (SCALE.md)
+    return layout.groupBy("segment").applyInPandas(
         search, f"segment bigint, vec_id {id_type}")
 
 
@@ -831,8 +832,6 @@ def hnsw_layout_search_batch(layout: DataFrame, queries, ef: int,
             "vec_id": out_v,
         })
 
-    from .skew import pin_group_parallelism
-
-    return pin_group_parallelism(layout, "segment").groupBy(
-        "segment").applyInPandas(
+    # byte-sized exchange, as in hnsw_layout_search
+    return layout.groupBy("segment").applyInPandas(
         search, f"segment bigint, query_id bigint, vec_id {id_type}")

@@ -152,7 +152,6 @@ def dense_knn_batch(
     prefilter: Column | None = None,
     prenormalized: bool = False,
     round_digits: int | None = 6,
-    local_prune: bool = False,
     dim: int | None = None,
     score_threshold: float | None = None,
     metric: str = "cosine",
@@ -161,8 +160,9 @@ def dense_knn_batch(
     per_query_filter: Column | None = None,
 ) -> DataFrame:
     """Multi-query top-k by ``metric``: broadcast the query set, score
-    each (corpus row × query), rank per query with a window (optionally
-    pre-pruned map-side — see ``topk.grouped_topk``).
+    each (corpus row × query), rank per query with a window (pruned
+    map-side by Spark's partial ``WindowGroupLimit`` — see
+    ``topk.grouped_topk``).
     ``score_threshold`` filters candidates *before* ranking (Qdrant's
     semantics: the threshold bounds the candidate set, then top-k).
     ``exclude_pairs`` (query_id, id) drops per-query exclusions before
@@ -206,5 +206,4 @@ def dense_knn_batch(
         [query_id_col],
         [("score", asc), (id_col, True)],
         k,
-        local_prune=local_prune,
     )

@@ -14,9 +14,10 @@ a ``k_centroids/nprobe``-fold reduction with uniform cells.
 Plan: both sides shuffle once on ``cell`` (at scale the right side is
 already ``partitionBy(cell)`` — only the probe copies move), the join
 is a plain shuffled hash join on a small-int key, and the per-left
-top-k is the windowed rank with the map-side pre-prune. Skewed cells
-(dense regions) split under AQE skew-join handling; the per-batch
-prune caps the rank shuffle regardless.
+top-k is the windowed rank, pruned map-side by Spark's partial
+``WindowGroupLimit``. Skewed cells (dense regions) split under AQE
+skew-join handling; the per-partition limit caps the rank shuffle
+regardless.
 
 ``nprobe = k_centroids`` probes every cell ⇒ EXACT k-NN join (every
 (left, right) pair scored) — which is what makes the operator
@@ -77,7 +78,6 @@ def knn_join(
     right_vec: str = "embedding",
     prenormalized: bool = False,
     round_digits: int | None = 6,
-    local_prune: bool = True,
 ) -> DataFrame:
     """Top-k right neighbors for every left row, scored by cosine (or
     dot if ``prenormalized``). ``nprobe=None`` probes every cell —
@@ -106,6 +106,4 @@ def knn_join(
     pairs = l.join(r, on="cell").withColumn("score", score).select(
         left_id, right_id, "score")
     return grouped_topk(
-        pairs, [left_id], [("score", False), (right_id, True)], k,
-        local_prune=local_prune,
-    )
+        pairs, [left_id], [("score", False), (right_id, True)], k)

@@ -427,14 +427,14 @@ def maxsim_knn_batch(
     score_threshold: float | None = None,
     round_digits: int | None = 6,
     flat_dim: int | None = None,
-    local_prune: bool = True,
     queries_flat: Sequence[Sequence[float]] | None = None,
 ) -> DataFrame:
     """Batched MaxSim (``query_batch_points`` for multivector
     collections): broadcast the query set, score every (doc × query)
     pair in one corpus pass with the vectorized scorer, rank per query.
-    Same shuffle discipline as ``dense_knn_batch``: the map-side
-    pre-prune caps the window's shuffle at ``batches×Q×k`` rows.
+    Same shuffle discipline as ``dense_knn_batch``: Spark's partial
+    ``WindowGroupLimit`` caps the window's shuffle at
+    ``partitions×Q×k`` rows.
 
     With ``queries_flat`` (list of flat query vectors, requires
     ``flat_dim``; ``queries`` is ignored) the whole batch is captured
@@ -476,9 +476,7 @@ def maxsim_knn_batch(
     from .topk import grouped_topk
 
     return grouped_topk(
-        scored, [query_id_col], [("score", False), (id_col, True)], k,
-        local_prune=local_prune,
-    )
+        scored, [query_id_col], [("score", False), (id_col, True)], k)
 
 
 def maxsim_knn_exact(

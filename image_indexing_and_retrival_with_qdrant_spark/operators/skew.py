@@ -37,7 +37,13 @@ def pin_group_parallelism(df: DataFrame, *keys: str) -> DataFrame:
     explicit numPartitions is exempt from AQE coalescing, and the
     downstream group/join reuses the exchange (same key, no extra
     shuffle). The count derives from the cluster, not a constant, so
-    the same plan scales from local[2] to a real cluster."""
+    the same plan scales from local[2] to a real cluster.
+
+    Only for passes whose per-group work far exceeds their bytes
+    (graph builds, the union-find cogroup, the DSIR fold). Every
+    Python task costs a fixed ~0.2-0.27 s of worker CPU, so a pass
+    whose work follows its bytes — an HNSW search walk — is better
+    left to AQE's byte sizing (SCALE.md)."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys)
 

@@ -8,13 +8,17 @@ The reference's ``limit=top_k`` on ``query_points``
   sort, no shuffle of the corpus). This is the single-query path and is
   scale-safe: O(k) rows per partition regardless of corpus size.
 - per-group top-k (batched queries): exact window
-  ``row_number() OVER (PARTITION BY group ORDER BY ...) <= k``, with an
-  optional *narrow* pre-prune: a ``mapInPandas`` stage that keeps only
-  the k best rows per group **within each Arrow batch** before the
-  shuffle. The prune is a no-shuffle map stage, so at 1000 executors ×
-  Q queries the window's shuffle moves ≤ ``batches·Q·k`` rows instead
-  of ``N·Q``. The final window re-ranks exactly, so results are
-  identical with or without the prune.
+  ``row_number() OVER (PARTITION BY group ORDER BY ...) <= k``. Spark
+  plans the ``<= k`` filter as ``WindowGroupLimit``: a ``Partial``
+  instance below the exchange keeps only the k best rows per group
+  of each map partition (a per-partition heap, in the JVM), so at
+  1000 executors × Q queries the window's shuffle moves ≤
+  ``partitions·Q·k`` rows instead of ``N·Q``; the ``Final`` instance
+  and the window after the exchange re-rank exactly. The partial
+  limit is inferred only while k ≤
+  ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000);
+  above it the results are identical and only the shuffle is
+  unpruned.
 
 Determinism: callers must supply a total order (tie-break keys), else
 top-k content at rank boundaries is engine-dependent.
@@ -47,28 +51,9 @@ def grouped_topk(
     order: OrderSpec,
     k: int,
     rank_col: str | None = "rank",
-    local_prune: bool = False,
 ) -> DataFrame:
-    """Exact top-k per group; optional narrow per-batch pre-prune."""
-    if local_prune:
-        names = [name for name, _ in order]
-        asc = [a for _, a in order]
-        group = list(group)
-        schema = df.schema
-
-        def prune(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pdf
-                    continue
-                yield (
-                    pdf.sort_values(names, ascending=asc)
-                    .groupby(group, sort=False)
-                    .head(k)
-                )
-
-        df = df.mapInPandas(prune, schema=schema)
-
+    """Exact top-k per group (map-side pruned by Spark's partial
+    ``WindowGroupLimit``, see module docstring)."""
     w = Window.partitionBy(*group).orderBy(*_order_cols(order))
     ranked = df.withColumn("__rank", F.row_number().over(w)).filter(F.col("__rank") <= k)
     if rank_col:
@@ -82,7 +67,6 @@ def top_groups(
     order: OrderSpec,
     limit: int,
     group_size: int,
-    local_prune: bool = False,
 ) -> DataFrame:
     """Qdrant ``query_points_groups`` shape: keep the best
     ``group_size`` rows per group, rank groups by their best row under
@@ -90,16 +74,16 @@ def top_groups(
     ``group_rank`` column.
 
     Two stages: (1) per-group top-``group_size`` (window shuffle on the
-    group key — a skewed payload key salts via ``local_prune``'s
-    map-side cap, which bounds shuffle input at ``batches·G·size``
-    rows); (2) group ranking over the rank-1 representatives. Only the
-    best ``limit`` reps can rank, so a ``TakeOrderedAndProject``
-    (per-partition heap, no shuffle) prunes the rep frame to ``limit``
-    rows FIRST — the unpartitioned row_number window then sees a
-    bounded input even at millions of groups. The ≤``limit``-row
+    group key — the partial ``WindowGroupLimit`` caps each map
+    partition at ``group_size`` rows per group, so a skewed payload
+    key ships ≤ ``partitions·group_size`` rows); (2) group ranking
+    over the rank-1 representatives. Only the best ``limit`` reps can
+    rank, so a ``TakeOrderedAndProject`` (per-partition heap, no
+    shuffle) prunes the rep frame to ``limit`` rows FIRST — the
+    unpartitioned row_number window then sees a bounded input even at
+    millions of groups. The ≤``limit``-row
     verdict broadcasts back onto the kept hits."""
-    hits = grouped_topk(df, [group], order, group_size,
-                        rank_col="rank", local_prune=local_prune)
+    hits = grouped_topk(df, [group], order, group_size, rank_col="rank")
     reps = hits.filter(F.col("rank") == 1)
     pruned = reps.orderBy(*_order_cols(order)).limit(limit)
     w = Window.orderBy(*_order_cols(order))

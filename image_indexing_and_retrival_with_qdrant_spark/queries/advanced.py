@@ -185,14 +185,15 @@ _PRUNED_ORACLE = """
 
 @register("knn_batch_pruned_top3", _PRUNED_ORACLE)
 def knn_batch_pruned_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Identical semantics to knn_batch_top3 but through the narrow
-    mapInPandas pre-prune (the 1000-executor shuffle reducer) — the
-    shared oracle proves the prune is lossless."""
+    """Identical semantics to knn_batch_top3, kept as the pin of the
+    map-side prune: Spark plans the ``rank <= 3`` filter as a partial
+    ``WindowGroupLimit`` below the exchange (the 1000-executor shuffle
+    reducer) — the shared oracle proves the prune is lossless."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id").isin(1, 2, 3)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return dense_knn_batch(emb, queries, k=3, local_prune=True, dim=64)
+    return dense_knn_batch(emb, queries, k=3, dim=64)
 
 
 # --- two-stage MaxSim retrieval (SURVEY.md §4) ----------------------------

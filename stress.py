@@ -1847,9 +1847,7 @@ def main() -> None:
         .select("query_id", "vec_id", "score")
     )
     pruned = grouped_topk(
-        scored, ["query_id"], [("score", False), ("vec_id", True)], 5,
-        local_prune=True,
-    )
+        scored, ["query_id"], [("score", False), ("vec_id", True)], 5)
     assert pruned.count() == 20
     timings["batch4_knn_pruned_top5"] = round(time.perf_counter() - t0, 2)
 

@@ -1,7 +1,8 @@
 """local_literal_df: JVM LocalRelation twin of createDataFrame for
 driver-side literal rows (functions/localframe.py). Pins value parity,
 type parity, the LocalTableScan plan shape (no Python-RDD scan), and
-the fallback for rows SQL literals can't express."""
+the fallback for rows SQL literals can't express. literal_in: the
+one-call ``IN`` twin of ``Column.isin`` selects the same rows."""
 
 import math
 
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 
 from image_indexing_and_retrival_with_qdrant_spark.functions.localframe import (
+    literal_in,
     local_literal_df,
 )
 
@@ -105,3 +107,48 @@ def test_accepts_struct_type_schema(spark):
     assert a.collect() == rows
     assert [f.dataType.simpleString() for f in a.schema.fields] == \
            [f.dataType.simpleString() for f in src.schema.fields]
+
+
+def _ids(df, col):
+    return sorted(r[col] for r in df.collect())
+
+
+def test_literal_in_matches_isin_on_bigint_ids(spark):
+    from pyspark.sql import functions as F
+
+    big = [2**31, 2**40 + 7, 2**62, -(2**31) - 5, -(2**40)]
+    ids = [*range(-50, 50), *big]
+    df = spark.createDataFrame([(i,) for i in ids], "id bigint")
+    pick = [-50, -3, 0, 7, 49, 2**31, 2**62, -(2**40), 123456]
+    want = _ids(df.filter(F.col("id").isin(pick)), "id")
+    assert want == sorted(set(pick) & set(ids))
+    assert _ids(df.filter(literal_in("id", pick)), "id") == want
+    assert _ids(df.filter(~literal_in("id", pick)), "id") == \
+        _ids(df.filter(~F.col("id").isin(pick)), "id")
+
+
+def test_literal_in_string_ids_with_quotes_and_unicode(spark):
+    from pyspark.sql import functions as F
+
+    ids = ["it's", "back\\slash", "tail\\", "'", "\\'", "naïve",
+           "日本語", "plain", "emoji 🙂"]
+    df = spark.createDataFrame([(i,) for i in ids], "id string")
+    pick = ["it's", "back\\slash", "tail\\", "'", "\\'", "日本語",
+            "emoji 🙂", "absent"]
+    got = _ids(df.filter(literal_in("id", pick)), "id")
+    assert got == _ids(df.filter(F.col("id").isin(pick)), "id")
+    assert got == sorted(set(pick) & set(ids))
+
+
+def test_literal_in_empty_matches_nothing(spark):
+    df = spark.createDataFrame([(i,) for i in range(5)], "id bigint")
+    assert df.filter(literal_in("id", [])).count() == 0
+    assert df.filter(~literal_in("id", [])).count() == 5
+
+
+def test_literal_in_quotes_column_name(spark):
+    df = spark.createDataFrame([(i, i * 2) for i in range(6)],
+                               "`point id` bigint, `a``b` bigint")
+    assert _ids(df.filter(literal_in("point id", [1, 4, 9])),
+                "point id") == [1, 4]
+    assert _ids(df.filter(literal_in("a`b", [2, 10])), "a`b") == [2, 10]

@@ -45,8 +45,7 @@ def test_stacked_batch_scorer_matches_relational(spark, sf_smoke):
     queries = emb.filter(F.col("vec_id").isin(1, 2)).select(
         F.col("vec_id").alias("query_idx"),
         F.col("embedding").cast("array<double>").alias("query_vectors"))
-    batched = maxsim_knn_batch(flat, queries, k=5, flat_dim=8,
-                               local_prune=False)
+    batched = maxsim_knn_batch(flat, queries, k=5, flat_dim=8)
     got = {qid: [] for qid in (1, 2)}
     for r in batched.orderBy("query_idx", "rank").collect():
         got[r.query_idx].append((r.vec_id, r.score))

@@ -374,3 +374,86 @@ def test_collection_search_keeps_single_query_leaf(spark, tmp_path):
     batch = formatted_plan(coll.search_batch(spark, [q0, q1], k=3,
                                              exact=True))
     assert "Window" in batch, batch
+
+
+def test_batch_topk_prunes_with_native_partial_limit(spark, tmp_path):
+    """An exact 2-query search_batch prunes map-side with Spark's own
+    ``WindowGroupLimit`` (Partial, below the exchange; Final above
+    it) — no Python stage anywhere in the batch plan."""
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        create_collection,
+    )
+
+    coll = create_collection(str(tmp_path), "wgl", dim=4, normalize=False)
+    coll.upsert(spark, spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0, float(i % 3)]) for i in range(20)],
+        "id long, embedding array<double>"))
+    batch = coll.search_batch(spark, [[1.0, 0.0, 0.0, 0.0],
+                                      [0.0, 1.0, 0.0, 0.0]], k=3, exact=True)
+    lines = batch._jdf.queryExecution().executedPlan().toString() \
+        .splitlines()
+    ex = [i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l]
+    assert len(ex) == 1, lines
+    wgl = [(i, l) for i, l in enumerate(lines) if "WindowGroupLimit" in l]
+    assert [l.rstrip().rsplit(", ", 1)[-1] for _, l in wgl] == \
+        ["Final", "Partial"], lines
+    assert wgl[0][0] < ex[0] < wgl[1][0]  # Partial sits map-side
+    assert not any("MapInPandas" in l or "Python" in l for l in lines)
+    assert len(batch.collect()) == 6
+
+
+def test_hnsw_walk_exchange_is_byte_sized_builds_stay_pinned(spark):
+    """Graph builds pin an explicit-count repartition (heavy Python
+    work per segment over few bytes); the search walks do not — their
+    work follows the bytes they deserialize, so AQE sizes the
+    exchange."""
+    from image_indexing_and_retrival_with_qdrant_spark.operators.hnsw import (
+        LAYOUT_SCHEMA,
+        hnsw_layout,
+        hnsw_layout_insert,
+        hnsw_layout_search,
+        hnsw_layout_search_batch,
+    )
+
+    def pinned(df) -> bool:
+        qe = df._jdf.queryExecution()
+        logical = "RepartitionByExpression" in qe.analyzed().toString()
+        physical = "REPARTITION_BY_NUM" in qe.executedPlan().toString()
+        assert logical == physical
+        return logical
+
+    points = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(8)],
+        "vec_id bigint, embedding array<double>")
+    layout = spark.createDataFrame([], LAYOUT_SCHEMA)
+    assert pinned(hnsw_layout(points, n_segments=2, m=2, ef_construct=4))
+    assert pinned(hnsw_layout_insert(layout, m=2, ef_construct=4))
+    assert not pinned(hnsw_layout_search(layout, [1.0, 0.0], ef=4))
+    assert not pinned(hnsw_layout_search_batch(
+        layout, [(0, [1.0, 0.0]), (1, [0.0, 1.0])], ef=4))
+
+
+def test_hnsw_rescore_filters_ids_by_in(spark, tmp_path):
+    """The single-search HNSW rescore narrows the corpus with the walk's
+    candidate ids as one literal ``IN`` (an ``In``/``InSet``
+    predicate on ``id``), whichever way the literal was built."""
+    import re
+
+    import numpy as np
+
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        create_collection,
+    )
+
+    rng = np.random.RandomState(5)
+    coll = create_collection(str(tmp_path), "hin", dim=4, normalize=False,
+                             indexing_threshold=1, k_centroids=2,
+                             hnsw_config={"m": 4, "ef_construct": 16})
+    coll.upsert(spark, spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(4)]) for i in range(60)],
+        "id long, embedding array<double>"))
+    assert coll._has_hnsw()
+    hits = coll.search(spark, [1.0, 0.5, -0.5, 0.0], k=3, hnsw_ef=8)
+    opt = hits._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"\bid#\d+L? (IN \(|INSET )", opt), opt
+    assert len(hits.collect()) == 3

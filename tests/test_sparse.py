@@ -467,3 +467,34 @@ def test_postings_df_sidecar(spark, sf_smoke, tmp_path):
     without = [(r.id, r.score) for r in c.search(
         spark, q, using="text", k=10, with_payload=False).collect()]
     assert with_sidecar == without
+
+
+@pytest.mark.parametrize("space", [{}, {"full_scan_threshold": 4}])
+def test_sparse_search_honors_shard_key_selector(spark, tmp_path, space):
+    """A sparse search with ``shard_key_selector`` reads only the named
+    shards — on the array-explode path and on the posting-layout probe
+    alike — while no selector still fans out to every shard."""
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        create_collection,
+    )
+
+    tenants = ["acme", "globex", "initech"]
+    coll = create_collection(str(tmp_path), "sks", dim=2,
+                             normalize=False, shard_key="tenant",
+                             sparse_vectors={"text": dict(space)})
+    coll.upsert(spark, spark.createDataFrame(
+        [(i, [1.0, float(i)], tenants[i % 3], [0, 1 + i % 2],
+          [float(i + 1), 0.5]) for i in range(12)],
+        "id long, embedding array<double>, tenant string, "
+        "text__sidx array<int>, text__sval array<double>"))
+    q = ([0], [1.0])
+    every = coll.search(spark, q, using="text", k=10).collect()
+    assert {r.tenant for r in every} == set(tenants)
+    hits = coll.search(spark, q, using="text", k=10,
+                       shard_key_selector="acme").collect()
+    assert [r.id for r in hits] == [9, 6, 3, 0]
+    assert {r.tenant for r in hits} == {"acme"}
+    both = coll.search(spark, q, using="text", k=3,
+                       shard_key_selector=["acme", "globex"],
+                       query_filter=F.col("id") != 10).collect()
+    assert [r.id for r in both] == [9, 7, 6]
