@@ -1390,18 +1390,18 @@ class Collection:
                           hnsw_config=_UNSET) -> None:
         """Qdrant's ``update_collection`` (post-create config changes):
 
-        - ``quantization``: switch to ``"sq"``/``"bq"`` (the code
-          sidecar re-trains/encodes over the current table) or ``None``
-          (sidecar + frozen train params dropped — searches go exact).
+        - ``quantization``: switch to ``"sq"``/``"bq"``/``"pq"``/
+          ``"opq"`` (the code sidecar re-trains/encodes over the
+          current table) or ``None`` (sidecar + frozen train params
+          dropped — searches go exact). The create rules apply.
         - ``indexing_threshold``: raise/lower/disable the deferred IVF
           build; lowering it below the current point count triggers
           the build on the spot (Qdrant rebuilds on optimizer-config
           changes too).
         - ``vectors``: per-space diffs for NAMED collections (Qdrant
           ``vectors_config={name: VectorParamsDiff}``) — currently
-          ``{"quantization": "sq"/"bq"/None}``, with the same
+          ``{"quantization": ...}``, with the same rules and
           re-train/re-encode/drop semantics per space.
-
         - ``sparse_vectors``: per-sparse-space diffs (Qdrant
           ``sparse_vectors_config`` updates) — ``{"modifier":
           None/"idf"}``. The modifier is a QUERY-time weighting here
@@ -1430,34 +1430,18 @@ class Collection:
                 if sname not in sv:
                     raise ValueError(f"unknown sparse space {sname!r} "
                                      f"(have {sorted(sv)})")
-                unknown = sorted(set(diff) -
-                                 {"modifier", "full_scan_threshold"})
-                if unknown:
-                    raise ValueError(
-                        f"unknown key(s) {unknown} in sparse space "
-                        f"{sname!r} diff")
-                if "modifier" in diff:
-                    mod = diff["modifier"]
-                    if mod not in (None, "idf"):
-                        raise ValueError(
-                            "sparse modifier must be None or 'idf'")
-                    sv[sname]["modifier"] = mod
-                if "full_scan_threshold" in diff:
-                    fst = diff["full_scan_threshold"]
-                    if fst is None:
-                        # disabling the sparse index takes the layout
-                        # with it (same rule as indexing_threshold:
-                        # a live layout would silently go stale)
-                        for key in ("full_scan_threshold",
-                                    "postings_built", "n_points"):
-                            sv[sname].pop(key, None)
-                        shutil.rmtree(self._postings_path_for(sname),
-                                      ignore_errors=True)
-                        shutil.rmtree(
-                            self._postings_path_for(sname) + ".df",
-                            ignore_errors=True)
-                    else:
-                        sv[sname]["full_scan_threshold"] = int(fst)
+                sv[sname].update(_sparse_space_rules(sname, diff))
+                if "full_scan_threshold" in diff \
+                        and diff["full_scan_threshold"] is None:
+                    # disabling the sparse index takes the layout with
+                    # it (same rule as indexing_threshold: a live
+                    # layout would silently go stale)
+                    for key in ("full_scan_threshold", "postings_built",
+                                "n_points"):
+                        sv[sname].pop(key, None)
+                    for path in (self._postings_path_for(sname),
+                                 self._postings_path_for(sname) + ".df"):
+                        shutil.rmtree(path, ignore_errors=True)
             self._save_meta()
             if any("full_scan_threshold" in d
                    for d in sparse_vectors.values()) \
@@ -1488,76 +1472,13 @@ class Collection:
                         f"unknown key(s) {unknown} in vector space "
                         f"{sname!r} diff")
             for sname, diff in vectors.items():
-                if "quantization" not in diff:
-                    continue
-                qz = diff["quantization"]
-                scfg = named[sname]
-                if qz not in (None, "sq", "bq", "pq", "opq"):
-                    raise ValueError(f"unknown quantization {qz!r}")
-                if qz is not None and scfg.get("multivector") \
-                        and qz != "sq":
-                    raise ValueError(
-                        "multivector spaces support quantization="
-                        "'sq' (scalar int8 per subvector)")
-                scfg["quantization"] = qz
-                # frozen train params belong to the OLD config
-                for key in ("sq_mins", "sq_steps", "codes_layout",
-                            "pq_codebooks", "opq_rotation",
-                            "pq_blocks", "pq_codes"):
-                    scfg.pop(key, None)
-                if qz in ("pq", "opq"):
-                    blocks, codes = _pq_validate(int(scfg["dim"]), qz)
-                    scfg["pq_blocks"] = blocks
-                    scfg["pq_codes"] = codes
-                self._save_meta()
-                if qz is None:
-                    shutil.rmtree(self._codes_path_for(sname),
-                                  ignore_errors=True)
-                elif self._has_data(spark):
-                    self._refresh_quant_one(spark, None, id_col, sname,
-                                            True, scfg, sname)
+                if "quantization" in diff:
+                    self._set_quantization(spark, sname,
+                                           diff["quantization"], id_col,
+                                           vec_col)
         if quantization is not self._UNSET:
-            if quantization not in (None, "sq", "bq", "pq", "opq"):
-                raise ValueError(f"unknown quantization {quantization!r}")
-            if quantization is not None and self.meta.get("multivector") \
-                    and quantization != "sq":
-                # same invariant create_collection enforces
-                raise ValueError(
-                    "multivector collections support quantization="
-                    "'sq' (scalar int8 per subvector)")
-            if quantization is not None and self.meta.get("hnsw") \
-                    and self.meta.get("metric", "cosine") != "cosine":
-                # same rule _hnsw_validate enforces at create
-                raise ValueError(
-                    "hnsw_config over a quantized collection supports "
-                    "the cosine metric")
-            if quantization is not None and self.meta.get("transform"):
-                raise ValueError(
-                    "transform and quantization are exclusive (the "
-                    "PCA sidecar IS the compressed layout)")
-            self.meta["quantization"] = quantization
-            # frozen train params belong to the OLD config
-            for k in ("sq_mins", "sq_steps", "codes_layout",
-                      "pq_codebooks", "opq_rotation",
-                      "pq_blocks", "pq_codes"):
-                self.meta.pop(k, None)
-            if quantization in ("pq", "opq"):
-                blocks, codes = _pq_validate(
-                    int(self.meta["dim"]), quantization)
-                self.meta["pq_blocks"] = blocks
-                self.meta["pq_codes"] = codes
-            if self.meta.get("hnsw") and self._has_hnsw():
-                # the graphs were built over the OLD quantizer's codes
-                # (or over full vectors if quantization was None) —
-                # they rebuild below over the new geometry
-                self.meta.pop("hnsw_built", None)
-                shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
-            self._save_meta()
-            if quantization is None:
-                shutil.rmtree(self._codes_path, ignore_errors=True)
-            elif self._has_data(spark):
-                self._refresh_quant(spark, None, id_col, vec_col,
-                                    rewrote=True)
+            self._set_quantization(spark, None, quantization, id_col,
+                                   vec_col)
             if self.meta.get("hnsw") and self._has_data(spark) \
                     and self.has_index():
                 self._refresh_hnsw(spark, None, id_col, vec_col,
@@ -1584,19 +1505,10 @@ class Collection:
                 self._refresh_index(spark, None, id_col, vec_col,
                                     rewrote=True)
         if drift_auto is not self._UNSET:
-            if drift_auto not in (None, "split", "rebuild"):
-                raise ValueError(
-                    "drift_auto must be None, 'split' or 'rebuild'")
+            _drift_auto_rule(drift_auto, self.meta.get("indexing_threshold"),
+                             self.meta.get("transform"),
+                             self.meta.get("multivector"))
             if drift_auto is not None:
-                if self.meta.get("indexing_threshold") is None \
-                        and self.meta.get("transform") is None:
-                    raise ValueError(
-                        "drift_auto needs indexing_threshold or a "
-                        "transform (no maintained layout otherwise)")
-                if self.meta.get("multivector"):
-                    raise ValueError(
-                        "drift_auto supports dense single-space "
-                        "collections (split_hot_cells' scope)")
                 self.meta["drift_auto"] = drift_auto
             else:
                 self.meta.pop("drift_auto", None)
@@ -1625,6 +1537,33 @@ class Collection:
                 if self._has_data(spark) and self.has_index():
                     self._refresh_hnsw(spark, None, id_col, vec_col,
                                        rewrote=True)
+
+    def _set_quantization(self, spark: SparkSession, space: str | None,
+                          q: str | None, id_col: str, vec_col: str) -> None:
+        """Switch one space's quantizer (``space=None``: the single
+        space) under the create rules: the old quantizer's frozen train
+        params go, HNSW graphs built over its codes are dropped, and the
+        codes sidecar is dropped (``q=None``) or re-encoded over the
+        current table."""
+        cfg = self.meta if space is None else self.meta["vectors"][space]
+        rules = _dense_space_rules(
+            cfg["dim"], cfg.get("multivector"), q, None, None,
+            cfg.get("datatype"), cfg.get("transform"), cfg.get("pca_dim"))
+        if cfg.get("hnsw"):
+            _hnsw_quant_rule(cfg.get("metric"), q)
+        for key in _QUANT_PARAMS:
+            cfg.pop(key, None)
+        cfg["quantization"] = q
+        cfg.update((k, rules[k]) for k in ("pq_blocks", "pq_codes")
+                   if k in rules)
+        if cfg.pop("hnsw_built", None):
+            shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
+        self._save_meta()
+        if q is None:
+            shutil.rmtree(self._codes_path_for(space), ignore_errors=True)
+        elif self._has_data(spark):
+            self._refresh_quant_one(spark, None, id_col, space or vec_col,
+                                    True, cfg, space)
 
     # -- named vector spaces (Qdrant vectors_config={name: ...}) ----------
 
@@ -4953,18 +4892,34 @@ def delete_collection(root: str, name: str) -> bool:
     return True
 
 
-def _pq_validate(dim: int, q: str, blocks=None, codes=16) -> tuple[int, int]:
+# -- collection config rules ----------------------------------------------
+#
+# One pure helper per rule group, called by both create_collection and
+# Collection.update_collection, so the two entry points can never drift
+# (Qdrant has one VectorParams type for the single vector and for every
+# named vector alike).
+
+# frozen quantizer train params: they belong to the config that trained
+# them, so a quantizer switch drops them
+_QUANT_PARAMS = ("sq_mins", "sq_steps", "codes_layout", "pq_codebooks",
+                 "opq_rotation", "pq_blocks", "pq_codes")
+_PCA_KNOBS = ("pca_dim needs transform='pca' (the PCA knobs "
+              "pca_dim/k_centroids need transform='pca')")
+
+
+def _pq_validate(dim: int, q: str, blocks=None,
+                 codes=None) -> tuple[int, int]:
     """Validate/default the product-quantizer shape: ``blocks``
     defaults to ~8-dim subvectors clamped to [2, 16] (the FAISS m
     convention) and must divide ``dim``; ``codes`` is the per-block
-    codebook size (16 → 4-bit codes). OPQ additionally caps the width:
-    the d×d rotation freezes in the meta JSON, which stops being a
-    broadcast-for-free constant somewhere past 256-d (589k doubles at
+    codebook size (default 16 → 4-bit codes). OPQ additionally caps the
+    width: the d×d rotation freezes in the meta JSON, which stops being
+    a broadcast-for-free constant somewhere past 256-d (589k doubles at
     768) — wide spaces should compress through ``transform="pca"``
     first, which stores r×d."""
     blocks = int(blocks) if blocks is not None \
         else max(2, min(16, dim // 8))
-    codes = int(codes)
+    codes = int(codes) if codes is not None else 16
     if blocks < 1 or dim % blocks:
         raise ValueError(
             f"pq_blocks must divide dim {dim} (got {blocks})")
@@ -4977,13 +4932,84 @@ def _pq_validate(dim: int, q: str, blocks=None, codes=16) -> tuple[int, int]:
     return blocks, codes
 
 
+def _dense_space_rules(dim, multivector, quantization, pq_blocks, pq_codes,
+                       datatype, transform, pca_dim) -> dict:
+    """The rules of one dense vector space — a single-space
+    collection, each named space, and every quantizer switch — as the
+    meta keys they set (``quantization``, ``pq_blocks``/``pq_codes``,
+    ``datatype``, ``transform``/``pca_dim``). ``None`` means "not
+    given" for every argument.
+
+    - ``quantization`` (Qdrant ``quantization_config``): scalar int8,
+      binary, or product (``"pq"``; ``"opq"`` adds the learned
+      FAISS-style rotation before it). Multivector spaces take scalar
+      only — int8 per SUBVECTOR dim, as Qdrant quantizes multivector
+      subvectors; searches rank a codes-sidecar approximate MaxSim and
+      always exact-rescore the survivors at full width.
+    - ``datatype="float16"``: multivector spaces only, where vector
+      bytes dominate (dense compression is the quantizers' job).
+    - ``transform="pca"`` + ``pca_dim``: dense float32 spaces,
+      exclusive with quantization (the PCA sidecar IS the compressed
+      layout)."""
+    dim, out = int(dim), {}
+    if quantization is not None:
+        if quantization not in ("sq", "bq", "pq", "opq"):
+            raise ValueError(
+                "quantization must be 'sq', 'bq', 'pq' or 'opq'")
+        if multivector and quantization != "sq":
+            raise ValueError(
+                "multivector collections support quantization='sq' "
+                "(scalar int8 per subvector; 'bq'/'pq'/'opq' need "
+                "dense spaces)")
+        out["quantization"] = quantization
+    if quantization in ("pq", "opq"):
+        out["pq_blocks"], out["pq_codes"] = _pq_validate(
+            dim, quantization, pq_blocks, pq_codes)
+    else:
+        for key, val in (("pq_blocks", pq_blocks), ("pq_codes", pq_codes)):
+            if val is not None:
+                raise ValueError(f"{key} needs quantization='pq'/'opq'")
+    if datatype not in (None, "float32", "float16"):
+        raise ValueError("datatype must be 'float32' or 'float16'")
+    if datatype == "float16":
+        if not multivector:
+            raise ValueError(
+                "float16 storage supports multivector collections "
+                "(dense compression: use quantization='sq'/'bq')")
+        out["datatype"] = "float16"
+    if transform is None:
+        if pca_dim is not None:
+            raise ValueError(_PCA_KNOBS)
+        return out
+    if transform != "pca":
+        raise ValueError("transform must be 'pca'")
+    if multivector:
+        raise ValueError("transform supports dense collections")
+    if quantization is not None:
+        raise ValueError(
+            "transform and quantization are exclusive (the PCA sidecar "
+            "IS the compressed layout)")
+    if pca_dim is None or not 0 < int(pca_dim) < dim:
+        raise ValueError(f"transform='pca' needs pca_dim in 1..{dim - 1}")
+    return {**out, "transform": "pca", "pca_dim": int(pca_dim)}
+
+
+def _hnsw_quant_rule(metric, quantization) -> None:
+    # the quantized walk decodes to the quantizer's dot-ranked space
+    # (the _quant_shortlist geometry) — sound for cosine collections,
+    # where normalize-then-euclid is monotone with it
+    if quantization is not None and (metric or "cosine") != "cosine":
+        raise ValueError(
+            "hnsw_config over a quantized collection supports the "
+            "cosine metric")
+
+
 def _hnsw_validate(hnsw_config: dict, indexing_threshold,
                    metric, quantization, transform) -> dict:
-    """Shared create/update validation for ``hnsw_config`` — one rule
-    set so the two entry points can never drift. Returns the meta dict
-    (m, ef_construct, max_segment_size with its 20k default — Qdrant
-    ships a max_segment_size default too, and the measured composed
-    curve says bounded segments IMPROVE recall at equal ef, BASELINE.md
+    """The ``hnsw_config`` rules. Returns the meta dict (m,
+    ef_construct, max_segment_size with its 20k default — Qdrant ships
+    a max_segment_size default too, and the measured composed curve
+    says bounded segments IMPROVE recall at equal ef, BASELINE.md
     §hnsw-composed; fixture-scale cells sit under the cap, so the
     default is a no-op there)."""
     unknown = sorted(set(hnsw_config)
@@ -5010,14 +5036,41 @@ def _hnsw_validate(hnsw_config: dict, indexing_threshold,
         raise ValueError(
             "hnsw_config is exclusive with transform (the PCA sidecar "
             "routes its own compressed-space cells)")
-    if quantization is not None and (metric or "cosine") != "cosine":
-        # the quantized walk decodes to the quantizer's dot-ranked
-        # space (the _quant_shortlist geometry) — sound for cosine
-        # collections, where normalize-then-euclid is monotone with it
-        raise ValueError(
-            "hnsw_config over a quantized collection supports the "
-            "cosine metric")
+    _hnsw_quant_rule(metric, quantization)
     return {"m": hm, "ef_construct": hefc, "max_segment_size": mss}
+
+
+def _drift_auto_rule(drift_auto, indexing_threshold, transform,
+                     multivector) -> None:
+    """``drift_auto`` consumes the verdicts of a maintained layout on a
+    dense single space (``split_hot_cells``' scope)."""
+    if drift_auto not in (None, "split", "rebuild"):
+        raise ValueError("drift_auto must be None, 'split' or 'rebuild'")
+    if drift_auto is not None and indexing_threshold is None \
+            and transform is None:
+        raise ValueError(
+            "drift_auto needs indexing_threshold or a transform (no "
+            "maintained layout otherwise)")
+    if drift_auto is not None and multivector:
+        raise ValueError(
+            "drift_auto supports dense single-space collections "
+            "(split_hot_cells' scope)")
+
+
+def _sparse_space_rules(name: str, cfg: dict | None) -> dict:
+    """One sparse space's config at create, or its diff at update:
+    the keys given, checked (``full_scan_threshold=None`` disables the
+    posting layout)."""
+    cfg = dict(cfg or {})
+    unknown = sorted(set(cfg) - {"modifier", "full_scan_threshold"})
+    if unknown:
+        raise ValueError(
+            f"unknown key(s) {unknown} in sparse space {name!r} config")
+    if cfg.get("modifier") not in (None, "idf"):
+        raise ValueError("sparse modifier must be None or 'idf'")
+    if cfg.get("full_scan_threshold") is not None:
+        cfg["full_scan_threshold"] = int(cfg["full_scan_threshold"])
+    return cfg
 
 
 def create_collection(root: str, name: str, dim: int | None = None,
@@ -5100,6 +5153,17 @@ def create_collection(root: str, name: str, dim: int | None = None,
     ``quantization_params={"ignore": True}`` skips the code walk and
     routes index-only over original vectors.
 
+    ``shard_key="<payload column>"`` (Qdrant custom sharding,
+    ``sharding_method=CUSTOM`` + ``create_shard_key``) applies to every
+    collection shape — single-space, named-vector and sparse-only: the
+    column leads the partition layout, so every
+    ``shard_key_selector``-routed read is a static partition prune
+    (the multitenancy pattern).
+
+    Each dense space — the single space, or each ``vectors`` entry —
+    follows one rule set (``_dense_space_rules``), and
+    ``update_collection`` re-checks it on every quantizer switch.
+
     ``drift_auto`` (the Qdrant-optimizer analog — the server
     re-optimizes segments after writes without being asked): consume
     ``index_drift()``'s action-typed verdict automatically after each
@@ -5113,264 +5177,114 @@ def create_collection(root: str, name: str, dim: int | None = None,
     ``indexing_threshold`` or a transform (no maintained layout
     otherwise); dense single-space collections."""
     os.makedirs(root, exist_ok=True)
-    if not collection_exists(root, name):
-        if vectors is not None:
-            # named vector spaces (Qdrant vectors_config={name: ...}):
-            # each space declares its own dim/metric/multivector; the
-            # vector column is named after the space. Auto-indexing is
-            # single-space-only (which space would the layout carve?).
-            if dim is not None or indexing_threshold is not None \
-                    or quantization is not None or datatype is not None \
-                    or transform is not None or pca_dim is not None \
-                    or drift_auto is not None or hnsw_config is not None:
+    if collection_exists(root, name):
+        return Collection(root, name)
+    if vectors is not None:
+        # named vector spaces (Qdrant vectors_config={name: ...}): each
+        # space declares its own dim/metric/multivector; the vector
+        # column is named after the space. Auto-indexing is
+        # single-space-only (which space would the layout carve?).
+        if any(v is not None for v in (
+                dim, indexing_threshold, quantization, datatype,
+                transform, pca_dim, drift_auto, hnsw_config)):
+            raise ValueError(
+                "named-vector collections take per-space config in "
+                "`vectors`; top-level dim/indexing_threshold/"
+                "quantization/datatype/transform/drift_auto/"
+                "hnsw_config don't apply")
+        meta = {"vectors": {}}
+        for vname, cfg in vectors.items():
+            unknown = sorted(set(cfg) - {
+                "dim", "metric", "multivector", "normalize", "datatype",
+                "quantization", "transform", "pca_dim", "k_centroids",
+                "pq_blocks", "pq_codes"})
+            if unknown:
+                # a silently-dropped spec key (e.g. "datatype") would
+                # hand the user different storage than they asked for
+                raise ValueError(f"unknown key(s) {unknown} in vector "
+                                 f"space {vname!r} config")
+            if "dim" not in cfg:
+                raise ValueError(f"vector space {vname!r} needs a dim")
+            vm = cfg.get("metric", "cosine")
+            space = {"dim": int(cfg["dim"]), "metric": vm,
+                     "multivector": bool(cfg.get("multivector")),
+                     "normalize": cfg.get("normalize", vm == "cosine")}
+            space.update(_dense_space_rules(
+                cfg["dim"], space["multivector"], cfg.get("quantization"),
+                cfg.get("pq_blocks"), cfg.get("pq_codes"),
+                cfg.get("datatype"), cfg.get("transform"),
+                cfg.get("pca_dim")))
+            if cfg.get("k_centroids") is not None:
+                # compressed-space IVF cells of the space's PCA sidecar
+                if "transform" not in space:
+                    raise ValueError(_PCA_KNOBS)
+                space["k_centroids"] = int(cfg["k_centroids"])
+            meta["vectors"][vname] = space
+    elif dim is None and sparse_vectors is not None:
+        # sparse-only collection (Qdrant allows collections with only
+        # sparse_vectors_config) — no dense space at all
+        meta = {}
+    else:
+        if dim is None:
+            raise ValueError(
+                "dim is required (or pass `vectors`/`sparse_vectors`)")
+        # Qdrant HnswConfigDiff (m, ef_construct, max_segment_size) —
+        # the server builds one HNSW per segment past
+        # indexing_threshold; here segments = the IVF cells, chunked to
+        # max_segment_size (the routed composition)
+        hnsw = None if hnsw_config is None else _hnsw_validate(
+            hnsw_config, indexing_threshold, metric, quantization,
+            transform)
+        _drift_auto_rule(drift_auto, indexing_threshold, transform,
+                         multivector)
+        meta = {
+            "dim": dim,
+            "metric": metric,
+            "multivector": multivector,
+            "comparator": comparator or ("max_sim" if multivector else None),
+            "normalize": metric == "cosine" if normalize is None
+            else normalize,
+            # the top-level pq_codes has a default: it counts under pq only
+            **_dense_space_rules(
+                dim, multivector, quantization, pq_blocks,
+                pq_codes if quantization in ("pq", "opq") else None,
+                datatype, transform, pca_dim),
+        }
+        if indexing_threshold is not None:
+            meta["indexing_threshold"] = int(indexing_threshold)
+            if train_fraction is not None:
+                meta["train_fraction"] = float(train_fraction)
+        if indexing_threshold is not None or transform is not None:
+            # the raw-vector IVF cells, or the PCA sidecar's
+            # compressed-space cells that replace them
+            meta["k_centroids"] = int(k_centroids)
+        if hnsw is not None:
+            meta["hnsw"] = hnsw
+        if drift_auto is not None:
+            meta["drift_auto"] = drift_auto
+    if shard_key is not None:
+        # the shard key column LEADS the partition layout (later
+        # payload indexes nest under it, coarsest-first)
+        meta["shard_key"] = shard_key
+        meta["payload_indexes"] = [shard_key]
+    if sparse_vectors is not None:
+        # Qdrant sparse_vectors_config: named sparse spaces — points
+        # carry `<name>__sidx` (ascending vocabulary ids) and
+        # `<name>__sval` (weights); may coexist with dense spaces
+        # (names must not collide). full_scan_threshold is Qdrant's
+        # SparseIndexParams: once the collection reaches it, the upsert
+        # persists the postings layout and searches probe that instead
+        meta["sparse_vectors"] = {}
+        for sname, cfg in sparse_vectors.items():
+            if sname in meta.get("vectors", ()):
                 raise ValueError(
-                    "named-vector collections take per-space config in "
-                    "`vectors`; top-level dim/indexing_threshold/"
-                    "quantization/datatype/transform/drift_auto/"
-                    "hnsw_config don't apply")
-            spaces = {}
-            for vname, cfg in vectors.items():
-                unknown = sorted(set(cfg) - {"dim", "metric", "multivector",
-                                             "normalize", "datatype",
-                                             "quantization", "transform",
-                                             "pca_dim", "k_centroids",
-                                             "pq_blocks", "pq_codes"})
-                if unknown:
-                    # a silently-dropped spec key (e.g. "datatype")
-                    # would hand the user different storage than they
-                    # asked for with no error — reject instead
-                    raise ValueError(
-                        f"unknown key(s) {unknown} in vector space "
-                        f"{vname!r} config")
-                if "dim" not in cfg:
-                    raise ValueError(f"vector space {vname!r} needs a dim")
-                vm = cfg.get("metric", "cosine")
-                spaces[vname] = {
-                    "dim": int(cfg["dim"]),
-                    "metric": vm,
-                    "multivector": bool(cfg.get("multivector")),
-                    "normalize": cfg.get("normalize", vm == "cosine"),
-                }
-                qz = cfg.get("quantization")
-                if qz is not None:
-                    # Qdrant VectorParams.quantization_config: each
-                    # named space may carry its own quantizer. Same
-                    # rules as the top-level knob: dense spaces only.
-                    if qz not in ("sq", "bq", "pq", "opq"):
-                        raise ValueError(
-                            "quantization must be 'sq', 'bq', 'pq' "
-                            "or 'opq'")
-                    if bool(cfg.get("multivector")):
-                        raise ValueError(
-                            "quantization supports dense spaces")
-                    spaces[vname]["quantization"] = qz
-                    if qz in ("pq", "opq"):
-                        blocks, codes = _pq_validate(
-                            int(cfg["dim"]), qz, cfg.get("pq_blocks"),
-                            cfg.get("pq_codes", 16))
-                        spaces[vname]["pq_blocks"] = blocks
-                        spaces[vname]["pq_codes"] = codes
-                if qz not in ("pq", "opq") and (
-                        cfg.get("pq_blocks") is not None
-                        or cfg.get("pq_codes") is not None):
-                    raise ValueError(
-                        "pq_blocks/pq_codes need "
-                        "quantization='pq'/'opq'")
-                dt = cfg.get("datatype")
-                if dt is not None:
-                    # same rules as the top-level knob: fp16 is for
-                    # multivector spaces (where vector bytes dominate)
-                    if dt not in ("float32", "float16"):
-                        raise ValueError(
-                            "datatype must be 'float32' or 'float16'")
-                    if dt == "float16":
-                        if not spaces[vname]["multivector"]:
-                            raise ValueError(
-                                "float16 storage supports multivector "
-                                "spaces (dense compression: use "
-                                "quantization='sq'/'bq')")
-                        spaces[vname]["datatype"] = "float16"
-                tr = cfg.get("transform")
-                if tr is not None:
-                    if tr != "pca":
-                        raise ValueError("transform must be 'pca'")
-                    if bool(cfg.get("multivector")):
-                        raise ValueError("transform supports dense spaces")
-                    if qz is not None:
-                        raise ValueError(
-                            "transform and quantization are exclusive "
-                            "on one space (the PCA sidecar IS the "
-                            "compressed layout)")
-                    if dt == "float16":
-                        raise ValueError(
-                            "transform supports float32 spaces")
-                    r = cfg.get("pca_dim")
-                    if r is None or not 0 < int(r) < int(cfg["dim"]):
-                        raise ValueError(
-                            "transform='pca' needs pca_dim in "
-                            f"1..{int(cfg['dim']) - 1}")
-                    spaces[vname]["transform"] = "pca"
-                    spaces[vname]["pca_dim"] = int(r)
-                    if cfg.get("k_centroids") is not None:
-                        spaces[vname]["k_centroids"] = \
-                            int(cfg["k_centroids"])
-                elif cfg.get("pca_dim") is not None \
-                        or cfg.get("k_centroids") is not None:
-                    raise ValueError(
-                        "pca_dim/k_centroids need transform='pca'")
-            meta = {"vectors": spaces}
-        elif dim is None and sparse_vectors is not None:
-            # sparse-only collection (Qdrant allows collections with
-            # only sparse_vectors_config) — no dense space at all
-            meta = {}
-        else:
-            if dim is None:
-                raise ValueError(
-                    "dim is required (or pass `vectors`/`sparse_vectors`)")
-            if normalize is None:
-                normalize = metric == "cosine"
-            meta = {
-                "dim": dim,
-                "metric": metric,
-                "multivector": multivector,
-                "comparator": comparator or ("max_sim" if multivector else None),
-                "normalize": normalize,
-            }
-            if indexing_threshold is not None:
-                meta["indexing_threshold"] = int(indexing_threshold)
-                meta["k_centroids"] = int(k_centroids)
-                if train_fraction is not None:
-                    meta["train_fraction"] = float(train_fraction)
-            if hnsw_config is not None:
-                # Qdrant HnswConfigDiff (m, ef_construct,
-                # max_segment_size) — the server builds one HNSW per
-                # segment past indexing_threshold; here segments =
-                # the IVF cells, chunked to max_segment_size (the
-                # routed composition). Dense or multivector
-                # single-space cosine/euclid collections; composable
-                # with quantization (cosine: graphs build over the
-                # codes sidecar); exclusive with transform (the PCA
-                # sidecar routes its own cells).
-                meta["hnsw"] = _hnsw_validate(
-                    hnsw_config, indexing_threshold, metric,
-                    quantization, transform)
-            if drift_auto is not None:
-                if drift_auto not in ("split", "rebuild"):
-                    raise ValueError(
-                        "drift_auto must be None, 'split' or 'rebuild'")
-                if indexing_threshold is None and transform is None:
-                    raise ValueError(
-                        "drift_auto needs indexing_threshold or a "
-                        "transform (no maintained layout otherwise)")
-                if multivector:
-                    raise ValueError(
-                        "drift_auto supports dense single-space "
-                        "collections (split_hot_cells' scope)")
-                meta["drift_auto"] = drift_auto
-            if shard_key is not None:
-                # Qdrant custom sharding (sharding_method=CUSTOM +
-                # create_shard_key): the shard key column LEADS the
-                # partition layout, so every shard-routed operation
-                # is a static partition prune — the multitenancy
-                # pattern. Later payload indexes nest under it
-                # (coarsest-first).
-                meta["shard_key"] = shard_key
-                meta["payload_indexes"] = [shard_key]
-            if quantization is not None:
-                # Qdrant quantization_config: scalar(int8), binary,
-                # or product (ProductQuantization — "pq"; "opq" adds
-                # the learned FAISS-style rotation before it).
-                # Multivector spaces take scalar only — int8 per
-                # SUBVECTOR dim (Qdrant quantizes multivector
-                # subvectors the same way); searches rank a
-                # codes-sidecar approximate MaxSim and always
-                # exact-rescore the survivors at full width.
-                if quantization not in ("sq", "bq", "pq", "opq"):
-                    raise ValueError(
-                        "quantization must be 'sq', 'bq', 'pq' or "
-                        "'opq'")
-                if multivector and quantization != "sq":
-                    raise ValueError(
-                        "multivector collections support "
-                        "quantization='sq' (scalar int8 per "
-                        "subvector)")
-                meta["quantization"] = quantization
-                if quantization in ("pq", "opq"):
-                    blocks, codes = _pq_validate(
-                        int(dim), quantization, pq_blocks, pq_codes)
-                    meta["pq_blocks"] = blocks
-                    meta["pq_codes"] = codes
-            if pq_blocks is not None and \
-                    quantization not in ("pq", "opq"):
-                raise ValueError(
-                    "pq_blocks needs quantization='pq'/'opq'")
-            if datatype is not None:
-                if datatype not in ("float32", "float16"):
-                    raise ValueError(
-                        "datatype must be 'float32' or 'float16'")
-                if datatype == "float16":
-                    if not multivector:
-                        raise ValueError(
-                            "float16 storage supports multivector "
-                            "collections (dense compression: use "
-                            "quantization='sq'/'bq')")
-                    meta["datatype"] = "float16"
-            if transform is not None:
-                if transform != "pca":
-                    raise ValueError("transform must be 'pca'")
-                if multivector:
-                    raise ValueError(
-                        "transform supports dense collections")
-                if quantization is not None:
-                    raise ValueError(
-                        "transform and quantization are exclusive "
-                        "(the PCA sidecar IS the compressed layout)")
-                if datatype == "float16":
-                    raise ValueError("transform supports float32 "
-                                     "collections")
-                if pca_dim is None or not 0 < int(pca_dim) < int(dim):
-                    raise ValueError(
-                        f"transform='pca' needs pca_dim in 1..{dim - 1}")
-                meta["transform"] = "pca"
-                meta["pca_dim"] = int(pca_dim)
-                # compressed-space IVF cells (the routed layout); the
-                # raw-vector auto-index is replaced by this one
-                meta.setdefault("k_centroids", int(k_centroids))
-            elif pca_dim is not None:
-                raise ValueError("pca_dim needs transform='pca'")
-        if sparse_vectors is not None:
-            # Qdrant sparse_vectors_config: named sparse spaces —
-            # points carry `<name>__sidx` (ascending vocabulary ids)
-            # and `<name>__sval` (weights); may coexist with dense
-            # spaces (names must not collide)
-            sp = {}
-            for sname, cfg in sparse_vectors.items():
-                if meta.get("vectors") and sname in meta["vectors"]:
-                    raise ValueError(
-                        f"sparse space {sname!r} collides with a dense "
-                        "vector space of the same name")
-                unknown = sorted(set(cfg or ()) -
-                                 {"modifier", "full_scan_threshold"})
-                if unknown:
-                    raise ValueError(
-                        f"unknown key(s) {unknown} in sparse space "
-                        f"{sname!r} config")
-                mod = (cfg or {}).get("modifier")
-                if mod not in (None, "idf"):
-                    raise ValueError(
-                        "sparse modifier must be None or 'idf'")
-                sp[sname] = {"modifier": mod}
-                fst = (cfg or {}).get("full_scan_threshold")
-                if fst is not None:
-                    # Qdrant SparseIndexParams(full_scan_threshold):
-                    # below it searches scan the point arrays; once
-                    # the collection reaches it, the upsert persists
-                    # the postings layout (the on-disk inverted
-                    # index) and searches probe that instead
-                    sp[sname]["full_scan_threshold"] = int(fst)
-            meta["sparse_vectors"] = sp
-        with open(os.path.join(root, f"{name}.meta.json"), "w") as f:
-            json.dump(meta, f)
+                    f"sparse space {sname!r} collides with a dense "
+                    "vector space of the same name")
+            rules = _sparse_space_rules(sname, cfg)
+            meta["sparse_vectors"][sname] = {"modifier": None, **{
+                k: v for k, v in rules.items() if v is not None}}
+    with open(os.path.join(root, f"{name}.meta.json"), "w") as f:
+        json.dump(meta, f)
     return Collection(root, name)
 
 

@@ -242,7 +242,35 @@ def test_per_space_quantization_rejects_multivector(tmp_path):
         create_collection(
             str(tmp_path), "bad",
             vectors={"late": {"dim": 2, "multivector": True,
-                              "quantization": "sq"}})
+                              "quantization": "bq"}})
+
+
+@pytest.mark.parametrize("datatype", [None, "float16"])
+def test_per_space_multivector_sq_at_create(spark, tmp_path, datatype):
+    """A named multivector space takes quantization='sq' at create, as
+    the single space and the update switch do: the upsert builds its
+    codes sidecar and the codes tier ranks like the exact scan."""
+    import os
+
+    late = {"dim": 2, "multivector": True, "normalize": False,
+            "quantization": "sq"}
+    if datatype:
+        late["datatype"] = datatype
+    c = create_collection(str(tmp_path), "mvsq", vectors={
+        "late": late, "dense": {"dim": 2, "normalize": False}})
+    c.upsert(spark, spark.createDataFrame(
+        [(i, [float(i % 5), 1.0],
+          [[float(i % 7) / 7.0, float(i % 3)], [float(i % 4), 0.5]])
+         for i in range(30)],
+        "id int, dense array<double>, late array<array<double>>"))
+    assert os.path.isdir(c._codes_path_for("late"))
+    assert not os.path.exists(c._codes_path_for("dense"))
+    qv = [[1.0, 0.2], [0.3, 0.9]]
+    approx = c.search(spark, qv, k=5, using="late",
+                      oversampling=8.0).collect()
+    exact = c.search(spark, qv, k=5, using="late", exact=True).collect()
+    assert [(r.id, r.score) for r in approx] == \
+        [(r.id, r.score) for r in exact]
 
 
 def test_per_space_sidecar_survives_snapshot(spark, qcoll):

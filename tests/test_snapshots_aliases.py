@@ -146,3 +146,41 @@ def test_sharded_collection_isolation(spark, tmp_path):
     plain.upsert(spark, pts.drop("tenant"))
     with pytest.raises(ValueError, match="without a shard key"):
         plain.search(spark, [1.0, 0.0], shard_key_selector="acme")
+
+
+@pytest.mark.parametrize("shape", ["named", "sparse_only"])
+def test_shard_key_on_named_and_sparse_only_collections(spark, tmp_path,
+                                                        shape):
+    """``shard_key`` holds for every collection shape: a named-vector
+    and a sparse-only collection lay out ``tenant=`` partitions, and a
+    ``shard_key_selector`` search and count read only that shard."""
+    import os
+
+    tenants = ["acme", "globex", "initech"]
+    if shape == "named":
+        coll = create_collection(
+            str(tmp_path), "skn", shard_key="tenant",
+            vectors={"v": {"dim": 2, "metric": "dot", "normalize": False}})
+        pts = spark.createDataFrame(
+            [(i, [float(i), 1.0], tenants[i % 3]) for i in range(12)],
+            "id long, v array<double>, tenant string")
+        query = {"query_vector": [1.0, 0.0], "using": "v"}
+    else:
+        coll = create_collection(str(tmp_path), "sks", shard_key="tenant",
+                                 sparse_vectors={"text": {}})
+        pts = spark.createDataFrame(
+            [(i, tenants[i % 3], [0, 1 + i % 2], [float(i + 1), 0.5])
+             for i in range(12)],
+            "id long, tenant string, text__sidx array<int>, "
+            "text__sval array<double>")
+        query = {"query_vector": ([0], [1.0]), "using": "text"}
+    coll.upsert(spark, pts)
+    assert {d for d in os.listdir(coll.path) if d.startswith("tenant=")} \
+        == {f"tenant={t}" for t in tenants}
+    hits = coll.search(spark, k=10, shard_key_selector="acme",
+                       **query).collect()
+    assert [r.id for r in hits] == [9, 6, 3, 0]
+    assert {r.tenant for r in hits} == {"acme"}
+    assert coll.count(spark, shard_key_selector="acme") == 4
+    assert coll.count(spark, shard_key_selector=["acme", "globex"]) == 8
+    assert coll.count(spark) == 12
