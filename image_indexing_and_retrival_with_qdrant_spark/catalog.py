@@ -88,6 +88,35 @@ def _unit(v: list[float]) -> list[float]:
     return v if n == 0.0 else [x / n for x in v]
 
 
+def _compose(pos: list, neg: list):
+    """Recommend's average_vector query ``avg(pos) − avg(neg)`` over
+    dense float lists, or over sparse ``{index: value}`` dicts (index
+    union, returned as the ``(indices, values)`` sparse query)."""
+    def avg(vs):
+        if isinstance(vs[0], dict):
+            return {i: sum(v[i] for v in vs if i in v) / len(vs)
+                    for i in {i for v in vs for i in v}}
+        return [sum(c) / len(vs) for c in zip(*vs)]
+
+    q, n = avg(pos), avg(neg) if neg else None
+    if not isinstance(q, dict):
+        return q if n is None else [a - b for a, b in zip(q, n)]
+    if n is not None:
+        q = {i: q.get(i, 0.0) - n.get(i, 0.0) for i in {*q, *n}}
+    items = sorted(q.items())
+    return [i for i, _ in items], [v for _, v in items]
+
+
+def _excluding(query_filter, id_col: str, ids: list) -> Column | None:
+    """``query_filter`` AND NOT ``id IN ids`` (no ids: the filter as
+    is) — the example exclusion of recommend and query-by-id."""
+    qf = as_predicate(query_filter)
+    if not ids:
+        return qf
+    excl = ~F.col(id_col).isin(ids)
+    return excl if qf is None else qf & excl
+
+
 def _sq_dist(a: list[float], b: list[float]) -> float:
     """Driver-side squared euclidean — the centroid-assignment metric,
     so probing ranks cells the same way they were carved."""
@@ -1589,6 +1618,20 @@ class Collection:
             raise ValueError("collection has no named vectors")
         return {**self.meta, "vec_col": vec_col_default, "nv_col": "n_vecs"}
 
+    def _sparse_space(self, using: str | None) -> str | None:
+        """The sparse space ``using`` addresses, or None for a dense
+        one. ``using=None`` means the sparse space only on a
+        sparse-only collection (no dense space at all)."""
+        sv = self.meta.get("sparse_vectors") or {}
+        if not sv or not (using in sv or (using is None
+                                          and "dim" not in self.meta
+                                          and not self.meta.get("vectors"))):
+            return None
+        if using is None and len(sv) > 1:
+            raise ValueError(f"collection has sparse spaces {sorted(sv)}; "
+                             "pass using=<name>")
+        return using or next(iter(sv))
+
     def _vector_columns(self, vec_col_default: str = "embedding") -> set[str]:
         """Every vector-data column (all spaces + their n_vecs and
         pooled sidecars, plus sparse index/value arrays) — the
@@ -3034,20 +3077,14 @@ class Collection:
         batch = n_queries is not None
         pick = isinstance(with_vectors, (list, tuple, set))
         wv = False if pick else with_vectors
-        sv = self.meta.get("sparse_vectors") or {}
-        if sv and (using in sv or (using is None
-                                   and "dim" not in self.meta
-                                   and not self.meta.get("vectors"))):
-            if using is None and len(sv) > 1:
-                raise ValueError(
-                    f"collection has sparse spaces {sorted(sv)}; "
-                    "pass using=<name>")
+        sparse = self._sparse_space(using)
+        if sparse:
             plan_search({"sparse": True}, replace(
                 knobs, per_query=batch and isinstance(query_filter,
                                                       (list, tuple))),
                 n_queries)
             out = self._sparse_search(
-                spark, qs, using or next(iter(sv)), k=knobs.k,
+                spark, qs, sparse, k=knobs.k,
                 query_filter=self._with_shards(query_filter,
                                                shard_key_selector),
                 score_threshold=score_threshold, id_col=id_col,
@@ -3088,26 +3125,10 @@ class Collection:
         if isinstance(query_vector, (int, str)):
             # Qdrant query-by-id (``query_points(query=point_id)``):
             # search with the point's STORED vector and exclude the
-            # point itself from the results. O(1) driver-side fetch.
-            point_id = query_vector
-            cfg0 = self._vector_cfg(using, vec_col)
-            if cfg0.get("multivector"):
-                raise ValueError(
-                    "query-by-id supports dense collections (fetch the "
-                    "multivector yourself and pass it as the query)")
-            rows = (self.read(spark)
-                    .filter(F.col(id_col) == point_id)
-                    .select(cfg0["vec_col"]).limit(1).collect())
-            if not rows or rows[0][0] is None:
-                raise ValueError(f"query point {point_id!r} not found")
-            v = rows[0][0]
-            if isinstance(v, (bytes, bytearray)):
-                raise ValueError(
-                    "query-by-id supports float vector storage")
-            query_vector = [float(x) for x in v]
-            excl = F.col(id_col) != F.lit(point_id)
-            qf = as_predicate(query_filter)
-            query_filter = excl if qf is None else (qf & excl)
+            # point itself from the results
+            query_filter = _excluding(query_filter, id_col, [query_vector])
+            query_vector = self._examples(spark, [query_vector], id_col,
+                                          vec_col, using, "query-by-id")[0]
         args = (query_filter, score_threshold, id_col, vec_col, using)
         k, formula = knobs.k, knobs.formula
         if formula is None and not offset:
@@ -3498,17 +3519,24 @@ class Collection:
         less, not more (Qdrant's multi-stage query_points)."""
         flt = as_predicate(p.query_filter)
         if p.prefetch:
-            ids: set = set()
-            for rows in _concurrent_branches(
-                    lambda ip: self._prefetch_hits(
-                        spark, ip, id_col, vec_col)
-                    .select(id_col).collect(), list(p.prefetch)):
-                ids.update(r[id_col] for r in rows)
-            cand = F.col(id_col).isin(sorted(ids))
+            cand = self._prefetch_candidates(spark, p.prefetch, id_col,
+                                             vec_col)
             flt = cand if flt is None else flt & cand
         return self.search(
             spark, p.query, k=p.limit, using=p.using,
             query_filter=flt, id_col=id_col, vec_col=vec_col)
+
+    def _prefetch_candidates(self, spark: SparkSession, prefetch: list,
+                             id_col: str, vec_col: str) -> Column:
+        """The id union of prefetch branches (run concurrently, ids
+        collected driver-side — ≤ Σ limits) as one literal ``id IN``,
+        pushed to the scan of the stage it restricts."""
+        ids: set = set()
+        for rows in _concurrent_branches(
+                lambda p: self._prefetch_hits(spark, p, id_col, vec_col)
+                .select(id_col).collect(), list(prefetch)):
+            ids.update(r[id_col] for r in rows)
+        return literal_in(id_col, sorted(ids))
 
     def query(self, spark: SparkSession, prefetch, fusion: str = "rrf",
               k: int = 5, id_col: str = "id",
@@ -3635,15 +3663,8 @@ class Collection:
             # the dedicated path with a literal ``id IN`` (≤ Σ limits
             # ids, pushed to the scan — row-group pruning, the corpus
             # is never re-shuffled); no prefetch = collection-wide.
-            cand = None
-            if prefetch:
-                ids: set = set()
-                for rows in _concurrent_branches(
-                        lambda p: self._prefetch_hits(
-                            spark, p, id_col, vec_col)
-                        .select(id_col).collect(), prefetch):
-                    ids.update(r[id_col] for r in rows)
-                cand = F.col(id_col).isin(sorted(ids))
+            cand = (self._prefetch_candidates(spark, prefetch, id_col,
+                                              vec_col) if prefetch else None)
             if isinstance(query, RecommendQuery):
                 asc = self._query_ranks_ascending(query, using, vec_col)
                 return attach_vectors(shape(self.recommend(
@@ -3805,13 +3826,16 @@ class Collection:
                   strategy: str = "average_vector",
                   lookup_from=None, with_payload=True) -> DataFrame:
         """Qdrant's ``recommend`` analog (``strategy=average_vector``,
-        the client default): the query vector is ``avg(positive
-        examples) − avg(negative examples)`` over the *stored* vectors
-        (for COSINE collections those are already normalized — exactly
-        Qdrant's behavior of averaging post-normalization), and the
-        example points are excluded from the results. The example
-        fetch is an O(#examples) driver-side lookup by id; the search
-        itself is the normal one-pass dense path.
+        the client default): a search whose query vector is
+        ``avg(positive examples) − avg(negative examples)`` over the
+        *stored* vectors (for COSINE collections those are already
+        normalized — exactly Qdrant's behavior of averaging
+        post-normalization), with the example points excluded from the
+        results. The example fetch is an O(#examples) driver-side
+        lookup by id (:meth:`_examples`); the search runs through
+        :meth:`search`'s own front door, so tier, knobs and scores are
+        exactly a search's — :meth:`recommend_batch` is the same call
+        for many requests.
 
         ``lookup_from`` (Qdrant ``LookupLocation``): resolve example
         ids in ANOTHER collection — a `Collection` or a
@@ -3824,129 +3848,45 @@ class Collection:
         Sparse spaces recommend too (``using=<sparse name>``): the
         query is the index-union average of the positive examples'
         stored sparse vectors minus the negatives' average, searched
-        through the normal sparse path with the examples excluded."""
-        sv = self.meta.get("sparse_vectors") or {}
-        if sv and (using in sv or (using is None
-                                   and "dim" not in self.meta
-                                   and not self.meta.get("vectors"))):
-            if using is None and len(sv) > 1:
-                raise ValueError(
-                    f"collection has sparse spaces {sorted(sv)}; "
-                    "pass using=<name>")
-            using = using or next(iter(sv))
-            if not positive:
-                raise ValueError("recommend requires at least one "
-                                 "positive id")
-            if strategy != "average_vector" or lookup_from is not None:
-                raise ValueError("sparse recommend supports "
-                                 "strategy='average_vector' without "
-                                 "lookup_from")
-            ids = [*positive, *negative]
-            idx_c, val_c = using + "__sidx", using + "__sval"
-            rows = (self.read(spark).filter(F.col(id_col).isin(ids))
-                    .select(id_col, idx_c, val_c).collect())
-            vecs = {r[0]: dict(zip(r[1], r[2])) for r in rows}
-            miss = [i for i in ids if i not in vecs]
-            if miss:
-                raise ValueError(f"example points not found: {miss}")
+        through the normal sparse path with the examples excluded.
 
-            def _savg(example_ids):
-                acc: dict = {}
-                for e in example_ids:
-                    for i, v in vecs[e].items():
-                        acc[i] = acc.get(i, 0.0) + v
-                return {i: v / len(example_ids) for i, v in acc.items()}
-
-            q = _savg(positive)
-            for i, v in (_savg(negative) if negative else {}).items():
-                q[i] = q.get(i, 0.0) - v
-            items = sorted(q.items())
-            excl = ~F.col(id_col).isin(ids)
-            qf = as_predicate(query_filter)
-            flt = excl if qf is None else (qf & excl)
-            hits = self._sparse_search(
-                spark, [([i for i, _ in items], [v for _, v in items])],
-                using, k=k, query_filter=flt,
-                score_threshold=score_threshold, id_col=id_col)
-            return self._apply_with_payload(
-                hits, with_payload, id_col, vec_col)
-        cfg = self._vector_cfg(using, vec_col)
-        if cfg.get("multivector"):
-            raise ValueError("recommend supports dense collections")
-        if not positive:
-            raise ValueError("recommend requires at least one positive id")
-        ids = [*positive, *negative]
-        if lookup_from is None:
-            lookup, lookup_using = self, using
-        elif isinstance(lookup_from, tuple):
-            lookup, lookup_using = lookup_from
-        else:
-            lookup, lookup_using = lookup_from, None
-        lcfg = lookup._vector_cfg(lookup_using, vec_col)
-        if lcfg.get("multivector"):
-            raise ValueError("lookup_from space must be dense")
-        rows = lookup.read(spark).filter(
-            F.col(id_col).isin(ids)).select(id_col, lcfg["vec_col"]).collect()
-        vecs = {r[0]: [float(x) for x in r[1]] for r in rows}
-        missing = [i for i in ids if i not in vecs]
-        if missing:
-            raise ValueError(f"example points not found: {missing}")
-        dim = cfg.get("dim")
-        if dim and any(len(v) != dim for v in vecs.values()):
-            raise ValueError(
-                f"lookup_from vectors must match this space's dim {dim}")
-        exclude_ids = ids if lookup is self else []
-
-        if strategy == "best_score":
-            # Qdrant RecommendStrategy.BEST_SCORE: literal-folded
-            # per-example similarities, max-merged with the documented
-            # -(max_neg²) negative branch (operators/discover.py).
-            from .operators.discover import recommend_best_score
-
-            query_filter = as_predicate(query_filter)
-            excl = (~F.col(id_col).isin(exclude_ids)
-                    if exclude_ids else None)
-            if excl is None:
-                flt = query_filter
-            else:
-                flt = excl if query_filter is None else (excl & query_filter)
-            table = self.read(spark)
-            payload = [c for c in table.columns
-                       if c not in self._vector_columns(cfg["vec_col"])
-                       | {id_col}]
-            out = recommend_best_score(
-                table, [vecs[i] for i in positive],
-                [vecs[i] for i in negative], k=k, id_col=id_col,
-                vec_col=cfg["vec_col"], payload_cols=payload,
-                prefilter=flt,
-                prenormalized=bool(cfg.get("normalize")),
-                dim=cfg.get("dim"), metric=cfg.get("metric", "cosine"))
-            if score_threshold is not None:
-                out = out.filter(F.col("score") >= score_threshold)
-            return self._apply_with_payload(
-                out, with_payload, id_col, cfg["vec_col"])
-        if strategy != "average_vector":
+        ``strategy="best_score"`` (Qdrant ``BEST_SCORE``, dense spaces,
+        single requests) scores each point by its per-example
+        similarities instead of one composed vector."""
+        if strategy not in ("average_vector", "best_score"):
             raise ValueError(f"unknown recommend strategy {strategy!r}")
+        if self._sparse_space(using) and (strategy != "average_vector"
+                                          or lookup_from is not None):
+            raise ValueError("sparse recommend supports "
+                             "strategy='average_vector' without "
+                             "lookup_from")
+        [(pos, neg, flt)] = self._recommend_examples(
+            spark, [(positive, negative)], query_filter, id_col, vec_col,
+            using, lookup_from)
+        if strategy == "average_vector":
+            return self._query_points(
+                spark, [_compose(pos, neg)], None,
+                SearchKnobs(k, exact, nprobe), flt, score_threshold,
+                id_col, vec_col, using, False, with_payload)
+        # Qdrant RecommendStrategy.BEST_SCORE: literal-folded
+        # per-example similarities, max-merged with the documented
+        # -(max_neg²) negative branch (operators/discover.py).
+        from .operators.discover import recommend_best_score
 
-        def _avg(example_ids):
-            vs = [vecs[i] for i in example_ids]
-            return [sum(col) / len(vs) for col in zip(*vs)]
-
-        qv = _avg(positive)
-        if negative:
-            qv = [p - n for p, n in zip(qv, _avg(negative))]
-        query_filter = as_predicate(query_filter)
-        excl = ~F.col(id_col).isin(exclude_ids) if exclude_ids else None
-        if excl is None:
-            flt = query_filter
-        else:
-            flt = excl if query_filter is None else (excl & query_filter)
-        return self.search(
-            spark, qv, k=k, query_filter=flt,
-            score_threshold=score_threshold, id_col=id_col,
-            vec_col=vec_col, nprobe=nprobe, exact=exact, using=using,
-            with_payload=with_payload,
-        )
+        cfg = self._vector_cfg(using, vec_col)
+        table = self.read(spark)
+        payload = [c for c in table.columns
+                   if c not in self._vector_columns(cfg["vec_col"])
+                   | {id_col}]
+        out = recommend_best_score(
+            table, pos, neg, k=k, id_col=id_col, vec_col=cfg["vec_col"],
+            payload_cols=payload, prefilter=flt,
+            prenormalized=bool(cfg.get("normalize")),
+            dim=cfg.get("dim"), metric=cfg.get("metric", "cosine"))
+        if score_threshold is not None:
+            out = out.filter(F.col("score") >= score_threshold)
+        return self._apply_with_payload(
+            out, with_payload, id_col, cfg["vec_col"])
 
     def recommend_groups(self, spark: SparkSession, positive: list,
                          group_by: str, negative: list = (),
@@ -3959,34 +3899,14 @@ class Collection:
         (``avg(positive) − avg(negative)`` over stored vectors,
         examples excluded) ranked as groups — best ``group_size`` hits
         from each of the top ``limit`` groups. Same example semantics
-        as :meth:`recommend` (average_vector strategy); same group
-        semantics (incl. ``with_lookup``) as :meth:`search_groups`."""
-        cfg = self._vector_cfg(using, vec_col)
-        if cfg.get("multivector"):
-            raise ValueError("recommend supports dense collections")
-        if not positive:
-            raise ValueError("recommend requires at least one positive id")
-        ids = [*positive, *negative]
-        rows = self.read(spark).filter(
-            F.col(id_col).isin(ids)).select(
-                id_col, cfg["vec_col"]).collect()
-        vecs = {r[0]: [float(x) for x in r[1]] for r in rows}
-        missing = [i for i in ids if i not in vecs]
-        if missing:
-            raise ValueError(f"example points not found: {missing}")
-
-        def _avg(example_ids):
-            vs = [vecs[i] for i in example_ids]
-            return [sum(col) / len(vs) for col in zip(*vs)]
-
-        qv = _avg(positive)
-        if negative:
-            qv = [p - n for p, n in zip(qv, _avg(negative))]
-        excl = ~F.col(id_col).isin(ids)
-        query_filter = as_predicate(query_filter)
-        flt = excl if query_filter is None else (excl & query_filter)
+        as :meth:`recommend` (average_vector strategy, the same
+        example lookup and composition); the grouped search is
+        :meth:`search_groups` (incl. ``with_lookup``)."""
+        [(pos, neg, flt)] = self._recommend_examples(
+            spark, [(positive, negative)], query_filter, id_col, vec_col,
+            using)
         return self.search_groups(
-            spark, qv, group_by=group_by, limit=limit,
+            spark, _compose(pos, neg), group_by=group_by, limit=limit,
             group_size=group_size, query_filter=flt, id_col=id_col,
             vec_col=vec_col, using=using, with_lookup=with_lookup)
 
@@ -3995,81 +3915,89 @@ class Collection:
                         id_col: str = "id",
                         vec_col: str = "embedding",
                         using: str | None = None) -> DataFrame:
-        """Qdrant's ``recommend_batch``: many recommend requests in ONE
-        corpus pass. ``requests`` is a list of ``(positive_ids,
-        negative_ids)`` pairs (or ``positive_ids`` lists). All example
-        vectors resolve in one driver-side lookup; the composed query
-        vectors broadcast as a batch (``dense_knn_batch``), and each
-        request's example exclusion is a (query_idx, id) broadcast
-        anti-join — corpus scanned once regardless of batch size."""
-        from .operators.knn import dense_knn_batch
+        """Qdrant's ``recommend_batch``: many :meth:`recommend` requests
+        as ONE :meth:`search_batch`. ``requests`` is a list of
+        ``(positive_ids, negative_ids)`` pairs (or ``positive_ids``
+        lists). All example vectors resolve in one driver-side lookup;
+        each request's composed vector is one batch query, and its
+        example exclusion (AND ``query_filter``) is that query's
+        per-request filter — so the planner routes filter-correct
+        (the exact scan or an exhaustive IVF probe) and every request
+        scores exactly as :meth:`recommend` would, in one corpus
+        pass. Dense spaces only: sparse batches take one shared filter,
+        which cannot carry per-request exclusions."""
+        ex = self._recommend_examples(
+            spark, [r if isinstance(r, tuple) else (r, ()) for r in requests],
+            query_filter, id_col, vec_col, using)
+        return self._query_points(
+            spark, [_compose(p, n) for p, n, _ in ex], len(ex),
+            SearchKnobs(k), [f for *_, f in ex], None, id_col, vec_col,
+            using, False, True)
 
-        cfg = self._vector_cfg(using, vec_col)
-        if cfg.get("multivector"):
-            raise ValueError("recommend supports dense collections")
-        norm = [(list(r[0]), list(r[1])) if isinstance(r, tuple)
-                else (list(r), []) for r in requests]
-        if not norm or any(not p for p, _ in norm):
-            raise ValueError(
-                "every request needs at least one positive id")
-        all_ids = sorted({i for p, ng in norm for i in (*p, *ng)})
-        rows = self.read(spark).filter(
-            F.col(id_col).isin(all_ids)).select(
-                id_col, cfg["vec_col"]).collect()
-        vecs = {r[0]: [float(x) for x in r[1]] for r in rows}
-        missing = [i for i in all_ids if i not in vecs]
+    def _recommend_examples(self, spark: SparkSession, requests: list,
+                            query_filter, id_col: str, vec_col: str,
+                            using: str | None, lookup_from=None) -> list:
+        """Each ``(positive, negative)`` request's example vectors and
+        search filter, every request resolved in ONE example lookup.
+        The filter is ``query_filter`` AND NOT the request's example
+        ids — examples never recommend themselves — unless the
+        examples come from another collection (``lookup_from``: a
+        `Collection` or ``(Collection, using)``), whose ids name no
+        point here."""
+        reqs = [(list(p), list(n)) for p, n in requests]
+        if not reqs or any(not p for p, _ in reqs):
+            raise ValueError("recommend requires at least one positive id")
+        lookup = (None if lookup_from is None
+                  else lookup_from if isinstance(lookup_from, tuple)
+                  else (lookup_from, None))
+        vecs = iter(self._examples(
+            spark, [x for p, n in reqs for x in (*p, *n)], id_col, vec_col,
+            using, "recommend", lookup))
+        local = lookup is None or lookup[0] is self
+        return [([next(vecs) for _ in p], [next(vecs) for _ in n],
+                 _excluding(query_filter, id_col, [
+                     x for x in (*p, *n)
+                     if local and isinstance(x, (int, str))]))
+                for p, n in reqs]
+
+    def _examples(self, spark: SparkSession, items: list, id_col: str,
+                  vec_col: str, using: str | None, op: str,
+                  lookup: tuple | None = None) -> list:
+        """Resolve examples — point ids (int/str) or raw vectors — to
+        vectors of the searched space: float lists, or ``{index:
+        value}`` dicts for a sparse space. Every id lookup of the read
+        path (recommend, discover, query-by-id) runs here: one
+        O(#ids) driver-side fetch, from this collection or from
+        ``lookup`` — Qdrant's ``LookupLocation`` as a ``(Collection,
+        using)`` pair, whose dense vectors must match this space's
+        dim. ``op`` names the caller in the dense-only error."""
+        sparse = self._sparse_space(using)
+        src, src_using = lookup or (self, using)
+        if sparse:
+            cols = [sparse + "__sidx", sparse + "__sval"]
+        else:
+            cfg = self._vector_cfg(using, vec_col)
+            scfg = src._vector_cfg(src_using, vec_col)
+            if cfg.get("multivector"):
+                raise ValueError(f"{op} supports dense collections")
+            if scfg.get("multivector"):
+                raise ValueError("lookup_from space must be dense")
+            cols = [scfg["vec_col"]]
+        ids = [x for x in items if isinstance(x, (int, str))]
+        rows = src.read(spark).filter(F.col(id_col).isin(ids)).select(
+            id_col, *cols).collect() if ids else []
+        vecs = {r[0]: dict(zip(r[1], r[2])) if sparse
+                else [float(x) for x in r[1]]
+                for r in rows if r[1] is not None}
+        missing = [i for i in ids if i not in vecs]
         if missing:
             raise ValueError(f"example points not found: {missing}")
-
-        def _avg(ids):
-            vs = [vecs[i] for i in ids]
-            return [sum(col) / len(vs) for col in zip(*vs)]
-
-        qrows, excl = [], []
-        for qi, (pos, neg) in enumerate(norm):
-            qv = _avg(pos)
-            if neg:
-                qv = [p - n for p, n in zip(qv, _avg(neg))]
-            qrows.append((qi, qv))
-            excl.extend((qi, i) for i in (*pos, *neg))
-        qdf = local_literal_df(
-            spark, qrows, "query_idx int, query_vec array<double>")
-        corpus = self.read(spark).filter(
-            F.col(cfg["vec_col"]).isNotNull())
-        payload = [c for c in corpus.columns
-                   if c not in self._vector_columns(vec_col) | {id_col}]
-        # point ids are int OR str (Qdrant's UUID-string convention);
-        # type the exclusion frame from the actual examples
-        id_type = ("string" if any(isinstance(i, str) for i in all_ids)
-                   else "long")
-        excl_df = local_literal_df(
-            spark, excl, f"query_idx int, {id_col} {id_type}")
-        return dense_knn_batch(
-            corpus, qdf, k=k, id_col=id_col, vec_col=cfg["vec_col"],
-            query_id_col="query_idx", payload_cols=payload,
-            prefilter=as_predicate(query_filter),
-            prenormalized=bool(cfg.get("normalize")),
-            dim=cfg.get("dim"), metric=cfg.get("metric", "cosine"),
-            exclude_pairs=excl_df,
-        )
-
-    def _resolve_examples(self, spark: SparkSession, items: list,
-                          id_col: str, vec_col: str) -> list[list[float]]:
-        """Resolve a mixed list of point ids (int/str) / raw vectors to
-        vectors (Qdrant's discover/context inputs accept both). The id
-        fetch is an O(#examples) driver-side lookup, like
-        ``recommend``."""
-        ids = [x for x in items if isinstance(x, (int, str))]
-        vecs: dict = {}
-        if ids:
-            rows = self.read(spark).filter(
-                F.col(id_col).isin(ids)).select(id_col, vec_col).collect()
-            vecs = {r[0]: [float(v) for v in r[1]] for r in rows}
-            missing = [i for i in ids if i not in vecs]
-            if missing:
-                raise ValueError(f"example points not found: {missing}")
-        return [vecs[x] if isinstance(x, (int, str)) else
-                [float(v) for v in x] for x in items]
+        dim = None if sparse or src is self else cfg.get("dim")
+        if dim and any(len(v) != dim for v in vecs.values()):
+            raise ValueError(
+                f"lookup_from vectors must match this space's dim {dim}")
+        return [vecs[x] if isinstance(x, (int, str))
+                else [float(v) for v in x] for x in items]
 
     def discover(self, spark: SparkSession, context: list,
                  target=None, k: int = 5, query_filter=None,
@@ -4080,37 +4008,34 @@ class Collection:
         each a point id or a raw vector. With ``target`` set this is
         discovery search (rank by zones satisfied, then target score);
         with ``target=None`` it is context-only search (rank by
-        ``sum(min(0, s_pos - s_neg))``). One scan-local corpus pass —
-        the pairs fold into the projection as literals."""
+        ``sum(min(0, s_pos - s_neg))``). Every example id resolves in
+        one driver-side lookup (:meth:`_examples`); one scan-local
+        corpus pass — the pairs fold into the projection as
+        literals."""
         from .operators.discover import context_search, discovery_search
 
         cfg = self._vector_cfg(using, vec_col)
         vec_col = cfg["vec_col"]
-        if cfg.get("multivector"):
-            raise ValueError("discover supports dense collections")
-        pairs = [tuple(self._resolve_examples(spark, list(p), id_col, vec_col))
-                 for p in context]
+        vecs = self._examples(
+            spark, [x for p in context for x in p]
+            + ([] if target is None else [target]),
+            id_col, vec_col, using, "discover")
         if cfg.get("normalize"):
-            pairs = [(_unit(p), _unit(n)) for p, n in pairs]
-        query_filter = as_predicate(query_filter)
+            vecs = [_unit(v) for v in vecs]
+        it = iter(vecs)
+        pairs = [(next(it), next(it)) for _ in context]
         corpus = self.read(spark).filter(F.col(vec_col).isNotNull())
         payload = [c for c in corpus.columns
                    if c not in self._vector_columns(vec_col) | {id_col}]
         common = dict(
             k=k, id_col=id_col, vec_col=vec_col, payload_cols=payload,
-            prefilter=query_filter, prenormalized=bool(cfg.get("normalize")),
+            prefilter=as_predicate(query_filter),
+            prenormalized=bool(cfg.get("normalize")),
             dim=cfg.get("dim"), metric=cfg.get("metric", "cosine"),
         )
-        if target is None:
-            return self._apply_with_payload(
-                context_search(corpus, pairs, **common),
-                with_payload, id_col, vec_col)
-        tv = self._resolve_examples(spark, [target], id_col, vec_col)[0]
-        if cfg.get("normalize"):
-            tv = _unit(tv)
-        return self._apply_with_payload(
-            discovery_search(corpus, tv, pairs, **common),
-            with_payload, id_col, vec_col)
+        out = (context_search(corpus, pairs, **common) if target is None
+               else discovery_search(corpus, next(it), pairs, **common))
+        return self._apply_with_payload(out, with_payload, id_col, vec_col)
 
     def discover_batch(self, spark: SparkSession, requests: list,
                        k: int = 5, query_filter=None,
@@ -4602,9 +4527,10 @@ class Collection:
                       id_col: str = "id",
                       vec_col: str = "embedding") -> int:
         """Qdrant's ``clear_payload``: null every payload column on the
-        matching points (id and vector are kept — Qdrant semantics)."""
+        matching points (id and every vector space, with its sidecars,
+        are kept — Qdrant semantics)."""
         cols = [c for c in self.read(spark).columns
-                if c not in (id_col, vec_col, "n_vecs")]
+                if c not in self._vector_columns(vec_col) | {id_col}]
         return self.delete_payload(spark, cols, selector,
                                    id_col=id_col, vec_col=vec_col)
 
@@ -4784,7 +4710,11 @@ class Collection:
         ``ceil(n / target_rows_per_file)`` files. Append-mode upserts
         accumulate one file-set per batch; compaction restores scan
         efficiency (fewer, larger row groups → fewer tasks, better
-        vectorized-reader throughput). Returns the new file count.
+        vectorized-reader throughput). The rewrite is the staged
+        :meth:`_rewrite`, so a payload-index / shard-key layout keeps
+        its ``partitionBy`` directories (later upserts append into
+        them). Returns the new data file count, across those
+        directories.
 
         ``cluster_by=[payload keys]`` is Qdrant's tenant
         defragmentation (``defragmentation_key`` on multitenant
@@ -4799,17 +4729,11 @@ class Collection:
         table = self.read(spark)
         n = table.count()
         n_files = max(1, -(-n // target_rows_per_file))
-        staging = self.path + ".__rewrite__"
         shaped = (table.repartitionByRange(n_files, *cluster_by)
                        .sortWithinPartitions(*cluster_by)
                   if cluster_by else table.repartition(n_files))
-        shaped.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(self.path)
-        os.rename(staging, self.path)
-        if self._has_derived_layouts():
-            self._post_write(spark, None, id_col, vec_col, rewrote=True)
-        return len([f for f in os.listdir(self.path)
-                    if f.endswith(".parquet")])
+        self._rewrite(spark, shaped, id_col, vec_col)
+        return self._data_file_count()
 
     # -- S9: stats --------------------------------------------------------
 

@@ -155,7 +155,6 @@ def dense_knn_batch(
     dim: int | None = None,
     score_threshold: float | None = None,
     metric: str = "cosine",
-    exclude_pairs: DataFrame | None = None,
     include_pairs: DataFrame | None = None,
     per_query_filter: Column | None = None,
 ) -> DataFrame:
@@ -165,17 +164,16 @@ def dense_knn_batch(
     ``topk.grouped_topk``).
     ``score_threshold`` filters candidates *before* ranking (Qdrant's
     semantics: the threshold bounds the candidate set, then top-k).
-    ``exclude_pairs`` (query_id, id) drops per-query exclusions before
-    ranking — a tiny broadcast anti-join (recommend_batch's example
-    exclusion). ``include_pairs`` (query_id, id) RESTRICTS each query
-    to its own candidate set before ranking — a broadcast semi-join
-    (the batched quantized-prefetch rescore: each query rescores only
-    ITS shortlist, matching single-query semantics).
+    ``include_pairs`` (query_id, id) RESTRICTS each query to its own
+    candidate set before ranking — a broadcast semi-join (the batched
+    quantized-prefetch rescore: each query rescores only ITS
+    shortlist, matching single-query semantics).
     ``per_query_filter`` is a predicate that may reference
     ``query_id_col`` (e.g. a CASE over per-request filters — Qdrant's
-    query_batch_points per-request filter); it applies to the scored
-    rows before ranking, which equals filtering each query's
-    candidates first because scoring is row-local."""
+    query_batch_points per-request filter, and recommend_batch's
+    per-request example exclusion); it applies to the scored rows
+    before ranking, which equals filtering each query's candidates
+    first because scoring is row-local."""
     if prefilter is not None:
         corpus = corpus.filter(prefilter)
     asc = metric in _DISTANCE_METRICS
@@ -190,9 +188,6 @@ def dense_knn_batch(
     )
     if per_query_filter is not None:
         scored = scored.filter(per_query_filter)
-    if exclude_pairs is not None:
-        scored = scored.join(F.broadcast(exclude_pairs),
-                             on=[query_id_col, id_col], how="left_anti")
     if include_pairs is not None:
         scored = scored.join(F.broadcast(include_pairs),
                              on=[query_id_col, id_col], how="left_semi")

@@ -457,3 +457,32 @@ def test_hnsw_rescore_filters_ids_by_in(spark, tmp_path):
     opt = hits._jdf.queryExecution().optimizedPlan().toString()
     assert re.search(r"\bid#\d+L? (IN \(|INSET )", opt), opt
     assert len(hits.collect()) == 3
+
+
+def test_recommend_batch_is_a_search_batch_plan(spark, tmp_path):
+    """recommend_batch runs the search_batch plan: per-request example
+    exclusions are a per-query filter on the scored rows (no LeftAnti
+    join), ranked by the partial-then-final ``WindowGroupLimit``
+    around one exchange. A single recommend keeps the single-query
+    TakeOrderedAndProject leaf, no Window."""
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        create_collection,
+    )
+
+    coll = create_collection(str(tmp_path), "rbp", dim=4, normalize=False)
+    coll.upsert(spark, spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0, float(i % 3)]) for i in range(20)],
+        "id long, embedding array<double>"))
+    batch = coll.recommend_batch(spark, [([1, 2], [3]), ([4], [5, 6])], k=3)
+    lines = batch._jdf.queryExecution().executedPlan().toString() \
+        .splitlines()
+    assert not any("LeftAnti" in l for l in lines), lines
+    ex = [i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l]
+    assert len(ex) == 1, lines
+    wgl = [(i, l) for i, l in enumerate(lines) if "WindowGroupLimit" in l]
+    assert [l.rstrip().rsplit(", ", 1)[-1] for _, l in wgl] == \
+        ["Final", "Partial"], lines
+    assert wgl[0][0] < ex[0] < wgl[1][0]
+    assert len(batch.collect()) == 6
+    single = formatted_plan(coll.recommend(spark, [1, 2], [3], k=3))
+    assert "TakeOrderedAndProject" in single and "Window" not in single

@@ -4,6 +4,7 @@ usage — a reference user switching engines keeps their workflow)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from image_indexing_and_retrival_with_qdrant_spark.catalog import create_collection
@@ -86,6 +87,44 @@ def test_compact_merges_files(spark, sf_smoke, tmp_path):
     assert coll.count(spark) == n  # lossless
 
 
+@pytest.mark.parametrize("layout", ["shard_key", "payload_index"])
+def test_compact_keeps_partitioned_layout(spark, tmp_path, layout):
+    """compact rewrites through the payload-index / shard-key
+    ``partitionBy`` layout: the next upsert appends into the same
+    partition directories, so no compacted point goes missing."""
+    import random
+
+    rnd = random.Random(7)
+    coll = create_collection(
+        str(tmp_path), "cp", dim=4, normalize=False,
+        **({"shard_key": "tenant"} if layout == "shard_key" else {}))
+    if layout == "payload_index":
+        coll.create_payload_index(spark, "tenant")
+
+    def batch(ids):
+        return spark.createDataFrame(
+            [(i, [rnd.gauss(0.0, 1.0) for _ in range(4)],
+              "acme" if i % 2 else "beta") for i in ids],
+            "id long, embedding array<double>, tenant string")
+
+    for lo in range(0, 400, 100):  # append churn: one file-set each
+        coll.upsert(spark, batch(range(lo, lo + 100)))
+    old = {r.id: list(r.embedding) for r in coll.read(spark).collect()}
+    n_files = coll.compact(spark, target_rows_per_file=100)
+    assert n_files == coll._data_file_count() > 0
+    coll.upsert(spark, batch(range(400, 405)))
+    assert coll.count(spark) == coll.count(spark, exact=False) == 405
+    assert sorted(d for d in os.listdir(coll.path)
+                  if not d.startswith(("_", "."))) == \
+        ["tenant=acme", "tenant=beta"]
+    acme = ({"shard_key_selector": "acme"} if layout == "shard_key"
+            else {"query_filter": F.col("tenant") == "acme"})
+    for pid in (1, 3, 199, 399):  # pre-compact acme points
+        hits = coll.search(spark, old[pid], k=1, exact=True,
+                           **acme).collect()
+        assert [(h.id, h.tenant) for h in hits] == [(pid, "acme")]
+
+
 def test_search_batch_matches_per_query_search(spark, sf_smoke, tmp_path):
     """query_batch_points analog: one corpus pass must return exactly
     what per-query search() returns, including through the IVF route
@@ -155,6 +194,38 @@ def test_delete_and_clear_payload(spark, sf_smoke, tmp_path):
     row = coll.read(spark).filter(F.col("id") == some[0]).collect()[0]
     assert row.doc_id is None and row.lang is None
     assert row.embedding is not None  # vector untouched
+    # every vector space and its sidecars stay as they were on the
+    # other shapes too: named spaces, sparse index/value arrays, the
+    # pooled multivector column
+    shapes = {
+        "named": (dict(vectors={"a": {"dim": 2},
+                                "b": {"dim": 2, "metric": "dot"}}),
+                  [(1, [1.0, 0.0], [0.0, 1.0], "x", 7),
+                   (2, [0.0, 1.0], [1.0, 0.0], "y", 9)],
+                  "id long, a array<double>, b array<double>"),
+        "sparse": (dict(dim=2, sparse_vectors={"s": {}}),
+                   [(1, [1.0, 0.0], [0, 3], [1.0, 2.0], "x", 7),
+                    (2, [0.0, 1.0], [1], [0.5], "y", 9)],
+                   "id long, embedding array<double>, s__sidx array<int>, "
+                   "s__sval array<double>"),
+        "pooled": (dict(dim=2, multivector=True, normalize=False),
+                   [(1, [[1.0, 0.0], [0.0, 1.0]], "x", 7),
+                    (2, [[0.5, 0.5]], "y", 9)],
+                   "id long, embedding array<array<double>>"),
+    }
+    for name, (kw, rows, schema) in shapes.items():
+        c = create_collection(str(tmp_path), name, **kw)
+        c.upsert(spark, spark.createDataFrame(
+            rows, schema + ", tag string, rank long"))
+        before = {r.id: r.asDict() for r in c.read(spark).collect()}
+        vec_cols = set(before[1]) - {"id", "tag", "rank"}
+        assert name != "pooled" or "embedding__pooled" in vec_cols
+        assert c.clear_payload(spark, [1]) == 1
+        after = {r.id: r.asDict() for r in c.read(spark).collect()}
+        assert after[1]["tag"] is None and after[1]["rank"] is None
+        assert {k: after[1][k] for k in vec_cols} == \
+            {k: before[1][k] for k in vec_cols}, name
+        assert after[2] == before[2], name
 
 
 def test_payload_reserved_columns_rejected(spark, sf_smoke, tmp_path):
