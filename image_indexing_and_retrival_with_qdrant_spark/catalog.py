@@ -61,6 +61,7 @@ query vectors, and exact MaxSim scores the probed cells.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -678,13 +679,58 @@ class Collection:
             self._centroid_cache = [list(r["centroid"]) for r in rows]
         return self._centroid_cache
 
+    def _routing(self, df: DataFrame, vec_col: str) -> Column | str:
+        """The vector the coarse quantizer sees — the one rule every
+        layout writer (IVF points, cells codes, graphs) routes by: the
+        embedding itself for dense collections, the mean-pooled flat
+        multivector for MaxSim collections (one routing vector per
+        point — the coarse stage of a PLAID-style late-interaction
+        index; exact MaxSim runs inside the probed cells). A stored
+        column comes back as its NAME — the write-time ``__pooled``
+        sidecar for multivectors (mandatory for fp16 storage, binary
+        can't pool in Catalyst, and 1/n_vecs of the read either way)
+        — so ``assign_centroids`` takes its loop-shaped JVM-parsed SQL
+        path (~ms plan build, codegen-proof at any codebook size)
+        instead of ~k·d·5 py4j round trips for a Column build; only
+        legacy multivector rows without the sidecar pool in-plan.
+        ``as_double`` turns either form into the array<double>
+        Column."""
+        if not self.meta.get("multivector"):
+            return vec_col
+        if vec_col + "__pooled" in df.columns:
+            return vec_col + "__pooled"
+        return mean_pool_flat(F.col(vec_col).cast("array<double>"),
+                              int(self.meta["dim"]))
+
+    @staticmethod
+    def _assign_cells(df: DataFrame, centroids: list, route: Column | str,
+                      out: str = "centroid_id") -> DataFrame:
+        """``df`` plus its nearest-centroid cell — the one assignment
+        every layout writer uses, so the points layout, the codes
+        sidecar and the graphs put a row in the SAME cell (probe
+        pruning is complete only then: the codegen'd expression and
+        the BLAS UDF can disagree on a point near a cell boundary, so
+        one dispatch budget for all writers is the invariant). The
+        budget is tighter than the plain-projection dispatch (1024):
+        the layout write FUSES the assignment into the
+        dynamic-partition sorter's generated method, and a 64×16
+        codebook that codegens fine as a projection blows janino's
+        64 KB limit inside sort_addToSorter — Spark falls back to
+        row-at-a-time interpreted eval for the whole write stage
+        (observed at the drift stress). The Arrow/BLAS UDF evaluates
+        in its own stage; the sorter then sees a plain int column."""
+        from .operators.ann import assign_centroids
+
+        return df.withColumn(out, assign_centroids(
+            centroids, route, max_expr_literals=512))
+
     def _refresh_index(self, spark: SparkSession, incoming: DataFrame | None,
                        id_col: str, vec_col: str, rewrote: bool) -> None:
         """Build or incrementally extend the IVF layout after an upsert.
 
         First crossing of the threshold: train sampled KMeans on the
-        table, assign every row with the codegen'd nearest-centroid
-        expression, write ``partitionBy(centroid_id)``. Afterwards:
+        table, assign every row to its cell (``_assign_cells``), write
+        ``partitionBy(centroid_id)``. Afterwards:
         assign only the incoming batch with the *existing* centroids
         and append — one projection over the new rows, no retrain (a
         merge that rewrote the table re-assigns the whole table the
@@ -699,38 +745,6 @@ class Collection:
             # the COMPRESSED space (_refresh_pca): the threshold gates
             # the PCA train instead of a raw-vector layout
             return
-        from .operators.ann import assign_centroids
-
-        def routing_vec(df: DataFrame) -> Column:
-            """The vector the coarse quantizer sees: the embedding
-            itself for dense collections, the mean-pooled flat
-            multivector for MaxSim collections (one routing vector per
-            point — the coarse stage of a PLAID-style late-interaction
-            index; exact MaxSim runs inside the probed cells)."""
-            if self.meta.get("multivector"):
-                if vec_col + "__pooled" in df.columns:
-                    # the write-time sidecar (round 5): mandatory for
-                    # fp16 storage (binary can't pool in Catalyst),
-                    # and 1/n_vecs of the read either way
-                    return F.col(vec_col + "__pooled").cast("array<double>")
-                return mean_pool_flat(F.col(vec_col), int(self.meta["dim"]))
-            return as_double(F.col(vec_col))
-
-        def routing_operand(df: DataFrame) -> Column | str:
-            """`routing_vec` for assign_centroids call sites: the
-            column NAME when the routing vector is a plain column —
-            the name path renders the whole assignment as one
-            loop-shaped JVM-parsed SQL string (~ms plan build,
-            codegen-proof at any codebook size — operators/ann.py),
-            vs ~k·d·5 py4j round trips for the Column build. The SQL
-            form carries the same CAST(... AS ARRAY<DOUBLE>) the
-            Column forms applied — value-identical."""
-            if self.meta.get("multivector"):
-                if vec_col + "__pooled" in df.columns:
-                    return vec_col + "__pooled"
-                return routing_vec(df)
-            return vec_col
-
         if not self.has_index():
             # footer fast count: value-equal to the scan count (parquet
             # footers are exact) without the per-upsert count JOB
@@ -755,6 +769,7 @@ class Collection:
             from .operators.ann import kmeans_np
 
             frac = self.meta.get("train_fraction")
+            rv = as_double(self._routing(table, vec_col))
             # FAISS's 256-points-per-centroid training convention,
             # floored for tiny k and ceilinged by _TRAIN_CAP
             cap = max(4096, min(self._TRAIN_CAP, 256 * k))
@@ -762,8 +777,7 @@ class Collection:
                 # legacy knob: a user-declared sample fraction (seeded
                 # per partition, so run-reproducible only for a frozen
                 # file layout); capped because the set is collected
-                routing = table.select(
-                    routing_vec(table).alias("__r")).sample(
+                routing = table.select(rv.alias("__r")).sample(
                     fraction=float(frac), seed=42)
                 X = [r["__r"] for r in routing.limit(cap).collect()]
             else:
@@ -782,28 +796,16 @@ class Collection:
                 # `train_fraction` (the sampled path above).
                 # The two-step fetch keeps the driver transfer at
                 # cap×d doubles whatever the table width.
-                rt = table.select(F.col(id_col),
-                                  routing_vec(table).alias("__rv"))
+                rt = table.select(F.col(id_col), rv.alias("__rv"))
                 X = self._train_prefix(rt, id_col, "__rv", cap)
             if len(X) < min(k, n):
                 # an unlucky tiny sample (user fraction × small table)
                 # must not starve the trainer below k rows
                 X = [r["__r"] for r in table.select(
-                    routing_vec(table).alias("__r")).limit(k).collect()]
+                    rv.alias("__r")).limit(k).collect()]
             cents = kmeans_np(X, min(k, len(X)), seed=42)
-            # tighter literal budget than the plain-projection dispatch
-            # (1024): the layout write FUSES the assignment expression
-            # into the dynamic-partition sorter's generated method, and
-            # a 64×16 codebook that codegens fine as a projection blows
-            # janino's 64 KB limit inside sort_addToSorter — Spark
-            # falls back to row-at-a-time interpreted eval for the
-            # whole write stage (observed at the drift stress). The
-            # Arrow/BLAS UDF evaluates in its own stage; the sorter
-            # then sees a plain int column.
-            assigned = table.withColumn(
-                "centroid_id",
-                assign_centroids(cents, routing_operand(table),
-                                 max_expr_literals=512))
+            assigned = self._assign_cells(
+                table, cents, self._routing(table, vec_col))
             assigned.write.mode("overwrite").partitionBy(
                 "centroid_id").parquet(self._ivf_points)
             # LocalRelation write: createDataFrame of a ≤k-row literal
@@ -833,11 +835,8 @@ class Collection:
         source = self.read(spark) if rewrote or incoming is None else incoming
         if vec_col not in source.columns or _is_nested(source, vec_col):
             return
-        assigned = source.withColumn(
-            "centroid_id",
-            assign_centroids(self._centroids(spark), routing_operand(source),
-                             max_expr_literals=512),
-        )
+        assigned = self._assign_cells(source, self._centroids(spark),
+                                      self._routing(source, vec_col))
         mode = "overwrite" if rewrote else "append"
         assigned.write.mode(mode).partitionBy(
             "centroid_id").parquet(self._ivf_points)
@@ -1008,111 +1007,6 @@ class Collection:
             F.max("vec_id").alias("mx")).collect()
         return {int(r["c"]): (int(r["n"]), r["mx"]) for r in rows}
 
-    def _hnsw_insert_append(self, spark: SparkSession, inc: DataFrame,
-                            id_col: str, vec_col: str, cfg: dict,
-                            quant, base: dict) -> None:
-        """Incremental graph insert for append-only batches (every new
-        id strictly above the cell's existing ids — the caller's
-        split): new rows take positions ``old_count + rank`` in their
-        cell's (id, tie) order, which lands them in the cell's partial
-        last chunk and/or fresh chunks; ONLY those segments are read
-        (partition-pruned), resumed via ``hnsw_layout_insert`` (
-        bit-identical to a from-scratch build on the union —
-        operators/hnsw.py resume contract), and rewritten via dynamic
-        partition overwrite. Append cost ∝ batch + one ≤
-        max_segment_size chunk per touched cell, instead of the full
-        touched-cell rebuild."""
-        from .functions.vector import mean_pool_flat
-        from .operators.hnsw import hnsw_layout_insert
-
-        mss = cfg.get("max_segment_size")
-        stride = self._HNSW_SEG_STRIDE
-
-        def routing_col(df: DataFrame) -> Column:
-            if self.meta.get("multivector"):
-                if vec_col + "__pooled" in df.columns:
-                    return F.col(vec_col + "__pooled").cast(
-                        "array<double>")
-                return mean_pool_flat(
-                    F.col(vec_col).cast("array<double>"),
-                    int(self.meta["dim"]))
-            return as_double(F.col(vec_col))
-
-        if quant is None:
-            data_cols = ["embedding"]
-            data_schema = None
-            decode = None
-            new = inc.select(
-                F.col("centroid_id"),
-                F.col(id_col).alias("vec_id"),
-                routing_col(inc).cast("array<double>")
-                .alias("embedding"))
-            tie = F.xxhash64(F.col("embedding"))
-        else:
-            data_cols, data_schema, decode = quant
-            new = self._encode_codes(
-                inc, self.meta, vec_col, id_col,
-                carry=("centroid_id",)).withColumnRenamed(
-                    id_col, "vec_id")
-            tie = F.xxhash64(*[F.col(c) for c in data_cols])
-        new = new.withColumn("__tie", tie)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("centroid_id").orderBy(
-            F.col("vec_id").asc(), F.col("__tie").asc())
-        # per-cell existing counts as a broadcast-joined side table,
-        # not a create_map literal — an append touching thousands of
-        # cells (large k_centroids) would otherwise inflate a single
-        # Catalyst expression (the assign_centroids
-        # max_expr_literals=512 discipline, join form)
-        base_df = local_literal_df(
-            spark, [(int(c), int(n)) for c, n in sorted(base.items())],
-            "__cell bigint, __base bigint")
-        new = new.withColumn(
-            "__cell", F.col("centroid_id").cast("bigint")).join(
-                F.broadcast(base_df), "__cell")
-        rn = (F.col("__base")
-              + F.row_number().over(w) - 1)  # 0-based global position
-        seg = (F.col("centroid_id").cast("bigint") * stride
-               + F.floor(rn / int(mss)) if mss
-               else F.col("centroid_id").cast("bigint"))
-        new = new.withColumn("segment", seg.cast("bigint")) \
-            .withColumn("pos", F.lit(None).cast("int")) \
-            .withColumn("level", F.lit(None).cast("int")) \
-            .withColumn("links",
-                        F.lit(None).cast("array<array<bigint>>")) \
-            .drop("centroid_id", "__cell", "__base")
-        # the partial last chunk of each cell (if any) resumes its
-        # build; full chunks are never touched
-        old_segs = []
-        for c, n in base.items():
-            if n <= 0:
-                continue
-            if mss:
-                if n % int(mss) != 0:
-                    old_segs.append(int(c) * stride
-                                    + (n - 1) // int(mss))
-            else:
-                old_segs.append(int(c))
-        union = new
-        if old_segs:
-            old = _read_parquet(spark, self._hnsw_graphs).filter(
-                F.col("segment").isin(old_segs)).withColumn(
-                    "__tie", F.lit(None).cast("bigint"))
-            union = old.unionByName(new.select(*old.columns))
-        id_type = inc.schema[id_col].dataType.simpleString()
-        lay = hnsw_layout_insert(
-            union, m=int(cfg["m"]),
-            ef_construct=int(cfg["ef_construct"]), id_type=id_type,
-            normalize=(self.meta.get("metric", "cosine") == "cosine"
-                       if quant is None else True),
-            tie_col="__tie",
-            data_cols=data_cols if quant is not None else None,
-            data_schema=data_schema, decode=decode)
-        (lay.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("segment").parquet(self._hnsw_graphs))
-
     def _refresh_hnsw(self, spark: SparkSession,
                       incoming: DataFrame | None, id_col: str,
                       vec_col: str, rewrote: bool,
@@ -1122,12 +1016,19 @@ class Collection:
         segment past ``indexing_threshold``; here segment = IVF cell,
         the routed composition). Runs AFTER ``_refresh_index`` in the
         ``_post_write`` chain, so the ``.ivf`` layout already holds
-        the appended rows: an append rebuilds only the cells the
-        incoming batch touched (dynamic partition overwrite — cost ∝
-        touched cells' data, the ``split_hot_cells`` discipline); a
-        rewrite or first build regenerates every cell's graph. Graph
-        construction is the deterministic ``operators/hnsw.py`` build,
-        so the sidecar is bit-reproducible — which (with the
+        the appended rows. ONE graph job and ONE write per refresh: a
+        rewrite or first build regenerates every cell's graph; an
+        append touches only the cells the incoming batch lands in
+        (dynamic partition overwrite — the ``split_hot_cells``
+        discipline), each either INSERTED into (every new id sorts
+        strictly above the cell's stored ids: the batch's rows resume
+        the cell's partial last segment — cost ∝ batch + one bounded
+        chunk, Qdrant's own incremental upsert) or REBUILT from the
+        layout (id interleave, equal-id re-append — the only order
+        the deterministic build and its oracle twin define). Both
+        are the one ``hnsw_layout`` builder, bit-identical to a
+        from-scratch build (operators/hnsw.py resume contract), so
+        the sidecar is bit-reproducible — which (with the
         deterministic prefix-trained cells) is what lets the lifecycle
         oracle re-derive the whole read path."""
         cfg = self.meta.get("hnsw")
@@ -1147,7 +1048,8 @@ class Collection:
                 shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
                 self._save_meta()
             return
-        from .functions.vector import mean_pool_flat
+        from pyspark.sql import Window
+
         from .operators.hnsw import hnsw_layout
 
         quant = self._hnsw_quant_parts()
@@ -1166,102 +1068,75 @@ class Collection:
             # quant refresh runs first in _post_write, so this only
             # happens pre-index or on a flat legacy sidecar)
             return
-        full = rewrote or not self._has_hnsw()
-        if quant is not None:
+        data_cols, data_schema, decode = quant or (None, None, None)
+        if quant is None:
+            layout = _read_parquet(spark, self._ivf_points).filter(
+                F.col(vec_col).isNotNull())
+        else:
             # hnsw_config × quantization: the graph lives over the
             # CODES sidecar (cells-partitioned by _refresh_quant) —
             # the sidecar stores codes + links only, and the walk
             # decodes per segment (_hnsw_quant_parts)
-            data_cols, data_schema, decode = quant
-            assigned = _read_parquet(spark, self._codes_path).filter(
+            layout = _read_parquet(spark, self._codes_path).filter(
                 F.col(data_cols[0]).isNotNull())
+        dcols = data_cols or ["embedding"]
+
+        def rows(df: DataFrame) -> DataFrame:
+            # graphs live over the ROUTING vector (or its codes); the
+            # id keeps the table's own type so the rescore's
+            # literal-IN compares like-for-like (string ids stay
+            # strings, longs stay longs)
+            data = (data_cols if quant is not None else [as_double(
+                self._routing(df, vec_col)).alias("embedding")])
+            return df.select("centroid_id",
+                             F.col(id_col).alias("vec_id"), *data)
+
+        full = rewrote or incoming is None or not self._has_hnsw()
+        # touched cell → rank its first new row takes: the stored count
+        # on an insert, 0 on a rebuild
+        base: dict[int, int] = {}
+        if full:
+            new = rows(layout)
         else:
-            assigned = _read_parquet(spark, self._ivf_points).filter(
-                F.col(vec_col).isNotNull())
-
-        def routing_col(df: DataFrame) -> Column:
-            # multivector collections route on the pooled vector —
-            # the same coarse stage the IVF cells were carved over
-            # (_refresh_index's routing_vec); dense ones on the
-            # vector itself
-            if self.meta.get("multivector"):
-                if vec_col + "__pooled" in df.columns:
-                    return F.col(vec_col + "__pooled").cast(
-                        "array<double>")
-                return mean_pool_flat(
-                    F.col(vec_col).cast("array<double>"),
-                    int(self.meta["dim"]))
-            return as_double(F.col(vec_col))
-
-        cells: list[int] | None = None
-        if not full and incoming is not None:
-            from .operators.ann import assign_centroids
-
-            inc = incoming.filter(F.col(vec_col).isNotNull())
-            # plain/pooled routing vectors go by column NAME → the
-            # loop-SQL assignment (ms plan build, codegen-proof);
-            # only the in-plan mean-pool needs the Column form
-            if not self.meta.get("multivector"):
-                route_op: Column | str = vec_col
-            elif vec_col + "__pooled" in inc.columns:
-                route_op = vec_col + "__pooled"
-            else:
-                route_op = routing_col(inc)
-            inc = inc.withColumn(
-                "centroid_id",
-                assign_centroids(self._centroids(spark), route_op,
-                                 max_expr_literals=512))
+            inc = self._assign_cells(
+                incoming.filter(F.col(vec_col).isNotNull()),
+                self._centroids(spark), self._routing(incoming, vec_col))
             inc_min = {int(r["centroid_id"]): r["mn"] for r in
                        inc.groupBy("centroid_id").agg(
                            F.min(F.col(id_col)).alias("mn")).collect()}
             if not inc_min:
                 return
-            # split touched cells: a batch whose ids all sort STRICTLY
-            # above a cell's existing ids INSERTS into that cell's
-            # live graph (cost ∝ batch + one bounded chunk — the
-            # hot-tenant append pattern, Qdrant's own incremental
-            # upsert); anything else (id interleave, equal-id
-            # re-append) rebuilds the cell from scratch — the only
-            # order the deterministic build (and its oracle twin)
-            # defines
-            old_stats = self._hnsw_old_stats(spark, sorted(inc_min),
-                                             cfg)
-            inc_cells = sorted(
-                c for c, mn in inc_min.items()
-                if old_stats.get(c, (0, None))[0] == 0
-                or mn > old_stats[c][1])
-            rb_cells = sorted(set(inc_min) - set(inc_cells))
-            if inc_cells:
-                self._hnsw_insert_append(
-                    spark,
-                    inc.filter(F.col("centroid_id").isin(inc_cells)),
-                    id_col, vec_col, cfg, quant,
-                    {c: old_stats.get(c, (0, None))[0]
-                     for c in inc_cells})
-            if not rb_cells:
-                return
-            cells = rb_cells
-            assigned = assigned.filter(
-                F.col("centroid_id").isin(cells))
-        # graphs live over the ROUTING vector (or its codes); the id
-        # keeps the table's own type so the rescore's literal-IN
-        # compares like-for-like (string ids stay strings, longs
-        # stay longs)
-        if quant is None:
-            assigned = assigned.withColumn("__routing",
-                                           routing_col(assigned))
+            # a cell whose stored ids all sort strictly below the
+            # batch's INSERTS (resumes its live graph); any other
+            # touched cell REBUILDS from the layout
+            old = self._hnsw_old_stats(spark, sorted(inc_min), cfg)
+            ins = sorted(c for c, mn in inc_min.items()
+                         if c not in old or mn > old[c][1])
+            rb = sorted(set(inc_min) - set(ins))
+            base = {c: old[c][0] if c in ins and c in old else 0
+                    for c in inc_min}
+            parts = []
+            if ins:
+                # insert cells read the assigned batch itself (cost ∝
+                # batch; quantized: encoded with the frozen params)
+                inc = inc.filter(F.col("centroid_id").isin(ins))
+                if quant is not None:
+                    inc = self._encode_codes(inc, self.meta, vec_col,
+                                             id_col, carry=("centroid_id",))
+                parts.append(rows(inc))
+            if rb:
+                parts.append(rows(layout.filter(
+                    F.col("centroid_id").isin(rb))))
+            new = functools.reduce(DataFrame.unionByName, parts)
         # duplicate ids are ALLOWED (append mode) — a content hash of
         # the routing vector (or code columns) breaks their ties
         # deterministically, so chunk membership AND in-segment build
-        # order are bit-reproducible run-to-run (not row-arrival-
-        # ordered)
-        assigned = assigned.withColumn(
-            "__tie",
-            F.xxhash64(F.col("__routing")) if quant is None
-            else F.xxhash64(*[F.col(c) for c in data_cols]))
-        id_type = assigned.schema[id_col].dataType.simpleString()
+        # order are bit-reproducible run-to-run (not
+        # row-arrival-ordered)
+        new = new.withColumn("__tie", F.xxhash64(*dcols))
+        id_type = new.schema["vec_id"].dataType.simpleString()
+        seg = F.col("centroid_id").cast("bigint")
         mss = cfg.get("max_segment_size")
-        seg_col = "centroid_id"
         if mss:
             # the bounded-segment rule as config (Qdrant's own
             # max_segment_size regime, measured at the 1M stress:
@@ -1269,36 +1144,45 @@ class Collection:
             # capping it keeps a measured (ef → recall) point valid
             # as cells grow): each cell splits into id-ordered chunks
             # of ≤ mss points, segment id = cell·_HNSW_SEG_STRIDE +
-            # chunk. Chunk membership shifts as the cell's point set
-            # changes — exactly the touched-cell full-rebuild this
-            # method already does.
-            from pyspark.sql import Window
-
+            # chunk, where a point's chunk is its 0-based position in
+            # the cell's (id, tie) order over mss — new rows rank
+            # after the cell's ``base`` stored points (0 on a rebuild)
             w = Window.partitionBy("centroid_id").orderBy(
-                F.col(id_col).asc(), F.col("__tie").asc())
-            assigned = assigned.withColumn(
-                "__seg",
-                (F.col("centroid_id").cast("bigint")
-                 * self._HNSW_SEG_STRIDE
-                 + F.floor((F.row_number().over(w) - 1) / int(mss)))
-                .cast("bigint"))
-            seg_col = "__seg"
-        if quant is None:
-            lay = hnsw_layout(
-                assigned, seg_col=seg_col, m=int(cfg["m"]),
-                ef_construct=int(cfg["ef_construct"]), id_col=id_col,
-                vec_col="__routing", id_type=id_type,
-                normalize=self.meta.get("metric", "cosine") == "cosine",
-                tie_col="__tie")
-        else:
-            lay = hnsw_layout(
-                assigned, seg_col=seg_col, m=int(cfg["m"]),
-                ef_construct=int(cfg["ef_construct"]), id_col=id_col,
-                id_type=id_type, normalize=True, tie_col="__tie",
-                data_cols=data_cols, data_schema=data_schema,
-                decode=decode)
+                F.col("vec_id").asc(), F.col("__tie").asc())
+            rank = F.row_number().over(w) - 1
+            if base:
+                # per-cell stored counts as a broadcast-joined side
+                # table, not a create_map literal — an append touching
+                # thousands of cells (large k_centroids) would
+                # otherwise inflate a single Catalyst expression (the
+                # _assign_cells literal-budget discipline, join form)
+                new = new.join(F.broadcast(local_literal_df(
+                    spark, sorted(base.items()),
+                    "centroid_id int, __base bigint")), "centroid_id")
+                rank = F.col("__base") + rank
+            seg = seg * self._HNSW_SEG_STRIDE + F.floor(rank / int(mss))
+        new = new.select(seg.cast("bigint").alias("segment"), "vec_id",
+                         *dcols, "__tie")
+        # the insert cells' partial last segments are the built
+        # prefixes their new rows resume; full chunks are never read
+        # or rewritten
+        prefix = sorted(
+            (c * self._HNSW_SEG_STRIDE + (n - 1) // int(mss)) if mss
+            else c for c, n in base.items()
+            if n > 0 and not (mss and n % int(mss) == 0))
+        if prefix:
+            new = _read_parquet(spark, self._hnsw_graphs).filter(
+                F.col("segment").isin(prefix)).unionByName(
+                    new, allowMissingColumns=True)
+        lay = hnsw_layout(
+            new, seg_col="segment", m=int(cfg["m"]),
+            ef_construct=int(cfg["ef_construct"]), id_type=id_type,
+            normalize=(quant is not None
+                       or self.meta.get("metric", "cosine") == "cosine"),
+            tie_col="__tie", data_cols=data_cols,
+            data_schema=data_schema, decode=decode)
         writer = lay.write.mode("overwrite").partitionBy("segment")
-        if cells is not None:
+        if not full:
             # replace only the touched segment directories
             writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.parquet(self._hnsw_graphs)
@@ -2058,34 +1942,18 @@ class Collection:
                   else incoming)
         if vec_col not in source.columns:
             return
-        carry: tuple = ()
-        if cells and "centroid_id" in source.columns:
-            carry = ("centroid_id",)
-        elif cells:
-            from .operators.ann import assign_centroids
-
-            if cfg.get("multivector"):
-                from .functions.vector import mean_pool_flat
-
-                if vec_col + "__pooled" not in source.columns:
-                    # legacy pre-pooled-sidecar rows only; the normal
-                    # path routes on the float pooled column (fp16
-                    # flat cells decode inside sq_encode_flat itself)
-                    source = self._float_mv(source, vec_col)
-                # column NAME when plain → assign_centroids' loop-SQL
-                # path (see routing_vec); the SQL form carries the
-                # same CAST(... AS ARRAY<DOUBLE>)
-                route = (vec_col + "__pooled"
-                         if vec_col + "__pooled" in source.columns
-                         else mean_pool_flat(
-                             F.col(vec_col).cast("array<double>"),
-                             int(cfg["dim"])))
-            else:
-                route = vec_col
-            source = source.withColumn(
-                "centroid_id",
-                assign_centroids(self._centroids(spark), route))
-            carry = ("centroid_id",)
+        if cells and "centroid_id" not in source.columns:
+            if cfg.get("multivector") and \
+                    vec_col + "__pooled" not in source.columns:
+                # legacy pre-pooled-sidecar rows only; the normal
+                # path routes on the float pooled column (fp16 flat
+                # cells decode inside sq_encode_flat itself)
+                source = self._float_mv(source, vec_col)
+            # the points layout's own assignment: codes must share its
+            # cells for probe pruning to be complete
+            source = self._assign_cells(source, self._centroids(spark),
+                                        self._routing(source, vec_col))
+        carry: tuple = ("centroid_id",) if cells else ()
         if q in ("pq", "opq") and "pq_codebooks" not in cfg:
             return  # untrained (below pq_codes rows): no sidecar
         codes = self._encode_codes(source, cfg, vec_col, id_col, carry)
@@ -2118,9 +1986,11 @@ class Collection:
                       id_col: str, carry: tuple = ()) -> DataFrame:
         """Encode ``source`` with the FROZEN train params in ``cfg`` —
         the one dispatch both the sidecar writer (_refresh_quant_one)
-        and the incremental graph insert (_refresh_hnsw's append path,
-        which encodes just the incoming batch) share, so the two can
-        never produce different codes for the same row."""
+        and the graph refresh's insert cells (_refresh_hnsw, which
+        encodes just the incoming batch instead of re-reading the
+        sidecar) share, so the two can never produce different codes
+        for the same row; both also take the row's cell from
+        ``_assign_cells``."""
         from .operators.bq import bq_encode
         from .operators.sq import sq_encode, sq_encode_flat
 
@@ -2321,7 +2191,7 @@ class Collection:
                          incoming: DataFrame | None, id_col: str,
                          vec_col: str, rewrote: bool, cfg: dict,
                          space: str | None, threshold: int) -> None:
-        from .operators.ann import assign_centroids, kmeans_np
+        from .operators.ann import kmeans_np
         from .operators.pca import (
             PCA_TRAIN_CAP,
             pca_project_expr,
@@ -2361,12 +2231,10 @@ class Collection:
             return
         pe = pca_project_expr(cfg["pca_mu"], cfg["pca_w"],
                               vec_col=vec_col)
-        projected = (source.filter(F.col(vec_col).isNotNull())
-                     .select(F.col(id_col), pe.alias("pvec"))
-                     .withColumn("pcell",
-                                 assign_centroids(cfg["pca_centroids"],
-                                                  "pvec",
-                                                  max_expr_literals=512)))
+        projected = self._assign_cells(
+            source.filter(F.col(vec_col).isNotNull())
+            .select(F.col(id_col), pe.alias("pvec")),
+            cfg["pca_centroids"], "pvec", out="pcell")
         mode = "overwrite" if rewrote else "append"
         (projected.write.mode(mode).partitionBy("pcell")
          .parquet(self._pca_path_for(space)))

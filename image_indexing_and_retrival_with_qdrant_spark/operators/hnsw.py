@@ -14,10 +14,17 @@ That architecture is exactly shuffle-free in Spark terms:
   cross-segment edges, so the build is ONE ``applyInPandas`` pass over
   ``groupBy(segment)`` and never shuffles again.
 - **build once, probe many.** The graph is a parquet-able sidecar
-  (``segment, vec_id, level, links, embedding``) written
+  (``segment, vec_id, pos, level, links, embedding``) written
   ``partitionBy(segment)`` on a cluster; searches read it
   partition-pruned. Same one-time-build discipline as the IVF/PQ/SQ/BQ
   tiers.
+- **one builder; a build is an insert into an empty segment.**
+  ``hnsw_layout`` serves the first build and every append: rows that
+  carry a stored ``pos``/``level``/``links`` are their segment's built
+  prefix and resume (``hnsw_build_np(resume=)``), the rest insert in
+  ``(vec_id, tie)`` order — so an append costs ∝ the new rows plus the
+  one segment they land in, and stays bit-identical to a from-scratch
+  build of the union (Qdrant's incremental upsert, determinism kept).
 - **search = per-segment beam + global top-k.** The query vector is a
   closure-captured literal; each probed segment runs a beam search over
   its own graph (Arrow-batched, numpy inside) and emits ≤``ef``
@@ -66,7 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["hnsw_level", "hnsw_build_np", "hnsw_search_np",
-           "hnsw_layout", "hnsw_layout_insert", "hnsw_layout_search",
+           "hnsw_layout", "hnsw_layout_search",
            "hnsw_layout_search_batch", "LAYOUT_SCHEMA"]
 
 _LEVEL_CAP = 16  # < 1e-7 odds at m=8; bounds sidecar width
@@ -580,11 +587,11 @@ def hnsw_layout(df: DataFrame, n_segments: int | None = None,
                 data_cols: list[str] | None = None,
                 data_schema: str | None = None,
                 decode=None) -> DataFrame:
-    """One-time graph build: ONE ``applyInPandas`` pass over
+    """The graph builder: ONE ``applyInPandas`` pass over
     ``groupBy(segment)``; each group builds its own graph with
     ``hnsw_build_np`` and emits one row per node carrying its
-    per-level neighbor-ID lists and (double-widened) vector. On a
-    cluster the result is written ``partitionBy(segment)`` — the
+    per-level neighbor-position lists and (double-widened) vector. On
+    a cluster the result is written ``partitionBy(segment)`` — the
     sidecar IS the index, probed partition-pruned ever after. Segment
     rule: ``id % n_segments`` (uniform for assigned ids), or an
     existing ``seg_col`` (the routed composition passes the IVF cell
@@ -595,7 +602,19 @@ def hnsw_layout(df: DataFrame, n_segments: int | None = None,
     ``data_cols``/``data_schema``/``decode`` select the QUANTIZED
     layout form (module comment above): the named code columns ride
     through in place of ``embedding`` and ``decode(pdf) -> float64
-    rows`` reconstructs the space the graph is built in."""
+    rows`` reconstructs the space the graph is built in.
+
+    A from-scratch build is an insert into an empty segment. When
+    ``df`` carries a layout's own ``pos``/``level``/``links`` columns,
+    rows with those set are their segment's BUILT PREFIX (e.g. read
+    back from the sidecar): the group resumes it via
+    ``hnsw_build_np(resume=)`` and its other rows insert after it, so
+    an append costs ∝ the new rows plus one segment read, and every
+    prefix row is re-emitted (inserts add links into them). The
+    result is bit-identical to building the union from scratch —
+    provided every new id sorts strictly after the prefix's ids
+    (checked per group; a violation raises rather than shipping a
+    graph that differs from its oracle twin)."""
     if (n_segments is None) == (seg_col is None):
         raise ValueError("exactly one of n_segments / seg_col")
     if (decode is None) != (data_cols is None) or \
@@ -616,6 +635,9 @@ def hnsw_layout(df: DataFrame, n_segments: int | None = None,
         cols.extend(F.col(c) for c in data_cols)
     if tie_col is not None:
         cols.append(F.col(tie_col).cast("bigint").alias("__tie"))
+    resumable = {"pos", "level", "links"} <= set(df.columns)
+    if resumable:
+        cols += ["pos", "level", "links"]
     base = df.select(*cols)
     schema = (f"segment bigint, vec_id {id_type}, pos int, level int, "
               f"links array<array<bigint>>, {data_schema}")
@@ -624,12 +646,28 @@ def hnsw_layout(df: DataFrame, n_segments: int | None = None,
     dcols = list(data_cols)
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_keys, kind="stable")
+        resume = None
+        if resumable and pdf["pos"].notna().any():
+            built = pdf["pos"].notna()
+            old = pdf[built].sort_values("pos", kind="stable")
+            new = pdf[~built].sort_values(sort_keys, kind="stable")
+            if len(new) and \
+                    not old["vec_id"].iloc[-1] < new["vec_id"].iloc[0]:
+                raise ValueError(
+                    "hnsw insert requires new ids strictly above the "
+                    "segment's existing ids (caller routes overlaps to "
+                    "the full rebuild)")
+            pdf = pd.concat([old, new], ignore_index=True)
+            resume = ([int(x) for x in old["level"]],
+                      [[[int(x) for x in nb] for nb in row]
+                       for row in old["links"]])
+        else:
+            pdf = pdf.sort_values(sort_keys, kind="stable")
         ids = pdf["vec_id"].tolist()
         X = decode(pdf)
         levels, adj = hnsw_build_np(ids, X, m=m,
                                     ef_construct=ef_construct,
-                                    normalize=normalize)
+                                    normalize=normalize, resume=resume)
         out = {
             "segment": pdf["segment"].iloc[0],
             "vec_id": ids,
@@ -646,80 +684,6 @@ def hnsw_layout(df: DataFrame, n_segments: int | None = None,
     # per-segment builds are heavy Python work over a small shuffle —
     # pin the exchange so AQE cannot serialize them into one task
     return pin_group_parallelism(base, "segment").groupBy(
-        "segment").applyInPandas(build, schema)
-
-
-def hnsw_layout_insert(df: DataFrame, m: int = 8,
-                       ef_construct: int = 64,
-                       id_type: str = "bigint",
-                       normalize: bool = True,
-                       tie_col: str | None = None,
-                       data_cols: list[str] | None = None,
-                       data_schema: str | None = None,
-                       decode=None) -> DataFrame:
-    """Incremental insert into existing segment graphs — the append
-    path's alternative to a full touched-cell rebuild (append cost ∝
-    batch, not cell). ``df`` unions the segment's EXISTING layout rows
-    (``pos``/``level``/``links`` set) with the NEW points (those three
-    null); each group resumes its build via ``hnsw_build_np(resume=)``
-    and emits the complete refreshed segment (existing rows rewrite
-    too: inserts add bidirectional links into them). Bit-identical to
-    building the union from scratch — the caller guarantees every new
-    id sorts strictly after every existing id in the segment (checked
-    again per group; a violation raises rather than silently shipping
-    a graph that differs from its oracle twin)."""
-    if (decode is None) != (data_cols is None) or \
-            (decode is None) != (data_schema is None):
-        raise ValueError(
-            "data_cols, data_schema and decode come as a trio")
-    if "pos" not in df.columns:
-        raise ValueError(
-            "hnsw incremental insert requires a pos-bearing layout "
-            "sidecar; this one predates the pos column — rebuild the "
-            "graph (full hnsw_layout) before appending")
-    if decode is None:
-        data_cols = ["embedding"]
-        data_schema = "embedding array<double>"
-        decode = _default_decode
-    schema = (f"segment bigint, vec_id {id_type}, pos int, level int, "
-              f"links array<array<bigint>>, {data_schema}")
-    sort_new = (["vec_id"] if tie_col is None else ["vec_id", tie_col])
-    dcols = list(data_cols)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        old = pdf[pdf["pos"].notna()].sort_values("pos", kind="stable")
-        new = pdf[pdf["pos"].isna()].sort_values(sort_new,
-                                                 kind="stable")
-        if len(old) and len(new) and \
-                not old["vec_id"].iloc[-1] < new["vec_id"].iloc[0]:
-            raise ValueError(
-                "hnsw insert requires new ids strictly above the "
-                "segment's existing ids (caller routes overlaps to "
-                "the full rebuild)")
-        both = pd.concat([old, new], ignore_index=True)
-        ids = both["vec_id"].tolist()
-        X = decode(both)
-        levels0 = [int(x) for x in old["level"]]
-        adj0 = [[[int(x) for x in nb] for nb in row]
-                for row in old["links"]]
-        levels, adj = hnsw_build_np(ids, X, m=m,
-                                    ef_construct=ef_construct,
-                                    normalize=normalize,
-                                    resume=(levels0, adj0))
-        out = {
-            "segment": both["segment"].iloc[0],
-            "vec_id": ids,
-            "pos": list(range(len(ids))),
-            "level": levels,
-            "links": adj,
-        }
-        for c in dcols:
-            out[c] = list(both[c])
-        return pd.DataFrame(out)
-
-    from .skew import pin_group_parallelism
-
-    return pin_group_parallelism(df, "segment").groupBy(
         "segment").applyInPandas(build, schema)
 
 

@@ -197,3 +197,59 @@ def test_entry_point_derivation():
     top = max(levels)
     assert levels[e] == top
     assert all(levels[p] < top for p in range(e))
+
+
+def _layout_rows(df, data_col="embedding"):
+    return sorted((r.segment, r.pos, r.vec_id, r.level,
+                   tuple(tuple(nb) for nb in r.links),
+                   tuple(r[data_col])) for r in df.collect())
+
+
+@pytest.mark.parametrize("quantized", [False, True])
+def test_layout_resume_equals_scratch_build(spark, quantized):
+    """``hnsw_layout`` over (a segment's built layout rows + new rows
+    with higher ids) resumes the built prefix and equals the
+    from-scratch build of the union; a segment with no built rows
+    builds from scratch in the same call. Plain and SQ-code
+    (``data_cols``/``decode``) layouts."""
+    from pyspark.errors import PythonException
+
+    from image_indexing_and_retrival_with_qdrant_spark.operators.sq import (
+        sq_decode_np,
+        sq_encode,
+        sq_train,
+    )
+
+    ids, X = _toy(n=120, d=8, seed=13)
+    pts = spark.createDataFrame(
+        [(i, i % 2, [float(x) for x in v]) for i, v in zip(ids, X)],
+        "vec_id bigint, seg bigint, embedding array<double>")
+    kw = dict(m=4, ef_construct=16)
+    data_col = "embedding"
+    if quantized:
+        mins, steps = sq_train(pts, 8)
+        pts = sq_encode(pts, mins, steps, carry_cols=("seg",))
+        data_col = "codes"
+
+        def decode(pdf):
+            return sq_decode_np(np.asarray(
+                [np.asarray(c) for c in pdf["codes"]], dtype=np.int64),
+                mins, steps)
+
+        kw.update(data_cols=["codes"], data_schema="codes array<int>",
+                  decode=decode)
+    scratch = hnsw_layout(pts, seg_col="seg", **kw)
+    in_prefix = (F.col("seg") == 0) & (F.col("vec_id") < 80)
+    prefix = hnsw_layout(pts.filter(in_prefix), seg_col="seg", **kw)
+    new = pts.filter(~in_prefix).withColumnRenamed("seg", "segment")
+    resumed = hnsw_layout(
+        prefix.unionByName(new, allowMissingColumns=True),
+        seg_col="segment", **kw)
+    assert _layout_rows(resumed, data_col) == \
+        _layout_rows(scratch, data_col)
+    # a new id not strictly above the built prefix cannot resume
+    clash = new.union(new.filter(F.col("vec_id") == 82).withColumn(
+        "vec_id", F.lit(10).cast("bigint")))
+    with pytest.raises(PythonException, match="strictly above"):
+        hnsw_layout(prefix.unionByName(clash, allowMissingColumns=True),
+                    seg_col="segment", **kw).collect()

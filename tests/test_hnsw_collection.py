@@ -628,6 +628,86 @@ def test_quantized_append_insert_parity(spark, root):
     assert _sidecar_rows(spark, c) == inserted
 
 
+@pytest.mark.parametrize("mss", [None, 20])
+def test_mixed_append_one_build_matches_rebuild(spark, root, mss,
+                                                monkeypatch):
+    """One append that INSERTS into cell A (its new ids sort above A's
+    stored ids) and REBUILDS cell B (ids interleave there only) runs
+    the graph builder once, resuming only A's partial last segment:
+    A's full chunks keep their files, and the sidecar equals a
+    from-scratch rebuild."""
+    from image_indexing_and_retrival_with_qdrant_spark.operators import (
+        hnsw as hnsw_ops,
+    )
+
+    rng = np.random.RandomState(43)
+
+    def pts(ids, center):
+        return [(i, [float(center + x) for x in rng.randn(8)])
+                for i in ids]
+
+    schema = "id string, embedding array<double>"
+    hcfg = {"m": 4, "ef_construct": 16}
+    if mss:
+        hcfg["max_segment_size"] = mss
+    c = create_collection(root, f"mixed{mss or 0}", dim=8,
+                          normalize=False, indexing_threshold=1,
+                          k_centroids=2, hnsw_config=hcfg)
+    c.upsert(spark, spark.createDataFrame(
+        pts([f"a{i:03d}" for i in range(50)], 5.0)
+        + pts([f"b{2 * i:03d}" for i in range(50)], -5.0), schema),
+        mode="merge")
+    ivf = {r.id: r.centroid_id for r in
+           spark.read.parquet(c._ivf_points).collect()}
+    cell_a, cell_b = ivf["a000"], ivf["b000"]
+    assert cell_a != cell_b
+    stride = c._HNSW_SEG_STRIDE
+    # A's 50 stored points fill chunks 0..last, the last one partially
+    # (max_segment_size takes its 20k default when unset)
+    last = 49 // c.meta["hnsw"]["max_segment_size"]
+
+    def mtimes():
+        out = {}
+        for d in os.listdir(c._hnsw_graphs):
+            if d.startswith("segment="):
+                p = os.path.join(c._hnsw_graphs, d)
+                out[int(d.split("=")[1])] = max(
+                    os.stat(os.path.join(p, f)).st_mtime_ns
+                    for f in os.listdir(p))
+        return out
+
+    before = mtimes()
+    calls = []
+    real = hnsw_ops.hnsw_layout
+
+    def spy(df, *a, **kw):
+        calls.append(sorted(
+            r.segment for r in df.filter(F.col("pos").isNotNull())
+            .select("segment").distinct().collect()))
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(hnsw_ops, "hnsw_layout", spy)
+    c.upsert(spark, spark.createDataFrame(
+        pts([f"c{i:03d}" for i in range(15)], 5.0)
+        + pts([f"b{2 * i + 1:03d}" for i in range(15)], -5.0), schema),
+        mode="merge")
+    monkeypatch.undo()
+    # one build; its only prefix is A's partial last segment
+    assert calls == [[cell_a * stride + last]]
+    after = mtimes()
+    full_a = [s for s in before
+              if s // stride == cell_a and s % stride < last]
+    assert len(full_a) == last
+    assert all(after[s] == before[s] for s in full_a)
+    assert all(after[s] != before[s] for s in before
+               if s // stride == cell_b)
+    inserted = _sidecar_rows(spark, c)
+    assert len(inserted) == 130
+    c.meta.pop("hnsw_built", None)
+    c._refresh_hnsw(spark, None, "id", "embedding", rewrote=True)
+    assert _sidecar_rows(spark, c) == inserted
+
+
 def test_pq_opq_bq_graph_lifecycle_oracles(spark, sf_smoke):
     """The full quantizer × graph matrix stays hash-checked in CI —
     codebook-reconstruction (pq), rotated-space (opq), and sign-row

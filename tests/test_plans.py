@@ -410,7 +410,6 @@ def test_hnsw_walk_exchange_is_byte_sized_builds_stay_pinned(spark):
     from image_indexing_and_retrival_with_qdrant_spark.operators.hnsw import (
         LAYOUT_SCHEMA,
         hnsw_layout,
-        hnsw_layout_insert,
         hnsw_layout_search,
         hnsw_layout_search_batch,
     )
@@ -427,7 +426,9 @@ def test_hnsw_walk_exchange_is_byte_sized_builds_stay_pinned(spark):
         "vec_id bigint, embedding array<double>")
     layout = spark.createDataFrame([], LAYOUT_SCHEMA)
     assert pinned(hnsw_layout(points, n_segments=2, m=2, ef_construct=4))
-    assert pinned(hnsw_layout_insert(layout, m=2, ef_construct=4))
+    # the resume form: layout rows carry pos/level/links
+    assert pinned(hnsw_layout(layout, seg_col="segment", m=2,
+                              ef_construct=4))
     assert not pinned(hnsw_layout_search(layout, [1.0, 0.0], ef=4))
     assert not pinned(hnsw_layout_search_batch(
         layout, [(0, [1.0, 0.0]), (1, [0.0, 1.0])], ef=4))

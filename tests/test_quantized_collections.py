@@ -102,3 +102,44 @@ def test_update_collection_lowers_indexing_threshold(spark, tmp_path):
     assert coll.has_index()
     hits = coll.search(spark, [2.0, 1.0, 0.0, 1.0], k=3)
     assert len(hits.collect()) == 3
+
+
+def test_appended_codes_share_points_layout_cells(spark, tmp_path):
+    """An append puts every new point in the SAME IVF cell in the codes
+    sidecar as in the points layout (probe pruning over the codes is
+    complete only then). At k·d = 16·64 the codegen'd assignment and
+    the BLAS UDF sit on opposite sides of the projection budget, and
+    on a point near a cell boundary the two can disagree — so the
+    appended points here are centroid-pair midpoints."""
+    import numpy as np
+
+    dim = 64
+    rng = np.random.RandomState(11)
+    coll = create_collection(str(tmp_path), "qcells", dim=dim,
+                             normalize=False, indexing_threshold=200,
+                             k_centroids=16, quantization="sq")
+    coll.upsert(spark, spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(dim)]) for i in range(400)],
+        "id int, embedding array<double>"))
+    assert coll.has_index() and coll.meta["codes_layout"] == "cells"
+    C = np.asarray(coll._centroids(spark))
+    mids = []
+    for i in range(len(C)):
+        for j in range(i + 1, len(C)):
+            mid = (C[i] + C[j]) / 2
+            if set(np.argsort(((C - mid) ** 2).sum(axis=1))[:2]) == {i, j}:
+                mids.append(mid)
+    mids = mids[:60]
+    assert len(mids) >= 20
+    coll.upsert(spark, spark.createDataFrame(
+        [(1000 + i, [float(x) for x in v]) for i, v in enumerate(mids)],
+        "id int, embedding array<double>"))
+
+    def cells(path):
+        return {r.id: r.centroid_id for r in spark.read.parquet(path)
+                .filter(F.col("id") >= 1000)
+                .select("id", "centroid_id").collect()}
+
+    points = cells(coll._ivf_points)
+    assert len(points) == len(mids)
+    assert cells(coll._codes_path) == points
