@@ -114,7 +114,7 @@ def _excluding(query_filter, id_col: str, ids: list) -> Column | None:
     qf = as_predicate(query_filter)
     if not ids:
         return qf
-    excl = ~F.col(id_col).isin(ids)
+    excl = ~literal_in(id_col, ids)
     return excl if qf is None else qf & excl
 
 
@@ -150,6 +150,12 @@ _LIST_THRESHOLD = os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "512")
 # session-independent (plain Spark types, no nanos sidecars here).
 _SCHEMA_CACHE: dict[str, tuple[int, "object"]] = {}
 
+# A point op's file-scoped rewrite goes table-wide when its match
+# touches this share of the data files, or more files than one
+# ``__file IN (...)`` literal should carry (Collection._scoped_rewrite).
+_SCOPED_FULL_FRACTION = 0.8
+_SCOPED_MAX_FILES = 10_000
+
 
 def _query_frame(spark: SparkSession, vecs: list,
                  vec_col: str = "query_vec") -> DataFrame:
@@ -180,6 +186,13 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _SCHEMA_CACHE[path] = (mtime, df.schema)
     return df
+
+
+def _space_columns(cfg: dict) -> tuple[str, str, str]:
+    """A dense space's columns (``cfg`` from ``_vector_cfg``): the
+    vectors, the subvector-count sidecar (``n_vecs`` / ``<name>__nv``)
+    and the pooled stage-1 sidecar."""
+    return cfg["vec_col"], cfg["nv_col"], cfg["vec_col"] + "__pooled"
 
 
 def _is_nested(df: DataFrame, col: str) -> bool:
@@ -457,23 +470,26 @@ class Collection:
 
     def batch_update(self, spark: SparkSession, ops) -> int:
         """Apply an ordered sequence of point operations (Qdrant
-        ``batch_update_points``): ``("upsert", df)``,
-        ``("delete", predicate)``, ``("set_payload", payload,
-        selector)``, ``("delete_payload", keys, selector)``. Ops run
-        strictly in order — later ops see earlier ops' writes, the
-        documented Qdrant guarantee. Returns the op count."""
-        for op in ops:
-            kind, *args = op
-            if kind == "upsert":
-                self.upsert(spark, args[0], mode="merge")
-            elif kind == "delete":
-                self.delete(spark, args[0])
-            elif kind == "set_payload":
-                self.set_payload(spark, args[0], args[1])
-            elif kind == "delete_payload":
-                self.delete_payload(spark, args[0], args[1])
-            else:
+        ``batch_update_points``), each ``(kind, *args)`` with the
+        method's own arguments after ``spark``: ``("upsert", df)``
+        (a merge upsert), ``("delete", predicate)``,
+        ``("set_payload" | "overwrite_payload", payload, selector)``,
+        ``("delete_payload", keys, selector)``, ``("clear_payload",
+        selector)``, ``("update_vectors", df)`` and
+        ``("delete_vectors", names, selector)``. Ops run strictly in
+        order — later ops see earlier ops' writes, the documented
+        Qdrant guarantee. Returns the op count."""
+        run = {"upsert": functools.partial(self.upsert, mode="merge"),
+               "delete": self.delete, "set_payload": self.set_payload,
+               "overwrite_payload": self.overwrite_payload,
+               "delete_payload": self.delete_payload,
+               "clear_payload": self.clear_payload,
+               "update_vectors": self.update_vectors,
+               "delete_vectors": self.delete_vectors}
+        for kind, *args in ops:
+            if kind not in run:
                 raise ValueError(f"unknown batch op {kind!r}")
+            run[kind](spark, *args)
         return len(ops)
 
     # -- IVF auto-index (indexing_threshold parity) -----------------------
@@ -1009,8 +1025,7 @@ class Collection:
 
     def _refresh_hnsw(self, spark: SparkSession,
                       incoming: DataFrame | None, id_col: str,
-                      vec_col: str, rewrote: bool,
-                      vectors_changed: bool = True) -> None:
+                      vec_col: str, rewrote: bool) -> None:
         """Maintain the per-cell HNSW graph sidecar after a write
         (``hnsw_config`` collections — Qdrant builds one HNSW per
         segment past ``indexing_threshold``; here segment = IVF cell,
@@ -1033,14 +1048,6 @@ class Collection:
         oracle re-derive the whole read path."""
         cfg = self.meta.get("hnsw")
         if not cfg:
-            return
-        if not vectors_changed and self._has_hnsw():
-            # payload-only rewrite (set/overwrite/delete_payload,
-            # payload-index create/drop): the point SET and vectors
-            # are untouched, so the graphs stay bit-valid — skipping
-            # the rebuild turns a metadata edit back into a metadata
-            # cost (a full per-cell Python rebuild is the most
-            # expensive thing this collection can do)
             return
         if not self.has_index() or not os.path.isdir(self._ivf_points):
             if self.meta.pop("hnsw_built", None):
@@ -1517,20 +1524,22 @@ class Collection:
         return using or next(iter(sv))
 
     def _vector_columns(self, vec_col_default: str = "embedding") -> set[str]:
-        """Every vector-data column (all spaces + their n_vecs and
-        pooled sidecars, plus sparse index/value arrays) — the
+        """Every vector-data column (every dense space's
+        :func:`_space_columns`, plus sparse index/value arrays) — the
         complement of the payload."""
-        named = self.meta.get("vectors")
-        if named:
-            out = set()
-            for name in named:
-                out.update((name, name + "__nv", name + "__pooled"))
-        else:
-            out = {vec_col_default, "n_vecs",
-                   vec_col_default + "__pooled"}
+        out = {c for name in (self.meta.get("vectors") or [None])
+               for c in _space_columns(self._vector_cfg(name,
+                                                        vec_col_default))}
         for name in (self.meta.get("sparse_vectors") or ()):
             out.update((name + "__sidx", name + "__sval"))
         return out
+
+    def _reserved_columns(self, id_col: str, vec_col: str) -> set[str]:
+        """What the payload point ops never write: the vector data,
+        the id and the shard key (points route by it — Qdrant's
+        custom sharding — it is not payload)."""
+        return (self._vector_columns(vec_col) | {id_col}
+                | {self.meta.get("shard_key")} - {None})
 
     def _apply_with_payload(self, df: DataFrame, with_payload,
                             id_col: str, vec_col: str,
@@ -2403,14 +2412,22 @@ class Collection:
     def _post_write(self, spark: SparkSession, incoming: DataFrame | None,
                     id_col: str, vec_col: str, rewrote: bool,
                     vectors_changed: bool = True) -> None:
+        """Refresh every derived layout after a main-table write. A
+        payload-only write (``vectors_changed=False``: the payload
+        point ops, payload-index create/drop) leaves the point set
+        and every vector as they were, so only ``.ivf`` — the one
+        layout that copies the payload — is re-derived; the codes,
+        graph, postings and PCA sidecars hold ids and vector data
+        only and keep their bytes."""
         self._refresh_index(spark, incoming, id_col, vec_col, rewrote)
-        # quant BEFORE hnsw: quantized collections build their graphs
-        # over the codes sidecar, so the codes must be current first
-        self._refresh_quant(spark, incoming, id_col, vec_col, rewrote)
-        self._refresh_hnsw(spark, incoming, id_col, vec_col, rewrote,
-                           vectors_changed=vectors_changed)
-        self._refresh_postings(spark, incoming, id_col, rewrote)
-        self._refresh_pca(spark, incoming, id_col, vec_col, rewrote)
+        if vectors_changed:
+            # quant BEFORE hnsw: quantized collections build their
+            # graphs over the codes sidecar, so the codes must be
+            # current first
+            self._refresh_quant(spark, incoming, id_col, vec_col, rewrote)
+            self._refresh_hnsw(spark, incoming, id_col, vec_col, rewrote)
+            self._refresh_postings(spark, incoming, id_col, rewrote)
+            self._refresh_pca(spark, incoming, id_col, vec_col, rewrote)
         self._auto_drift(spark, id_col, vec_col)
 
     def _auto_drift(self, spark: SparkSession, id_col: str,
@@ -3852,7 +3869,7 @@ class Collection:
                 raise ValueError("lookup_from space must be dense")
             cols = [scfg["vec_col"]]
         ids = [x for x in items if isinstance(x, (int, str))]
-        rows = src.read(spark).filter(F.col(id_col).isin(ids)).select(
+        rows = src.read(spark).filter(literal_in(id_col, ids)).select(
             id_col, *cols).collect() if ids else []
         vecs = {r[0]: dict(zip(r[1], r[2])) if sparse
                 else [float(x) for x in r[1]]
@@ -4118,7 +4135,7 @@ class Collection:
                        if c not in lookup._vector_columns() | {id_col}]
         out = out.localCheckpoint()
         gids = [r[0] for r in out.select(group_by).distinct().collect()]
-        sel = ltab.filter(F.col(id_col).isin(gids)).select(
+        sel = ltab.filter(literal_in(id_col, gids)).select(
             F.col(id_col).alias("__gid"),
             *[F.col(c).alias(f"lookup_{c}") for c in lfields])
         return (out.join(F.broadcast(sel),
@@ -4139,20 +4156,16 @@ class Collection:
         metadata-only DELETE). The IVF layout is re-derived so deleted
         points leave the index too. Returns the number of points
         removed."""
-        if not self._has_data(spark):
-            return 0
         predicate = as_predicate(predicate)
-
-        def transform(subset: DataFrame) -> DataFrame:
-            return subset.filter(~F.coalesce(predicate, F.lit(False)))
-
-        return self._scoped_rewrite(spark, predicate, transform,
-                                    id_col, vec_col)
+        return self._scoped_rewrite(
+            spark, predicate,
+            lambda t: t.filter(~F.coalesce(predicate, F.lit(False))),
+            id_col, vec_col)
 
     def _selector_pred(self, selector, id_col: str) -> Column:
         """Qdrant points-selector: a list of ids or a Filter/Column."""
         if isinstance(selector, (list, tuple, set)):
-            return F.col(id_col).isin(list(selector))
+            return literal_in(id_col, selector)
         pred = as_predicate(selector)
         if pred is None:
             raise ValueError("points selector required (ids or Filter)")
@@ -4167,7 +4180,7 @@ class Collection:
         away unless asked for, and ``with_payload`` (True / False /
         include-list / {"exclude": [...]}) narrows the payload —
         column pruning keeps everything dropped unread."""
-        df = self.read(spark).filter(F.col(id_col).isin(list(ids)))
+        df = self.read(spark).filter(literal_in(id_col, ids))
         if not with_vectors:
             drop = self._vector_columns(vec_col)
             df = df.drop(*[c for c in drop if c in df.columns])
@@ -4198,11 +4211,9 @@ class Collection:
                  vectors_changed: bool = True) -> None:
         """Full staged swap + index refresh. Since round 5 only the
         operations whose effect is inherently table-wide use this —
-        payload-index create/drop (a layout change), payload ops that
-        ADD a column (parquet schema must stay uniform across files;
-        a part-table schema would make reads depend on which file the
-        reader samples), and :meth:`_scoped_rewrite`'s wide-match
-        fallback. Selector-scoped point ops go through
+        payload-index create/drop and compaction (layout changes) and
+        :meth:`_scoped_rewrite`'s table-wide fallback (a schema change
+        or a wide match). Selector-scoped point ops go through
         :meth:`_scoped_rewrite`."""
         staging = self.path + ".__rewrite__"
         self._write_main(table, "overwrite", staging)
@@ -4223,63 +4234,100 @@ class Collection:
     def _scoped_rewrite(self, spark: SparkSession, match,
                         transform, id_col: str, vec_col: str,
                         post_write: bool = True,
-                        full_fraction: float = 0.8,
-                        max_files: int = 10_000,
                         vectors_changed: bool = True) -> int:
-        """File-scoped staged rewrite for the point ops (merge upsert /
-        set_payload / overwrite_payload / delete_payload /
-        update_vectors / delete_vectors / delete): only the data files
-        holding at least one selector-matched row are rewritten —
-        every other data file keeps its exact bytes. Returns the
-        matched-row count, so callers get their result count and the
-        file discovery from ONE scan (a per-file count aggregate —
-        never two passes with the same predicate). At 100 TB a
+        """The one writer of the point ops (merge upsert, delete,
+        every payload and vector op): a file-scoped staged rewrite in
+        which only the data files holding at least one matched row are
+        rewritten — every other data file keeps its exact bytes.
+        Returns the matched-row count, from ONE scan (a per-file count
+        aggregate — never two passes with the same predicate); 0 on
+        an empty collection, where nothing runs. At 100 TB a
         selector-scoped set_payload touches the files containing the
         matched ids, not the table; with a payload-index
         ``partitionBy`` layout the matched-file set is additionally
         partition-pruned by the selector predicate before any data is
         read.
 
-        Wide matches fall back to the table-wide staged rewrite: when
-        the match touches ≥ ``full_fraction`` of the data files (or
-        more than ``max_files`` paths would go into the literal
-        ``isin`` plan), per-file surgery costs more than it saves —
-        rewriting everything is the same IO with none of the plan
-        blowup. The fallback keeps semantics identical because every
-        ``transform`` is row-local.
+        Table-wide instead (:meth:`_rewrite`) when the transform
+        changes the table's columns — a new payload key is a schema
+        change, and parquet schemas must stay uniform across files (a
+        part-table schema would make reads depend on which file the
+        reader samples); decided from the analyzed plan, no job — or
+        when the match is wide: ≥ ``_SCOPED_FULL_FRACTION`` of the
+        data files, or more than ``_SCOPED_MAX_FILES`` paths for the
+        file ``IN`` literal. There per-file surgery costs more than it
+        saves: rewriting everything is the same IO with none of the
+        plan blowup, and every ``transform`` is row-local, so the
+        result is the same.
 
         ``match``: a boolean Column (selector predicate) or a
         one-column id DataFrame (update batches — joined left_semi, so
         a wide batch never becomes a giant IN-list). ``transform``
-        maps the matched files' rows to their full replacement rows
-        (same schema). ``post_write=False`` lets the merge upsert
-        defer index/quantization refresh until after its append."""
-        tagged = self.read(spark).withColumn(
-            "__file", F.col("_metadata.file_path"))
+        maps the matched files' rows to their full replacement rows.
+        ``vectors_changed=False`` (payload-only) narrows the
+        ``_post_write`` refresh to ``.ivf``; ``post_write=False`` lets
+        the merge upsert defer every refresh until after its
+        append."""
+        if not self._has_data(spark):
+            return 0
+        table = self.read(spark)
+        tagged = table.withColumn("__file", F.col("_metadata.file_path"))
         if isinstance(match, DataFrame):
             matched = tagged.join(match, on=id_col, how="left_semi")
         else:
             matched = tagged.filter(match)
         per_file = matched.groupBy("__file").agg(
             F.count(F.lit(1)).alias("__n")).collect()  # ≤ #data files
-        n = int(sum(r["__n"] for r in per_file))
-        if not per_file:
-            return 0
         files = [r["__file"] for r in per_file]
-        if (len(files) > max_files
-                or len(files) >= full_fraction * self._data_file_count()):
-            self._rewrite(spark, transform(self.read(spark)),
-                          id_col, vec_col, post_write=post_write,
+        if (set(transform(table).columns) != set(table.columns)
+                or len(files) > _SCOPED_MAX_FILES
+                or len(files) >= _SCOPED_FULL_FRACTION
+                * self._data_file_count()):
+            self._rewrite(spark, transform(table), id_col, vec_col,
+                          post_write=post_write,
                           vectors_changed=vectors_changed)
-            return n
-        subset = tagged.filter(F.col("__file").isin(files)).drop("__file")
-        staging = self.path + ".__rewrite__"
-        self._write_main(transform(subset), "overwrite", staging)
-        self._swap_staged_files(staging, files)
-        if post_write and self._has_derived_layouts():
-            self._post_write(spark, None, id_col, vec_col, rewrote=True,
-                             vectors_changed=vectors_changed)
-        return n
+        elif files:
+            subset = tagged.filter(literal_in("__file", files))
+            staging = self.path + ".__rewrite__"
+            self._write_main(transform(subset.drop("__file")), "overwrite",
+                             staging)
+            self._swap_staged_files(staging, files)
+            if post_write and self._has_derived_layouts():
+                self._post_write(spark, None, id_col, vec_col, rewrote=True,
+                                 vectors_changed=vectors_changed)
+        return int(sum(r["__n"] for r in per_file))
+
+    def _assign(self, spark: SparkSession, selector, values: dict,
+                id_col: str, vec_col: str, vectors_changed: bool) -> int:
+        """Every payload and vector point op is this one column
+        assignment: on the points matching ``selector`` (ids or
+        Filter) each ``values`` column takes its Column, every other
+        row keeps its value — one CASE per column, whose NULL branch
+        takes the column's own type. A column the table lacks is
+        added (NULL off the selector), which :meth:`_scoped_rewrite`
+        runs table-wide. Returns the number of points matched."""
+        pred = self._selector_pred(selector, id_col)
+
+        def transform(t: DataFrame) -> DataFrame:
+            return t.withColumns({
+                c: F.when(pred, v).otherwise(
+                    F.col(c) if c in t.columns else F.lit(None))
+                for c, v in values.items()})
+
+        return self._scoped_rewrite(spark, pred, transform, id_col, vec_col,
+                                    vectors_changed=vectors_changed)
+
+    def _columns(self, spark: SparkSession) -> list[str]:
+        """The table's columns (none on an empty collection) — schema
+        analysis only, no job."""
+        return self.read(spark).columns if self._has_data(spark) else []
+
+    def _check_payload_keys(self, keys, id_col: str, vec_col: str) -> None:
+        """The one reserved rule of the payload point ops, checked
+        before any Spark work (so an empty collection raises too)."""
+        bad = sorted(set(keys) & self._reserved_columns(id_col, vec_col))
+        if bad:
+            raise ValueError(f"cannot write reserved column(s) {bad}")
 
     def set_payload(self, spark: SparkSession, payload: dict, selector,
                     id_col: str = "id", vec_col: str = "embedding") -> int:
@@ -4291,116 +4339,50 @@ class Collection:
         Returns the number of points updated."""
         if not payload:
             raise ValueError("empty payload")
-        if not self._has_data(spark):
-            return 0
-        pred = self._selector_pred(selector, id_col)
-        table = self.read(spark)
-        reserved = self._vector_columns(vec_col) | {id_col}
-        for col in payload:
-            if col in reserved:
-                raise ValueError(f"cannot set reserved column {col!r}")
-        if any(col not in table.columns for col in payload):
-            # a NEW payload key is a schema change — table-wide by
-            # nature (parquet schemas must stay uniform across files)
-            n = table.filter(pred).count()
-            for col, val in payload.items():
-                base = F.col(col) if col in table.columns else F.lit(None)
-                table = table.withColumn(
-                    col, F.when(pred, F.lit(val)).otherwise(base))
-            self._rewrite(spark, table, id_col, vec_col,
-                          vectors_changed=False)
-            return n
-
-        def transform(subset: DataFrame) -> DataFrame:
-            for col, val in payload.items():
-                subset = subset.withColumn(
-                    col, F.when(pred, F.lit(val)).otherwise(F.col(col)))
-            return subset
-
-        return self._scoped_rewrite(spark, pred, transform, id_col, vec_col,
-                                    vectors_changed=False)
+        self._check_payload_keys(payload, id_col, vec_col)
+        return self._assign(spark, selector,
+                            {k: F.lit(v) for k, v in payload.items()},
+                            id_col, vec_col, False)
 
     def overwrite_payload(self, spark: SparkSession, payload: dict,
                           selector, id_col: str = "id",
                           vec_col: str = "embedding") -> int:
         """Qdrant's ``overwrite_payload``: REPLACE the whole payload of
         matching points — every existing payload column nulls where the
-        selector matches (typed nulls), then the provided keys are set.
-        Contrast :meth:`set_payload`, which merges. Returns the number
-        of points updated."""
+        selector matches (the shard key is not payload and is kept),
+        then the provided keys are set. Contrast :meth:`set_payload`,
+        which merges. Returns the number of points updated."""
         if not payload:
             raise ValueError("empty payload")
-        if not self._has_data(spark):
-            return 0
-        pred = self._selector_pred(selector, id_col)
-        table = self.read(spark)
-        reserved = self._vector_columns(vec_col) | {id_col}
-        for col in payload:
-            if col in reserved:
-                raise ValueError(f"cannot set reserved column {col!r}")
-        schema = table.schema
-
-        def transform(subset: DataFrame) -> DataFrame:
-            for col in subset.columns:
-                if col in reserved:
-                    continue
-                repl = (F.lit(payload[col]) if col in payload
-                        else F.lit(None).cast(schema[col].dataType))
-                subset = subset.withColumn(
-                    col, F.when(pred, repl).otherwise(F.col(col)))
-            for col, val in payload.items():
-                if col not in subset.columns:
-                    subset = subset.withColumn(
-                        col, F.when(pred, F.lit(val)).otherwise(F.lit(None)))
-            return subset
-
-        if any(col not in table.columns for col in payload):
-            # new payload key → schema change → table-wide rewrite
-            n = table.filter(pred).count()
-            self._rewrite(spark, transform(table), id_col, vec_col,
-                          vectors_changed=False)
-            return n
-        return self._scoped_rewrite(spark, pred, transform, id_col, vec_col,
-                                    vectors_changed=False)
+        self._check_payload_keys(payload, id_col, vec_col)
+        reserved = self._reserved_columns(id_col, vec_col)
+        cleared = {c: F.lit(None) for c in self._columns(spark)
+                   if c not in reserved}
+        return self._assign(spark, selector, cleared | {
+            k: F.lit(v) for k, v in payload.items()}, id_col, vec_col, False)
 
     def delete_payload(self, spark: SparkSession, keys: list, selector,
                        id_col: str = "id",
                        vec_col: str = "embedding") -> int:
         """Qdrant's ``delete_payload``: null out the given payload keys
         on matching points (columns stay in the schema — the columnar
-        reading of key removal)."""
-        if not self._has_data(spark):
-            return 0
-        pred = self._selector_pred(selector, id_col)
-        table = self.read(spark)
-        reserved = self._vector_columns(vec_col) | {id_col}
-        for col in keys:
-            if col in reserved:
-                raise ValueError(f"cannot delete reserved column {col!r}")
-        schema = table.schema
-
-        def transform(subset: DataFrame) -> DataFrame:
-            for col in keys:
-                if col in subset.columns:
-                    subset = subset.withColumn(
-                        col,
-                        F.when(pred, F.lit(None).cast(schema[col].dataType))
-                        .otherwise(F.col(col)))
-            return subset
-
-        return self._scoped_rewrite(spark, pred, transform, id_col, vec_col,
-                                    vectors_changed=False)
+        reading of key removal; keys the table lacks are skipped)."""
+        self._check_payload_keys(keys, id_col, vec_col)
+        cols = self._columns(spark)
+        return self._assign(spark, selector,
+                            {k: F.lit(None) for k in keys if k in cols},
+                            id_col, vec_col, False)
 
     def clear_payload(self, spark: SparkSession, selector,
                       id_col: str = "id",
                       vec_col: str = "embedding") -> int:
         """Qdrant's ``clear_payload``: null every payload column on the
-        matching points (id and every vector space, with its sidecars,
-        are kept — Qdrant semantics)."""
-        cols = [c for c in self.read(spark).columns
-                if c not in self._vector_columns(vec_col) | {id_col}]
-        return self.delete_payload(spark, cols, selector,
-                                   id_col=id_col, vec_col=vec_col)
+        matching points (id, shard key and every vector space, with
+        its sidecars, are kept — Qdrant semantics)."""
+        reserved = self._reserved_columns(id_col, vec_col)
+        return self.delete_payload(
+            spark, [c for c in self._columns(spark) if c not in reserved],
+            selector, id_col=id_col, vec_col=vec_col)
 
     def update_vectors(self, spark: SparkSession, points: DataFrame,
                        id_col: str = "id",
@@ -4411,101 +4393,65 @@ class Collection:
         ignored (Qdrant updates existing points only). ``points``
         carries the id column plus one or more vector columns.
         Write-path normalization/dim validation applies exactly as in
-        ``upsert`` (cosine collections re-normalize), and the staged
-        rewrite refreshes index layouts and quantization codes, so a
-        routed or quantized search never sees stale vectors."""
+        ``upsert`` (cosine collections re-normalize), and the
+        sidecars ``_prep_vec`` derives on the batch (subvector count,
+        pooled vector) replace the stored ones. The staged rewrite is
+        scoped to the files holding a batch id and refreshes index
+        layouts and quantization codes, so a routed or quantized
+        search never sees stale vectors. Returns the number of
+        existing points whose id matched the batch."""
         vcols = [c for c in points.columns if c != id_col]
         if not vcols:
             raise ValueError("points must carry at least one vector column")
+        named = self.meta.get("vectors")
+        unknown = [c for c in vcols if c not in (named or {vec_col})]
+        if unknown:
+            raise ValueError(f"unknown vector columns: {unknown} "
+                             f"(have {sorted(named or [vec_col])})")
         # Duplicate ids would fan out the left join below and persist
         # duplicated points into the staged rewrite — collapse to one
         # row per id (batch ids should be unique; Qdrant keys by id).
         points = points.dropDuplicates([id_col])
-        named = self.meta.get("vectors")
-        cfgs = []
-        if named:
-            unknown = [c for c in vcols if c not in named]
-            if unknown:
-                raise ValueError(f"unknown vector columns: {unknown}")
-            for name in vcols:
-                cfg = self._vector_cfg(name, vec_col)
-                cfgs.append(cfg)
-                points = self._prep_vec(points, cfg, self.path)
-        else:
-            if vcols != [vec_col]:
-                raise ValueError(
-                    f"collection has a single vector column {vec_col!r}; "
-                    f"got {vcols}")
-            cfg = self._vector_cfg(None, vec_col)
-            cfgs.append(cfg)
+        upd_cols = []
+        for name in vcols:
+            cfg = self._vector_cfg(name if named else None, vec_col)
             points = self._prep_vec(points, cfg, self.path)
-        if not self._has_data(spark):
-            return 0
-        table = self.read(spark)
-        # _prep_vec derives a fresh n_vecs/__nv sidecar when a
-        # multivector update arrives nested; carry it through so a
-        # changed subvector count refreshes the stored sidecar too.
-        upd_cols = list(vcols)
-        for cfg in cfgs:
-            # carry derived sidecars (_prep_vec refreshed them on the
-            # batch): subvector-count AND the pooled stage-1 vector
-            for side in (cfg["nv_col"], cfg["vec_col"] + "__pooled"):
-                if side in points.columns and side in table.columns:
-                    upd_cols.append(side)
+            upd_cols += [c for c in _space_columns(cfg)
+                         if c in points.columns]
         upd = points.select(
             F.col(id_col),
             *[F.col(c).alias(f"__new_{c}") for c in upd_cols])
 
-        def transform(subset: DataFrame) -> DataFrame:
-            joined = subset.join(upd, on=id_col, how="left")
-            for c in upd_cols:
-                joined = joined.withColumn(
-                    c, F.coalesce(F.col(f"__new_{c}"), F.col(c)))
-            return joined.select(*subset.columns)
+        def transform(t: DataFrame) -> DataFrame:
+            return t.join(upd, on=id_col, how="left").withColumns({
+                c: F.coalesce(F.col(f"__new_{c}"), F.col(c))
+                for c in upd_cols if c in t.columns}).select(*t.columns)
 
-        # file-scoped: only files holding a batch id are rewritten
-        # (ids not present in the collection touch nothing — Qdrant
-        # updates existing points only); the returned count is the
-        # existing points whose id matched the batch.
         return self._scoped_rewrite(spark, upd.select(id_col), transform,
                                     id_col, vec_col)
 
     def delete_vectors(self, spark: SparkSession, names: list, selector,
                        id_col: str = "id",
                        vec_col: str = "embedding") -> int:
-        """Qdrant's ``delete_vectors``: null the named vector columns
-        on the matching points (payload and the other vector spaces
-        kept). A nulled vector drops the point from that space's
-        search results — the columnar reading of Qdrant removing the
-        vector from the point."""
-        if not self._has_data(spark):
-            return 0
-        pred = self._selector_pred(selector, id_col)
-        table = self.read(spark)
-        # Only real vector SPACES are deletable (named keys or the
-        # single vec_col) — never the n_vecs/__nv bookkeeping sidecars;
-        # nulling a sidecar alone would leave the vector searchable.
+        """Qdrant's ``delete_vectors``: null the named vector spaces,
+        with their sidecars, on the matching points (payload and the
+        other vector spaces kept). A nulled vector drops the point
+        from that space's search results — the columnar reading of
+        Qdrant removing the vector from the point. Only real dense
+        spaces of the collection config are deletable (named keys or
+        the single ``vec_col``) — never a sidecar alone, which would
+        leave the vector searchable."""
         named = self.meta.get("vectors")
-        spaces = set(named) if named else {vec_col}
+        spaces = named or ({vec_col} if "dim" in self.meta else ())
         for c in names:
-            if c not in spaces or c not in table.columns:
+            if c not in spaces:
                 raise ValueError(f"unknown vector column {c!r}")
-        schema = table.schema
-
-        def transform(subset: DataFrame) -> DataFrame:
-            for c in names:
-                nv = (c + "__nv") if named else "n_vecs"
-                sidecars = [s for s in (nv, c + "__pooled")
-                            if s in subset.columns]
-                for col in [c, *sidecars]:
-                    subset = subset.withColumn(
-                        col,
-                        F.when(pred,
-                               F.lit(None).cast(schema[col].dataType))
-                        .otherwise(F.col(col)))
-            return subset
-
-        return self._scoped_rewrite(spark, pred, transform, id_col, vec_col)
+        cols = self._columns(spark)
+        return self._assign(spark, selector, {
+            s: F.lit(None) for c in names
+            for s in _space_columns(self._vector_cfg(c if named else None,
+                                                     vec_col))
+            if s in cols}, id_col, vec_col, True)
 
     def scroll(self, spark: SparkSession, limit: int = 100,
                after_id=None, id_col: str = "id",

@@ -108,6 +108,22 @@ def test_batch_update_runs_in_order(spark, tmp_path):
     assert rows[100] == ("red", "hot")          # upsert before set_payload
     assert all(c == "red" for c, _ in rows.values())
     assert len(rows) == 6
+    # the other four batch_update_points kinds, still strictly in order
+    upd = spark.createDataFrame([(6, [60.0, 0.0, 0.0])],
+                                "id int, embedding array<double>")
+    assert coll.batch_update(spark, [
+        ("overwrite_payload", {"color": "blue"}, [0]),
+        ("update_vectors", upd),
+        ("delete_vectors", ["embedding"], [8]),
+        ("clear_payload", [2]),
+        ("set_payload", {"tier": "cold"}, F.col("color") == "blue"),
+    ]) == 5
+    rows = {r.id: r for r in coll.read(spark).collect()}
+    assert (rows[0].color, rows[0].tier) == ("blue", "cold")
+    assert list(rows[6].embedding) == [60.0, 0.0, 0.0]
+    assert rows[8].embedding is None and rows[8].color == "red"
+    assert rows[2].color is None and rows[2].tier is None
+    assert (rows[4].color, rows[4].tier) == ("red", "hot")
     with pytest.raises(ValueError, match="unknown batch op"):
         coll.batch_update(spark, [("frobnicate", None)])
 
