@@ -75,6 +75,7 @@ from pyspark.sql.types import ArrayType, BinaryType
 from .filters import as_predicate
 from .functions.localframe import literal_in, local_literal_df
 from .functions.vector import as_double, l2_normalize, mean_pool_flat
+from .operators.topk import order_cols, top_groups
 from .search_plan import SearchKnobs, SearchPlan, overlay_recall, plan_search
 
 __all__ = ["Collection", "Prefetch", "create_collection",
@@ -291,9 +292,10 @@ class OrderByQuery:
 class SampleQuery:
     """Top-level ``query=`` object (Qdrant ``SampleQuery(random)``).
     Qdrant samples uniformly at random; the engine's reproducible
-    analog (the ``search_matrix`` convention) ranks by a seeded
-    content hash ``md5(id || seed)`` — deterministic, uniform over
-    ids, and re-derivable by the DuckDB oracle."""
+    analog ranks by a seeded content hash ``md5(id || seed)`` —
+    deterministic, uniform over ids, and re-derivable by the DuckDB
+    oracle (``search_matrix`` and ``sample`` rank by their own
+    unseeded ``hash64`` of a prefixed id instead)."""
 
     def __init__(self, seed: int = 42):
         self.seed = int(seed)
@@ -1422,8 +1424,15 @@ class Collection:
             if (indexing_threshold is not None and self._has_data(spark)
                     and not self.has_index()
                     and self.count(spark, exact=False) >= indexing_threshold):
+                # the layouts a threshold-crossing upsert derives: the
+                # cells, then the codes sidecar over them (re-encoded
+                # cells-partitioned), then the graphs over those
                 self._refresh_index(spark, None, id_col, vec_col,
                                     rewrote=True)
+                self._refresh_quant(spark, None, id_col, vec_col,
+                                    rewrote=True)
+                self._refresh_hnsw(spark, None, id_col, vec_col,
+                                   rewrote=True)
         if drift_auto is not self._UNSET:
             _drift_auto_rule(drift_auto, self.meta.get("indexing_threshold"),
                              self.meta.get("transform"),
@@ -2987,13 +2996,10 @@ class Collection:
             out = self._apply_with_payload(out, with_payload, id_col,
                                            vec_col)
         if pick:
-            asc = (self._ranks_ascending(using, vec_col)
-                   and knobs.formula is None)
             out = self._attach_query_vectors(
                 spark, out, with_vectors, using, vec_col, id_col,
-                [*([F.col("query_idx").asc()] if batch else []),
-                 F.col("score").asc() if asc else F.col("score").desc(),
-                 F.col(id_col).asc()])
+                [("query_idx", True)] * batch + self._result_order(
+                    qs[0], using, vec_col, None, knobs.formula, id_col))
         return out
 
     def _search_one(self, spark: SparkSession, query_vector,
@@ -3047,16 +3053,14 @@ class Collection:
                 boosted_col="score",
                 payload_cols=[c for c in pre.columns
                               if c not in (id_col, "score")])
-            asc = False
         else:
             out = self._search_planned(
                 spark, [query_vector], None, replace(knobs, k=k + offset),
                 *args, False, shard_key_selector)
-            asc = self._ranks_ascending(using, vec_col)
         if not offset:
             return out
-        w = Window.orderBy(F.col("score").asc() if asc
-                           else F.col("score").desc(), F.col(id_col).asc())
+        w = Window.orderBy(*order_cols(self._result_order(
+            query_vector, using, vec_col, None, formula, id_col)))
         return (out.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") > offset).drop("__rn"))
 
@@ -3346,18 +3350,60 @@ class Collection:
         return (self._vector_cfg(using, vec_col)
                 .get("metric", "cosine") in _DISTANCE_METRICS)
 
+    def _result_order(self, query, using: str | None, vec_col: str,
+                      fusion: str | None, formula: str | None,
+                      id_col: str) -> list:
+        """The one rule for the order of a read result, as
+        ``[(key, ascending), …, (id, True)]`` (`operators.topk`'s
+        order spec). A formula value, a fused score (named after its
+        fusion), a context score and a ``best_score`` recommendation
+        rank descending; ``order_by`` ranks by ``order_value`` in its
+        own direction; a sample by its seeded ``md5(id‖seed)`` hash;
+        discovery by zones satisfied (``rank``) first; everything
+        else — a vector, a point id, an ``average_vector``
+        recommendation, discovery's target score — by the space's
+        metric. Top-k, offset windows, group ranking, batch ranks
+        and every re-sort after a vector attach read it."""
+        zones = isinstance(query, DiscoverQuery) and query.target is not None
+        context = isinstance(query, (DiscoverQuery, ContextQuery)) and not zones
+        if (formula is not None or context
+                or getattr(query, "strategy", None) == "best_score"):
+            keys = [("score", False)]
+        elif query is None:
+            keys = [(fusion, False)]
+        elif isinstance(query, OrderByQuery):
+            keys = [("order_value", not query.desc)]
+        elif isinstance(query, SampleQuery):
+            keys = [(F.md5(F.concat(F.col(id_col).cast("string"),
+                                    F.lit(str(query.seed)))), True)]
+        else:
+            keys = ([("rank", False)] * zones
+                    + [("score", self._ranks_ascending(using, vec_col))])
+        return keys + [(id_col, True)]
+
+    @staticmethod
+    def _as_scored(d: DataFrame, order: list) -> tuple:
+        """A result in its grouped and batched form, with ``order``
+        over the new names: a fused score (``rrf``/``dbsf``) is
+        ``score``, and discovery's zone count — an order key those
+        forms rank by but never return, since their ``rank`` is a
+        position — is the hidden ``__zones``."""
+        new = {"rrf": "score", "dbsf": "score", "rank": "__zones"}
+        d = d.withColumnsRenamed({c: new[c] for c, _ in order if c in new})
+        return d, [(new.get(c, c), asc) for c, asc in order]
+
     def _attach_query_vectors(self, spark: SparkSession, d: DataFrame,
                               with_vectors, using: str | None,
                               vec_col: str, id_col: str,
-                              sort_cols: list) -> DataFrame:
+                              order: list) -> DataFrame:
         """Qdrant ``query_points(with_vectors=...)`` for the universal
         API: ``True`` attaches EVERY space's stored vector (sparse
         spaces attach their index/value pair) — Qdrant returns all
         named vectors for ``True``; a LIST of space names (Qdrant's
         vector-name selector) attaches exactly those spaces' columns.
         The join runs with the ≤pool-row RESULT side broadcast — the
-        corpus never re-shuffles — then the branch's ordering is
-        restored (bounded ≤k-row sort)."""
+        corpus never re-shuffles — then the result's ``order``
+        (:meth:`_result_order`) is restored (bounded ≤k-row sort)."""
         sv = self.meta.get("sparse_vectors") or {}
 
         def space_cols(name):
@@ -3380,19 +3426,8 @@ class Collection:
         if not cols:
             return d
         side = self.read(spark).select(id_col, *cols)
-        return side.join(F.broadcast(d), on=id_col).orderBy(*sort_cols)
-
-    def _query_ranks_ascending(self, query, using: str | None,
-                               vec_col: str) -> bool:
-        """Rank direction of a top-level ``query=`` value: a raw
-        vector ranks by the space's metric; ``best_score`` recommend
-        and discovery/context scores always rank descending."""
-        if isinstance(query, RecommendQuery):
-            return (self._ranks_ascending(using, vec_col)
-                    if query.strategy == "average_vector" else False)
-        if isinstance(query, (DiscoverQuery, ContextQuery)):
-            return False
-        return self._ranks_ascending(using, vec_col)
+        return side.join(F.broadcast(d), on=id_col).orderBy(
+            *order_cols(order))
 
     def _prefetch_hits(self, spark: SparkSession, p: "Prefetch",
                        id_col: str, vec_col: str) -> DataFrame:
@@ -3423,285 +3458,236 @@ class Collection:
             ids.update(r[id_col] for r in rows)
         return literal_in(id_col, sorted(ids))
 
+    def _join_payload(self, spark: SparkSession, d: DataFrame,
+                      id_col: str, vec_col: str) -> DataFrame:
+        """Every payload column joined onto an id-keyed shortlist (a
+        fused result carries ids and scores only) — the ≤ pool-row
+        shortlist broadcast, the corpus never re-shuffled."""
+        return (self.read(spark).drop(*self._vector_columns(vec_col))
+                .join(F.broadcast(d), on=id_col))
+
     def query(self, spark: SparkSession, prefetch, fusion: str = "rrf",
               k: int = 5, id_col: str = "id",
               vec_col: str = "embedding",
               formula: str | None = None,
               query=None, using: str | None = None,
-              with_payload=None, with_vectors: bool = False,
+              with_payload=None, with_vectors: bool | list = False,
               group_by: str | None = None, group_size: int = 2,
               with_lookup=None) -> DataFrame:
         """Qdrant's universal ``query_points(prefetch=[...],
-        query=...)``: run each prefetch branch through the ordinary
-        search path (its own vector space, filter, and depth — and,
-        nested, its own inner prefetches), then combine. With
-        ``query=`` a VECTOR (dense or multivector), the top level is a
-        RESCORE: the prefetch candidates' union is re-ranked by that
-        vector in ``using``'s space — Qdrant's multi-stage form (e.g.
-        matryoshka head-dims → full-dims, or dense → MaxSim). Without
-        it, shortlists fuse with RRF or DBSF (``FusionQuery``). Each
-        branch is a scan-local retrieval; fusion/rescore operate on
-        ≤ Σ limits rows.
+        query=...)``, as four stages shared with :meth:`query_batch`
+        and :meth:`search_groups`:
 
-        ``formula=`` stacks a FormulaQuery on top (Qdrant's
-        prefetch → fusion → formula pipeline): the fused shortlist is
-        joined with the collection's payload columns (broadcast, the
-        corpus is never re-shuffled) and rescored by the formula over
-        the fused prescore (``score``) + payload; top-k by the
-        formula value, returned as ``score``.
+        - **candidates** — each prefetch branch runs through the
+          ordinary search path (its own vector space, filter, depth
+          and, nested, its own inner prefetches); under a ``query=``
+          their id union is one literal ``id IN`` pushed to the scan
+          of the score stage, without one their shortlists fuse.
+        - **score** (:meth:`_scored`) — one dispatch on ``query=``: a
+          VECTOR (dense or multivector) or a point id is a
+          :meth:`search` restricted to the candidates in ``using``'s
+          space (Qdrant's multi-stage form, e.g. matryoshka head-dims
+          → full-dims, or dense → MaxSim); ``RecommendQuery`` is
+          :meth:`recommend`, ``DiscoverQuery`` / ``ContextQuery`` are
+          :meth:`discover`, ``OrderByQuery`` is :meth:`scroll`
+          ordered by the field (``order_value`` attached),
+          ``SampleQuery`` ranks by ``md5(id‖seed)``. No ``query=``
+          fuses the branch shortlists with RRF or DBSF
+          (``FusionQuery``). ``formula=`` (a FormulaQuery) stacks on
+          the fused or searched score (Qdrant's prefetch → query →
+          formula pipeline): a rescore of a ``max(50, 10k)``-deep
+          shortlist by the formula over the prescore (``score``) and
+          payload, returned as ``score``, ranked descending. It does
+          not compose with query objects (``ValueError``).
+        - **group** (:meth:`_grouped`, with ``group_by=``) — Qdrant's
+          ``query_points_groups`` in its universal form: the pipeline
+          runs to a group_size-scaled pool depth, the best
+          ``group_size`` hits of each of the top ``k`` groups are
+          kept (groups ranked by their best hit under the result
+          order; ``rank`` is the position within the group,
+          ``group_rank`` the group's), and ``with_lookup`` joins the
+          group ids' payload from another collection exactly as in
+          :meth:`search_groups`. Prefetch branch limits are the
+          caller's — set them deep enough to fill k·group_size.
+        - **shape** — ``with_payload`` (``None`` keeps each path's
+          own columns; a fused shortlist gains the payload only when
+          a selector asks) and ``with_vectors``: ``True`` attaches
+          EVERY space's stored vector, a list of space names exactly
+          those (sparse spaces attach their index/value pair), result
+          side broadcast, the result order restored.
 
-        ``group_by=`` makes this Qdrant's ``query_points_groups`` in
-        its universal form (prefetch/fusion/rescore/formula THEN
-        grouping): the pipeline runs to a group_size-scaled pool
-        depth, the pooled hits group by the payload field (best
-        ``group_size`` per group, top ``k`` groups by best hit,
-        ``group_rank`` attached), and ``with_lookup`` joins the group
-        ids' payload from another collection exactly as in
-        :meth:`search_groups`. Note prefetch branch limits are the
-        caller's — set them deep enough to fill k·group_size.
-
-        ``with_vectors=True`` (Qdrant ``query_points(with_vectors=)``)
-        attaches EVERY space's stored vector — Qdrant returns all
-        named vectors for ``True``; a list of space names narrows to
-        exactly those (sparse spaces attach their index/value pair) —
-        on every path, result side broadcast, branch ordering restored
-        (≤pool-row sort)."""
-        from .operators.fusion import dbsf_fuse, rrf_fuse
-
-        if isinstance(prefetch, Prefetch):
-            prefetch = [prefetch]
-        prefetch = list(prefetch) if prefetch else []
+        Every stage ranks by one rule, :meth:`_result_order`."""
+        prefetch = ([prefetch] if isinstance(prefetch, Prefetch)
+                    else list(prefetch or []))
         if not prefetch and not isinstance(query, _QUERY_OBJECTS):
             # query objects run collection-wide without prefetch
             # (Qdrant query_points(query=RecommendQuery(...)));
             # vector rescore / fusion need candidates to operate on
             raise ValueError("query needs at least one prefetch branch")
-        if group_by is not None:
-            from .operators.topk import top_groups
-
-            if isinstance(query, (OrderByQuery, SampleQuery)):
-                raise ValueError(
-                    "group_by= does not compose with order_by/sample "
-                    "queries (no score to rank groups by)")
-            pool = max(50, k * group_size * 10)
-            base = self.query(spark, list(prefetch), fusion=fusion,
-                              k=pool, id_col=id_col, vec_col=vec_col,
-                              formula=formula, query=query, using=using)
-            if query is not None:
-                asc = self._query_ranks_ascending(query, using, vec_col)
-            else:
-                asc = False
-                if formula is None:
-                    # fused frames carry their score under the fusion
-                    # name (rrf/dbsf) and no payload
-                    base = base.withColumnRenamed(fusion, "score")
-            if group_by not in base.columns:
-                keys = self.read(spark).select(id_col, group_by)
-                base = keys.join(F.broadcast(base), on=id_col)
-            out = top_groups(base, group_by,
-                             [("score", asc), (id_col, True)],
-                             limit=k, group_size=group_size)
-            if with_lookup is not None:
-                out = self._attach_lookup(spark, out, group_by,
-                                          with_lookup, id_col)
-            if with_vectors:
-                out = self._attach_query_vectors(
-                    spark, out, with_vectors, using, vec_col, id_col,
-                    [F.col("group_rank"), F.col("rank"),
-                     F.col(id_col).asc()])
-            if with_payload is None:
-                return out
-            extra = tuple(c for c in out.columns
-                          if c in (group_by, "group_rank")
-                          or c.startswith("lookup_"))
-            return self._apply_with_payload(out, with_payload, id_col,
-                                            vec_col, keep_extra=extra)
-        if group_size != 2 or with_lookup is not None:
+        if formula is not None and isinstance(query, _QUERY_OBJECTS):
+            raise ValueError("formula= rescores fused or searched "
+                             "scores, not query objects")
+        if group_by is None and (group_size != 2 or with_lookup is not None):
             raise ValueError("group_size/with_lookup need group_by=")
+        if group_by is not None and isinstance(query, (OrderByQuery,
+                                                       SampleQuery)):
+            raise ValueError(
+                "group_by= does not compose with order_by/sample "
+                "queries (no score to rank groups by)")
+        order = self._result_order(query, using, vec_col, fusion, formula,
+                                   id_col)
+        out = self._scored(
+            spark, prefetch, fusion, k if group_by is None
+            else max(50, k * group_size * 10), formula, query, using,
+            order, id_col, vec_col)
+        if group_by is not None:
+            out = self._grouped(
+                spark, out, order, group_by, k, group_size, with_lookup,
+                True if with_payload is None else with_payload, id_col,
+                vec_col)
+            order = [("group_rank", True), ("rank", True), (id_col, True)]
+        elif with_payload is not None:
+            if with_payload is not False and query is None \
+                    and formula is None:
+                out = self._join_payload(spark, out, id_col, vec_col)
+            out = self._apply_with_payload(
+                out, with_payload, id_col, vec_col,
+                keep_extra=("rrf", "dbsf", "order_value"))
+        if with_vectors:
+            out = self._attach_query_vectors(
+                spark, out, with_vectors, using, vec_col, id_col, order)
+        return out
 
-        # ``with_payload``: None keeps each path's historical shape
-        # (rescore = the search output incl. payload; fusion/formula =
-        # id + score). An explicit selector applies Qdrant's forms —
-        # for fused shortlists the payload joins back broadcast
-        # (≤ k rows), the corpus is never re-shuffled.
-        def shape(d: DataFrame, has_payload: bool) -> DataFrame:
-            if with_payload is None:
-                return d
-            if not has_payload and with_payload not in (False,):
-                payload = [c for c in self.read(spark).columns
-                           if c not in self._vector_columns(vec_col)
-                           | {id_col}]
-                d = (self.read(spark).select(id_col, *payload)
-                     .join(F.broadcast(d), on=id_col))
-            return self._apply_with_payload(
-                d, with_payload, id_col, vec_col,
-                keep_extra=("rrf", "dbsf"))
+    def _scored(self, spark: SparkSession, prefetch: list, fusion: str,
+                k: int, formula: str | None, query, using: str | None,
+                order: list, id_col: str, vec_col: str) -> DataFrame:
+        """The score stage of :meth:`query`: the top ``k`` of one
+        dispatch on ``query=`` over the prefetch candidates (a literal
+        ``id IN``; none for a query object without prefetch, which
+        runs collection-wide), or the fused branch shortlists."""
+        from .operators.formula import formula_rescore
+        from .operators.fusion import dbsf_fuse, rrf_fuse
 
-        def attach_vectors(d: DataFrame, sort_cols: list) -> DataFrame:
-            if not with_vectors:
-                return d
-            return self._attach_query_vectors(
-                spark, d, with_vectors, using, vec_col, id_col, sort_cols)
-
-        if isinstance(query, _QUERY_OBJECTS):
-            # Qdrant query-object forms: the prefetch union restricts
-            # the dedicated path with a literal ``id IN`` (≤ Σ limits
-            # ids, pushed to the scan — row-group pruning, the corpus
-            # is never re-shuffled); no prefetch = collection-wide.
-            cand = (self._prefetch_candidates(spark, prefetch, id_col,
-                                              vec_col) if prefetch else None)
-            if isinstance(query, RecommendQuery):
-                asc = self._query_ranks_ascending(query, using, vec_col)
-                return attach_vectors(shape(self.recommend(
-                    spark, query.positive, query.negative, k=k,
-                    query_filter=cand, id_col=id_col, vec_col=vec_col,
-                    using=using, strategy=query.strategy),
-                    has_payload=True),
-                    [F.col("score").asc() if asc else F.col("score").desc(),
-                     F.col(id_col).asc()])
-            if isinstance(query, (DiscoverQuery, ContextQuery)):
-                target = (query.target
-                          if isinstance(query, DiscoverQuery) else None)
-                sort = ([F.col("rank").desc()] if target is not None
-                        else []) + [F.col("score").desc(),
-                                    F.col(id_col).asc()]
-                return attach_vectors(shape(self.discover(
-                    spark, query.context, target=target, k=k,
-                    query_filter=cand, id_col=id_col, vec_col=vec_col,
-                    using=using), has_payload=True), sort)
+        cand = (self._prefetch_candidates(spark, prefetch, id_col, vec_col)
+                if prefetch and query is not None else None)
+        if isinstance(query, RecommendQuery):
+            return self.recommend(
+                spark, query.positive, query.negative, k=k,
+                query_filter=cand, id_col=id_col, vec_col=vec_col,
+                using=using, strategy=query.strategy)
+        if isinstance(query, (DiscoverQuery, ContextQuery)):
+            return self.discover(
+                spark, query.context, target=getattr(query, "target", None),
+                k=k, query_filter=cand, id_col=id_col, vec_col=vec_col,
+                using=using)
+        if isinstance(query, OrderByQuery):
+            return self.scroll(
+                spark, limit=k, id_col=id_col, vec_col=vec_col,
+                order_by=query.key, start_from=query.start_from,
+                desc=query.desc, scroll_filter=cand).withColumn(
+                "order_value", F.col(query.key).cast("double"))
+        if isinstance(query, SampleQuery):
             table = self.read(spark)
-            if cand is not None:
-                table = table.filter(cand)
-            table = table.drop(*[c for c in self._vector_columns(vec_col)
-                                 if c in table.columns and c != id_col])
-            if isinstance(query, OrderByQuery):
-                ob = F.col(query.key)
-                if query.start_from is not None:
-                    table = table.filter(
-                        ob <= query.start_from if query.desc
-                        else ob >= query.start_from)
-                keys = [ob.desc() if query.desc else ob.asc(),
-                        F.col(id_col).asc()]
-                out = (table.orderBy(*keys).limit(k)
-                       .withColumn("order_value",
-                                   F.col(query.key).cast("double")))
-                osort = [F.col("order_value").desc() if query.desc
-                         else F.col("order_value").asc(),
-                         F.col(id_col).asc()]
-                if with_payload is None:  # historical shape: keep all
-                    return attach_vectors(out, osort)
-                return attach_vectors(self._apply_with_payload(
-                    out, with_payload, id_col, vec_col,
-                    keep_extra=("order_value",)), osort)
-            # SampleQuery: seeded content-hash rank, uniform over ids
-            rk = F.md5(F.concat(F.col(id_col).cast("string"),
-                                F.lit(str(query.seed))))
-            out = (table.withColumn("__r", rk)
-                   .orderBy(F.col("__r").asc(), F.col(id_col).asc())
-                   .limit(k).drop("__r"))
-            return attach_vectors(shape(out, has_payload=True),
-                                  [rk.asc(), F.col(id_col).asc()])
-
+            table = table if cand is None else table.filter(cand)
+            return (table.drop(*self._vector_columns(vec_col))
+                    .orderBy(*order_cols(order)).limit(k))
         if query is not None:
-            asc = self._ranks_ascending(using, vec_col)
-            return attach_vectors(shape(self._prefetch_hits(
-                spark, Prefetch(query, using=using, limit=k,
-                                prefetch=list(prefetch)),
-                id_col, vec_col), has_payload=True),
-                [F.col("score").asc() if asc else F.col("score").desc(),
-                 F.col(id_col).asc()])
-        hit_frames = _concurrent_branches(
+            return self.search(
+                spark, query, k=k, using=using, query_filter=cand,
+                formula=formula, id_col=id_col, vec_col=vec_col)
+        fuse = {"rrf": rrf_fuse, "dbsf": dbsf_fuse}.get(fusion)
+        if fuse is None:
+            raise ValueError(f"unknown fusion {fusion!r} (rrf|dbsf)")
+        hits = _concurrent_branches(
             lambda p: self._prefetch_hits(spark, p, id_col, vec_col),
             prefetch)
-        branches = [(hits.select(id_col, "score"),
-                     self._ranks_ascending(p.using, vec_col))
-                    for hits, p in zip(hit_frames, prefetch)]
-        fuse_k = k if formula is None else max(50, k * 10)
-        if fusion == "rrf":
-            fused = rrf_fuse(branches, k=fuse_k, id_col=id_col)
-        elif fusion == "dbsf":
-            fused = dbsf_fuse(branches, k=fuse_k, id_col=id_col)
-        else:
-            raise ValueError(f"unknown fusion {fusion!r} (rrf|dbsf)")
+        fused = fuse([(h.select(id_col, "score"),
+                       self._ranks_ascending(p.using, vec_col))
+                      for h, p in zip(hits, prefetch)],
+                     k=k if formula is None else max(50, k * 10),
+                     id_col=id_col)
         if formula is None:
-            return attach_vectors(shape(fused, has_payload=False),
-                                  [F.col(fusion).desc(),
-                                   F.col(id_col).asc()])
-        from .operators.formula import formula_rescore
+            return fused
+        # formulas address the fused prescore as `score`, Qdrant's $score
+        pre = self._join_payload(spark, fused.withColumnRenamed(
+            fusion, "score"), id_col, vec_col)
+        return formula_rescore(
+            pre, formula, k=k, id_col=id_col, boosted_col="score",
+            payload_cols=[c for c in pre.columns
+                          if c not in (id_col, "score")])
 
-        # fusion emits its score under its own name (rrf/dbsf);
-        # formulas address the prescore as `score`, Qdrant's $score
-        fused = fused.withColumnRenamed(fusion, "score")
-        payload = [c for c in self.read(spark).columns
-                   if c not in self._vector_columns(vec_col) | {id_col}]
-        shortlist = self.read(spark).select(id_col, *payload).join(
-            F.broadcast(fused), on=id_col)
-        return attach_vectors(shape(
-            formula_rescore(shortlist, formula, k=k, id_col=id_col,
-                            boosted_col="score", payload_cols=payload),
-            has_payload=True),
-            [F.col("score").desc(), F.col(id_col).asc()])
+    def _grouped(self, spark: SparkSession, d: DataFrame, order: list,
+                 group_by: str, limit: int, group_size: int, with_lookup,
+                 with_payload, id_col: str, vec_col: str) -> DataFrame:
+        """The group stage of :meth:`query` and :meth:`search_groups`:
+        the best ``group_size`` rows of each of the top ``limit``
+        groups, groups ranked by their best row under ``order``
+        (`top_groups`), then ``with_lookup`` (:meth:`_attach_lookup`),
+        then ``with_payload`` — the group key, ``group_rank`` and the
+        ``lookup_*`` fields are never payload. A group key the scored
+        rows do not carry joins on by id (≤ pool rows broadcast)."""
+        d, order = self._as_scored(d, order)
+        if group_by not in d.columns:
+            d = self.read(spark).select(id_col, group_by).join(
+                F.broadcast(d), on=id_col)
+        out = top_groups(d, group_by, order, limit=limit,
+                         group_size=group_size).drop("__zones")
+        if with_lookup is not None:
+            out = self._attach_lookup(spark, out, group_by, with_lookup,
+                                      id_col)
+        extra = tuple(c for c in out.columns
+                      if c in (group_by, "group_rank")
+                      or c.startswith("lookup_"))
+        return self._apply_with_payload(out, with_payload, id_col, vec_col,
+                                        keep_extra=extra)
 
     def query_batch(self, spark: SparkSession, requests: list,
                     id_col: str = "id",
                     vec_col: str = "embedding") -> DataFrame:
         """Qdrant's ``query_batch_points`` for the universal query
         API: each request is a kwargs dict for :meth:`query` (its own
-        prefetch tree, fusion, formula, rescore vector). Requests
-        evaluate as independent shortlist-bounded branches of ONE
-        union plan, tagged ``query_idx``, ranked per request — the
-        same shape ``search_batch`` returns. Qdrant likewise executes
-        batch requests independently server-side; the win is one
-        round-trip and one job submission, not cross-request work
-        sharing (the dense/two-stage batched scans ARE shared-pass and
-        live in ``search_batch``)."""
+        prefetch tree, fusion, formula, rescore vector or query
+        object). Requests evaluate as independent shortlist-bounded
+        branches of ONE union plan, tagged ``query_idx``, ranked per
+        request by :meth:`_result_order` — ``(query_idx, id, score,
+        rank)`` rows, the shape ``search_batch`` returns (discovery's
+        zone count orders the rows but is not returned). Qdrant
+        likewise executes batch requests independently server-side;
+        the win is one round-trip and one job submission, not
+        cross-request work sharing (the dense/two-stage batched scans
+        ARE shared-pass and live in ``search_batch``). Keys whose
+        output that shape would drop — grouping, ``with_lookup``,
+        ``with_payload``, ``with_vectors`` — raise ``ValueError``, as
+        do order_by/sample queries (no score to rank by)."""
         if not requests:
             raise ValueError("query_batch needs at least one request")
         from pyspark.sql import Window
 
         for req in requests:
-            if isinstance(req.get("query"), (OrderByQuery, SampleQuery)):
+            if isinstance(req.get("query"), (OrderByQuery, SampleQuery)) \
+                    or set(req) & {"group_by", "group_size", "with_lookup",
+                                   "with_payload", "with_vectors"}:
                 raise ValueError(
-                    "query_batch requests need a score to rank by — "
-                    "run order_by/sample queries through query()")
+                    "query_batch requests need a score to rank by and "
+                    "return (query_idx, id, score, rank) rows — run "
+                    "order_by/sample queries and requests with group_by/"
+                    "group_size/with_lookup/with_payload/with_vectors "
+                    "through query()")
         outs = _concurrent_branches(
             lambda req: self.query(spark, id_col=id_col,
                                    vec_col=vec_col, **req),
             list(requests))
         branches = []
         for i, (req, out) in enumerate(zip(requests, outs)):
-            obj = req.get("query")
-            score = next(c for c in ("score", "rrf", "dbsf")
-                         if c in out.columns)
-            # rescore-by-vector in a distance space ranks ascending;
-            # every fusion/formula score ranks descending
-            asc = (obj is not None
-                   and self._query_ranks_ascending(
-                       obj, req.get("using"), vec_col))
-            order = [F.col("score").asc() if asc
-                     else F.col("score").desc(), F.col(id_col)]
-            if isinstance(obj, DiscoverQuery) and "rank" in out.columns:
-                # discovery ranks by zones satisfied FIRST, target
-                # score second — same order query()/discover() return
-                order = [F.col("__zone_rank").desc()] + order
-                out = out.withColumnRenamed("rank", "__zone_rank")
-            else:
-                out = out.select(
-                    [c for c in out.columns if c != "rank"])
-            w = Window.partitionBy("query_idx").orderBy(*order)
-            branches.append(out.select(
-                F.lit(i).alias("query_idx"),
-                F.col(id_col),
-                F.col(score).alias("score"),
-                *([F.col("__zone_rank")]
-                  if "__zone_rank" in out.columns else []))
-                .withColumn("rank",
-                            F.row_number().over(w).cast("int"))
-                .drop("__zone_rank"))
-        union = branches[0]
-        for b in branches[1:]:
-            union = union.unionByName(b)
-        return union
+            d, order = self._as_scored(
+                out.withColumn("query_idx", F.lit(i)), self._result_order(
+                    req.get("query"), req.get("using"), vec_col,
+                    req.get("fusion", "rrf"), req.get("formula"), id_col))
+            w = Window.partitionBy("query_idx").orderBy(*order_cols(order))
+            branches.append(d.select(
+                "query_idx", id_col, "score",
+                F.row_number().over(w).cast("int").alias("rank")))
+        return functools.reduce(DataFrame.unionByName, branches)
 
     def recommend(self, spark: SparkSession, positive: list, negative:
                   list = (), k: int = 5, query_filter=None,
@@ -4038,11 +4024,14 @@ class Collection:
                       vec_col: str = "embedding",
                       using: str | None = None,
                       with_lookup=None, with_payload=True) -> DataFrame:
-        """Qdrant's ``query_points_groups`` analog (dense collections):
-        results grouped by a payload field — the best ``group_size``
-        hits from each of the top ``limit`` groups, groups ranked by
-        their best hit. One corpus pass: score (scan-local), per-group
-        window, ≤limit-row group verdict broadcast back.
+        """Qdrant's ``query_points_groups`` analog: results grouped by
+        a payload field — the best ``group_size`` hits from each of
+        the top ``limit`` groups, groups ranked by their best hit. One
+        corpus pass: the exact scored search (:meth:`search` with
+        every point scored — dense or MaxSim, exactly as the
+        space's scorer ranks it), then the group stage
+        :meth:`_grouped` (per-group window, ≤limit-row group verdict
+        broadcast back) that :meth:`query` ``group_by=`` shares.
 
         ``with_lookup`` (Qdrant ``WithLookup``): a ``Collection`` — or
         ``(Collection, [fields])`` to project a subset — whose point
@@ -4054,65 +4043,14 @@ class Collection:
         ``IN`` filter (row-group pruning), so the lookup table is
         never scanned wide or shuffled — the ≤limit matched rows
         broadcast into the join."""
-        from .operators.knn import _DISTANCE_METRICS, dense_knn
-        from .operators.topk import top_groups
-
-        cfg = self._vector_cfg(using, vec_col)
-        vec_col = cfg["vec_col"]
-        query_filter = as_predicate(query_filter)
-        metric = cfg.get("metric", "cosine")
-        corpus = self.read(spark).filter(F.col(vec_col).isNotNull())
-        payload = [c for c in corpus.columns
-                   if c not in self._vector_columns(vec_col) | {id_col}]
-        if cfg.get("multivector"):
-            # MaxSim-scored groups (Qdrant groups compose with any
-            # query type): score the whole corpus with the captured
-            # query, then the same per-group ranking
-            from .operators.maxsim import maxsim_knn
-
-            mq = [[float(x) for x in v] for v in query_vector]
-            if cfg.get("normalize"):
-                mq = [_unit(v) for v in mq]
-            if _is_nested(corpus, vec_col):
-                qdf = local_literal_df(
-                    spark, [(mq,)], "query_vectors array<array<double>>")
-                scored = maxsim_knn(
-                    corpus, qdf, k=None, id_col=id_col, mv_col=vec_col,
-                    payload_cols=payload, prefilter=query_filter)
-            else:
-                scored = maxsim_knn(
-                    corpus, None, k=None, id_col=id_col, mv_col=vec_col,
-                    payload_cols=payload, prefilter=query_filter,
-                    flat_dim=cfg.get("dim"),
-                    query_flat=[x for v in mq for x in v])
-            asc = False
-        else:
-            qv = [float(x) for x in query_vector]
-            if cfg.get("normalize"):
-                qv = _unit(qv)
-            qdf = local_literal_df(
-                spark, [(qv,)], "query_vec array<double>")
-            scored = dense_knn(
-                corpus, qdf, k=None, id_col=id_col, vec_col=vec_col,
-                payload_cols=payload, prefilter=query_filter,
-                prenormalized=bool(cfg.get("normalize")),
-                dim=cfg.get("dim"), metric=metric,
-            )
-            asc = metric in _DISTANCE_METRICS
-        out = top_groups(scored, group_by,
-                         [("score", asc), (id_col, True)],
-                         limit=limit, group_size=group_size)
-        # group structure (the key + group_rank) is never payload
-        def shape(d: DataFrame) -> DataFrame:
-            extra = tuple(c for c in d.columns
-                          if c in (group_by, "group_rank")
-                          or c.startswith("lookup_"))
-            return self._apply_with_payload(
-                d, with_payload, id_col, vec_col, keep_extra=extra)
-        if with_lookup is None:
-            return shape(out)
-        return shape(self._attach_lookup(spark, out, group_by,
-                                         with_lookup, id_col))
+        scored = self._query_points(
+            spark, [query_vector], None, SearchKnobs(None, exact=True),
+            query_filter, None, id_col, vec_col, using, False, True)
+        return self._grouped(
+            spark, scored, self._result_order(query_vector, using, vec_col,
+                                              None, None, id_col),
+            group_by, limit, group_size, with_lookup, with_payload, id_col,
+            vec_col)
 
     def _attach_lookup(self, spark: SparkSession, out: DataFrame,
                        group_by: str, with_lookup, id_col: str) -> DataFrame:

@@ -31,18 +31,21 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["global_topk", "grouped_topk", "top_groups"]
+__all__ = ["global_topk", "grouped_topk", "order_cols", "top_groups"]
 
-OrderSpec = Sequence[tuple[str, bool]]  # (column name, ascending)
+OrderSpec = Sequence[tuple[str | Column, bool]]  # (column or name, ascending)
 
 
-def _order_cols(order: OrderSpec) -> list[Column]:
-    return [F.col(name) if asc else F.col(name).desc() for name, asc in order]
+def order_cols(order: OrderSpec) -> list[Column]:
+    """Sort columns for an order spec; a key is a column name or an
+    expression (e.g. a seeded hash rank)."""
+    cols = [(F.col(c) if isinstance(c, str) else c, asc) for c, asc in order]
+    return [c if asc else c.desc() for c, asc in cols]
 
 
 def global_topk(df: DataFrame, order: OrderSpec, k: int) -> DataFrame:
     """ORDER BY ... LIMIT k → TakeOrderedAndProject (no full sort)."""
-    return df.orderBy(*_order_cols(order)).limit(k)
+    return df.orderBy(*order_cols(order)).limit(k)
 
 
 def grouped_topk(
@@ -54,7 +57,7 @@ def grouped_topk(
 ) -> DataFrame:
     """Exact top-k per group (map-side pruned by Spark's partial
     ``WindowGroupLimit``, see module docstring)."""
-    w = Window.partitionBy(*group).orderBy(*_order_cols(order))
+    w = Window.partitionBy(*group).orderBy(*order_cols(order))
     ranked = df.withColumn("__rank", F.row_number().over(w)).filter(F.col("__rank") <= k)
     if rank_col:
         return ranked.withColumnRenamed("__rank", rank_col)
@@ -85,8 +88,8 @@ def top_groups(
     verdict broadcasts back onto the kept hits."""
     hits = grouped_topk(df, [group], order, group_size, rank_col="rank")
     reps = hits.filter(F.col("rank") == 1)
-    pruned = reps.orderBy(*_order_cols(order)).limit(limit)
-    w = Window.orderBy(*_order_cols(order))
+    pruned = reps.orderBy(*order_cols(order)).limit(limit)
+    w = Window.orderBy(*order_cols(order))
     granked = (
         pruned.withColumn("group_rank", F.row_number().over(w))
         .select(group, "group_rank")

@@ -1195,8 +1195,8 @@ def knn_query_sample_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``query_points(prefetch=..., query=SampleQuery())``: a
     reproducible sample of the prefetch candidates. Qdrant samples
     uniformly at random; the engine's deterministic analog ranks by
-    the seeded content hash ``md5(id || seed)`` (the ``search_matrix``
-    convention), which the oracle re-derives bit-identically."""
+    the seeded content hash ``md5(id || seed)``, which the oracle
+    re-derives bit-identically."""
     root, coll, pf = _qobj_collection(spark, sf_dir)
     try:
         res = coll.query(spark, pf, query=SampleQuery(seed=42),

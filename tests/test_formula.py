@@ -145,3 +145,34 @@ def test_search_formula_offset_beyond_default_prefetch(spark, tmp_path):
                        formula="pop").collect()
     # boosted order = pop desc = id desc; page rows 61..65 → 19..15
     assert [r.id for r in page] == [19, 18, 17, 16, 15]
+
+
+def test_query_formula_over_rescore_and_query_objects(spark, tmp_path):
+    """formula= is never silently dropped: over a vector or point-id
+    rescore it boosts the candidate-restricted search (at that
+    search's ``max(50, 10k)`` depth), and with a query object it
+    raises."""
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        Prefetch,
+        RecommendQuery,
+        create_collection,
+    )
+
+    coll = create_collection(str(tmp_path), "fq", dim=4)
+    rows = [(i, [float(i % 7 + 1), float((i * 3) % 5), float(i % 3), 1.0],
+             float(i)) for i in range(40)]
+    coll.upsert(spark, spark.createDataFrame(
+        rows, "id int, embedding array<double>, pop double"))
+    pf = Prefetch([2.0, 1.0, 0.0, 1.0], limit=15)
+    cand = [r.id for r in coll.search(spark, pf.query, k=15).collect()]
+    for q in ([0.0, 1.0, 1.0, 1.0], cand[0]):  # a vector, a point id
+        # the boost is the payload alone: top-5 by pop among the
+        # candidates (query-by-id excludes the point itself)
+        want = sorted((i for i in cand if i != q), reverse=True)[:5]
+        got = coll.query(spark, pf, query=q, k=5, formula="pop").collect()
+        assert [(r.id, r.score) for r in got] == [(i, float(i)) for i in want]
+        plain = coll.query(spark, pf, query=q, k=5).collect()
+        assert [r.id for r in plain] != want
+    with pytest.raises(ValueError, match="formula"):
+        coll.query(spark, pf, query=RecommendQuery([1]), k=3,
+                   formula="score + pop")

@@ -405,6 +405,13 @@ def test_query_object_guards(spark, tmp_path):
                                "query": OrderByQuery("w"), "k": 3}])
     with pytest.raises(ValueError, match="prefetch"):
         c.query(spark, None, query=[1.0] * 6, k=3)  # vector needs prefetch
+    # a batch returns (query_idx, id, score, rank) rows: keys whose
+    # output that shape would drop are rejected, not silently ignored
+    for key, val in (("group_by", "tag"), ("group_size", 3),
+                     ("with_lookup", c), ("with_payload", ["tag"]),
+                     ("with_vectors", True)):
+        with pytest.raises(ValueError, match=key):
+            c.query_batch(spark, [{"prefetch": pf, "k": 3, key: val}])
 
 
 def test_query_object_group_by_and_batch(spark, tmp_path):
@@ -439,6 +446,45 @@ def test_query_batch_discover_ranks_by_zones(spark, tmp_path):
     gotc = c.query_batch(spark, [{"prefetch": pf, "query": cq, "k": 5}]
                          ).collect()
     assert [r.id for r in sorted(gotc, key=lambda r: r.rank)] == wantc
+
+
+def test_query_batch_discover_follows_metric(spark, tmp_path):
+    """On a distance space discovery's target score ranks ascending
+    (as discover() itself ranks), so query_batch's rank and a
+    with_vectors re-sort keep query()'s order."""
+    c = create_collection(str(tmp_path), "de", dim=3, metric="euclid")
+    c.upsert(spark, spark.createDataFrame(
+        [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(3)])
+         for i in range(40)], "id int, embedding array<double>"))
+    pf = [Prefetch([1.0, 0.5, -0.5], limit=25)]
+    dq = DiscoverQuery(0, [(1, 2)])
+    want = [r.id for r in c.query(spark, pf, query=dq, k=6).collect()]
+    got = c.query_batch(spark, [{"prefetch": pf, "query": dq, "k": 6}])
+    assert [r.id for r in sorted(got.collect(), key=lambda r: r.rank)] == want
+    assert [r.id for r in c.query(spark, pf, query=dq, k=6,
+                                  with_vectors=True).collect()] == want
+
+
+def test_query_discover_group_by_regroups_pool(spark, tmp_path):
+    """DiscoverQuery composes with group_by: groups rank by zones
+    satisfied DESC, then target score DESC, then id — the grouped
+    output re-derives from the ungrouped pool. ``rank`` is the
+    position within the group, as in every grouped form; the zone
+    count orders the rows but is not returned."""
+    c, pf = _qobj_coll(spark, tmp_path)
+    dq = DiscoverQuery(0, [(1, 2), (3, 4)])
+    pool = sorted(((-r.rank, -r.score, r.id, r.tag) for r in c.query(
+        spark, pf, query=dq, k=50).collect()))
+    members: dict = {}
+    for *_, pid, tag in pool:  # best-first, so groups in best-hit order
+        members.setdefault(tag, []).append(pid)
+    want = {(tag, gi + 1, ri + 1, pid)
+            for gi, tag in enumerate(list(members)[:2])
+            for ri, pid in enumerate(members[tag][:2])}
+    out = c.query(spark, pf, query=dq, k=2, group_by="tag", group_size=2)
+    assert "__zones" not in out.columns
+    assert {(r.tag, r.group_rank, r.rank, r.id)
+            for r in out.collect()} == want
 
 
 @pytest.mark.parametrize("name", [

@@ -230,6 +230,76 @@ def test_search_groups_multivector(spark, tmp_path):
     assert got == {"a": (1, 1), "b": (3, 2)}  # c's best (0.0) loses
 
 
+# search_groups is the group stage over the exact scored search; one
+# collection per shape it must hold on (≤ 120 points each)
+_GROUP_SHAPES = {
+    "flat": dict(dim=4),
+    "filtered": dict(dim=4),
+    "euclid": dict(dim=4, metric="euclid"),
+    "ivf": dict(dim=4, indexing_threshold=50, k_centroids=4),
+    "hnsw": dict(dim=4, indexing_threshold=50, k_centroids=4,
+                 hnsw_config={"m": 4, "ef_construct": 16}),
+    "mv32": dict(dim=2, multivector=True, normalize=False),
+    "mv16": dict(dim=2, multivector=True, normalize=False,
+                 datatype="float16"),
+    "dot": dict(vectors={"d": {"dim": 4, "metric": "dot",
+                               "normalize": False}}),
+}
+
+
+def _expected_groups(rows, asc, limit, size):
+    """Python re-derivation: best ``size`` rows per group in the
+    space's direction (id tie-break), groups by their best row."""
+    members: dict = {}
+    for r in sorted(rows, key=lambda r: (r.score if asc else -r.score,
+                                         r.id)):
+        members.setdefault(r.grp, [])
+        if len(members[r.grp]) < size:
+            members[r.grp].append(r.id)
+    return {(g, gi + 1, ri + 1, pid)
+            for gi, g in enumerate(list(members)[:limit])
+            for ri, pid in enumerate(members[g])}
+
+
+@pytest.mark.parametrize("shape", list(_GROUP_SHAPES))
+def test_search_groups_regroups_exact_search(spark, tmp_path, shape):
+    """search_groups on every collection shape (flat, filtered, euclid,
+    IVF, HNSW, multivector fp32/fp16, named dot space) equals the
+    groups re-derived from the exact search's full ranking; on the
+    flat shape recommend_groups equals the groups of recommend()."""
+    from pyspark.sql import functions as F
+
+    kw = _GROUP_SHAPES[shape]
+    mv = kw.get("multivector", False)
+    using = "d" if shape == "dot" else None
+    rows = []
+    for i in range(120):
+        v = [float(((i + 1) * (j + 3) * 7919) % 97) / 97.0 - 0.5
+             for j in range(4)]
+        rows.append((i, [v[:2], v[2:]] if mv else v, f"g{i % 9}", i % 5))
+    vtype = "array<array<double>>" if mv else "array<double>"
+    coll = create_collection(str(tmp_path), "sg", **kw)
+    coll.upsert(spark, spark.createDataFrame(
+        rows, f"id int, {using or 'embedding'} {vtype}, grp string, "
+        "pop int"))
+    qv = [0.3, -0.2, 0.1, 0.4]
+    q = [qv[:2], qv[2:]] if mv else qv
+    flt = F.col("pop") > 1 if shape == "filtered" else None
+    exact = coll.search(spark, q, k=None, exact=True, query_filter=flt,
+                        using=using).collect()
+    got = coll.search_groups(spark, q, group_by="grp", limit=3,
+                             group_size=2, query_filter=flt, using=using)
+    assert ({(r.grp, r.group_rank, r.rank, r.id) for r in got.collect()}
+            == _expected_groups(exact, shape == "euclid", 3, 2))
+    if shape == "flat":
+        pool = coll.recommend(spark, [1, 2], [3], k=None).collect()
+        got = coll.recommend_groups(spark, [1, 2], group_by="grp",
+                                    negative=[3], limit=3, group_size=2)
+        assert ({(r.grp, r.group_rank, r.rank, r.id)
+                 for r in got.collect()}
+                == _expected_groups(pool, False, 3, 2))
+
+
 def test_recommend_groups(spark, tmp_path):
     """recommend_groups = recommend composition ranked as groups:
     examples excluded, best hit per group, groups by best hit."""

@@ -104,6 +104,34 @@ def test_update_collection_lowers_indexing_threshold(spark, tmp_path):
     assert len(hits.collect()) == 3
 
 
+@pytest.mark.parametrize("kw", [
+    {"quantization": "sq"},
+    {"hnsw_config": {"m": 4, "ef_construct": 16}},
+], ids=["sq", "hnsw"])
+def test_lowered_threshold_derives_every_layout(spark, tmp_path, kw):
+    """Lowering the threshold runs what a threshold-crossing upsert
+    runs: the cells, then the codes sidecar re-encoded over them, then
+    the graphs — not the cells alone — and searches through the new
+    layouts return the exact scan's hits."""
+    coll = create_collection(str(tmp_path), "lt", dim=4,
+                             indexing_threshold=1000, k_centroids=4, **kw)
+    coll.upsert(spark, _pts(spark, range(60)))
+    coll.update_collection(spark, indexing_threshold=10)
+    assert coll.has_index()
+    if "quantization" in kw:
+        assert coll.meta["codes_layout"] == "cells"
+    else:
+        assert coll.meta.get("hnsw_built")
+        assert coll._plan_facts(coll._vector_cfg(None, "embedding"))["graphs"]
+    qv = [2.0, 1.0, 0.0, 1.0]
+    got = coll.search(spark, qv, k=5, **({"oversampling": 16.0}
+                                          if "quantization" in kw
+                                          else {"hnsw_ef": 64}))
+    exact = coll.search(spark, qv, k=5, exact=True)
+    assert ([(r.id, r.score) for r in got.collect()]
+            == [(r.id, r.score) for r in exact.collect()])
+
+
 def test_appended_codes_share_points_layout_cells(spark, tmp_path):
     """An append puts every new point in the SAME IVF cell in the codes
     sidecar as in the points layout (probe pruning over the codes is
