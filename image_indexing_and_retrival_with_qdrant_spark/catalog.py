@@ -70,11 +70,12 @@ from dataclasses import replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType
+from pyspark.sql.types import ArrayType, BinaryType, NumericType, TimestampType
 
 from .filters import as_predicate
 from .functions.localframe import literal_in, local_literal_df
 from .functions.vector import as_double, l2_normalize, mean_pool_flat
+from .operators.quant import quantizer
 from .operators.topk import order_cols, top_groups
 from .search_plan import SearchKnobs, SearchPlan, overlay_recall, plan_search
 
@@ -305,6 +306,11 @@ class SampleQuery:
 #: raw vector / multivector).
 _QUERY_OBJECTS = (RecommendQuery, DiscoverQuery, ContextQuery,
                   OrderByQuery, SampleQuery)
+
+#: payload field types an ``OrderByQuery`` ranks (Qdrant's order_by
+#: takes numeric and datetime keys; ``order_value`` is the key as a
+#: double, which Spark casts from these types only).
+_ORDER_BY_TYPES = (NumericType, TimestampType)
 
 
 class Collection:
@@ -953,60 +959,16 @@ class Collection:
         space the graph was built in. Returns None when the
         collection is unquantized or the quantizer is untrained
         (graphs stay full-vector / deferred respectively)."""
-        qz = self.meta.get("quantization")
-        if not qz:
+        qz = quantizer(self.meta)
+        # multivector × quantization: the codes sidecar compresses the
+        # FLAT MaxSim vectors, but graphs live over the POOLED routing
+        # vectors (dim floats/row — already the small column); walking
+        # codes of a different space would be meaningless, so the
+        # graph tier stays full-pooled
+        if qz is None or not qz.trained or self.meta.get("multivector"):
             return None
-        if self.meta.get("multivector"):
-            # multivector × quantization: the codes sidecar compresses
-            # the FLAT MaxSim vectors, but graphs live over the POOLED
-            # routing vectors (dim floats/row — already the small
-            # column); walking codes of a different space would be
-            # meaningless, so the graph tier stays full-pooled
-            return None
-        if qz == "sq":
-            if "sq_mins" not in self.meta:
-                return None
-            from .operators.sq import sq_decode_np
-
-            mins = [float(x) for x in self.meta["sq_mins"]]
-            steps = [float(x) for x in self.meta["sq_steps"]]
-
-            def decode(pdf):
-                import numpy as np
-
-                return sq_decode_np(
-                    np.asarray([np.asarray(c) for c in pdf["codes"]],
-                               dtype=np.int64), mins, steps)
-
-            return ["codes"], "codes array<int>", decode
-        if qz == "bq":
-            from .operators.bq import bq_decode_np
-
-            dim = int(self.meta["dim"])
-
-            def decode(pdf):
-                import numpy as np
-
-                return bq_decode_np(
-                    np.asarray([np.asarray(w) for w in pdf["bits"]],
-                               dtype=np.int64), dim)
-
-            return ["bits"], "bits array<bigint>", decode
-        if "pq_codebooks" not in self.meta:
-            return None
-        from .operators.pq import pq_decode_np
-
-        cbs = self.meta["pq_codebooks"]
-        cols = [f"code{b}" for b in range(len(cbs))]
-
-        def decode(pdf):
-            import numpy as np
-
-            return pq_decode_np(
-                np.stack([pdf[c].to_numpy() for c in cols], axis=1),
-                cbs)
-
-        return cols, ", ".join(f"{c} int" for c in cols), decode
+        return (qz.cols, ", ".join(f"{c} {qz.col_type}" for c in qz.cols),
+                qz.decode)
 
     def _hnsw_old_stats(self, spark: SparkSession, cells: list[int],
                         cfg: dict) -> dict:
@@ -1130,8 +1092,8 @@ class Collection:
                 # batch; quantized: encoded with the frozen params)
                 inc = inc.filter(F.col("centroid_id").isin(ins))
                 if quant is not None:
-                    inc = self._encode_codes(inc, self.meta, vec_col,
-                                             id_col, carry=("centroid_id",))
+                    inc = quantizer(self.meta).encode(
+                        inc, vec_col, id_col, carry=("centroid_id",))
                 parts.append(rows(inc))
             if rb:
                 parts.append(rows(layout.filter(
@@ -1863,62 +1825,30 @@ class Collection:
         quantizer config and frozen train params live in (the meta
         itself for single-space collections, the space's sub-dict for
         named ones — both persist through ``_save_meta``)."""
-        q = cfg.get("quantization")
-        from .operators.sq import sq_train, sq_train_flat
-
-        if q == "sq" and "sq_mins" not in cfg:
-            if cfg.get("multivector"):
-                # flat-multivector space: per-dim params pool over
-                # every SUBVECTOR (Qdrant's int8 on multivector
-                # compresses subvectors); fp16 storage decodes first
-                # so codes quantize the stored values
-                mins, steps = sq_train_flat(
-                    self._float_mv(self.read(spark), vec_col),
-                    int(cfg["dim"]), vec_col=vec_col)
-            else:
-                mins, steps = sq_train(self.read(spark),
-                                       int(cfg["dim"]), vec_col=vec_col)
-            cfg["sq_mins"] = mins
-            cfg["sq_steps"] = steps
-            self._save_meta()
-            incoming, rewrote = None, True  # encode the whole table once
-        if q in ("pq", "opq") and "pq_codebooks" not in cfg:
-            # PQ/OPQ codebooks train ONCE on the id-ordered bounded
+        qz = quantizer(cfg)
+        if not qz.trained:
+            # train ONCE and freeze the params in the config (Qdrant
+            # quantizes with build-time stats too). SQ is one agg over
+            # the table (a flat-multivector space pools every SUBVECTOR,
+            # fp16 storage decoded first so codes quantize the stored
+            # values); PQ/OPQ codebooks train on the id-ordered bounded
             # prefix (the _refresh_pca_one fetch: a TakeOrdered heap,
             # ≤ PCA_TRAIN_CAP rows to the driver — reproducible by an
-            # oracle factory from the same parquet) and freeze in the
-            # config; kmeans_np / opq_train_np are bit-deterministic,
-            # so the whole quantizer is value-checkable. Below
-            # pq_codes train rows the quantizer stays untrained and
-            # searches take the exact scan (kmeans needs ≥ k rows).
-            import numpy as np
-
-            from .operators.ann import kmeans_np
-            from .operators.opq import opq_train_np
+            # oracle factory from the same parquet). Below pq_codes
+            # train rows the quantizer stays untrained and searches
+            # take the exact scan.
             from .operators.pca import PCA_TRAIN_CAP
 
             if not self._has_data(spark):
                 return
-            table = self.read(spark)
+            table = self._float_mv(self.read(spark), vec_col)
             if vec_col not in table.columns or _is_nested(table, vec_col):
                 return
-            blocks = int(cfg["pq_blocks"])
-            k_codes = int(cfg.get("pq_codes", 16))
-            rows = self._train_prefix(table, id_col, vec_col,
-                                      PCA_TRAIN_CAP)
-            if len(rows) < k_codes:
+            params = qz.train(table, vec_col, lambda: self._train_prefix(
+                table, id_col, vec_col, PCA_TRAIN_CAP))
+            if params is None:
                 return
-            X = np.asarray(rows, dtype=np.float64)
-            if q == "opq":
-                R, cbs = opq_train_np(X, n_blocks=blocks,
-                                      k_codes=k_codes)
-                cfg["opq_rotation"] = R
-            else:
-                subdim = int(cfg["dim"]) // blocks
-                cbs = [kmeans_np(X[:, b * subdim:(b + 1) * subdim],
-                                 k_codes, seed=42 + b)
-                       for b in range(blocks)]
-            cfg["pq_codebooks"] = cbs
+            cfg.update(params)
             self._save_meta()
             incoming, rewrote = None, True  # encode the whole table once
         # When the IVF layout exists, the codes sidecar shares it
@@ -1972,9 +1902,7 @@ class Collection:
             source = self._assign_cells(source, self._centroids(spark),
                                         self._routing(source, vec_col))
         carry: tuple = ("centroid_id",) if cells else ()
-        if q in ("pq", "opq") and "pq_codebooks" not in cfg:
-            return  # untrained (below pq_codes rows): no sidecar
-        codes = self._encode_codes(source, cfg, vec_col, id_col, carry)
+        codes = qz.encode(source, vec_col, id_col, carry)
         mode = "overwrite" if rewrote else "append"
         w = codes.write.mode(mode)
         if cells:
@@ -1999,41 +1927,6 @@ class Collection:
                                  halfvec_decode_udf(F.col(vec_col)))
         return df
 
-    @staticmethod
-    def _encode_codes(source: DataFrame, cfg: dict, vec_col: str,
-                      id_col: str, carry: tuple = ()) -> DataFrame:
-        """Encode ``source`` with the FROZEN train params in ``cfg`` —
-        the one dispatch both the sidecar writer (_refresh_quant_one)
-        and the graph refresh's insert cells (_refresh_hnsw, which
-        encodes just the incoming batch instead of re-reading the
-        sidecar) share, so the two can never produce different codes
-        for the same row; both also take the row's cell from
-        ``_assign_cells``."""
-        from .operators.bq import bq_encode
-        from .operators.sq import sq_encode, sq_encode_flat
-
-        q = cfg.get("quantization")
-        if q == "sq":
-            if cfg.get("multivector"):
-                return sq_encode_flat(
-                    source, int(cfg["dim"]), cfg["sq_mins"],
-                    cfg["sq_steps"], vec_col=vec_col, id_col=id_col,
-                    carry_cols=carry)
-            return sq_encode(source, cfg["sq_mins"], cfg["sq_steps"],
-                             vec_col=vec_col, id_col=id_col,
-                             carry_cols=carry)
-        if q == "bq":
-            return bq_encode(source, int(cfg["dim"]), vec_col=vec_col,
-                             id_col=id_col, carry_cols=carry)
-        if q in ("pq", "opq"):
-            from .operators.pq import pq_encode_frame
-
-            return pq_encode_frame(
-                source, cfg["pq_codebooks"], vec_col=vec_col,
-                id_col=id_col, carry_cols=carry,
-                rotation=cfg.get("opq_rotation"))
-        raise ValueError(f"unknown quantization {q!r}")
-
     def _quant_shortlist(self, spark: SparkSession, qvs: list, m: int,
                          id_col: str,
                          probe_ids: list[int] | None = None,
@@ -2053,128 +1946,32 @@ class Collection:
         (QuantizationSearchParams(rescore=False) — sq/pq/opq; callers
         reject bq, whose Hamming rank is not a similarity).
 
-        One query ranks with the literal ``sq_search`` / ``pq_search``
-        / ``bq_search`` plans. A batch makes ONE codes pass (broadcast
-        query set + per-query window top-m with map-side pruning): SQ
-        dequantizes each code row ONCE into an array (the per-row work
-        is shared by all queries) and ranks by the same left-to-right
-        dequantize-dot ROUND(...,6); BQ ranks by the same
-        exact-integer Hamming sum."""
-        from .operators.bq import bq_query_words, bq_search
-        from .operators.knn import dot_unrolled
-        from .operators.pq import pq_search
-        from .operators.sq import sq_search
-        from .operators.topk import grouped_topk
+        One body for Q ≥ 1: every query's operand (operators/quant.py)
+        is inlined as literals for one query, or rides a broadcast
+        ``local_literal_df`` for a batch — ONE codes pass for every
+        query — and the same score expression ranks the codes; only
+        the leaf differs (``global_topk``, a TakeOrderedAndProject
+        heap, vs the map-side-pruned per-query ``grouped_topk``)."""
+        from .operators.topk import global_topk, grouped_topk
 
-        cfg = self.meta if cfg is None else cfg
+        qz = quantizer(self.meta if cfg is None else cfg)
         codes = _read_parquet(spark, self._codes_path_for(space))
         if probe_ids is not None:
             codes = codes.filter(
                 F.col("centroid_id").isin([int(i) for i in probe_ids]))
-        if "centroid_id" in codes.columns:
-            codes = codes.drop("centroid_id")
-        score = ["score"] if with_scores else []
-        if not batch:
-            (qv,) = qvs
-            if cfg["quantization"] == "sq":
-                short = sq_search(codes, cfg["sq_mins"],
-                                  cfg["sq_steps"], qv, k=m, id_col=id_col)
-            elif cfg["quantization"] in ("pq", "opq"):
-                # ADC over the code sidecar; OPQ rotates the query
-                # driver-side (same left-to-right fold as the encode side)
-                short = pq_search(codes, cfg["pq_codebooks"],
-                                  self._pq_query_vec(cfg, qv), k=m,
-                                  id_col=id_col)
-            else:
-                short = bq_search(codes, qv, k=m, id_col=id_col)
-            return short.select(id_col, *score)
-        if cfg["quantization"] == "sq":
-            from .functions.vector import _UNROLL_MAX_DIM, _lit_array_sql
-
-            mins, steps = cfg["sq_mins"], cfg["sq_steps"]
-            if len(mins) > _UNROLL_MAX_DIM:
-                # wide vectors: loop form, not a dim-element inline
-                # array (the codegen width gate — same bits)
-                deq = F.expr(
-                    f"transform(`codes`, (c, i) -> "
-                    f"element_at({_lit_array_sql(mins)}, i + 1)"
-                    f" + ((CAST(c AS DOUBLE) + 0.5D)"
-                    f" * element_at({_lit_array_sql(steps)}, i + 1)))")
-            else:
-                deq = F.expr("array(" + ", ".join(
-                    f"({float(mn)!r}D + ((CAST(element_at(`codes`, {j}) AS"
-                    f" DOUBLE) + 0.5D) * {float(st)!r}D))"
-                    for j, (mn, st) in enumerate(zip(mins, steps), start=1)
-                ) + ")")
-            scored = (codes.withColumn("__deq", deq)
-                      .join(F.broadcast(_query_frame(spark, qvs)))
-                      .select("query_idx", F.col(id_col),
-                              F.round(dot_unrolled(
-                                  "__deq", "query_vec", len(mins)),
-                                  6).alias("qscore")))
-            order = [("qscore", False), (id_col, True)]
-        elif cfg["quantization"] in ("pq", "opq"):
-            # each query ships its ADC lookup table as a flat array
-            # column (n_blocks × k_codes doubles, computed driver-side
-            # with the same left-to-right python dot the single-query
-            # literal form embeds), and the per-row score is the same
-            # left-assoc element_at sum over the row's codes — bit-equal
-            # to pq_search on each query separately.
-            cbs = cfg["pq_codebooks"]
-            n_blocks, kc = len(cbs), len(cbs[0])
-            subdim = len(cbs[0][0])
-            luts = []
-            for i, v in enumerate(qvs):
-                v2 = self._pq_query_vec(cfg, v)
-                flat = []
-                for b in range(n_blocks):
-                    q_sub = v2[b * subdim:(b + 1) * subdim]
-                    flat.extend(
-                        sum(float(x) * float(c)
-                            for x, c in zip(q_sub, cw))
-                        for cw in cbs[b])
-                luts.append((i, flat))
-            queries = local_literal_df(
-                spark, luts, "query_idx int, lut array<double>")
-            adc = " + ".join(
-                f"element_at(`lut`, {b * kc} + `code{b}` + 1)"
-                for b in range(n_blocks))
-            scored = (codes.join(F.broadcast(queries))
-                      .select("query_idx", F.col(id_col),
-                              F.round(F.expr(adc), 6).alias("qscore")))
-            order = [("qscore", False), (id_col, True)]
-        else:
-            words = [(i, [int(w) for w in bq_query_words(v)])
-                     for i, v in enumerate(qvs)]
-            queries = local_literal_df(
-                spark, words, "query_idx int, qwords array<bigint>")
-            ham = F.aggregate(
-                F.zip_with("bits", "qwords",
-                           lambda x, y: F.bit_count(
-                               x.bitwiseXOR(y)).cast("bigint")),
-                F.lit(0).cast("bigint"), lambda a, x: a + x)
-            scored = (codes.join(F.broadcast(queries))
-                      .select("query_idx", F.col(id_col),
-                              ham.alias("hamming")))
-            order = [("hamming", True), (id_col, True)]
-        out = grouped_topk(scored, ["query_idx"], order, m)
-        return out.select("query_idx", id_col,
-                          *[F.col(order[0][0]).alias(c) for c in score])
-
-    @staticmethod
-    def _pq_query_vec(cfg: dict, qv: list) -> list[float]:
-        """The query in code-space coordinates: identity for PQ, the
-        frozen OPQ rotation for ``quantization="opq"`` (zero-mean
-        ``pca_project_py`` — the plain left-to-right double loop,
-        float-identical to the fold-shape row rotation)."""
-        R = cfg.get("opq_rotation")
-        if R is None:
-            return [float(x) for x in qv]
-        from .operators.pca import pca_project_py
-
-        d = len(R)
-        w = [[R[i][j] for i in range(d)] for j in range(d)]
-        return pca_project_py([0.0] * d, w, [float(x) for x in qv])
+        ops = [qz.operand(v) for v in qvs]
+        lead = ["query_idx"] if batch else []
+        if batch:
+            codes = codes.join(F.broadcast(local_literal_df(
+                spark, list(enumerate(ops)),
+                f"query_idx int, {qz.operand_col} {qz.operand_type}")))
+        scored = codes.select(*lead, F.col(id_col), qz.score(
+            qz.operand_col if batch else ops[0]).alias(qz.key))
+        order = [(qz.key, qz.ascending), (id_col, True)]
+        out = (grouped_topk(scored, lead, order, m) if batch
+               else global_topk(scored, order, m))
+        return out.select(*lead, id_col, *(
+            [F.col(qz.key).alias("score")] if with_scores else []))
 
     # -- PCA transform (FAISS "PCA,IVF" as collection config) -------------
 
@@ -2375,9 +2172,11 @@ class Collection:
         inflate to floats JVM-side), keep the top ``m`` per query,
         return the ids (for a ``batch``, the union of the per-query
         shortlists) for the exact full-width rescore's literal
-        ``IN``. A batch scores every query in ONE Arrow pass (the
-        multi-query capture scorer) with map-side-pruned per-query
-        top-m. The sidecar read is restricted first: to the graph
+        ``IN``. Every query scores in ONE Arrow pass of the
+        multi-query capture scorer (one query is element 1 of a
+        one-query call — the same matmul); the leaf is a
+        TakeOrderedAndProject heap for one query, map-side-pruned
+        per-query top-m for a batch. The sidecar read is restricted first: to the graph
         beam's ``ids`` (hnsw_config collections), or to the probed
         ``probe`` cells (statically partition-pruned on the shared
         IVF layout), else the flat codes scan — in every case the
@@ -2385,10 +2184,6 @@ class Collection:
         round to 6 before ranking (ties by id), the
         shortlist-determinism discipline every oracle-twinned tier
         uses (registry.py docstring)."""
-        from .operators.maxsim import (
-            maxsim_score_codes_const_udf,
-            maxsim_score_codes_multi_udf,
-        )
         from .operators.topk import global_topk, grouped_topk
 
         codes = _read_parquet(spark, self._codes_path_for(space))
@@ -2397,25 +2192,17 @@ class Collection:
                 F.col("centroid_id").isin([int(i) for i in probe]))
         if ids is not None:
             codes = codes.filter(literal_in(id_col, ids))
-        sq = (int(cfg["dim"]), [float(x) for x in cfg["sq_mins"]],
-              [float(x) for x in cfg["sq_steps"]])
+        arr = quantizer(cfg).maxsim(queries_flat)(F.col("codes"))
+        lead = ["query_idx"] if batch else []
+        scored = (codes.select(id_col, F.posexplode(arr).alias(
+            "query_idx", "__s")) if batch
+            else codes.select(id_col, arr[0].alias("__s")))
+        scored = scored.select(id_col, *lead,
+                               F.round("__s", 6).alias("score"))
         order = [("score", False), (id_col, True)]
-        if not batch:
-            (query_flat,) = queries_flat
-            score = maxsim_score_codes_const_udf(*sq, query_flat)(
-                F.col("codes"))
-            scored = codes.select(F.col(id_col),
-                                  F.round(score, 6).alias("score"))
-            keep = global_topk(scored, order, m).select(id_col)
-        else:
-            arr = maxsim_score_codes_multi_udf(*sq, queries_flat)(
-                F.col("codes"))
-            scored = codes.select(
-                F.col(id_col), F.posexplode(arr).alias("query_idx", "__s"),
-            ).select(id_col, "query_idx",
-                     F.round(F.col("__s"), 6).alias("score"))
-            keep = grouped_topk(scored, ["query_idx"], order, m,
-                                rank_col=None).select(id_col).distinct()
+        keep = (grouped_topk(scored, lead, order, m, rank_col=None)
+                .select(id_col).distinct() if batch
+                else global_topk(scored, order, m).select(id_col))
         return [r[id_col] for r in keep.collect()]
 
     def _post_write(self, spark: SparkSession, incoming: DataFrame | None,
@@ -3241,7 +3028,7 @@ class Collection:
             id_type = corpus.schema[id_col].dataType.simpleString()
             cand = self._hnsw_walk(
                 spark, qvs, qvs if gq is None
-                else [self._pq_query_vec(cfg, v) for v in qvs], plan,
+                else [quantizer(cfg).query(v) for v in qvs], plan,
                 id_type, cfg.get("metric", "cosine") == "cosine"
                 if gq is None else True, None if gq is None else gq[2])
             if batch:
@@ -3540,16 +3327,19 @@ class Collection:
             spark, prefetch, fusion, k if group_by is None
             else max(50, k * group_size * 10), formula, query, using,
             order, id_col, vec_col)
+        if group_by is not None and with_payload is None:
+            with_payload = True  # the grouped default
+        if with_payload not in (None, False) and query is None \
+                and formula is None:
+            # fused rows carry only (id, score): join the payload the
+            # selector asks for, grouped or not
+            out = self._join_payload(spark, out, id_col, vec_col)
         if group_by is not None:
             out = self._grouped(
                 spark, out, order, group_by, k, group_size, with_lookup,
-                True if with_payload is None else with_payload, id_col,
-                vec_col)
+                with_payload, id_col, vec_col)
             order = [("group_rank", True), ("rank", True), (id_col, True)]
         elif with_payload is not None:
-            if with_payload is not False and query is None \
-                    and formula is None:
-                out = self._join_payload(spark, out, id_col, vec_col)
             out = self._apply_with_payload(
                 out, with_payload, id_col, vec_col,
                 keep_extra=("rrf", "dbsf", "order_value"))
@@ -3581,6 +3371,13 @@ class Collection:
                 k=k, query_filter=cand, id_col=id_col, vec_col=vec_col,
                 using=using)
         if isinstance(query, OrderByQuery):
+            schema = self.read(spark).schema
+            if query.key in schema.names and not isinstance(
+                    schema[query.key].dataType, _ORDER_BY_TYPES):
+                raise ValueError(
+                    f"OrderByQuery key {query.key!r} is a "
+                    f"{schema[query.key].dataType.simpleString()} field; "
+                    "order_by ranks numeric and timestamp fields only")
             return self.scroll(
                 spark, limit=k, id_col=id_col, vec_col=vec_col,
                 order_by=query.key, start_from=query.start_from,

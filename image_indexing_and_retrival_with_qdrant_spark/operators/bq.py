@@ -14,6 +14,10 @@ Everything here is integer math on codegen expressions — no Python,
 no randomness, no shuffle before the top-k — so unlike real-valued
 approximate tiers the whole path is DuckDB-oracle-checkable exactly,
 *including* the composed BQ-shortlist → exact-rescore query.
+``bq_score`` is the one Hamming expression: its query operand is the
+literal query words (one query) or a column name (a batch's broadcast
+``qwords``), so both rank codes with the same integer sum
+(operators/quant.py).
 
 Scale: codes are ``dim/8`` bytes/row (64-dim → 16 B vs 512 B fp32);
 the compressed index of a 100 TB corpus fits in a fraction of cluster
@@ -29,7 +33,7 @@ from pyspark.sql import functions as F
 
 from .topk import global_topk
 
-__all__ = ["bq_encode", "bq_query_words", "bq_hamming", "bq_search",
+__all__ = ["bq_encode", "bq_query_words", "bq_score", "bq_search",
            "bq_decode_np"]
 
 _WORD = 32  # bits per packed word
@@ -123,15 +127,17 @@ def bq_query_words(query_vec: list) -> list[int]:
     return out
 
 
-def bq_hamming(code_col: Column, query_words: list[int]) -> Column:
-    """Σ_w bit_count(xor(word, q_word)) — left-to-right BIGINT sum."""
-    s = None
-    for w, qw in enumerate(query_words, start=1):
-        term = F.bit_count(
-            F.element_at(code_col, w).bitwiseXOR(F.lit(qw).cast("bigint"))
-        ).cast("bigint")
-        s = term if s is None else s + term
-    return s
+def bq_score(qwords: list[int] | str, n_words: int,
+             code_col: str = "bits") -> Column:
+    """Σ_w bit_count(xor(word, q_word)) — left-to-right BIGINT sum.
+    ``qwords`` is the literal query words or the name of an
+    ``array<bigint>`` column; the sum is the same either way."""
+    def qword(w: int) -> str:
+        return (f"element_at(`{qwords}`, {w})" if isinstance(qwords, str)
+                else f"CAST({int(qwords[w - 1])} AS BIGINT)")
+    return F.expr(" + ".join(
+        f"CAST(bit_count(element_at(`{code_col}`, {w}) ^ {qword(w)})"
+        " AS BIGINT)" for w in range(1, n_words + 1)))
 
 
 def bq_search(codes: DataFrame, query_vec: list, k: int = 5,
@@ -139,6 +145,6 @@ def bq_search(codes: DataFrame, query_vec: list, k: int = 5,
     """Top-k by Hamming distance, ascending (≡ binarized dot
     descending). Integer scores — exact, no rounding needed."""
     qwords = bq_query_words(query_vec)
-    scored = codes.select(
-        F.col(id_col), bq_hamming(F.col(code_col), qwords).alias("hamming"))
+    scored = codes.select(F.col(id_col), bq_score(
+        qwords, len(qwords), code_col).alias("hamming"))
     return global_topk(scored, [("hamming", True), (id_col, True)], k)

@@ -38,8 +38,7 @@ from .topk import global_topk
 
 __all__ = ["maxsim_score_udf", "maxsim_score_flat_const_udf",
            "maxsim_score_flat_multi_udf", "halfvec_encode_udf",
-           "halfvec_decode_udf", "maxsim_score_codes_const_udf",
-           "maxsim_score_codes_multi_udf",
+           "halfvec_decode_udf", "maxsim_score_codes_multi_udf",
            "maxsim_knn", "maxsim_knn_batch",
            "maxsim_knn_exact", "as_multivector"]
 
@@ -107,48 +106,21 @@ def _codes_row(c, dim: int):
     return np.asarray(c, dtype=np.float64).reshape(-1, dim)
 
 
-def maxsim_score_codes_const_udf(dim: int, mins: Sequence[float],
-                                 steps: Sequence[float],
-                                 query_flat: Sequence[float]):
-    """MaxSim scorer over SQ CODES of a flat multivector (the
-    quantized tier of a MaxSim collection): each ``array<int>`` codes
-    cell dequantizes to bucket centers ``min_j + (c + 0.5)·step_j``
-    (dim j = position mod dim — per-subvector params) and scores with
-    the same stacked matmul as ``maxsim_score_flat_const_udf``. Arrow
-    carries int codes (half the float64 bytes), the parquet scan
-    carries 1 byte/element; the full-width column is only read by the
-    exact rescore of the survivors — the dense `_quant_shortlist`
-    posture applied to MaxSim."""
-    Q = np.asarray(list(query_flat), dtype=np.float64).reshape(-1, dim)
-    mn = np.asarray(list(mins), dtype=np.float64)
-    st = np.asarray(list(steps), dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def _score(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        if codes.map(len).nunique() == 1:
-            C = _codes_batch(codes, dim)
-            D = mn + (C + 0.5) * st                      # (B, n, dim)
-            sims = np.matmul(Q[None], D.transpose(0, 2, 1))
-            return pd.Series(sims.max(axis=2).sum(axis=1))
-        out = np.empty(len(codes), dtype=np.float64)
-        for i, c in enumerate(codes):
-            C = _codes_row(c, dim)
-            out[i] = (Q @ (mn + (C + 0.5) * st).T).max(axis=1).sum()
-        return pd.Series(out)
-
-    return _score
-
-
 def maxsim_score_codes_multi_udf(dim: int, mins: Sequence[float],
                                  steps: Sequence[float],
                                  queries_flat: Sequence[Sequence[float]]):
-    """Multi-query twin of ``maxsim_score_codes_const_udf`` (the
-    batched quantized tier): codes cross Arrow once, every query
-    scores against the decoded bucket centers in the same
-    concatenated-matmul shape as ``maxsim_score_flat_multi_udf``;
-    returns ``array<double>`` of per-query approximate scores."""
+    """MaxSim scorer over SQ CODES of a flat multivector (the
+    quantized tier of a MaxSim collection): each codes cell — packed
+    uint8 ``binary`` or ``array<int>`` — dequantizes to bucket centers
+    ``min_j + (c + 0.5)·step_j`` (dim j = position mod dim —
+    per-subvector params). Codes cross Arrow once and every query
+    scores against the decoded centers in the concatenated-matmul
+    shape of ``maxsim_score_flat_multi_udf``; returns ``array<double>``
+    of per-query approximate scores. One query is element 1 of a
+    one-query call — the same matmul on the same operands as the
+    per-query segment of a batch. The full-width column is only read
+    by the exact rescore of the survivors (the dense codes-shortlist
+    posture applied to MaxSim)."""
     Qs = [np.asarray(list(q), dtype=np.float64).reshape(-1, dim)
           for q in queries_flat]
     Qall = np.concatenate(Qs, axis=0)

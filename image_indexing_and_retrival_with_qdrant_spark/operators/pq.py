@@ -9,11 +9,14 @@ in cluster memory.
 
 Search is asymmetric-distance (ADC): the query stays full-precision;
 for each block a lookup table ``lut[b][c] = <query_b, codebook[b][c]>``
-is computed driver-side (n_blocks × k_codes doubles — tiny) and the
-approximate inner product is ``Σ_b lut[b][code_b]`` — implemented as
-literal-array ``element_at`` lookups, so scoring a row touches only
-its 8 codes and never the original vector. Pure whole-stage-codegen
-expressions; no Python, no UDF.
+is computed driver-side (n_blocks × k_codes doubles — tiny,
+``pq_lut``) and the approximate inner product is ``Σ_b lut[b][code_b]``
+— ``element_at`` lookups, so scoring a row touches only its 8 codes
+and never the original vector. ``pq_score`` is the one ADC expression:
+its table operand is literal arrays (one query, inlined) or a column
+name (a batch's broadcast ``lut``), so both rank codes with the same
+lookups (operators/quant.py). Pure whole-stage-codegen expressions;
+no Python, no UDF.
 
 Exactness: PQ is approximate by construction — judged by recall
 against the exact scan (tests/test_pq.py), like the other ANN tiers.
@@ -25,13 +28,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from ..functions.localframe import local_literal_df
 
+from ..functions.localframe import local_literal_df
+from ..functions.vector import _lit_array_sql
 from .ann import assign_centroids
 from .topk import global_topk
 
-__all__ = ["pq_build", "pq_encode_udf", "pq_search", "ivfpq_search",
-           "pq_decode_np"]
+__all__ = ["pq_build", "pq_encode_udf", "pq_lut", "pq_score", "pq_search",
+           "ivfpq_search", "pq_decode_np"]
 
 
 def pq_decode_np(codes, codebooks: list):
@@ -136,29 +140,40 @@ def pq_build(corpus: DataFrame, dim: int, n_blocks: int = 8,
     return codes, codebooks
 
 
+def pq_lut(codebooks: list, query_vec: list) -> list[float]:
+    """The query's flat ADC lookup table: entry ``b·k_codes + c`` is
+    ``<query_b, codebooks[b][c]>`` as a left-to-right python sum."""
+    subdim = len(codebooks[0][0])
+    return [sum(float(q) * float(c) for q, c in
+                zip(query_vec[b * subdim:(b + 1) * subdim], codeword))
+            for b, cb in enumerate(codebooks) for codeword in cb]
+
+
+def pq_score(lut: list[float] | str, n_blocks: int, k_codes: int,
+             round_digits: int | None = 6) -> Column:
+    """ADC: ``Σ_b lut[b·k_codes + code_b]`` left-to-right over the
+    ``code0..`` columns. ``lut`` is the literal table — each block's
+    slice inlined as its own array literal — or the name of an
+    ``array<double>`` column; the lookups return the same doubles.
+    One JVM-parsed SQL string: the Column build costs
+    n_blocks·k_codes py4j literal round trips per query."""
+    def term(b: int) -> str:
+        if isinstance(lut, str):
+            return f"element_at(`{lut}`, {b * k_codes} + `code{b}` + 1)"
+        block = lut[b * k_codes:(b + 1) * k_codes]
+        return f"element_at({_lit_array_sql(block)}, `code{b}` + 1)"
+    score = F.expr(" + ".join(term(b) for b in range(n_blocks)))
+    return score if round_digits is None else F.round(score, round_digits)
+
+
 def pq_search(codes: DataFrame, codebooks: list, query_vec: list,
               k: int = 5, id_col: str = "vec_id",
               round_digits: int | None = 6) -> DataFrame:
     """ADC top-k over the compressed index for one full-precision
-    query vector (python list)."""
-    n_blocks = len(codebooks)
-    subdim = len(codebooks[0][0])
-    # one SQL string for the whole ADC sum: the Column build costs
-    # n_blocks*k_codes py4j literal round-trips of driver latency per
-    # query; the parsed tree is value-identical (left-associated +,
-    # repr'd double literals — functions/vector.py discipline)
-    terms = []
-    for b in range(n_blocks):
-        q_sub = query_vec[b * subdim:(b + 1) * subdim]
-        lut = ", ".join(
-            f"{sum(float(q) * float(c) for q, c in zip(q_sub, codeword))!r}D"
-            for codeword in codebooks[b]
-        )
-        terms.append(f"element_at(array({lut}), `code{b}` + 1)")
-    score = F.expr(" + ".join(terms))
-    if round_digits is not None:
-        score = F.round(score, round_digits)
-    scored = codes.select(F.col(id_col), score.alias("score"))
+    query vector (python list): ``pq_score`` with its table inlined."""
+    scored = codes.select(F.col(id_col), pq_score(
+        pq_lut(codebooks, query_vec), len(codebooks), len(codebooks[0]),
+        round_digits).alias("score"))
     return global_topk(scored, [("score", False), (id_col, True)], k)
 
 

@@ -18,9 +18,14 @@ math on both sides). 4× compression (fp32 → int8) at ~1-2 % score
 error on unit vectors; the scale story mirrors PQ: codes live in
 memory, full vectors are only read by a rescore stage.
 
-All expressions are whole-stage-codegen'd per-dim unrolls (no Python,
-no shuffle before the top-k) — encode is a projection over the scan,
-exactly like the IVF assignment pass.
+Encode and score are whole-stage-codegen'd expressions (no Python, no
+shuffle before the top-k) — encode is a projection over the scan,
+exactly like the IVF assignment pass. Both unroll per dim up to one
+shared width gate (``_UNROLL_MAX_DIM``) and take the loop form past
+it. ``sq_score`` is the one ranking expression: its query operand is a
+literal vector (one query, inlined) or a column name (a batch's
+broadcast ``query_vec``), so both rank codes with the same float ops
+(operators/quant.py).
 """
 
 from __future__ import annotations
@@ -29,11 +34,30 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import _UNROLL_MAX_DIM, _lit_array_sql
+from ..functions.vector import (
+    _elem,
+    _lit_array_sql,
+    _operand_sql_frag,
+    _sql_operand,
+)
 from .topk import global_topk
 
-__all__ = ["sq_train", "sq_encode", "sq_search", "sq_decode_np",
+__all__ = ["sq_train", "sq_encode", "sq_search", "sq_score", "sq_decode_np",
            "sq_train_flat", "sq_encode_flat"]
+
+# One width gate for every SQ expression — SQ's own, narrower than
+# functions/vector.py's. The encode (an 8-node clamp per dim) and the
+# dequantize-dot both unroll per dim, and with
+# spark.sql.codegen.fallback=false the unrolled encode compiles at 128
+# dims and fails at 160 ("Code grows beyond 64 KB"), the unrolled
+# score compiles at 192 and fails at 224 — with the fallback on, Spark
+# silently runs the whole stage interpreted. Past the gate both take
+# the loop form over constant-folded array literals: the same float64
+# ops and the same left-to-right fold, so codes and scores are
+# identical bits.
+# The loop form is not used at every width: at 64 dims it encoded 10×
+# slower (median of 3 over 400k rows, 4 cores: 2.50 s vs 0.25 s).
+_UNROLL_MAX_DIM = 128
 
 
 def sq_decode_np(codes, mins: list[float], steps: list[float]):
@@ -156,53 +180,63 @@ def sq_encode(corpus: DataFrame, mins: list[float], steps: list[float],
     # ONE parsed SQL array instead of ~10 Column ops per dim (~660
     # py4j round trips per encode, measured): the same
     # least/greatest/floor int tree, float literals repr-exact
-    codes = []
-    for j, (mn, st) in enumerate(zip(mins, steps), start=1):
-        if st == 0.0:
-            codes.append("0")
-            continue
-        x = f"CAST(element_at(`{vec_col}`, {j}) AS DOUBLE)"
-        q = f"CAST(FLOOR(({x} - {float(mn)!r}D) / {float(st)!r}D) AS INT)"
-        codes.append(f"least(255, greatest(0, {q}))")
-    arr = F.expr("array(" + ", ".join(codes) + ")")
+    if len(mins) > _UNROLL_MAX_DIM:
+        st = _lit_array_sql(steps)
+        x = f"CAST(element_at(`{vec_col}`, j) AS DOUBLE)"
+        q = (f"CAST(FLOOR(({x} - element_at({_lit_array_sql(mins)}, j))"
+             f" / element_at({st}, j)) AS INT)")
+        arr = F.expr(f"transform(sequence(1, {len(mins)}), j -> "
+                     f"IF(element_at({st}, j) = 0.0D, 0, "
+                     f"least(255, greatest(0, {q}))))")
+    else:
+        codes = []
+        for j, (mn, st) in enumerate(zip(mins, steps), start=1):
+            if st == 0.0:
+                codes.append("0")
+                continue
+            x = f"CAST(element_at(`{vec_col}`, {j}) AS DOUBLE)"
+            q = (f"CAST(FLOOR(({x} - {float(mn)!r}D) / {float(st)!r}D)"
+                 f" AS INT)")
+            codes.append(f"least(255, greatest(0, {q}))")
+        arr = F.expr("array(" + ", ".join(codes) + ")")
     return corpus.select(F.col(id_col), *[F.col(c) for c in carry_cols],
                          arr.alias(code_col))
+
+
+def sq_score(mins: list[float], steps: list[float], q: list | str,
+             code_col: str = "codes",
+             round_digits: int | None = 6) -> Column:
+    """Asymmetric dequantize-dot: each code dequantizes to its bucket
+    center in-expression, ``Σ_j (min_j + (code_j + 0.5)·step_j)·q_j``
+    left-to-right (the oracle's explicit sum). ``q`` is the query
+    operand (functions/vector.py rule): a literal vector inlined as
+    doubles, or the name of an ``array<double>`` column — the same
+    expression either way. One JVM-parsed SQL string: the Column build
+    costs ~dim·6 py4j round trips per query."""
+    qo = _sql_operand(q)
+    if len(mins) > _UNROLL_MAX_DIM:
+        score = (
+            f"aggregate(transform(`{code_col}`, (c, i) -> "
+            f"(element_at({_lit_array_sql(mins)}, i + 1)"
+            f" + ((CAST(c AS DOUBLE) + 0.5D)"
+            f" * element_at({_lit_array_sql(steps)}, i + 1)))"
+            f" * element_at({_operand_sql_frag(qo)}, i + 1)), "
+            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
+    else:
+        score = " + ".join(
+            f"(({float(mn)!r}D + ((CAST(element_at(`{code_col}`, {j}) AS"
+            f" DOUBLE) + 0.5D) * {float(st)!r}D)) * {_elem(qo, j)})"
+            for j, (mn, st) in enumerate(zip(mins, steps), start=1))
+    score = F.expr(score)
+    return score if round_digits is None else F.round(score, round_digits)
 
 
 def sq_search(codes: DataFrame, mins: list[float], steps: list[float],
               query_vec: list, k: int = 5, id_col: str = "vec_id",
               code_col: str = "codes",
               round_digits: int | None = 6) -> DataFrame:
-    """Asymmetric dequantize-dot top-k: the query stays full-precision,
-    each corpus code dequantizes to its bucket center in-expression.
-    Terms accumulate left-to-right (dim order), matching the oracle's
-    explicit sum. Rendered as one JVM-parsed SQL string (the
-    functions/vector.py operand discipline) — the Column build costs
-    ~dim·6 py4j round trips of driver latency per query."""
-    if len(mins) > _UNROLL_MAX_DIM:
-        # wide vectors: the inline unroll would bust janino's 64 KB
-        # method limit and push the stage to interpreted execution
-        # (functions/vector.py::_UNROLL_MAX_DIM); the loop form folds
-        # the SAME terms in the SAME left-to-right order — identical
-        # bits — with the per-dim constants as three constant-folded
-        # array literals
-        score = F.expr(
-            f"aggregate(transform(`{code_col}`, (c, i) -> "
-            f"(element_at({_lit_array_sql(mins)}, i + 1)"
-            f" + ((CAST(c AS DOUBLE) + 0.5D)"
-            f" * element_at({_lit_array_sql(steps)}, i + 1)))"
-            f" * element_at({_lit_array_sql(query_vec)}, i + 1)), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-    else:
-        terms = []
-        for j, (mn, st) in enumerate(zip(mins, steps), start=1):
-            c = f"CAST(element_at(`{code_col}`, {j}) AS DOUBLE)"
-            terms.append(
-                f"(({float(mn)!r}D + (({c} + 0.5D) * {float(st)!r}D))"
-                f" * {float(query_vec[j - 1])!r}D)"
-            )
-        score = F.expr(" + ".join(terms))
-    if round_digits is not None:
-        score = F.round(score, round_digits)
-    scored = codes.select(F.col(id_col), score.alias("score"))
+    """Top-k of one full-precision query over the codes: ``sq_score``
+    with the query inlined as literals."""
+    scored = codes.select(F.col(id_col), sq_score(
+        mins, steps, query_vec, code_col, round_digits).alias("score"))
     return global_topk(scored, [("score", False), (id_col, True)], k)

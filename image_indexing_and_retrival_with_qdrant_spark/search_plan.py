@@ -40,6 +40,7 @@ from dataclasses import dataclass, replace
 from typing import Callable
 
 from .operators.knn import _DISTANCE_METRICS
+from .operators.quant import trained
 
 _QP_KEYS = {"ignore", "rescore", "oversampling"}
 
@@ -90,9 +91,8 @@ def overlay_recall(cfg: dict, kn: SearchKnobs) -> SearchKnobs:
     from the measured pooling-faithful curve."""
     from .routing import route_for_recall
 
-    q = cfg.get("quantization")
-    if q in ("pq", "opq") and "pq_codebooks" not in cfg:
-        q = None  # untrained quantizer: nothing to spend a miss on
+    # an untrained quantizer has nothing to spend a miss on
+    q = cfg.get("quantization") if trained(cfg) else None
     if q and cfg["indexed"] and cfg.get("codes_layout") != "cells":
         # no composed codes layout on disk: the indexed read path
         # can't spend a quantized miss budget, so route index-only
@@ -184,11 +184,11 @@ def plan_search(cfg: dict, knobs: SearchKnobs, n_queries: int | None,
     # the codes sidecar has no payload columns: a filter can't restrict
     # a codes shortlist, so a filtered search routes filter-correct
     # (the widened walk, else index-only or exact) — Qdrant's filtered
-    # search likewise never drops matches to quantization
-    quant = cfg.get("quantization") if walk_ok else None
-    if ((quant in ("pq", "opq") and "pq_codebooks" not in cfg)
-            or qp.get("ignore")):
-        quant = None  # untrained (< pq_codes rows), or ignore=True
+    # search likewise never drops matches to quantization. An
+    # untrained quantizer (PQ below pq_codes rows) or ignore=True ranks
+    # no codes either.
+    quant = (cfg.get("quantization")
+             if walk_ok and trained(cfg) and not qp.get("ignore") else None)
     cells = cfg["indexed"] and cfg.get("codes_layout") == "cells"
     if no_rescore:
         if not quant or exact:
@@ -252,13 +252,13 @@ def _plan_maxsim(cfg: dict, kn: SearchKnobs, qp: dict, os_: float,
     # codes keeps max(k, rescore | ceil(k·oversampling)); any filter
     # skips it (codes carry no payload), and single-search
     # recall_target routes stay on the measured pooled curve
-    if (not kn.filtered and cfg.get("quantization") == "sq"
-            and "sq_mins" in cfg and not kn.exact and k is not None
+    if (not kn.filtered and trained(cfg) and not kn.exact and k is not None
             and (kn.recall_target is None or plan["batch"])
             and not qp.get("ignore")):
         m = (max(k, rescore) if rescore is not None
              else max(k, int(math.ceil(k * os_))))
-        return SearchPlan(tier, ef=ef, m=m, quantizer="sq", shortlist="codes",
+        return SearchPlan(tier, ef=ef, m=m, quantizer=cfg["quantization"],
+                          shortlist="codes",
                           probe_codes=(tier == "ivf" and cfg.get(
                               "codes_layout") == "cells"), **plan)
     if rescore is not None and not kn.exact and k is not None \

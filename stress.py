@@ -335,7 +335,7 @@ def mv_quant_at_shape(n: int = 100_000, n_vecs: int = 1030,
 
     from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import (
         maxsim_knn,
-        maxsim_score_codes_const_udf,
+        maxsim_score_codes_multi_udf,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.knn import dense_knn
     from image_indexing_and_retrival_with_qdrant_spark.operators.sq import (
@@ -407,8 +407,8 @@ def mv_quant_at_shape(n: int = 100_000, n_vecs: int = 1030,
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        str(max(16, (32 << 20) // code_bytes)))
         t0 = time.perf_counter()
-        score = maxsim_score_codes_const_udf(dim, mins, steps, qflat)(
-            F.col("codes"))
+        score = F.element_at(maxsim_score_codes_multi_udf(
+            dim, mins, steps, [qflat])(F.col("codes")), 1)
         short = global_topk(
             codes.select("vec_id", F.round(score, 6).alias("score")),
             [("score", False), ("vec_id", True)], m)

@@ -306,6 +306,25 @@ def test_query_group_by_matches_manual_grouping(spark, tmp_path):
         c.query(spark, branches, k=2, group_size=5)
 
 
+def test_query_group_by_fusion_joins_payload(spark, tmp_path):
+    """Grouping a fused pool keeps its payload: with_payload=True (the
+    grouped default) joins every payload field the ungrouped fused
+    result joins, with the same values per id."""
+    rows = [(i, [float(i % 7 + 1), float((i * 3) % 5), float(i % 3), 1.0],
+             f"g{i % 4}", i * 10) for i in range(40)]
+    c = create_collection(str(tmp_path), "gp", dim=4, normalize=False)
+    c.upsert(spark, spark.createDataFrame(
+        rows, "id int, embedding array<double>, grp string, pop int"))
+    pf = [Prefetch([2.0, 1.0, 0.0, 1.0], limit=20),
+          Prefetch([1.0, 0.0, 1.0, 1.0], limit=20)]
+    flat = c.query(spark, pf, k=50, with_payload=True)
+    grouped = c.query(spark, pf, k=2, group_by="grp", group_size=2)
+    assert set(flat.columns) - {"rrf"} <= set(grouped.columns)
+    want = {r.id: (r.grp, r.pop) for r in flat.collect()}
+    got = grouped.collect()
+    assert len(got) == 4 and all((r.grp, r.pop) == want[r.id] for r in got)
+
+
 # ---------------------------------------------------------------------------
 # Universal query API: query-object forms (RecommendQuery / DiscoverQuery /
 # ContextQuery / OrderByQuery / SampleQuery as query=)
@@ -393,6 +412,21 @@ def test_query_object_order_by_and_sample(spark, tmp_path):
     full = [r.id for r in c.query(spark, None, query=SampleQuery(seed=7),
                                   k=50).collect()]
     assert sorted(full) == list(range(50))  # collection-wide, uniform rank
+
+
+def test_query_order_by_rejects_non_numeric_key(spark, tmp_path):
+    """OrderByQuery ranks numeric and timestamp fields (Qdrant's
+    order_by key types): a string field raises ValueError naming its
+    type instead of failing the order_value cast at execution, while
+    scroll(order_by=) still pages the same field."""
+    rows = [(i, [float(i % 5), 1.0], f"s{i % 5}") for i in range(20)]
+    c = create_collection(str(tmp_path), "obs", dim=2, normalize=False)
+    c.upsert(spark, spark.createDataFrame(
+        rows, "id int, embedding array<double>, s string"))
+    with pytest.raises(ValueError, match="string"):
+        c.query(spark, None, query=OrderByQuery("s"), k=3)
+    page = c.scroll(spark, limit=3, order_by="s").collect()
+    assert [r.s for r in page] == ["s0", "s0", "s0"]
 
 
 def test_query_object_guards(spark, tmp_path):

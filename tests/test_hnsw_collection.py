@@ -612,7 +612,8 @@ def test_append_interleaved_ids_falls_back_to_rebuild(spark, root):
 def test_quantized_append_insert_parity(spark, root):
     """The insert path over CODE graphs (hnsw_config × quantization):
     same bit-parity contract, codes encoded from the batch with the
-    frozen params (_encode_codes, shared with the sidecar writer)."""
+    frozen params (`quantizer(meta).encode`, shared with the sidecar
+    writer)."""
     c = create_collection(root, "incq", dim=8, normalize=False,
                           indexing_threshold=1, k_centroids=2,
                           quantization="sq",

@@ -159,6 +159,20 @@ def test_mv_sq_batch_union_superset(spark, tmp_path):
                        for i, s in exact1]
 
 
+def test_mv_sq_shortlist_single_is_batch_of_one(spark, tmp_path):
+    """One query scores the codes with the multi-query scorer as a
+    batch of one (the same matmul), so its shortlist is the batch's."""
+    coll = create_collection(str(tmp_path), "mv1", dim=_DIM,
+                             multivector=True, normalize=False,
+                             quantization="sq")
+    coll.upsert(spark, _pts(spark, range(40)))
+    flat = [x for v in _QV for x in v]
+    one = coll._mv_quant_shortlist(spark, [flat], 7, "id", coll.meta, None)
+    batch = coll._mv_quant_shortlist(spark, [flat], 7, "id", coll.meta,
+                                     None, batch=True)
+    assert len(one) == 7 and sorted(one) == sorted(batch)
+
+
 def test_mv_sq_quantization_params(spark, tmp_path):
     coll = create_collection(str(tmp_path), "mvqp", dim=_DIM,
                              multivector=True, normalize=False,

@@ -250,11 +250,23 @@ def test_pq_codebook_defaults_wide(tmp_path):
     assert c.meta["pq_blocks"] == 16 and c.meta["pq_codes"] == 16
 
 
-def test_quantization_params_batch_forms(spark, tmp_path):
-    coll = create_collection(str(tmp_path), "qb", dim=8,
-                             quantization="pq")
-    coll.upsert(spark, _pts(spark, range(50)))
-    qvs = [[1.0] * 8, [2.0, -1.0, 0.5, 1.0, 0.0, -0.5, 1.5, 0.25]]
+@pytest.mark.parametrize("q,cells,dim", [
+    ("pq", False, 8), ("pq", True, 8), ("opq", False, 8), ("opq", True, 8),
+    ("sq", False, 8), ("sq", True, 8), ("sq", False, 224)],
+    ids=["pq-flat", "pq-cells", "opq-flat", "opq-cells", "sq-flat",
+         "sq-cells", "sq-flat-224d"])
+def test_quantization_params_batch_forms(spark, tmp_path, q, cells, dim):
+    """One query and a batch rank the codes with the same expression
+    (operators/quant.py): the rescore=False batch equals each single
+    search bit for bit, on flat codes and on the cells layout, and for
+    SQ past its unroll gate."""
+    kw = dict(indexing_threshold=1, k_centroids=4) if cells else {}
+    coll = create_collection(str(tmp_path), "qb", dim=dim,
+                             quantization=q, **kw)
+    coll.upsert(spark, _pts(spark, range(50), dim))
+    assert coll.meta.get("codes_layout") == ("cells" if cells else "flat")
+    qvs = [[1.0] * dim,
+           [2.0, -1.0, 0.5, 1.0, 0.0, -0.5, 1.5, 0.25] * (dim // 8)]
     ig = coll.search_batch(spark, qvs, k=3,
                            quantization_params={"ignore": True}).collect()
     ex = coll.search_batch(spark, qvs, k=3, exact=True).collect()

@@ -171,3 +171,27 @@ def test_appended_codes_share_points_layout_cells(spark, tmp_path):
     points = cells(coll._ivf_points)
     assert len(points) == len(mids)
     assert cells(coll._codes_path) == points
+
+
+@pytest.mark.parametrize("dim,cells", [(8, False), (96, True)],
+                         ids=["flat-8d", "cells-96d"])
+def test_bq_shortlist_batch_matches_single(spark, tmp_path, dim, cells):
+    """The BQ codes shortlist ranks one query and a batch with the same
+    Hamming expression: the batch's (query, id) pairs are each single
+    query's shortlist (ids only — the Hamming rank is not returned)."""
+    kw = dict(indexing_threshold=1, k_centroids=4) if cells else {}
+    rows = [(i, [float((i * (j + 3)) % 7 - 3) + 0.25 * j
+                 for j in range(dim)]) for i in range(60)]
+    coll = create_collection(str(tmp_path), "bqs", dim=dim,
+                             quantization="bq", **kw)
+    coll.upsert(spark, spark.createDataFrame(
+        rows, "id int, embedding array<double>"))
+    assert coll.meta["codes_layout"] == ("cells" if cells else "flat")
+    qvs = [[1.0 - (j % 3) for j in range(dim)],
+           [float((j * 5) % 7 - 3) for j in range(dim)]]
+    batch = coll._quant_shortlist(spark, qvs, 7, "id", batch=True).collect()
+    singles = sorted((i, r.id) for i, qv in enumerate(qvs)
+                     for r in coll._quant_shortlist(spark, [qv], 7,
+                                                    "id").collect())
+    assert len(singles) == 14
+    assert sorted((r.query_idx, r.id) for r in batch) == singles

@@ -99,3 +99,44 @@ def test_wide_collection_end_to_end(spark, tmp_path):
     batch = coll.search_batch(spark, [qv], k=5, oversampling=16.0).collect()
     assert [(r.id, r.score) for r in batch] == \
         [(r.id, r.score) for r in exact]
+
+
+def test_sq_expressions_stay_compiled_past_unroll_gate(spark, tmp_path):
+    """SQ's one width gate (operators/sq.py): with the interpreted
+    fallback OFF a codegen failure raises instead of silently running
+    the stage interpreted, so the encode at 160 dims and one search and
+    a batch at 224 dims must all compile — the unrolled encode busts
+    janino's 64 KB method limit at 160, the unrolled score at 224. The
+    batch ranks with the same expression as each single search."""
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        create_collection,
+    )
+
+    def frame(dim, n):
+        rows = [(i, [((i * 31 + j * 7) % 97) / 97.0 - 0.5
+                     for j in range(dim)]) for i in range(n)]
+        return spark.createDataFrame(rows, "id int, embedding array<double>")
+
+    coll = create_collection(str(tmp_path), "g224", dim=224,
+                             quantization="sq", normalize=False)
+    coll.upsert(spark, frame(224, 40))
+    qvs = [[((j * 13) % 89) / 89.0 - 0.5 for j in range(224)],
+           [((j * 5) % 23) / 23.0 - 0.5 for j in range(224)]]
+    qp = {"rescore": False}
+    prior = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        enc = frame(160, 30)
+        mins, steps = sq_train(enc, 160)
+        codes = sq_encode(enc, mins, steps, id_col="id").collect()
+        assert len(codes) == 30 and len(codes[0].codes) == 160
+        singles = sorted(
+            (i, r.id, r.score) for i, qv in enumerate(qvs)
+            for r in coll.search(spark, qv, k=5,
+                                 quantization_params=qp).collect())
+        batch = coll.search_batch(spark, qvs, k=5,
+                                  quantization_params=qp).collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prior)
+    assert len(singles) == 10
+    assert sorted((r.query_idx, r.id, r.score) for r in batch) == singles
