@@ -2100,9 +2100,7 @@ class Collection:
                   metric="euclid" if metric == "cosine" else metric,
                   prenormalized=False, dim=int(cfg["pca_dim"]))
         if not batch:
-            qdf = local_literal_df(spark, [(pqs[0],)],
-                                   "query_vec array<double>")
-            return dense_knn(side, qdf, **kw).select(id_col)
+            return dense_knn(side, pqs[0], **kw).select(id_col)
         return dense_knn_batch(side, _query_frame(spark, pqs),
                                query_id_col="query_idx", **kw
                                ).select("query_idx", id_col)
@@ -2966,8 +2964,9 @@ class Collection:
         pruned main-table fetch; the flat codes shortlist joins
         broadcast), a batch by ``include_pairs`` — each query rescores
         only ITS candidates — plus the distinct-id ``IN``. The leaf is
-        ``dense_knn`` (TakeOrderedAndProject) for one query and
-        ``dense_knn_batch`` (grouped top-k) for a batch."""
+        ``dense_knn`` with the query as an array literal (no join;
+        TakeOrderedAndProject) for one query and ``dense_knn_batch``
+        over the broadcast query frame (grouped top-k) for a batch."""
         from .operators.knn import dense_knn, dense_knn_batch
 
         vec_col, batch = cfg["vec_col"], plan.batch
@@ -3045,8 +3044,7 @@ class Collection:
                   prenormalized=bool(cfg.get("normalize")),
                   dim=cfg.get("dim"), metric=cfg.get("metric", "cosine"))
         if not batch:
-            return dense_knn(corpus, local_literal_df(
-                spark, [(qvs[0],)], "query_vec array<double>"), **kw)
+            return dense_knn(corpus, qvs[0], **kw)
         return dense_knn_batch(
             corpus, _query_frame(spark, qvs), query_id_col="query_idx",
             include_pairs=include_pairs, per_query_filter=per_query, **kw)

@@ -62,40 +62,47 @@ def _sql_operand(x: Column | str | Sequence[float]) -> str | list[float] | None:
 
 
 def operand_col(x: Column | str | Sequence[float]) -> Column:
-    """Column form of an operand (fallback / non-unrolled paths)."""
+    """Column form of an operand for the loop paths: a name casts, a
+    finite literal vector is ONE JVM-parsed array literal (not the
+    ~dim py4j round-trips of ``F.array(*[F.lit(v) ...])``)."""
     if isinstance(x, str):
         return F.col(x).cast("array<double>")
     if isinstance(x, Sequence):
-        return F.array(*[F.lit(float(v)) for v in x])
+        vals = [float(v) for v in x]
+        if all(math.isfinite(v) for v in vals):
+            return F.expr(_lit_array_sql(vals))
+        return F.array(*[F.lit(v) for v in vals])
     return x.cast("array<double>")
 
 
-# Unrolling stops paying past this width: janino's 64 KB method limit
-# rejects the generated code somewhere between 512 and 768 inline
-# terms, whole-stage codegen FAILS, and the whole stage silently runs
-# interpreted — measured 10×+ slower at 768 dims than the loop-shaped
-# HOF forms (zip_with/aggregate compile to a tight loop at any width).
-# Above the gate every unrolled builder returns its HOF twin, which
-# the docstrings already prove bit-identical (same left-to-right
-# fold). 256 inline terms ≈ 25 KB of bytecode — comfortably inside
-# the limit, still unrolled where unrolling wins (≤ 256-d: the stub,
-# the fixtures, MiniLM-class models); 768-d+ production embeddings
-# take the loop.
-_UNROLL_MAX_DIM = 256
-
-# The distance metrics inline each element access TWICE per term
-# (`(a_i - b_i) * (a_i - b_i)` / `ABS(a_i - b_i)` under a filter that
-# duplicates the whole expression when pushed through the projection),
-# so their generated code hits janino's 64 KB method limit at a
-# fraction of dot's width: measured, the 64-d euclid/manhattan top-k
-# plans fail codegen ("Code grows beyond 64 KB") as soon as the
-# scorer lands twice in one whole-stage method — the stage then runs
-# interpreted AND pays a failed ~300 KB compile per plan. Past this
-# gate they emit the loop-shaped aggregate(zip_with(...)) SQL instead
-# (generated code O(1) in dim; the literal array is data, not code) —
-# the same left-to-right float64 fold, so values are bit-identical
-# (the `euclid` docstring's own parity argument).
-_DIFF_UNROLL_MAX_DIM = 32
+# The one width gate of every unrolled scorer: past it the builders
+# return their loop-shaped twins (aggregate(zip_with(...))) — the same
+# left-to-right float64 fold, so the same bits. The loop form keeps a
+# literal query as ONE referenced constant, so its generated code does
+# not depend on the query (no class compiled per search) and stays
+# O(1) in dim however often the optimizer copies the expression (a
+# score_threshold filter pushed through the projection inlines it
+# twice). The unrolled sum skips zip_with's per-row array but its code
+# grows with dim: janino's 64 KB method limit drops the whole stage to
+# interpreted somewhere between 512 and 768 terms, and long before
+# that its codegen costs more than it saves. Median process-tree CPU
+# (JIT compiler threads excluded) per top-10 search over a cached
+# corpus, 5 warm searches per cell, 4 cores, Spark 4.1.2; a range is
+# two runs (``python stress.py scorer <rows> <dim>``):
+#
+#   rows x dim  frame+unrolled  literal+unrolled  literal+loop  frame+loop
+#   1k x 16          300 ms          200 ms          190 ms       240 ms
+#   1k x 32          430-450         280-290         220-250      290-310
+#   1k x 64          570-630         450-560         240          280-330
+#   1k x 128         1,090           800             310          280
+#   100k x 16        320-370         450-540         640-720      820-900
+#   100k x 32        430-460         760-800         1,140-1,320  1,360-1,510
+#   100k x 64        3,040           2,160           1,990        2,170
+#   100k x 128       5,750           3,990           3,470        3,820
+#
+# Unrolling wins only on large scans at <= 32 dims; the loop form
+# wins at 64 dims and wider at every size.
+_UNROLL_MAX_DIM = 32
 
 
 def _operand_sql_frag(x: str | list[float]) -> str:
@@ -110,20 +117,6 @@ def _lit_array_sql(vals: Sequence[float]) -> str:
     """One SQL array literal (constant-folded by Catalyst to a single
     Literal — referenced, not inlined, by codegen)."""
     return "array(" + ", ".join(f"{float(v)!r}D" for v in vals) + ")"
-
-
-def _hof_operand(x: Column | str | Sequence[float]) -> Column:
-    """Column form of an operand for the HOF (loop) paths, avoiding
-    the ~dim py4j round-trips of ``F.array(*[F.lit(v) ...])`` for
-    literal vectors: one JVM-parsed SQL string instead."""
-    if isinstance(x, str):
-        return F.expr(f"CAST(`{x}` AS ARRAY<DOUBLE>)")
-    if isinstance(x, Sequence):
-        vals = [float(v) for v in x]
-        if all(math.isfinite(v) for v in vals):
-            return F.expr(_lit_array_sql(vals))
-        return F.array(*[F.lit(v) for v in vals])
-    return x.cast("array<double>")
 
 
 def _elem(x: str | list[float], i: int) -> str:
@@ -185,17 +178,18 @@ def dot_unrolled(a: Column | str | Sequence[float],
     ``element_at`` products summed left-to-right — the exact same
     addition order as ``dot`` (aggregate's ``0 + x1 + x2 + …``), so
     results are bit-identical, but without the per-row array
-    allocation of ``zip_with``: measured 2.6× faster on a 10M-row
-    scan. Use whenever the collection's dim is known (it always is —
-    collections declare it at creation, SURVEY.md §1.1).
+    allocation of ``zip_with``. That pays only on large scans at
+    narrow widths; past ``_UNROLL_MAX_DIM`` (measured table there) the
+    loop form is returned. Use whenever the collection's dim is known
+    (it always is — collections declare it at creation, SURVEY.md
+    §1.1).
 
     Operands may be column NAMES or literal vectors — then the whole
     expression is one JVM-parsed SQL string (single py4j call) instead
     of ~dim×5 Column round-trips; pass Columns only when a name can't
-    address the operand. Past ``_UNROLL_MAX_DIM`` the loop-shaped
-    ``dot`` is returned instead (same bits, stays in codegen)."""
+    address the operand."""
     if dim > _UNROLL_MAX_DIM:
-        return dot(_hof_operand(a), _hof_operand(b))
+        return dot(operand_col(a), operand_col(b))
     sa, sb = _sql_operand(a), _sql_operand(b)
     if sa is not None and sb is not None:
         return F.expr(_dot_sql(sa, sb, dim))
@@ -212,7 +206,7 @@ def cosine_unrolled(a: Column | str | Sequence[float],
     """Unrolled cosine — bit-identical to ``cosine`` (same op order);
     past ``_UNROLL_MAX_DIM`` returns the loop form (same bits)."""
     if dim > _UNROLL_MAX_DIM:
-        return cosine(_hof_operand(a), _hof_operand(b))
+        return cosine(operand_col(a), operand_col(b))
     sa, sb = _sql_operand(a), _sql_operand(b)
     if sa is not None and sb is not None:
         return F.expr(
@@ -241,16 +235,9 @@ def euclid_unrolled(a: Column | str | Sequence[float],
     order), no per-row array allocation; past ``_UNROLL_MAX_DIM``
     returns the loop form (same bits)."""
     if dim > _UNROLL_MAX_DIM:
-        return euclid(_hof_operand(a), _hof_operand(b))
+        return euclid(operand_col(a), operand_col(b))
     sa, sb = _sql_operand(a), _sql_operand(b)
     if sa is not None and sb is not None:
-        if dim > _DIFF_UNROLL_MAX_DIM:
-            # loop shape (see _DIFF_UNROLL_MAX_DIM): same fold, O(1)
-            # generated code — one JVM-parsed SQL string either way
-            return F.expr(
-                f"SQRT(aggregate(zip_with({_operand_sql_frag(sa)}, "
-                f"{_operand_sql_frag(sb)}, (x, y) -> (x - y) * (x - y)), "
-                "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))")
         terms = " + ".join(
             "({d} * {d})".format(d=f"({_elem(sa, i)} - {_elem(sb, i)})")
             for i in range(1, dim + 1))
@@ -276,16 +263,9 @@ def manhattan(a: Column, b: Column) -> Column:
 def manhattan_unrolled(a: Column | str | Sequence[float],
                        b: Column | str | Sequence[float], dim: int) -> Column:
     if dim > _UNROLL_MAX_DIM:
-        return manhattan(_hof_operand(a), _hof_operand(b))
+        return manhattan(operand_col(a), operand_col(b))
     sa, sb = _sql_operand(a), _sql_operand(b)
     if sa is not None and sb is not None:
-        if dim > _DIFF_UNROLL_MAX_DIM:
-            # loop shape (see _DIFF_UNROLL_MAX_DIM): same fold, O(1)
-            # generated code
-            return F.expr(
-                f"aggregate(zip_with({_operand_sql_frag(sa)}, "
-                f"{_operand_sql_frag(sb)}, (x, y) -> ABS(x - y)), "
-                "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
         terms = " + ".join(
             f"ABS({_elem(sa, i)} - {_elem(sb, i)})"
             for i in range(1, dim + 1))

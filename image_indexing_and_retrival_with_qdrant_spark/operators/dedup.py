@@ -269,13 +269,13 @@ def embedding_near_pairs(df: DataFrame, block_col: Column,
     per-pair work is a single dot product — at P pairs over n rows
     that is O(n·d + P·d), not O(P·3d) with two norms per pair.
 
-    ``dim`` unrolls the per-pair dot — measured SLOWER here (2.7 →
-    6.6 s at sf0.1, the opposite of the scan-side 2.6× win): the
-    τ-filter is pushed through the projection, duplicating the
-    64-term expression into both filter and project, and the doubled
-    unrolled body overflows codegen limits, while the compact
-    zip_with form stays cheap even evaluated twice. Kept as an option
-    for narrow dims / no-threshold uses; default stays zip_with."""
+    ``dim`` hands the per-pair dot to ``dot_unrolled``, which unrolls
+    only up to the scorers' width gate (32 dims) and is the loop form
+    past it. Unrolled at 64 dims it measured SLOWER here (2.7 → 6.6 s
+    at sf0.1): the τ-filter is pushed through the projection,
+    duplicating the 64-term expression into both filter and project,
+    while the compact zip_with form stays cheap even evaluated twice.
+    The default stays zip_with."""
     from ..functions.vector import dot_unrolled
 
     n_par = df.sparkSession.sparkContext.defaultParallelism

@@ -12,12 +12,16 @@ Semantics pinned by the reference:
 - result projection id/score/payload with defaults
   (``format_results``, ``query_vdr_2b_multi_v1.py:91-127``).
 
-Plan shape: ``corpus → [pushed filter] → crossJoin(broadcast(queries))
-→ score (JVM zip_with/aggregate, codegen) → top-k``. The query side is
-always tiny (one or a few rows), so the join is a
-BroadcastNestedLoopJoin: the corpus is never shuffled; the single-query
-top-k is TakeOrderedAndProject (per-partition heaps). That plan is the
-one you want at 100 TB: scan-local scoring, O(k) rows to the driver.
+Plan shape: ``corpus → [pushed filter] → score (JVM codegen) → top-k``.
+One catalog query is an array literal inside the score expression: no
+join and no broadcast job, and above the unrolling gate the generated
+code does not depend on the query. A query FRAME (a batch, or a
+registry builder's data-derived query) is crossed with the corpus as
+``crossJoin(broadcast(queries))`` — a BroadcastNestedLoopJoin, the
+query side tiny, the corpus never shuffled. The single-query top-k is
+TakeOrderedAndProject (per-partition heaps); a batch ranks per query
+with the partial ``WindowGroupLimit``. Either plan is the one you want
+at 100 TB: scan-local scoring, O(k) rows to the driver.
 
 Scores are rounded (default 6 dp) for oracle stability; ordering is
 made total with the id tie-break.
@@ -49,57 +53,36 @@ __all__ = ["dense_knn", "dense_knn_batch"]
 # is a MAX bound — Qdrant's documented semantics for Euclid/Manhattan.
 _DISTANCE_METRICS = {"euclid", "manhattan"}
 
+# the scorer of each metric (dot = cosine on prenormalized vectors)
+_UNROLLED = {"dot": dot_unrolled, "cosine": cosine_unrolled,
+             "euclid": euclid_unrolled, "manhattan": manhattan_unrolled}
+_LOOPED = {"dot": dot, "cosine": cosine, "euclid": euclid,
+           "manhattan": manhattan}
+
 
 def _score(vec_col: Column | str | Sequence[float],
            query_col: Column | str | Sequence[float], prenormalized: bool,
-           dim: int | None, metric: str = "cosine",
-           duplicated: bool = False) -> Column:
+           dim: int | None, metric: str = "cosine") -> Column:
     """Score by the collection's declared metric (Qdrant
     ``Distance.{COSINE,DOT,EUCLID,MANHATTAN}``). ``prenormalized``
     turns cosine into a plain dot (normalize-at-write collections).
     With ``dim`` known — collections always declare it (SURVEY.md
-    §1.1) — uses the statically-unrolled form: bit-identical, ~2.6×
-    faster per scan.
-
-    ``duplicated=True`` says the caller will FILTER on this score
-    (score_threshold): Catalyst pushes that filter through the
-    projection, inlining the whole expression a second time into one
-    whole-stage method, which overflows janino's 64 KB limit at half
-    the usual width (measured: the 64-d cosine threshold scan fails
-    codegen and runs interpreted after a ~300 KB failed compile).
-    Past 32 dims the loop-shaped HOF forms are used instead — the
-    identical left-to-right fold (each builder's documented parity),
-    O(1) generated code however many times the optimizer copies it."""
-    if dim is not None and duplicated and dim > 32:
-        dim = None  # same bits via the loop forms below
+    §1.1) — the ``*_unrolled`` builders pick the unrolled or loop form
+    by their one width gate (``functions/vector.py``); same bits."""
+    if metric == "dot" or (metric == "cosine" and prenormalized):
+        metric = "dot"
+    elif metric not in _LOOPED:
+        raise ValueError(f"unknown metric: {metric}")
     if dim is not None:
         # unrolled builders take names/literals directly (single-expr
         # SQL fast path) and fall back to Columns transparently
-        if metric == "euclid":
-            return euclid_unrolled(vec_col, query_col, dim)
-        if metric == "manhattan":
-            return manhattan_unrolled(vec_col, query_col, dim)
-        if metric == "dot":
-            prenormalized = True
-        elif metric != "cosine":
-            raise ValueError(f"unknown metric: {metric}")
-        return (dot_unrolled(vec_col, query_col, dim) if prenormalized
-                else cosine_unrolled(vec_col, query_col, dim))
-    a, b = operand_col(vec_col), operand_col(query_col)
-    if metric == "euclid":
-        return euclid(a, b)
-    if metric == "manhattan":
-        return manhattan(a, b)
-    if metric == "dot":
-        prenormalized = True
-    elif metric != "cosine":
-        raise ValueError(f"unknown metric: {metric}")
-    return dot(a, b) if prenormalized else cosine(a, b)
+        return _UNROLLED[metric](vec_col, query_col, dim)
+    return _LOOPED[metric](operand_col(vec_col), operand_col(query_col))
 
 
 def dense_knn(
     corpus: DataFrame,
-    query: DataFrame,
+    query: DataFrame | Sequence[float],
     k: int | None = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -112,24 +95,26 @@ def dense_knn(
     dim: int | None = None,
     metric: str = "cosine",
 ) -> DataFrame:
-    """Single-query top-k by ``metric``. ``query`` must have exactly
-    one row with column ``query_vec_col``. ``k=None`` disables the
-    limit (threshold-only search). Pass ``dim`` for the unrolled fast
-    path. Distance metrics (euclid/manhattan) rank ascending and treat
-    ``score_threshold`` as a max bound.
+    """Single-query top-k by ``metric``. ``query`` is the query vector
+    itself — scored as an array literal, no join — or a one-row frame
+    with column ``query_vec_col``, broadcast-joined. ``k=None``
+    disables the limit (threshold-only search). Pass ``dim`` for the
+    unrolled fast path. Distance metrics (euclid/manhattan) rank
+    ascending and treat ``score_threshold`` as a max bound.
     """
     if prefilter is not None:
         corpus = corpus.filter(prefilter)
+    if isinstance(query, DataFrame):
+        corpus = corpus.join(F.broadcast(query.select(query_vec_col)))
+        operand = query_vec_col
+    else:
+        operand = [float(v) for v in query]
     asc = metric in _DISTANCE_METRICS
-    score = _score(vec_col, query_vec_col, prenormalized, dim,
-                   metric, duplicated=score_threshold is not None)
+    score = _score(vec_col, operand, prenormalized, dim, metric)
     if round_digits is not None:
         score = F.round(score, round_digits)
-    scored = (
-        corpus.join(F.broadcast(query.select(query_vec_col)))
-        .withColumn("score", score)
-        .select(id_col, *payload_cols, "score")
-    )
+    scored = corpus.withColumn("score", score).select(
+        id_col, *payload_cols, "score")
     if score_threshold is not None:
         scored = scored.filter(
             F.col("score") <= score_threshold if asc
@@ -177,8 +162,7 @@ def dense_knn_batch(
     if prefilter is not None:
         corpus = corpus.filter(prefilter)
     asc = metric in _DISTANCE_METRICS
-    score = _score(vec_col, query_vec_col, prenormalized, dim,
-                   metric, duplicated=score_threshold is not None)
+    score = _score(vec_col, query_vec_col, prenormalized, dim, metric)
     if round_digits is not None:
         score = F.round(score, round_digits)
     scored = (

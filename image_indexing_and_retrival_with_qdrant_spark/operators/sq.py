@@ -20,12 +20,13 @@ memory, full vectors are only read by a rescore stage.
 
 Encode and score are whole-stage-codegen'd expressions (no Python, no
 shuffle before the top-k) — encode is a projection over the scan,
-exactly like the IVF assignment pass. Both unroll per dim up to one
-shared width gate (``_UNROLL_MAX_DIM``) and take the loop form past
-it. ``sq_score`` is the one ranking expression: its query operand is a
-literal vector (one query, inlined) or a column name (a batch's
-broadcast ``query_vec``), so both rank codes with the same float ops
-(operators/quant.py).
+exactly like the IVF assignment pass. Both unroll per dim up to a
+width gate and take the loop form past it: the encode up to its own
+``_ENCODE_UNROLL_MAX_DIM``, the score up to the scorers' shared gate
+(``functions/vector.py``). ``sq_score`` is the one ranking
+expression: its query operand is a literal vector (one query,
+inlined) or a column name (a batch's broadcast ``query_vec``), so
+both rank codes with the same float ops (operators/quant.py).
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vector
 from ..functions.vector import (
     _elem,
     _lit_array_sql,
@@ -45,19 +47,20 @@ from .topk import global_topk
 __all__ = ["sq_train", "sq_encode", "sq_search", "sq_score", "sq_decode_np",
            "sq_train_flat", "sq_encode_flat"]
 
-# One width gate for every SQ expression — SQ's own, narrower than
-# functions/vector.py's. The encode (an 8-node clamp per dim) and the
-# dequantize-dot both unroll per dim, and with
+# The encode's width gate, wider than the scorers' shared one. The
+# encode is an 8-node clamp per dim; with
 # spark.sql.codegen.fallback=false the unrolled encode compiles at 128
-# dims and fails at 160 ("Code grows beyond 64 KB"), the unrolled
-# score compiles at 192 and fails at 224 — with the fallback on, Spark
-# silently runs the whole stage interpreted. Past the gate both take
-# the loop form over constant-folded array literals: the same float64
-# ops and the same left-to-right fold, so codes and scores are
-# identical bits.
-# The loop form is not used at every width: at 64 dims it encoded 10×
-# slower (median of 3 over 400k rows, 4 cores: 2.50 s vs 0.25 s).
-_UNROLL_MAX_DIM = 128
+# dims and fails at 160 ("Code grows beyond 64 KB"), and with the
+# fallback on Spark silently runs the whole stage interpreted. Past
+# the gate it takes the loop form over constant-folded array literals:
+# the same float64 ops, so the same codes. The loop form is not used
+# at every width: at 64 dims it encoded 10× slower (median of 3 over
+# 400k rows, 4 cores: 2.50 s vs 0.25 s). The score has no such
+# exception: at 64 dims its unrolled form was the slower one (top-10
+# over 400k cached code rows, median of 3, 4 cores: 3.49 s unrolled vs
+# 1.88 s loop, ``python stress.py sqscore 400000 64``), so it takes
+# ``functions/vector.py``'s gate like every other scorer.
+_ENCODE_UNROLL_MAX_DIM = 128
 
 
 def sq_decode_np(codes, mins: list[float], steps: list[float]):
@@ -180,7 +183,7 @@ def sq_encode(corpus: DataFrame, mins: list[float], steps: list[float],
     # ONE parsed SQL array instead of ~10 Column ops per dim (~660
     # py4j round trips per encode, measured): the same
     # least/greatest/floor int tree, float literals repr-exact
-    if len(mins) > _UNROLL_MAX_DIM:
+    if len(mins) > _ENCODE_UNROLL_MAX_DIM:
         st = _lit_array_sql(steps)
         x = f"CAST(element_at(`{vec_col}`, j) AS DOUBLE)"
         q = (f"CAST(FLOOR(({x} - element_at({_lit_array_sql(mins)}, j))"
@@ -214,7 +217,7 @@ def sq_score(mins: list[float], steps: list[float], q: list | str,
     expression either way. One JVM-parsed SQL string: the Column build
     costs ~dim·6 py4j round trips per query."""
     qo = _sql_operand(q)
-    if len(mins) > _UNROLL_MAX_DIM:
+    if len(mins) > vector._UNROLL_MAX_DIM:
         score = (
             f"aggregate(transform(`{code_col}`, (c, i) -> "
             f"(element_at({_lit_array_sql(mins)}, i + 1)"

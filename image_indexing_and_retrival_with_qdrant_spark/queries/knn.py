@@ -117,13 +117,13 @@ def knn_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- production-width KNN (768-d): the reference's real embedding
 # models are 1536/2048-d dense and 128-d×n multivector
 # (incremental_indexing_vdr_2b_multi_v1.py:57, jina_v4_text_indexer.py:54)
-# while the fixture is 64-d, so every other bench entry runs the
-# ≤256-d statically-unrolled scorer. This entry tiles the fixture to
-# 768-d DETERMINISTICALLY (12 tiles, tile t scaled by the exact
-# dyadic 1 + t/16 — bit-exact in both engines) so the width-gated HOF
-# twin (functions/vector.py::_UNROLL_MAX_DIM) is exercised by the
-# driver bench and value-checked by the oracle, not only by stress
-# runs: a codegen regression at real embedding width shows up here.
+# while the fixture is 64-d. This entry tiles the fixture to 768-d
+# DETERMINISTICALLY (12 tiles, tile t scaled by the exact dyadic
+# 1 + t/16 — bit-exact in both engines) so the loop-shaped scorer
+# past functions/vector.py::_UNROLL_MAX_DIM is exercised by the
+# registry bench (bench.py) and value-checked by the oracle at real
+# embedding width, not only by stress runs: a codegen regression
+# there shows up here.
 _WIDE_TILES = 12  # 12 × 64-d fixture = 768-d
 
 

@@ -1742,7 +1742,114 @@ def pca_projection_stress(n: int = 10_000_000, r: int = 8,
     spark.stop()
 
 
+def _hash_vectors(spark, n: int, dim: int):
+    """``(vec_id, embedding)`` with deterministic xxhash64 components
+    in [-1, 1], generated in-plan."""
+    return spark.range(n).withColumnRenamed("id", "vec_id").select(
+        "vec_id", F.array(*[
+            (F.xxhash64(F.col("vec_id"), F.lit(i)) % 2000001 - 1000000)
+            / F.lit(1000000.0) for i in range(dim)]).alias("embedding"))
+
+
+def scorer_cost(n: int = 1000, dim: int = 64, runs: int = 5) -> None:
+    """Median CPU per top-10 dense search over a cached ``n × dim``
+    corpus for each scorer form: the query as a broadcast one-row
+    frame or as an array literal, scored by the unrolled sum or the
+    loop form (``functions/vector.py::_UNROLL_MAX_DIM`` forced either
+    way). CPU is the process tree's (driver, JVM) minus the JIT
+    compiler threads, as perfbench counts it; each run searches a new
+    query after one warm-up, so per-query compilation is counted.
+    Asserts that all four forms return the same ids and score bits."""
+    import image_indexing_and_retrival_with_qdrant_spark.functions.vector as V
+    from image_indexing_and_retrival_with_qdrant_spark.functions.localframe import (
+        local_literal_df,
+    )
+    from perfbench.spans import tree_cpu_s
+
+    spark = get_spark("stress-scorer",
+                      cpus=os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    spark.sparkContext.setLogLevel("ERROR")
+    corpus = _hash_vectors(spark, n, dim).cache()
+    corpus.count()
+    queries = np.random.default_rng(7).standard_normal((runs + 1, dim)).tolist()
+    forms = {"frame+unrolled": (True, 10**9), "literal+unrolled": (False, 10**9),
+             "literal+loop": (False, 0), "frame+loop": (True, 0)}
+    out, hits = {"rows": n, "dim": dim, "runs": runs}, {}
+    gate = V._UNROLL_MAX_DIM
+
+    def search(frame, q):
+        op = (local_literal_df(spark, [(q,)], "query_vec array<double>")
+              if frame else q)
+        return [(r.vec_id, r.score) for r in dense_knn(
+            corpus, op, k=10, dim=dim, round_digits=None).collect()]
+
+    try:
+        for frame, width in forms.values():  # warm every form first
+            V._UNROLL_MAX_DIM = width
+            search(frame, queries[0])
+        for name, (frame, width) in forms.items():
+            V._UNROLL_MAX_DIM = width
+            cpu, hits[name] = [], []
+            for q in queries[1:]:
+                c0 = tree_cpu_s(os.getpid())
+                hits[name].append(search(frame, q))
+                c1 = tree_cpu_s(os.getpid())
+                cpu.append((c1[0] - c1[1]) - (c0[0] - c0[1]))
+            out[f"{name}_cpu_ms"] = round(sorted(cpu)[runs // 2] * 1000)
+    finally:
+        V._UNROLL_MAX_DIM = gate
+    first = next(iter(hits.values()))
+    assert all(h == first for h in hits.values()), "forms disagree"
+    print(json.dumps(out))
+    spark.stop()
+
+
+def sq_score_cost(n: int = 400_000, dim: int = 64) -> None:
+    """Median of 3 wall seconds of one top-10 ``sq_search`` over ``n``
+    cached SQ code rows, with ``sq_score`` unrolled vs in the loop form
+    (``functions/vector.py::_UNROLL_MAX_DIM`` forced either way);
+    asserts identical ids and score bits."""
+    import image_indexing_and_retrival_with_qdrant_spark.functions.vector as V
+    from image_indexing_and_retrival_with_qdrant_spark.operators.sq import (
+        sq_encode,
+        sq_search,
+        sq_train,
+    )
+
+    spark = get_spark("stress-sqscore",
+                      cpus=os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    spark.sparkContext.setLogLevel("ERROR")
+    corpus = _hash_vectors(spark, n, dim)
+    mins, steps = sq_train(corpus, dim)
+    codes = sq_encode(corpus, mins, steps).cache()
+    codes.count()
+    q = np.random.default_rng(7).standard_normal(dim).tolist()
+    out, hits = {"rows": n, "dim": dim}, {}
+    gate = V._UNROLL_MAX_DIM
+    try:
+        for name, width in (("unrolled", 10**9), ("loop", 0)):
+            V._UNROLL_MAX_DIM = width
+            ts = []
+            for _ in range(4):  # the first run is a warm-up
+                t0 = time.perf_counter()
+                hits[name] = [(r.vec_id, r.score) for r in sq_search(
+                    codes, mins, steps, q, k=10, round_digits=None).collect()]
+                ts.append(time.perf_counter() - t0)
+            out[f"{name}_sec"] = round(sorted(ts[1:])[1], 2)
+    finally:
+        V._UNROLL_MAX_DIM = gate
+    assert hits["unrolled"] == hits["loop"], "forms disagree"
+    print(json.dumps(out))
+    spark.stop()
+
+
 def main() -> None:
+    if len(sys.argv) > 1 and sys.argv[1] == "scorer":
+        scorer_cost(*[int(a) for a in sys.argv[2:]])
+        return
+    if len(sys.argv) > 1 and sys.argv[1] == "sqscore":
+        sq_score_cost(*[int(a) for a in sys.argv[2:]])
+        return
     if len(sys.argv) > 1 and sys.argv[1] == "composed":
         args = [int(a) for a in sys.argv[2:]]
         composed_at_scale(*args)

@@ -45,20 +45,23 @@ def test_gate_active_above_threshold(spark):
 
 
 def test_dense_knn_bits_match(spark, monkeypatch):
-    """A/B: gated HOF result vs forced-unrolled result, all metrics."""
+    """A/B: gated HOF result vs forced-unrolled result, all metrics;
+    and the literal query vector (the single catalog query's operand)
+    vs the broadcast frame. The unrolled literal form is pinned at
+    narrow widths by tests/test_literal_query.py."""
     qv = _qv()
     corpus = _corpus(spark)
     qdf = spark.createDataFrame([(qv,)], "query_vec array<double>")
     for metric in ("cosine", "dot", "euclid", "manhattan"):
-        wide = [(r.vec_id, r.score) for r in
-                dense_knn(corpus, qdf, k=7, dim=DIM,
-                          metric=metric, round_digits=None).collect()]
+        def top(query):
+            return [(r.vec_id, r.score) for r in
+                    dense_knn(corpus, query, k=7, dim=DIM, metric=metric,
+                              round_digits=None).collect()]
+        wide = top(qdf)
+        assert top(qv) == wide, metric  # literal operand, loop form
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(V, "_UNROLL_MAX_DIM", 10**9)
-            nar = [(r.vec_id, r.score) for r in
-                   dense_knn(corpus, qdf, k=7, dim=DIM,
-                             metric=metric, round_digits=None).collect()]
-        assert wide == nar, metric  # identical BITS (no rounding)
+            assert top(qdf) == wide, metric  # identical BITS (no rounding)
 
 
 def test_sq_search_bits_match(spark):
@@ -70,9 +73,7 @@ def test_sq_search_bits_match(spark):
             sq_search(codes, mins, steps, qv, k=7,
                       round_digits=None).collect()]
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(
-            __import__("image_indexing_and_retrival_with_qdrant_spark.operators.sq",
-                       fromlist=["x"]), "_UNROLL_MAX_DIM", 10**9)
+        mp.setattr(V, "_UNROLL_MAX_DIM", 10**9)  # sq_score's gate
         nar = [(r.vec_id, r.score) for r in
                sq_search(codes, mins, steps, qv, k=7,
                          round_digits=None).collect()]
