@@ -39,18 +39,18 @@ Auto-indexing (``indexing_threshold``): Qdrant defers ANN-index build
 until a collection passes a configured point count
 (``incremental_indexing_colpali_with_qdrant.py:132``). The analog here
 is an IVF layout: the first upsert that crosses the threshold trains a
-sampled KMeans coarse quantizer and writes a copy of the table
-``partitionBy(centroid_id)`` next to it; later upserts *incrementally*
-assign only the incoming points with the existing centroids (a codegen
-projection — no retrain, mirroring Qdrant's incremental indexing) and
-append to the layout. ``search`` then routes dense queries through the
-layout: the nprobe nearest centroids are picked driver-side (the
-centroid table is tiny) and the corpus scan becomes a literal
-``centroid_id IN (...)`` filter — statically partition-pruned, reading
-``nprobe/k_centroids`` of the data. ``nprobe = k_centroids`` (the
-default) is exhaustive probing ≡ the exact scan, so routed search
-stays oracle-checkable; callers opt into approximation by passing a
-smaller ``nprobe``.
+KMeans coarse quantizer on the bounded id-ordered prefix and writes a
+copy of the table ``partitionBy(centroid_id)`` next to it; later
+upserts *incrementally* assign only the incoming points with the
+existing centroids (a codegen projection — no retrain, mirroring
+Qdrant's incremental indexing) and append to the layout. ``search``
+then routes dense queries through the layout: the nprobe nearest
+centroids are picked driver-side (the centroid table is tiny) and the
+corpus scan becomes a literal ``centroid_id IN (...)`` filter —
+statically partition-pruned, reading ``nprobe/k_centroids`` of the
+data. ``nprobe = k_centroids`` (the default) is exhaustive probing ≡
+the exact scan, so routed search stays oracle-checkable; callers opt
+into approximation by passing a smaller ``nprobe``.
 
 Multivector collections index the same way, with one twist: the
 coarse quantizer sees each point's **mean-pooled** flat multivector
@@ -313,12 +313,91 @@ _QUERY_OBJECTS = (RecommendQuery, DiscoverQuery, ContextQuery,
 _ORDER_BY_TYPES = (NumericType, TimestampType)
 
 
-class Collection:
-    # auto-index KMeans trains driver-side on at most this many
-    # routing vectors (seeded sample; ~64k × 128-d ≈ 64 MB) — the
-    # FAISS sampled-train convention; assignment stays distributed
-    _TRAIN_CAP = 65_536
+def _drift_verdict(counts: dict, k: int, base: float | None,
+                   cell_cap: float, growth_cap: float,
+                   split: bool = True) -> dict | None:
+    """The drift verdict of one cell layout from its per-cell row
+    counts (footer counts — no Spark). ``balance_ratio`` is the max
+    cell over the fair share 1/k; a trained layout already sits at
+    its natural KMeans imbalance (uniform fixtures train to ~1.5–2.5×
+    fair share), so the drift signal is its GROWTH over ``base``, the
+    ratio recorded when the cells were trained. ``rebuild`` when the
+    growth exceeds ``growth_cap`` (the data moved since training: a
+    retrain re-places the cells); else ``split`` when the ratio exceeds
+    ``cell_cap`` (the data is dense there and a retrain would park it
+    in one cell again: split the hot cells in place) — ``rebuild`` for
+    a layout without an in-place split (``split=False``); else None.
+    None for a layout without rows."""
+    total = sum(counts.values())
+    if not total:
+        return None
+    max_frac = max(counts.values()) / total
+    ratio = max_frac * k
+    growth = ratio / base if base else None
+    action = None
+    if growth is not None and growth > growth_cap:
+        action = "rebuild"
+    elif ratio > cell_cap:
+        action = "split" if split else "rebuild"
+    verdict = {"cells": len(counts),
+               "max_cell_fraction": round(max_frac, 6),
+               "balance_ratio": round(ratio, 4),
+               "baseline_balance_ratio": base,
+               "balance_growth": round(growth, 4) if growth else None,
+               "cell_cap": cell_cap, "growth_cap": growth_cap,
+               "action": action,
+               "rebuild_recommended": action == "rebuild"}
+    if split:
+        verdict["split_recommended"] = action == "split"
+    return verdict
 
+
+class _CellLayout:
+    """One trained, cell-partitioned layout: the IVF points layout
+    (every column of the table, cells by ``centroid_id``, centroid
+    table beside it) or one PCA space's projected cells (``(id,
+    pvec)`` rows, cells by ``pcell`` carved in the compressed space,
+    components and centroids frozen in the space's meta). Both train
+    once past their threshold, append with frozen cells, meter drift
+    against the balance recorded when the cells were trained and
+    retrain on demand, through the same Collection methods."""
+
+    def __init__(self, coll: "Collection", space: str | None = None,
+                 pca: bool = False):
+        meta = coll.meta
+        self.cfg = meta if space is None else meta["vectors"][space]
+        self.space, self.pca = space, pca
+        if pca:
+            self.path, self.key = coll._pca_path_for(space), "pcell"
+            self.state = ("pca_mu", "pca_w", "pca_centroids",
+                          "pca_balance_ratio")
+            self.maintained = self.cfg.get("transform") == "pca"
+            self.threshold = int(meta.get("indexing_threshold") or 1)
+        else:
+            self.path, self.key = coll._ivf_points, "centroid_id"
+            self.state = ("index_built", "index_k", "index_balance_ratio")
+            # a transform collection's cells are its PCA space's
+            self.maintained = bool(meta.get("indexing_threshold")
+                                   and not meta.get("transform"))
+            self.threshold = meta.get("indexing_threshold")
+        self.baseline = self.state[-1]
+
+    @property
+    def trained(self) -> bool:
+        return bool(self.cfg.get(self.state[0]))
+
+    @property
+    def k(self) -> int:
+        if self.pca:
+            return len(self.cfg.get("pca_centroids") or ()) or 1
+        return int(self.cfg.get("index_k")
+                   or self.cfg.get("k_centroids") or 16)
+
+    def vec(self, vec_col: str) -> str:
+        return self.space or vec_col
+
+
+class Collection:
     def __init__(self, root: str, name: str):
         self.path = os.path.join(root, name)
         self.meta_path = os.path.join(root, f"{name}.meta.json")
@@ -364,9 +443,7 @@ class Collection:
         # a pending drift verdict (rebuild/split recommended but not
         # executed — drift_auto=None, or action="rebuild" under the
         # "split" policy) is the same optimizing-needed state
-        drift = self.index_drift()
-        pdrift = (self.pca_drift()
-                  if self.meta.get("transform") == "pca" else None)
+        drift, pdrift = self.index_drift(), self.pca_drift()
         # a transform="pca" collection's deferred build IS its index
         # (the raw auto-index is replaced — create_collection docs):
         # the pending state is "threshold crossed, transform
@@ -414,11 +491,10 @@ class Collection:
 
     def _state_paths(self) -> list[str]:
         """Every on-disk path that makes up this collection's state."""
-        spaces = list(self.meta.get("vectors") or ())
+        spaces = [None, *(self.meta.get("vectors") or ())]
         sparse = list(self.meta.get("sparse_vectors") or ())
         return [p for p in (self.path, self._ivf_points,
-                            self._ivf_centroids, self.path + ".codes",
-                            self.path + ".pca", self._hnsw_graphs,
+                            self._ivf_centroids, self._hnsw_graphs,
                             *(self._codes_path_for(s) for s in spaces),
                             *(self._pca_path_for(s) for s in spaces),
                             *(self._postings_path_for(s) for s in sparse),
@@ -538,152 +614,66 @@ class Collection:
         return self._partition_footer_counts(self._ivf_points,
                                              "centroid_id")
 
-    def index_drift(self, cell_cap: float | None = None,
-                    growth_cap: float | None = None) -> dict | None:
-        """IVF append-drift diagnostic, answered from parquet footers.
+    def index_drift(self) -> dict | None:
+        """IVF append-drift verdict, answered from parquet footers.
 
         Why it exists: post-threshold appends are assigned with the
-        FROZEN centroids and never retrain (``_refresh_index``), so a
+        FROZEN centroids and never retrain (``_refresh_cells``), so a
         distribution-shifted append stream silently skews the cells —
         the hot cell's probe cost grows toward its fraction of the
         corpus, and routed recall decays at the shifted region's
         boundaries (measured: stress.py::ivf_drift_stress, BASELINE.md
         §IVF-drift).
 
-        The meter: ``balance_ratio`` = max cell / fair share (1/k).
-        A fresh KMeans layout has a NATURAL imbalance (uniform-sphere
-        fixtures train to ~1.5–2.5× fair share), so the absolute
-        ratio alone can't separate "that's just the data" from drift;
-        the build path records its post-layout ratio in meta
-        (``index_balance_ratio``) and the drift signal is GROWTH
-        relative to that baseline.
-
-        The verdict distinguishes WHY the layout is skewed, because
-        the remedies differ (measured end-to-end in
+        The verdict (``_drift_verdict``) distinguishes WHY the layout
+        is skewed, because the remedies differ (measured end-to-end in
         stress.py::ivf_drift_stress):
 
-        - ``action="rebuild"``: growth > ``drift_growth_cap``
-          (default 1.5) — the distribution moved since training
-          (frozen-centroid appends); a full retrain re-places the
-          centroids. ``rebuild_index()``.
-        - ``action="split"``: growth within cap but absolute ratio >
-          ``drift_cell_cap`` (default 4.0) — the layout is as good as
-          training gets and the data is just DENSE there (at 10M+1M a
-          retrain still parks a tight 9 % blob in one cell); probes
-          touching it pay the hot fraction regardless of history.
+        - ``action="rebuild"``: ``balance_ratio`` (max cell / fair
+          share) grew past ``drift_growth_cap`` (meta, default 1.5) ×
+          the ratio recorded when the cells were trained
+          (``index_balance_ratio``) — the distribution moved since
+          training; ``rebuild_index()`` re-places the centroids.
+        - ``action="split"``: growth within cap but the ratio exceeds
+          ``drift_cell_cap`` (meta, default 4.0) — the layout is as
+          good as training gets and the data is just DENSE there (at
+          10M+1M a retrain still parks a tight 9 % blob in one cell);
           ``split_hot_cells()`` re-trains only the hot cells in place.
         - ``action=None``: healthy.
 
         Returns None when no IVF layout exists."""
-        if not self.has_index() or not os.path.isdir(self._ivf_points):
-            return None
-        cap = float(cell_cap if cell_cap is not None
-                    else self.meta.get("drift_cell_cap", 4.0))
-        gcap = float(growth_cap if growth_cap is not None
-                     else self.meta.get("drift_growth_cap", 1.5))
-        counts = self._ivf_footer_counts()
-        total = sum(counts.values())
-        if not total:
-            return None
-        k = int(self.meta.get("index_k")
-                or self.meta.get("k_centroids") or 16)
-        max_frac = max(counts.values()) / total
-        ratio = max_frac * k
-        base = self.meta.get("index_balance_ratio")
-        growth = (ratio / base) if base else None
-        if growth is not None and growth > gcap:
-            action = "rebuild"
-        elif ratio > cap:
-            action = "split"
-        else:
-            action = None
-        return {
-            "cells": len(counts),
-            "max_cell_fraction": round(max_frac, 6),
-            "balance_ratio": round(ratio, 4),
-            "baseline_balance_ratio": base,
-            "balance_growth": round(growth, 4) if growth else None,
-            "cell_cap": cap,
-            "growth_cap": gcap,
-            "action": action,
-            "rebuild_recommended": action == "rebuild",
-            "split_recommended": action == "split",
-        }
+        return self._layout_drift(_CellLayout(self))
 
-    def pca_drift(self, space: str | None = None,
-                  cell_cap: float | None = None,
-                  growth_cap: float | None = None) -> dict | None:
-        """Append-drift meter for a PCA-transformed space's ``pcell``
-        sidecar — ``index_drift()``'s twin, answered from parquet
-        footers: appends project + assign with the FROZEN
-        (mu, W, compressed-space centroids) and never retrain
-        (`_refresh_pca_one`), so a distribution-shifted append stream
-        skews the compressed cells exactly the way it skews the raw
-        IVF layout — the probe cost of the hot pcell grows toward its
-        corpus fraction and routed recall decays at the shifted
-        region's boundaries. Same caps/growth algebra as
-        ``index_drift()``, but only ONE action: both a growth breach
-        and an absolute-cap breach map to ``action="rebuild"`` —
-        there is no in-place split remedy, because the cells live in
-        the LEARNED subspace (a shifted stream also moves the optimal
-        mu/W, so re-carving cells under stale components just
-        re-partitions a wrong projection). The remedy is
+    def pca_drift(self, space: str | None = None) -> dict | None:
+        """``index_drift()``'s verdict for a PCA-transformed space's
+        ``pcell`` cells (the same cell layout: appends project and
+        assign with the FROZEN (mu, W, centroids) and never retrain,
+        so a shifted append stream skews the compressed cells the way
+        it skews the raw IVF layout), with ``split`` mapped to
+        ``rebuild``: there is no in-place split remedy, because the
+        cells live in the LEARNED subspace (a shifted stream also moves
+        the optimal mu/W, so re-carving cells under stale components
+        just re-partitions a wrong projection). The remedy is
         ``rebuild_transform()``. Returns None without a trained
         transform."""
-        cfg = (self.meta["vectors"][space] if space is not None
-               else self.meta)
-        if cfg.get("transform") != "pca" or "pca_mu" not in cfg:
-            return None
-        counts = self._partition_footer_counts(
-            self._pca_path_for(space), "pcell")
-        total = sum(counts.values())
-        if not total:
-            return None
-        k = len(cfg.get("pca_centroids") or ()) or 1
-        cap = float(cell_cap if cell_cap is not None
-                    else self.meta.get("drift_cell_cap", 4.0))
-        gcap = float(growth_cap if growth_cap is not None
-                     else self.meta.get("drift_growth_cap", 1.5))
-        max_frac = max(counts.values()) / total
-        ratio = max_frac * k
-        base = cfg.get("pca_balance_ratio")
-        growth = (ratio / base) if base else None
-        action = ("rebuild"
-                  if ((growth is not None and growth > gcap)
-                      or ratio > cap) else None)
-        return {
-            "cells": len(counts),
-            "max_cell_fraction": round(max_frac, 6),
-            "balance_ratio": round(ratio, 4),
-            "baseline_balance_ratio": base,
-            "balance_growth": round(growth, 4) if growth else None,
-            "cell_cap": cap,
-            "growth_cap": gcap,
-            "action": action,
-            "rebuild_recommended": action == "rebuild",
-        }
+        return self._layout_drift(_CellLayout(self, space, pca=True))
 
     def rebuild_transform(self, spark: SparkSession,
                           space: str | None = None,
                           id_col: str = "id",
                           vec_col: str = "embedding") -> dict | None:
-        """Full retrain + re-projection of a PCA-transformed space —
+        """Full retrain + re-projection of ONE PCA-transformed space —
         ``pca_drift()``'s remedy and the transform analog of
         ``rebuild_index()``: drop the frozen (mu, W, centroids,
         baseline) and re-run the deferred build against the CURRENT
         table (the bounded id-prefix now includes the shifted data,
         so components, cells, and the drift baseline all re-place).
-        Returns the refreshed ``pca_drift()``."""
-        cfg = (self.meta["vectors"][space] if space is not None
-               else self.meta)
-        if cfg.get("transform") != "pca":
+        Other spaces keep their files. Returns the refreshed
+        ``pca_drift()``."""
+        layout = _CellLayout(self, space, pca=True)
+        if not layout.maintained:
             raise ValueError("no PCA transform on this space")
-        for key in ("pca_mu", "pca_w", "pca_centroids",
-                    "pca_balance_ratio"):
-            cfg.pop(key, None)
-        self._save_meta()
-        shutil.rmtree(self._pca_path_for(space), ignore_errors=True)
-        self._refresh_pca(spark, None, id_col, vec_col, rewrote=True)
+        self._retrain(spark, layout, id_col, vec_col)
         return self.pca_drift(space)
 
     def _centroids(self, spark: SparkSession) -> list[list[float]]:
@@ -748,122 +738,196 @@ class Collection:
         return df.withColumn(out, assign_centroids(
             centroids, route, max_expr_literals=512))
 
-    def _refresh_index(self, spark: SparkSession, incoming: DataFrame | None,
-                       id_col: str, vec_col: str, rewrote: bool) -> None:
-        """Build or incrementally extend the IVF layout after an upsert.
+    # -- cell layouts: the IVF points layout and each PCA space ----------
 
-        First crossing of the threshold: train sampled KMeans on the
-        table, assign every row to its cell (``_assign_cells``), write
-        ``partitionBy(centroid_id)``. Afterwards:
-        assign only the incoming batch with the *existing* centroids
-        and append — one projection over the new rows, no retrain (a
-        merge that rewrote the table re-assigns the whole table the
-        same cheap way). Centroid drift is bounded by the quantizer
-        being coarse; a full retrain is an explicit rebuild_index().
-        """
-        thr = self.meta.get("indexing_threshold")
-        if not thr:
+    #: the IVF cells and the layouts keyed on them, in the one order
+    #: they derive: codes over the cells, graphs over the codes
+    _CELL_STACK = ("cells", "codes", "graphs")
+
+    def _refresh_cell_stack(self, spark: SparkSession,
+                            incoming: DataFrame | None, id_col: str,
+                            vec_col: str, rewrote: bool,
+                            stages: tuple = _CELL_STACK) -> None:
+        """Re-derive the IVF cells and the layouts keyed on them in
+        their one order: the cells, the codes sidecar partitioned by
+        the same ``centroid_id``, then the graphs (a quantized
+        collection builds them over the codes, so the codes must be
+        current first). Writes, the threshold crossing, a quantizer
+        switch, a split and a retrain all run through here; ``stages``
+        names the suffix a caller re-derives (a split or a quantizer
+        switch starts at the codes) or the cells alone (a payload-only
+        write)."""
+        run = {"cells": functools.partial(self._refresh_cells,
+                                          _CellLayout(self)),
+               "codes": self._refresh_quant, "graphs": self._refresh_hnsw}
+        for stage in stages:
+            run[stage](spark, incoming, id_col, vec_col, rewrote)
+
+    def _pca_layouts(self) -> list[_CellLayout]:
+        """Every PCA-transformed space's cell layout."""
+        layouts = (_CellLayout(self, s, pca=True)
+                   for s in self.meta.get("vectors") or [None])
+        return [lay for lay in layouts if lay.maintained]
+
+    def _refresh_cells(self, layout: _CellLayout, spark: SparkSession,
+                       incoming: DataFrame | None, id_col: str,
+                       vec_col: str, rewrote: bool) -> None:
+        """Maintain one cell layout after a write. The first write at
+        or past its threshold trains the cells (``_train_cells``) and
+        writes every row; afterwards rows take the FROZEN cells — only
+        the incoming batch is assigned and appended (one projection
+        over the new rows), and a rewrite (merge conflict / delete /
+        compact) re-assigns the surviving table the same cheap way.
+        Cells never retrain on a write: drift is metered
+        (``_layout_drift``) and remedied by an explicit retrain. The
+        balance baseline is recorded only when cells are trained, so a
+        rewrite keeps a pending verdict."""
+        if not layout.maintained:
             return
-        if self.meta.get("transform"):
-            # transform collections route through IVF cells carved in
-            # the COMPRESSED space (_refresh_pca): the threshold gates
-            # the PCA train instead of a raw-vector layout
-            return
-        if not self.has_index():
-            # footer fast count: value-equal to the scan count (parquet
-            # footers are exact) without the per-upsert count JOB
-            n = self.count(spark, exact=False)
-            if n < thr:
+        fresh = not layout.trained
+        if fresh:
+            source = self._train_cells(spark, layout, id_col, vec_col)
+            if source is None:
                 return
-            table = self.read(spark)
-            if vec_col not in table.columns or _is_nested(table, vec_col):
-                return  # legacy nested layout: no flat routing vector
-            k = int(self.meta.get("k_centroids") or 16)
-            # Train driver-side on a bounded seeded sample (kmeans_np)
-            # — the FAISS convention SCALE.md prescribes, and what the
-            # Spark-ML path's sample_fraction approximated with ~10×
-            # the jobs (each KMeans iteration is a distributed pass;
-            # measured 4-6 s of pure job latency at 5k rows). One
-            # sample-collect job bounded by _TRAIN_CAP rows, a
-            # millisecond in-memory train, then the same codegen'd
-            # assignment expression over one scan. Bonus: kmeans_np is
-            # bit-deterministic, so the layout is reproducible across
-            # processes (the *_det-tier property, now on the catalog
-            # path too).
-            from .operators.ann import kmeans_np
+        else:
+            source = (self.read(spark) if rewrote or incoming is None
+                      else incoming)
+        self._write_cells(spark, layout, source, id_col, vec_col,
+                          "overwrite" if fresh or rewrote else "append")
+        if fresh:
+            self._record_baseline(layout)
 
-            frac = self.meta.get("train_fraction")
-            rv = as_double(self._routing(table, vec_col))
-            # FAISS's 256-points-per-centroid training convention,
-            # floored for tiny k and ceilinged by _TRAIN_CAP
-            cap = max(4096, min(self._TRAIN_CAP, 256 * k))
-            if frac is not None:
-                # legacy knob: a user-declared sample fraction (seeded
-                # per partition, so run-reproducible only for a frozen
-                # file layout); capped because the set is collected
-                routing = table.select(rv.alias("__r")).sample(
-                    fraction=float(frac), seed=42)
-                X = [r["__r"] for r in routing.limit(cap).collect()]
-            else:
-                # deterministic id-ordered prefix — the same
-                # `_train_prefix` discipline the PCA/PQ trainers use,
-                # so the cells are bit-reproducible across processes
-                # (LIMIT without ORDER returns rows in scan order,
-                # which moves with parquet row-group layout; measured
-                # as run-to-run centroid swings at the hnsw stress).
-                # Known tradeoff: when ids correlate with the data
-                # distribution (time-ordered ingest), the prefix
-                # trains on early data only — the drift meter
-                # (`index_drift` growth vs the build baseline) is the
-                # designed catch for exactly that skew, and a caller
-                # who wants a spread train set opts into
-                # `train_fraction` (the sampled path above).
-                # The two-step fetch keeps the driver transfer at
-                # cap×d doubles whatever the table width.
-                rt = table.select(F.col(id_col), rv.alias("__rv"))
-                X = self._train_prefix(rt, id_col, "__rv", cap)
-            if len(X) < min(k, n):
-                # an unlucky tiny sample (user fraction × small table)
-                # must not starve the trainer below k rows
-                X = [r["__r"] for r in table.select(
-                    rv.alias("__r")).limit(k).collect()]
-            cents = kmeans_np(X, min(k, len(X)), seed=42)
-            assigned = self._assign_cells(
-                table, cents, self._routing(table, vec_col))
-            assigned.write.mode("overwrite").partitionBy(
-                "centroid_id").parquet(self._ivf_points)
-            # LocalRelation write: createDataFrame of a ≤k-row literal
-            # list parallelizes across defaultParallelism — a 32-task
-            # write job emitting 32 near-empty files for 16 rows; the
-            # SQL-literal frame writes one file in one task (same
-            # float bits: repr round-trips through Double.parseDouble)
-            local_literal_df(
-                spark, [(i, [float(x) for x in c])
-                        for i, c in enumerate(cents)],
-                "centroid_id int, centroid array<double>",
-            ).write.mode("overwrite").parquet(self._ivf_centroids)
-            self._centroid_cache = None
-            self.meta["index_built"] = True
-            # build-time balance baseline (footer walk, no job): the
-            # natural KMeans imbalance this layout starts from —
-            # index_drift() measures append skew as growth over it
-            counts = self._ivf_footer_counts()
-            self.meta["index_k"] = len(cents)
-            if counts:
-                self.meta["index_balance_ratio"] = round(
-                    max(counts.values()) / sum(counts.values())
-                    * len(cents), 4)
-            self._save_meta()
+    def _train_cells(self, spark: SparkSession, layout: _CellLayout,
+                     id_col: str, vec_col: str) -> DataFrame | None:
+        """The one cell trainer, once the table holds the layout's
+        threshold of points: the id-ordered prefix of the routing
+        vectors (``_train_prefix``: bit-reproducible across processes,
+        so oracle factories re-derive it from the same parquet), PCA
+        components fit on it for a PCA space (the cells are then
+        carved in the projected space), and ``kmeans_np(seed=42)``
+        cells — a millisecond driver-side train (the FAISS convention)
+        where the Spark-ML path cost a distributed pass per
+        iteration. Known tradeoff: when ids correlate with the data
+        (time-ordered ingest) the prefix trains on early data only;
+        the drift meter is the designed catch for exactly that skew.
+        Freezes the trained state; returns the table it trained over
+        (None: not trained)."""
+        from .operators.ann import kmeans_np
+        from .operators.pca import PCA_TRAIN_CAP, pca_project_py, pca_train_np
+
+        if self.count(spark, exact=False) < layout.threshold:
+            return None  # footer fast count: no per-upsert count job
+        table = self.read(spark)
+        if vec_col not in table.columns or _is_nested(table, vec_col):
+            return None  # legacy nested layout: no flat routing vector
+        k = int(self.meta.get("k_centroids")
+                or layout.cfg.get("k_centroids") or 16)
+        # a PCA fit takes the whole bounded prefix; raw cells take
+        # FAISS's 256 points per centroid, floored for tiny k
+        cap = (PCA_TRAIN_CAP if layout.pca
+               else max(4096, min(PCA_TRAIN_CAP, 256 * k)))
+        X = self._train_prefix(table.select(F.col(id_col), as_double(
+            self._routing(table, vec_col)).alias("__rv")),
+            id_col, "__rv", cap)
+        if not X:
+            return None
+        if layout.pca:
+            mu, W = pca_train_np(X, int(layout.cfg["pca_dim"]))
+            layout.cfg["pca_mu"], layout.cfg["pca_w"] = mu, W
+            X = [pca_project_py(mu, W, v) for v in X]
+        self._store_centroids(spark, layout,
+                              kmeans_np(X, min(k, len(X)), seed=42))
+        return table
+
+    def _store_centroids(self, spark: SparkSession, layout: _CellLayout,
+                         cents) -> None:
+        """Freeze a layout's trained (or split) cells: a PCA space
+        keeps them in its meta; the IVF layout writes its centroid
+        table — a SQL-literal frame, one file in one task
+        (createDataFrame of a ≤k-row list parallelizes into
+        defaultParallelism near-empty files; repr round-trips the
+        doubles through Double.parseDouble) — and records its cell
+        count."""
+        cents = [[float(x) for x in c] for c in cents]
+        if layout.pca:
+            layout.cfg["pca_centroids"] = cents
             return
+        local_literal_df(
+            spark, list(enumerate(cents)),
+            "centroid_id int, centroid array<double>",
+        ).write.mode("overwrite").parquet(self._ivf_centroids)
+        self._centroid_cache = None
+        self.meta.update(index_built=True, index_k=len(cents))
 
-        source = self.read(spark) if rewrote or incoming is None else incoming
+    def _write_cells(self, spark: SparkSession, layout: _CellLayout,
+                     source: DataFrame, id_col: str, vec_col: str,
+                     mode: str) -> None:
+        """The one cell writer: each row of ``source`` takes its
+        nearest frozen cell (``_assign_cells``) and lands in
+        ``partitionBy(key)``. IVF rows keep every column and route on
+        ``_routing``; a PCA space's rows are ``(id, pvec)``, projected
+        with its frozen (mu, W)."""
         if vec_col not in source.columns or _is_nested(source, vec_col):
             return
-        assigned = self._assign_cells(source, self._centroids(spark),
-                                      self._routing(source, vec_col))
-        mode = "overwrite" if rewrote else "append"
-        assigned.write.mode(mode).partitionBy(
-            "centroid_id").parquet(self._ivf_points)
+        if layout.pca:
+            from .operators.pca import pca_project_expr
+
+            cfg = layout.cfg
+            source = source.filter(F.col(vec_col).isNotNull()).select(
+                F.col(id_col), pca_project_expr(
+                    cfg["pca_mu"], cfg["pca_w"], vec_col=vec_col
+                ).alias("pvec"))
+            route, cents = "pvec", cfg["pca_centroids"]
+        else:
+            route = self._routing(source, vec_col)
+            cents = self._centroids(spark)
+        (self._assign_cells(source, cents, route, out=layout.key)
+         .write.mode(mode).partitionBy(layout.key).parquet(layout.path))
+
+    def _record_baseline(self, layout: _CellLayout) -> None:
+        """Record the balance ratio of just-trained cells (first
+        build, retrain, split) as the layout's drift baseline: the
+        natural KMeans imbalance the cells start from."""
+        verdict = self._layout_drift(layout)
+        if verdict:
+            layout.cfg[layout.baseline] = verdict["balance_ratio"]
+        self._save_meta()
+
+    def _layout_drift(self, layout: _CellLayout) -> dict | None:
+        """The drift verdict of a trained layout from its partition
+        footers (no Spark job); the caps are the collection's
+        ``drift_cell_cap`` / ``drift_growth_cap``."""
+        if not layout.trained:
+            return None
+        return _drift_verdict(
+            self._partition_footer_counts(layout.path, layout.key),
+            layout.k, layout.cfg.get(layout.baseline),
+            float(self.meta.get("drift_cell_cap", 4.0)),
+            float(self.meta.get("drift_growth_cap", 1.5)),
+            split=not layout.pca)
+
+    def _drop_cells(self, layout: _CellLayout) -> None:
+        """Forget a layout's cells: trained state and baseline leave
+        the meta, the files go."""
+        for key in layout.state:
+            layout.cfg.pop(key, None)
+        shutil.rmtree(layout.path, ignore_errors=True)
+        if not layout.pca:
+            shutil.rmtree(self._ivf_centroids, ignore_errors=True)
+            self._centroid_cache = None
+        self._save_meta()
+
+    def _retrain(self, spark: SparkSession, layout: _CellLayout,
+                 id_col: str, vec_col: str) -> None:
+        """Retrain one cell layout on the current table and re-derive
+        only the layouts keyed on it: the IVF cells take their codes
+        and graphs along, a PCA space nothing else."""
+        self._drop_cells(layout)
+        if layout.pca:
+            self._refresh_cells(layout, spark, None, id_col,
+                                layout.vec(vec_col), True)
+        else:
+            self._refresh_cell_stack(spark, None, id_col, vec_col, True)
 
     # -- per-segment HNSW graphs (hnsw_config parity) ---------------------
 
@@ -993,9 +1057,9 @@ class Collection:
         """Maintain the per-cell HNSW graph sidecar after a write
         (``hnsw_config`` collections — Qdrant builds one HNSW per
         segment past ``indexing_threshold``; here segment = IVF cell,
-        the routed composition). Runs AFTER ``_refresh_index`` in the
-        ``_post_write`` chain, so the ``.ivf`` layout already holds
-        the appended rows. ONE graph job and ONE write per refresh: a
+        the routed composition). Runs after the cells and the codes
+        (``_refresh_cell_stack``), so the ``.ivf`` layout already
+        holds the appended rows. ONE graph job and ONE write per refresh: a
         rewrite or first build regenerates every cell's graph; an
         append touches only the cells the incoming batch lands in
         (dynamic partition overwrite — the ``split_hot_cells``
@@ -1163,13 +1227,12 @@ class Collection:
 
     def rebuild_index(self, spark: SparkSession, vec_col: str = "embedding",
                       id_col: str = "id") -> None:
-        """Explicit full retrain + layout rewrite (the maintenance
-        analog of dropping and re-creating Qdrant's index)."""
-        self.meta.pop("index_built", None)
-        self.meta.pop("hnsw_built", None)
-        self._centroid_cache = None
-        self._save_meta()
-        self._post_write(spark, None, id_col, vec_col, rewrote=True)
+        """Explicit full retrain of the IVF cells, re-deriving the
+        codes and graphs keyed on them (the maintenance analog of
+        dropping and re-creating Qdrant's index); the ``drift_auto``
+        policy then applies to the fresh layout."""
+        self._retrain(spark, _CellLayout(self), id_col, vec_col)
+        self._auto_drift(spark, id_col, vec_col)
 
     def split_hot_cells(self, spark: SparkSession,
                         cap_fraction: float | None = None,
@@ -1190,11 +1253,11 @@ class Collection:
         cells are renumbered 0..m-1: cold directories are renamed
         (metadata-only on a filesystem; a manifest update at 100 TB),
         the centroid table is rewritten in the new order, and the
-        drift baseline resets to the post-split layout. Collections
-        with a quantized codes sidecar rebuild it over the new cell
-        keys (same policy as a rewriting upsert). Dense single-space
-        collections only — the multivector routing sidecar and named
-        spaces route through different columns; use rebuild_index().
+        drift baseline resets to the post-split layout. The codes and
+        graphs keyed on the cells re-derive over the new cell ids.
+        Dense single-space collections only — the multivector routing
+        sidecar and named spaces route through different columns; use
+        rebuild_index().
 
         Returns the refreshed ``index_drift()`` dict (a no-op split —
         nothing over the cap — returns the current one unchanged)."""
@@ -1206,59 +1269,36 @@ class Collection:
                 "collections; use rebuild_index()")
         from .operators.ann import ivf_split_hot_cells
 
-        k = int(self.meta.get("index_k")
-                or self.meta.get("k_centroids") or 16)
+        layout = _CellLayout(self)
         cap = (cap_fraction if cap_fraction is not None
-               else float(self.meta.get("drift_cell_cap", 4.0)) / k)
+               else float(self.meta.get("drift_cell_cap", 4.0)) / layout.k)
         cents = self._centroids(spark)
         counts = self._ivf_footer_counts()
-        table = _read_parquet(spark, self._ivf_points)
         re_assigned, cent_rows = ivf_split_hot_cells(
-            table, cents, cap_fraction=cap, id_col=id_col,
-            vec_col=vec_col, counts=counts)
+            _read_parquet(spark, layout.path), cents, cap_fraction=cap,
+            id_col=id_col, vec_col=vec_col, counts=counts)
         if len(cent_rows) == len(cents):
             return self.index_drift()
-        base_next = len(cents)
+
+        def cell(cid: int) -> str:
+            return os.path.join(layout.path, f"centroid_id={cid}")
+
         # write ONLY the new sub-partitions; retire the hot dirs
-        (re_assigned.filter(F.col("centroid_id") >= base_next)
+        (re_assigned.filter(F.col("centroid_id") >= len(cents))
          .write.mode("append").partitionBy("centroid_id")
-         .parquet(self._ivf_points))
-        kept = {cid for cid, _ in cent_rows}
-        for cid in set(counts) - kept:
-            shutil.rmtree(
-                os.path.join(self._ivf_points, f"centroid_id={cid}"),
-                ignore_errors=True)
+         .parquet(layout.path))
+        for cid in set(counts) - {cid for cid, _ in cent_rows}:
+            shutil.rmtree(cell(cid), ignore_errors=True)
         # renumber to dense 0..m-1 (ascending old id → target ≤ old
         # id, so in-order renames never collide)
         cent_rows.sort(key=lambda t: t[0])
         for new_id, (old_id, _) in enumerate(cent_rows):
             if new_id != old_id:
-                os.rename(
-                    os.path.join(self._ivf_points,
-                                 f"centroid_id={old_id}"),
-                    os.path.join(self._ivf_points,
-                                 f"centroid_id={new_id}"))
-        local_literal_df(
-            spark, [(i, [float(x) for x in c])
-                    for i, (_, c) in enumerate(cent_rows)],
-            "centroid_id int, centroid array<double>",
-        ).write.mode("overwrite").parquet(self._ivf_centroids)
-        self._centroid_cache = None
-        new_counts = self._ivf_footer_counts()
-        self.meta["index_k"] = len(cent_rows)
-        if new_counts:
-            self.meta["index_balance_ratio"] = round(
-                max(new_counts.values()) / sum(new_counts.values())
-                * len(cent_rows), 4)
-        self._save_meta()
-        if self.meta.get("quantization"):
-            # the composed cells-codes layout keys on centroid_id —
-            # rebuild it over the new cells (rewrote-upsert policy)
-            self._refresh_quant(spark, None, id_col, vec_col, True)
-        if self._has_hnsw():
-            # graphs key on the cell ids too — rebuild (cost ∝ corpus;
-            # a split is a rare maintenance event)
-            self._refresh_hnsw(spark, None, id_col, vec_col, True)
+                os.rename(cell(old_id), cell(new_id))
+        self._store_centroids(spark, layout, [c for _, c in cent_rows])
+        self._record_baseline(layout)
+        self._refresh_cell_stack(spark, None, id_col, vec_col, True,
+                                 ("codes", "graphs"))
         return self.index_drift()
 
     _UNSET = object()
@@ -1363,38 +1403,24 @@ class Collection:
         if quantization is not self._UNSET:
             self._set_quantization(spark, None, quantization, id_col,
                                    vec_col)
-            if self.meta.get("hnsw") and self._has_data(spark) \
-                    and self.has_index():
-                self._refresh_hnsw(spark, None, id_col, vec_col,
-                                   rewrote=True)
         if indexing_threshold is not self._UNSET:
             self.meta["indexing_threshold"] = indexing_threshold
             if indexing_threshold is None and self.has_index():
                 # a disabled threshold must take the LAYOUT with it:
-                # _refresh_index early-returns on thr=None, so a live
-                # layout would go stale on the next upsert while
-                # search kept routing through it — silently dropping
-                # new points from every non-exact search
-                self.meta.pop("index_built", None)
-                self.meta.pop("hnsw_built", None)
-                self._centroid_cache = None
-                shutil.rmtree(self._ivf_points, ignore_errors=True)
-                shutil.rmtree(self._ivf_centroids, ignore_errors=True)
+                # the cells are no longer maintained, so a live layout
+                # would go stale on the next upsert while search kept
+                # routing through it — silently dropping new points
+                # from every non-exact search
+                self._drop_cells(_CellLayout(self))
                 # graphs shard on the cells — they go with the layout
+                self.meta.pop("hnsw_built", None)
                 shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
             self._save_meta()
             if (indexing_threshold is not None and self._has_data(spark)
                     and not self.has_index()
                     and self.count(spark, exact=False) >= indexing_threshold):
-                # the layouts a threshold-crossing upsert derives: the
-                # cells, then the codes sidecar over them (re-encoded
-                # cells-partitioned), then the graphs over those
-                self._refresh_index(spark, None, id_col, vec_col,
-                                    rewrote=True)
-                self._refresh_quant(spark, None, id_col, vec_col,
-                                    rewrote=True)
-                self._refresh_hnsw(spark, None, id_col, vec_col,
-                                   rewrote=True)
+                # the layouts a threshold-crossing upsert derives
+                self._refresh_cell_stack(spark, None, id_col, vec_col, True)
         if drift_auto is not self._UNSET:
             _drift_auto_rule(drift_auto, self.meta.get("indexing_threshold"),
                              self.meta.get("transform"),
@@ -1435,7 +1461,9 @@ class Collection:
         space) under the create rules: the old quantizer's frozen train
         params go, HNSW graphs built over its codes are dropped, and the
         codes sidecar is dropped (``q=None``) or re-encoded over the
-        current table."""
+        current table. The single space re-derives the cell stack from
+        the codes on, so its graphs rebuild over the new codes (or
+        over full vectors on None)."""
         cfg = self.meta if space is None else self.meta["vectors"][space]
         rules = _dense_space_rules(
             cfg["dim"], cfg.get("multivector"), q, None, None,
@@ -1452,9 +1480,14 @@ class Collection:
         self._save_meta()
         if q is None:
             shutil.rmtree(self._codes_path_for(space), ignore_errors=True)
-        elif self._has_data(spark):
-            self._refresh_quant_one(spark, None, id_col, space or vec_col,
-                                    True, cfg, space)
+        if not self._has_data(spark):
+            return
+        if space is None:
+            self._refresh_cell_stack(spark, None, id_col, vec_col, True,
+                                     ("codes", "graphs"))
+        elif q is not None:
+            self._refresh_quant_one(spark, None, id_col, space, True, cfg,
+                                    space)
 
     # -- named vector spaces (Qdrant vectors_config={name: ...}) ----------
 
@@ -1772,10 +1805,10 @@ class Collection:
                       cap: int) -> list[list[float]]:
         """First ``cap`` rows BY ID as python float lists — the
         deterministic bounded train set every driver-side trainer
-        (PCA, PQ/OPQ) uses. Two steps on purpose: the id frontier
-        first (a TakeOrdered over bare ids — ≤ tasks×cap×8 B to the
-        driver), then ONE filtered scan collecting exactly those
-        rows' vectors. Collecting vectors through
+        (IVF and PCA cells, PQ/OPQ codebooks) uses. Two steps on
+        purpose: the id frontier first (a TakeOrdered over bare ids —
+        ≤ tasks×cap×8 B to the driver), then ONE filtered scan
+        collecting exactly those rows' vectors. Collecting vectors through
         ``orderBy().limit(cap)`` directly ships every partition's
         top-``cap`` VECTORS to the driver before the final take —
         32 tasks × 65536 × 64 doubles ≈ 1 GB at 2M×64, over
@@ -1832,7 +1865,7 @@ class Collection:
             # the table (a flat-multivector space pools every SUBVECTOR,
             # fp16 storage decoded first so codes quantize the stored
             # values); PQ/OPQ codebooks train on the id-ordered bounded
-            # prefix (the _refresh_pca_one fetch: a TakeOrdered heap,
+            # prefix (the _train_cells fetch: a TakeOrdered heap,
             # ≤ PCA_TRAIN_CAP rows to the driver — reproducible by an
             # oracle factory from the same parquet). Below pq_codes
             # train rows the quantizer stays untrained and searches
@@ -1857,8 +1890,8 @@ class Collection:
         # partitionBy(centroid_id) so the quantized prefetch inside
         # probed cells is statically partition-pruned — the composed
         # read path scans (nprobe/kc) × the 4-32×-smaller codes, not
-        # the full-precision cells. Runs AFTER _refresh_index in
-        # _post_write, so the centroid set is current. A flat-layout
+        # the full-precision cells. Runs AFTER the cells
+        # (_refresh_cell_stack), so the centroid set is current. A flat-layout
         # sidecar left from before the index crossed its threshold is
         # re-encoded whole (one scan, same cost shape as the index
         # build that just happened).
@@ -1880,7 +1913,7 @@ class Collection:
         # in place, which a fresh global argmin over the merged
         # centroid set does not always reproduce — codes must share
         # the points layout's cells for probe pruning to be complete.
-        # Gated on indexing_threshold: only then does _refresh_index
+        # Gated on indexing_threshold: only then does _refresh_cells
         # maintain the layout on every write (a threshold dropped by
         # update_collection would leave it stale).
         use_layout = (cells and (rewrote or incoming is None)
@@ -1974,96 +2007,6 @@ class Collection:
             [F.col(qz.key).alias("score")] if with_scores else []))
 
     # -- PCA transform (FAISS "PCA,IVF" as collection config) -------------
-
-    def _refresh_pca(self, spark: SparkSession, incoming: DataFrame | None,
-                     id_col: str, vec_col: str, rewrote: bool) -> None:
-        """Maintain each PCA-transformed space's projected sidecar
-        after a write — the ``_refresh_quant`` discipline. Training
-        (mean + top-r eigenvectors + compressed-space KMeans cells)
-        happens ONCE, when the collection first reaches its
-        ``indexing_threshold`` (Qdrant's deferred server-side index
-        build, ``incremental_indexing_colpali_with_qdrant.py:132``;
-        named spaces train at first write), and the components freeze
-        in the meta; afterwards appends project only the incoming
-        batch with the frozen ``(mu, W)`` and a rewrite (merge
-        conflict / delete / compact) re-projects the surviving
-        table."""
-        named = self.meta.get("vectors")
-        if named:
-            for sname, scfg in named.items():
-                if scfg.get("transform") == "pca":
-                    self._refresh_pca_one(spark, incoming, id_col,
-                                          sname, rewrote, scfg, sname,
-                                          threshold=1)
-            return
-        if self.meta.get("transform") == "pca":
-            thr = int(self.meta.get("indexing_threshold") or 1)
-            self._refresh_pca_one(spark, incoming, id_col, vec_col,
-                                  rewrote, self.meta, None,
-                                  threshold=thr)
-
-    def _refresh_pca_one(self, spark: SparkSession,
-                         incoming: DataFrame | None, id_col: str,
-                         vec_col: str, rewrote: bool, cfg: dict,
-                         space: str | None, threshold: int) -> None:
-        from .operators.ann import kmeans_np
-        from .operators.pca import (
-            PCA_TRAIN_CAP,
-            pca_project_expr,
-            pca_project_py,
-            pca_train_np,
-        )
-
-        if "pca_mu" not in cfg:
-            if (not self._has_data(spark)
-                    or self.count(spark, exact=False) < threshold):
-                return
-            table = self.read(spark)
-            if vec_col not in table.columns or _is_nested(table, vec_col):
-                return
-            # bounded deterministic train set: the first PCA_TRAIN_CAP
-            # rows BY ID — reproducible by the oracle factory from the
-            # same parquet, unlike a partition-order sample; fetched
-            # via the two-step `_train_prefix` (ids first, then one
-            # filtered vector scan — the direct orderBy().limit()
-            # collect over vectors blows maxResultSize at 2M×64)
-            X = self._train_prefix(table, id_col, vec_col,
-                                   PCA_TRAIN_CAP)
-            if not X:
-                return
-            mu, W = pca_train_np(X, int(cfg["pca_dim"]))
-            proj = [pca_project_py(mu, W, v) for v in X]
-            kc = int(self.meta.get("k_centroids")
-                     or cfg.get("k_centroids") or 16)
-            cents = kmeans_np(proj, min(kc, len(proj)), seed=42)
-            cfg["pca_mu"], cfg["pca_w"] = mu, W
-            cfg["pca_centroids"] = [[float(x) for x in c] for c in cents]
-            self._save_meta()
-            incoming, rewrote = None, True  # project the whole table once
-        source = (self.read(spark) if rewrote or incoming is None
-                  else incoming)
-        if vec_col not in source.columns:
-            return
-        pe = pca_project_expr(cfg["pca_mu"], cfg["pca_w"],
-                              vec_col=vec_col)
-        projected = self._assign_cells(
-            source.filter(F.col(vec_col).isNotNull())
-            .select(F.col(id_col), pe.alias("pvec")),
-            cfg["pca_centroids"], "pvec", out="pcell")
-        mode = "overwrite" if rewrote else "append"
-        (projected.write.mode(mode).partitionBy("pcell")
-         .parquet(self._pca_path_for(space)))
-        if rewrote:
-            # record the post-(re)build balance as the drift baseline
-            # (the index_balance_ratio discipline: the absolute ratio
-            # alone can't separate "that's just the data" from drift)
-            counts = self._partition_footer_counts(
-                self._pca_path_for(space), "pcell")
-            if counts and cfg.get("pca_centroids"):
-                cfg["pca_balance_ratio"] = round(
-                    max(counts.values()) / sum(counts.values())
-                    * len(cfg["pca_centroids"]), 4)
-                self._save_meta()
 
     def _pca_shortlist(self, spark: SparkSession, qvs: list, m: int,
                        id_col: str, cfg: dict, space: str | None,
@@ -2213,23 +2156,22 @@ class Collection:
         layout that copies the payload — is re-derived; the codes,
         graph, postings and PCA sidecars hold ids and vector data
         only and keep their bytes."""
-        self._refresh_index(spark, incoming, id_col, vec_col, rewrote)
+        self._refresh_cell_stack(
+            spark, incoming, id_col, vec_col, rewrote,
+            self._CELL_STACK if vectors_changed else ("cells",))
         if vectors_changed:
-            # quant BEFORE hnsw: quantized collections build their
-            # graphs over the codes sidecar, so the codes must be
-            # current first
-            self._refresh_quant(spark, incoming, id_col, vec_col, rewrote)
-            self._refresh_hnsw(spark, incoming, id_col, vec_col, rewrote)
             self._refresh_postings(spark, incoming, id_col, rewrote)
-            self._refresh_pca(spark, incoming, id_col, vec_col, rewrote)
+            for layout in self._pca_layouts():
+                self._refresh_cells(layout, spark, incoming, id_col,
+                                    layout.vec(vec_col), rewrote)
         self._auto_drift(spark, id_col, vec_col)
 
     def _auto_drift(self, spark: SparkSession, id_col: str,
                     vec_col: str) -> None:
-        """Execute the ``drift_auto`` policy after a write —
-        ``index_drift()`` produces action-typed verdicts; this is the
-        consumer (Qdrant analogy: the server's optimizer re-optimizes
-        segments after writes without being asked). Policies:
+        """Execute the ``drift_auto`` policy after a write — the
+        consumer of the cell layouts' action-typed verdicts (Qdrant
+        analogy: the server's optimizer re-optimizes segments after
+        writes without being asked). Policies:
 
         - ``None`` (default): never act — a pending verdict surfaces
           as ``info()["status"] == "yellow"`` either way.
@@ -2237,43 +2179,24 @@ class Collection:
           ``split`` (in-place, cost ∝ hot data, probe semantics
           preserved); ``rebuild`` verdicts still only surface — a
           full retrain is never implicit under this policy.
-        - ``"rebuild"``: full autonomy — ``rebuild_index()`` on
-          ``rebuild`` verdicts (then the split remedy once if the
-          fresh layout still has a legitimately-dense cell over the
-          absolute cap), ``split_hot_cells()`` on ``split`` verdicts,
-          and ``rebuild_transform()`` on a PCA sidecar's
-          ``pca_drift()`` rebuild verdict.
+        - ``"rebuild"``: full autonomy — retrain the layout on a
+          ``rebuild`` verdict (the IVF cells as ``rebuild_index()``,
+          a PCA space as ``rebuild_transform()``; then the split
+          remedy once if the fresh IVF layout still has a
+          legitimately-dense cell over the absolute cap), and
+          ``split_hot_cells()`` on ``split`` verdicts.
 
-        The check itself is parquet-footer math (no scan);
-        reentrancy-guarded because ``rebuild_index()`` runs
-        ``_post_write`` itself."""
+        The check itself is parquet-footer math (no scan)."""
         policy = self.meta.get("drift_auto")
-        if not policy or getattr(self, "_in_auto_drift", False):
+        if not policy:
             return
-        action = (self.index_drift() or {}).get("action")
-        p_action = ((self.pca_drift() or {}).get("action")
-                    if self.meta.get("transform") == "pca" else None)
-        if not action and not p_action:
-            return
-        self._in_auto_drift = True
-        try:
+        for layout in (_CellLayout(self), *self._pca_layouts()):
+            action = (self._layout_drift(layout) or {}).get("action")
+            if action == "rebuild" and policy == "rebuild":
+                self._retrain(spark, layout, id_col, vec_col)
+                action = (self._layout_drift(layout) or {}).get("action")
             if action == "split":
-                self.split_hot_cells(spark, vec_col=vec_col,
-                                     id_col=id_col)
-            elif action == "rebuild" and policy == "rebuild":
-                self.rebuild_index(spark, vec_col=vec_col,
-                                   id_col=id_col)
-                after = self.index_drift()
-                if (after or {}).get("action") == "split":
-                    self.split_hot_cells(spark, vec_col=vec_col,
-                                         id_col=id_col)
-            if p_action == "rebuild" and policy == "rebuild":
-                # the transform sidecar's only remedy is a full
-                # retrain — never implicit under the "split" policy
-                self.rebuild_transform(spark, id_col=id_col,
-                                       vec_col=vec_col)
-        finally:
-            self._in_auto_drift = False
+                self.split_hot_cells(spark, vec_col=vec_col, id_col=id_col)
 
     # -- S8: upsert -------------------------------------------------------
 
@@ -4550,7 +4473,6 @@ def create_collection(root: str, name: str, dim: int | None = None,
                       normalize: bool | None = None,
                       indexing_threshold: int | None = None,
                       k_centroids: int = 16,
-                      train_fraction: float | None = None,
                       vectors: dict | None = None,
                       quantization: str | None = None,
                       shard_key: str | None = None,
@@ -4570,9 +4492,12 @@ def create_collection(root: str, name: str, dim: int | None = None,
     ``indexing_threshold`` mirrors Qdrant's deferred index build
     (``:132``): once the collection holds at least that many points,
     the next upsert builds the IVF layout (``k_centroids`` coarse
-    cells, KMeans trained on ``train_fraction`` of the data — None
-    trains on everything, fine below ~1M rows) and dense searches
-    route through it. None (default) = never auto-index.
+    cells, ``kmeans_np`` trained driver-side on the first
+    ``max(4096, min(65536, 256·k_centroids))`` points by id — a
+    bounded, bit-reproducible train set at any corpus size; later
+    points take the frozen cells, and ``index_drift()`` meters the
+    skew that leaves) and dense searches route through it. None
+    (default) = never auto-index.
 
     ``datatype="float16"`` (Qdrant ``Datatype.FLOAT16``): store the
     vectors as fp16 — HALF the dominant byte stream. Multivector
@@ -4723,8 +4648,6 @@ def create_collection(root: str, name: str, dim: int | None = None,
         }
         if indexing_threshold is not None:
             meta["indexing_threshold"] = int(indexing_threshold)
-            if train_fraction is not None:
-                meta["train_fraction"] = float(train_fraction)
         if indexing_threshold is not None or transform is not None:
             # the raw-vector IVF cells, or the PCA sidecar's
             # compressed-space cells that replace them

@@ -46,9 +46,11 @@ __all__ = [
 ]
 
 #: Bounded driver-side train set (the kmeans_np / FAISS sampled-train
-#: convention). Shared constant: the engine trains on the first
-#: PCA_TRAIN_CAP rows by id and the oracle factory re-derives from the
-#: same prefix, so both see identical inputs at any corpus size.
+#: convention; ~64k × 128-d ≈ 64 MB). The one cap on every id-ordered
+#: train prefix the catalog fetches (PCA components and IVF cells,
+#: PQ/OPQ codebooks): the engine trains on the first PCA_TRAIN_CAP rows
+#: by id and the oracle factory re-derives from the same prefix, so
+#: both see identical inputs at any corpus size.
 PCA_TRAIN_CAP = 65_536
 
 

@@ -1806,7 +1806,7 @@ def _hnsw_lifecycle_candidates(sf_dir: str,
     sha256(text), train = the first-cap-by-id prefix
     (``Collection._train_prefix``'s order), cells = ``kmeans_np`` +
     sequential-fold first-min assignment (≡ the unrolled left-assoc
-    expression ``_refresh_index`` writes the layout with), graphs =
+    expression ``_write_cells`` writes the layout with), graphs =
     ``hnsw_build_np`` per cell over vec_id-ascending members, probe =
     every cell (default nprobe), beam = ``hnsw_search_np(ef)``.
     ``mss`` mirrors ``max_segment_size``: each cell's id-ascending

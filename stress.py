@@ -1843,7 +1843,60 @@ def sq_score_cost(n: int = 400_000, dim: int = 64) -> None:
     spark.stop()
 
 
+def code_lines(path: str, names: list[str]) -> dict[str, int]:
+    """Code lines of the named functions or top-level classes (methods
+    match by bare name; ``Class.method`` picks one class's): every
+    line that carries a token other than a comment, a line break or
+    indentation, minus docstrings — the count the simplicity changes
+    quote."""
+    import ast
+    import io
+    import tokenize
+
+    with open(path) as f:
+        src = f.read()
+    tree = ast.parse(src)
+    skip = {tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE,
+            tokenize.INDENT, tokenize.DEDENT, tokenize.ENDMARKER}
+    code: set[int] = set()
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type not in skip:
+            code.update(range(tok.start[0], tok.end[0] + 1))
+    spans: dict[str, tuple[int, int]] = {}
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if isinstance(body, list) and body and isinstance(
+                body[0], ast.Expr) and isinstance(
+                    getattr(body[0], "value", None), ast.Constant) and \
+                isinstance(body[0].value.value, str):
+            code.difference_update(range(body[0].lineno,
+                                         body[0].end_lineno + 1))
+        if isinstance(node, ast.ClassDef):
+            for f in node.body:
+                if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    spans[f"{node.name}.{f.name}"] = (f.lineno,
+                                                      f.end_lineno)
+                    spans.setdefault(f.name, (f.lineno, f.end_lineno))
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            spans[node.name] = (node.lineno, node.end_lineno)
+    out = {}
+    for name in names:
+        if name not in spans:
+            raise SystemExit(f"no function {name!r} in {path}")
+        lo, hi = spans[name]
+        out[name] = sum(lo <= n <= hi for n in code)
+    return out
+
+
 def main() -> None:
+    if len(sys.argv) > 1 and sys.argv[1] == "codelines":
+        counts = code_lines(sys.argv[2], sys.argv[3:])
+        for name, n in counts.items():
+            print(f"{n:6d}  {name}")
+        print(f"{sum(counts.values()):6d}  total")
+        return
     if len(sys.argv) > 1 and sys.argv[1] == "scorer":
         scorer_cost(*[int(a) for a in sys.argv[2:]])
         return

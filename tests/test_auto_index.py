@@ -329,3 +329,29 @@ def test_drift_auto_validation(spark, tmp_path):
     assert "drift_auto" not in coll.meta
     with pytest.raises(ValueError, match="drift_auto must be"):
         coll.update_collection(spark, drift_auto="sometimes")
+
+
+def test_rebuild_index_keeps_unkeyed_sidecars(spark, tmp_path):
+    """rebuild_index() retrains the cells and re-derives only the
+    layouts keyed on them: a sparse space's posting layout, which no
+    cell keys, keeps its files."""
+    coll = create_collection(
+        str(tmp_path), "c", dim=4, normalize=False, indexing_threshold=1,
+        k_centroids=2, sparse_vectors={"s": {"full_scan_threshold": 1}})
+    rows = [(i, [float((i * 7 + j) % 5) for j in range(4)],
+             [i % 3, 3 + i % 2], [1.0, 0.5]) for i in range(24)]
+    coll.upsert(spark, spark.createDataFrame(
+        rows, "id int, embedding array<double>, s__sidx array<bigint>, "
+              "s__sval array<double>"))
+    postings = coll._postings_path_for("s")
+
+    def files(path):
+        return sorted(os.path.join(d, f)
+                      for d, _, fs in os.walk(path) for f in fs)
+
+    before, cells = files(postings), files(coll._ivf_points)
+    assert before and cells
+    coll.rebuild_index(spark)
+    assert files(postings) == before
+    assert files(coll._ivf_points) != cells
+    assert coll.index_drift()["balance_growth"] == 1.0

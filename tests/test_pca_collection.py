@@ -271,3 +271,50 @@ def test_drift_auto_rebuilds_transform(spark, tmp_path):
     assert d["balance_growth"] < d["growth_cap"]
     assert list(c.meta["pca_mu"]) != mu0     # components re-trained
     assert c.info(spark)["status"] == "green"
+
+
+def _files(path):
+    return sorted(os.path.relpath(os.path.join(d, f), path)
+                  for d, _, fs in os.walk(path) for f in fs)
+
+
+def test_pca_rewrite_keeps_pending_drift_verdict(spark, tmp_path):
+    """The balance baseline is recorded only when cells are trained: a
+    delete (a rewrite that re-projects with the frozen cells) must not
+    re-record it and so clear a pending rebuild verdict — the IVF
+    layout keeps its build baseline the same way."""
+    c = create_collection(str(tmp_path), "pk", dim=6, normalize=False,
+                          transform="pca", pca_dim=3,
+                          indexing_threshold=1, k_centroids=4)
+    c.upsert(spark, _pts(spark))
+    const = F.expr("array(3.0D, 0.0D, 0.0D, 0.0D, 0.0D, 0.0D)")
+    skew = _pts(spark).withColumn(
+        "id", F.col("id") + 1000).withColumn("embedding", const)
+    for off in (0, 100, 200):
+        c.upsert(spark, skew.withColumn("id", F.col("id") + off))
+    before = c.pca_drift()
+    assert before["action"] == "rebuild", before
+    c.delete(spark, F.col("id") == 0)
+    after = c.pca_drift()
+    assert after["baseline_balance_ratio"] == \
+        before["baseline_balance_ratio"]
+    assert after["action"] == "rebuild", after
+    assert c.info(spark)["status"] == "yellow"
+
+
+def test_rebuild_transform_keeps_other_spaces(spark, tmp_path):
+    """rebuild_transform(space=) retrains and rewrites that space's
+    cells only: another PCA space's sidecar keeps its files."""
+    c = create_collection(str(tmp_path), "two", vectors={
+        "a": {"dim": 6, "transform": "pca", "pca_dim": 3,
+              "k_centroids": 4},
+        "b": {"dim": 6, "transform": "pca", "pca_dim": 2,
+              "k_centroids": 3}})
+    pts = _pts(spark).withColumnRenamed("embedding", "a")
+    c.upsert(spark, pts.withColumn("b", F.col("a")))
+    b_files = _files(c._pca_path_for("b"))
+    a_files = _files(c._pca_path_for("a"))
+    c.rebuild_transform(spark, space="a")
+    assert _files(c._pca_path_for("b")) == b_files
+    assert _files(c._pca_path_for("a")) != a_files
+    assert c.pca_drift("a")["balance_growth"] == 1.0
