@@ -75,9 +75,11 @@ from pyspark.sql.types import ArrayType, BinaryType, NumericType, TimestampType
 from .filters import as_predicate
 from .functions.localframe import literal_in, local_literal_df
 from .functions.vector import as_double, l2_normalize, mean_pool_flat
+from .operators.ann import nearest_cells, nearest_np
 from .operators.quant import quantizer
 from .operators.topk import order_cols, top_groups
 from .search_plan import SearchKnobs, SearchPlan, overlay_recall, plan_search
+from .tables import _read_cached
 
 __all__ = ["Collection", "Prefetch", "create_collection",
            "collection_exists", "list_aliases", "update_aliases",
@@ -120,12 +122,6 @@ def _excluding(query_filter, id_col: str, ids: list) -> Column | None:
     return excl if qf is None else qf & excl
 
 
-def _sq_dist(a: list[float], b: list[float]) -> float:
-    """Driver-side squared euclidean — the centroid-assignment metric,
-    so probing ranks cells the same way they were carved."""
-    return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-
 # Partitioned-sidecar listing: Spark turns file listing into a
 # distributed JOB once a discovery round sees more paths than
 # spark.sql.sources.parallelPartitionDiscovery.threshold (default 32).
@@ -140,17 +136,6 @@ def _sq_dist(a: list[float], b: list[float]) -> float:
 # layout where the driver lists faster than a job schedules.
 _LIST_THRESHOLD = os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "512")
 
-
-# Schema cache for catalog tables/sidecars: creating a parquet
-# DataFrame without a schema launches a 1-task footer-inference JOB
-# (measured: 40-70 ms + ~150 ms of driver gap each; a warm lifecycle
-# query pays ~7 of them re-reading sidecars it just wrote). Keyed on
-# (path, root mtime): every Spark write — append, overwrite,
-# partitionBy — rewrites <root>/_SUCCESS, so the root directory's
-# mtime changes on ANY write through any engine, making staleness
-# impossible without hooking the write sites. Schemas are
-# session-independent (plain Spark types, no nanos sidecars here).
-_SCHEMA_CACHE: dict[str, tuple[int, "object"]] = {}
 
 # A point op's file-scoped rewrite goes table-wide when its match
 # touches this share of the data files, or more files than one
@@ -169,25 +154,15 @@ def _query_frame(spark: SparkSession, vecs: list,
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet` with driver-side partition discovery
-    pinned (see _LIST_THRESHOLD above) and footer/schema inference
-    cached across reads of an unchanged directory (see _SCHEMA_CACHE).
-    Runtime conf, set per call: builders run under a driver-owned
-    session (CLAUDE.md invariant), so the conf cannot live in a
-    session factory."""
+    """`tables._read_cached` (footer/schema inference cached across
+    reads of an unchanged directory) with driver-side partition
+    discovery pinned (see _LIST_THRESHOLD above). Runtime conf, set per
+    call: builders run under a driver-owned session (CLAUDE.md
+    invariant), so the conf cannot live in a session factory."""
     spark.conf.set(
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
         _LIST_THRESHOLD)
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        return spark.read.parquet(path)
-    hit = _SCHEMA_CACHE.get(path)
-    if hit is not None and hit[0] == mtime:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[path] = (mtime, df.schema)
-    return df
+    return _read_cached(spark, path)
 
 
 def _space_columns(cfg: dict) -> tuple[str, str, str]:
@@ -703,40 +678,16 @@ class Collection:
         column comes back as its NAME — the write-time ``__pooled``
         sidecar for multivectors (mandatory for fp16 storage, binary
         can't pool in Catalyst, and 1/n_vecs of the read either way)
-        — so ``assign_centroids`` takes its loop-shaped JVM-parsed SQL
-        path (~ms plan build, codegen-proof at any codebook size)
-        instead of ~k·d·5 py4j round trips for a Column build; only
-        legacy multivector rows without the sidecar pool in-plan.
-        ``as_double`` turns either form into the array<double>
-        Column."""
+        — which ``nearest_cells`` can inline as SQL text (~ms plan
+        build); only legacy multivector rows without the sidecar pool
+        in-plan, as a Column (the UDF form, same cells). ``as_double``
+        turns either form into the array<double> Column."""
         if not self.meta.get("multivector"):
             return vec_col
         if vec_col + "__pooled" in df.columns:
             return vec_col + "__pooled"
         return mean_pool_flat(F.col(vec_col).cast("array<double>"),
                               int(self.meta["dim"]))
-
-    @staticmethod
-    def _assign_cells(df: DataFrame, centroids: list, route: Column | str,
-                      out: str = "centroid_id") -> DataFrame:
-        """``df`` plus its nearest-centroid cell — the one assignment
-        every layout writer uses, so the points layout, the codes
-        sidecar and the graphs put a row in the SAME cell (probe
-        pruning is complete only then: the codegen'd expression and
-        the BLAS UDF can disagree on a point near a cell boundary, so
-        one dispatch budget for all writers is the invariant). The
-        budget is tighter than the plain-projection dispatch (1024):
-        the layout write FUSES the assignment into the
-        dynamic-partition sorter's generated method, and a 64×16
-        codebook that codegens fine as a projection blows janino's
-        64 KB limit inside sort_addToSorter — Spark falls back to
-        row-at-a-time interpreted eval for the whole write stage
-        (observed at the drift stress). The Arrow/BLAS UDF evaluates
-        in its own stage; the sorter then sees a plain int column."""
-        from .operators.ann import assign_centroids
-
-        return df.withColumn(out, assign_centroids(
-            centroids, route, max_expr_literals=512))
 
     # -- cell layouts: the IVF points layout and each PCA space ----------
 
@@ -863,8 +814,8 @@ class Collection:
                      source: DataFrame, id_col: str, vec_col: str,
                      mode: str) -> None:
         """The one cell writer: each row of ``source`` takes its
-        nearest frozen cell (``_assign_cells``) and lands in
-        ``partitionBy(key)``. IVF rows keep every column and route on
+        nearest frozen cell (``nearest_cells``, the rule ``_probe``
+        ranks cells by) and lands in ``partitionBy(key)``. IVF rows keep every column and route on
         ``_routing``; a PCA space's rows are ``(id, pvec)``, projected
         with its frozen (mu, W)."""
         if vec_col not in source.columns or _is_nested(source, vec_col):
@@ -881,7 +832,7 @@ class Collection:
         else:
             route = self._routing(source, vec_col)
             cents = self._centroids(spark)
-        (self._assign_cells(source, cents, route, out=layout.key)
+        (source.withColumn(layout.key, nearest_cells(cents, route)[0]["i"])
          .write.mode(mode).partitionBy(layout.key).parquet(layout.path))
 
     def _record_baseline(self, layout: _CellLayout) -> None:
@@ -1133,9 +1084,10 @@ class Collection:
         if full:
             new = rows(layout)
         else:
-            inc = self._assign_cells(
-                incoming.filter(F.col(vec_col).isNotNull()),
-                self._centroids(spark), self._routing(incoming, vec_col))
+            inc = incoming.filter(F.col(vec_col).isNotNull()).withColumn(
+                "centroid_id", nearest_cells(
+                    self._centroids(spark),
+                    self._routing(incoming, vec_col))[0]["i"])
             inc_min = {int(r["centroid_id"]): r["mn"] for r in
                        inc.groupBy("centroid_id").agg(
                            F.min(F.col(id_col)).alias("mn")).collect()}
@@ -1189,8 +1141,7 @@ class Collection:
                 # per-cell stored counts as a broadcast-joined side
                 # table, not a create_map literal — an append touching
                 # thousands of cells (large k_centroids) would
-                # otherwise inflate a single Catalyst expression (the
-                # _assign_cells literal-budget discipline, join form)
+                # otherwise inflate a single Catalyst expression
                 new = new.join(F.broadcast(local_literal_df(
                     spark, sorted(base.items()),
                     "centroid_id int, __base bigint")), "centroid_id")
@@ -1249,7 +1200,7 @@ class Collection:
         corpus; cold partition dirs move by RENAME only).
 
         The probe addresses centroids by dense position
-        (``probe_cells``), so after retiring hot ids the kept + new
+        (``nearest_cells`` / ``_probe``), so after retiring hot ids the kept + new
         cells are renumbered 0..m-1: cold directories are renamed
         (metadata-only on a filesystem; a manifest update at 100 TB),
         the centroid table is rewritten in the new order, and the
@@ -1932,8 +1883,9 @@ class Collection:
                 source = self._float_mv(source, vec_col)
             # the points layout's own assignment: codes must share its
             # cells for probe pruning to be complete
-            source = self._assign_cells(source, self._centroids(spark),
-                                        self._routing(source, vec_col))
+            source = source.withColumn("centroid_id", nearest_cells(
+                self._centroids(spark),
+                self._routing(source, vec_col))[0]["i"])
         carry: tuple = ("centroid_id",) if cells else ()
         codes = qz.encode(source, vec_col, id_col, carry)
         mode = "overwrite" if rewrote else "append"
@@ -2841,12 +2793,10 @@ class Collection:
         query's cells nearest first, a batch's sorted union."""
         cents = self._centroids(spark) if cents is None else cents
         np_ = len(cents) if nprobe is None else nprobe
-        cells = [sorted(range(len(cents)),
-                        key=lambda i: (_sq_dist(qv, cents[i]), i))[:np_]
-                 for qv in qvs]
+        cells = nearest_np(qvs, cents, np_)[1]
         if not batch:
             return [int(i) for i in cells[0]]
-        return sorted({int(i) for c in cells for i in c})
+        return sorted({int(i) for i in cells.ravel()})
 
     def _hnsw_walk(self, spark: SparkSession, route_qvs: list,
                    walk_qvs: list, plan: SearchPlan, id_type: str,

@@ -27,201 +27,159 @@ design, rows-only in the driver):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from ..functions.localframe import local_literal_df
 
 from ..functions.vector import as_double, cosine, dot, dot_unrolled
 from .topk import global_topk
 
 __all__ = ["ivf_build", "ivf_search", "ivf_cell_counts",
-           "ivf_split_hot_cells", "assign_centroid_expr",
-           "assign_centroid_udf", "assign_centroids",
-           "assign_centroids_top2_expr", "assign_centroids_top2_udf",
-           "lsh_signatures", "lsh_band_frame", "lsh_candidates",
-           "lsh_probe", "lsh_probe_literal", "lsh_query_signature",
-           "lsh_search"]
+           "ivf_split_hot_cells", "ivf_probe_ids", "nearest_cells",
+           "nearest_np", "nearest_sql", "lsh_signatures", "lsh_band_frame",
+           "lsh_candidates", "lsh_probe", "lsh_probe_literal",
+           "lsh_query_signature", "lsh_search"]
 
 
 # --- IVF ------------------------------------------------------------------
 
-def _sq_dist_sql(vec: str, c: list[float]) -> str:
-    """SQL for the unrolled squared distance to one centroid —
-    left-associated sums and extract-then-cast elements, matching the
-    Column-built tree exactly (same float result)."""
-    terms = " + ".join(
-        f"((CAST(element_at({vec}, {j + 1}) AS DOUBLE) - {float(cj)!r}D)"
-        f" * (CAST(element_at({vec}, {j + 1}) AS DOUBLE) - {float(cj)!r}D))"
-        for j, cj in enumerate(c)
-    )
-    return f"({terms})"
+#: The one size gate of the nearest-centroid rule: a codebook of
+#: k·d ≤ this many coordinates (PQ: the whole projection's
+#: blocks·k·subdim) runs as the SQL expression, a larger one as the
+#: Arrow UDF over ``nearest_np``. Both forms return the same ids and
+#: distances, so the gate only picks the faster one: the expression is
+#: interpreted (higher-order functions keep its projection out of
+#: whole-stage codegen) and linear in k·d, the UDF pays a fixed
+#: Arrow/worker cost and is nearly flat in k; they cross between 256
+#: and 512 coordinates. Median of 3 warm wall seconds of one
+#: assignment pass over 20k cached rows, local[4], Spark 4.1.2
+#: (``python stress.py assign 20000 <dim>``; SCALE.md §"Loop-shaped
+#: k-way centroid expressions"):
+#:
+#:   dim 16:  k      4     8    16    32    64   128   256
+#:            sql  0.31  0.29  0.43  0.74  1.33  2.21  4.52
+#:            udf  0.55  0.42  0.41  0.40  0.43  0.41  0.38
+#:   dim 64:  k      4     8    16    32    64   128   256
+#:            sql  0.41  0.57  0.95  1.86  3.29  6.32 14.51
+#:            udf  0.47  0.43  0.41  0.45  0.43  0.38  0.41
+NEAREST_SQL_MAX = 512
 
 
-def _centroid_structs_sql(centroids: list[list[float]], vec: str) -> str:
-    return ", ".join(
-        f"named_struct('d', {_sq_dist_sql(vec, c)}, 'i', {cid})"
-        for cid, c in enumerate(centroids)
-    )
-
-
-def _centroid_structs_loop_sql(centroids: list[list[float]],
-                               vec: str) -> str:
-    """Loop-shaped twin of ``array({_centroid_structs_sql(...)})``:
-    one ``transform`` over a constant-folded 2D centroid literal, the
-    per-centroid distance an ``aggregate(zip_with(...))`` left-to-right
-    float64 fold. Value-identical to the unrolled form: the 0.0 seed
-    is exact because every term is a square (≥ +0.0, and +0.0 + x ≡ x
-    for non-negative x), and casting the vector to ARRAY<DOUBLE> once
-    equals the per-element extract-then-cast. The k-way UNROLLED form
-    (k·d inline terms, the coordinates inlined twice each) overflows
-    janino's 64 KB method limit at 16×64 once TWO copies land in one
-    whole-stage method (argmin + own-distance, or a filter pushed
-    through the projection), silently de-codegen-ing the whole stage;
-    this form keeps the generated code O(1) in k·d — the literals are
-    DATA (one folded Literal), not code. Measured at 16×64 / sf0.1:
-    first call 9.4 s → 0.8 s (no failed 300 KB janino compile per
-    plan), warm scan 1.9 s → 0.5 s."""
+def nearest_sql(centroids: list[list[float]], vec_sql: str,
+                n: int = 1) -> str:
+    """The nearest-centroid rule as SQL: the ``n`` nearest centroids of
+    the array ``vec_sql`` as ``(d, i)`` structs sorted by (distance,
+    id). ``d`` is squared euclid as a LEFT-TO-RIGHT float64 fold of
+    (x − c)² (``aggregate(zip_with(...))`` seeded with 0.0 — exact,
+    every term is ≥ +0.0), one ``transform`` over a constant-folded
+    2D centroid literal, so the plan stays O(1) in k·d (the literals
+    are data, not generated code)."""
     rows = ", ".join(
         "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")"
         for c in centroids)
-    return (f"transform(array({rows}), (c, i) -> named_struct("
-            f"'d', aggregate(zip_with(CAST({vec} AS ARRAY<DOUBLE>), c, "
-            f"(x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
-            f"(a, x) -> a + x), 'i', i))")
+    return (f"slice(sort_array(transform(array({rows}), (c, i) -> "
+            f"named_struct('d', aggregate(zip_with(CAST({vec_sql} AS "
+            f"ARRAY<DOUBLE>), c, (x, y) -> (x - y) * (x - y)), "
+            f"CAST(0.0 AS DOUBLE), (a, x) -> a + x), 'i', i))), 1, "
+            f"{int(n)})")
 
 
-def assign_centroid_expr(centroids: list[list[float]],
-                         vec_col: Column | str) -> Column:
-    """Nearest-centroid id as a pure column expression: per centroid an
-    unrolled squared distance over literal coordinates, argmin via
-    ``array_min`` over (distance, id) structs (lexicographic struct
-    ordering). Whole-stage codegen, no ml transformer, no Python — the
-    assignment pass is just another projection over the scan, which is
-    what a 100 TB backfill needs.
+def nearest_np(V, C, n: int = 1):
+    """The nearest-centroid rule in numpy: ``(D, I)``, each (rows × n),
+    the ``n`` nearest rows of ``C`` to each row of ``V`` sorted by
+    (d, i) — the same fold distances and order as ``nearest_sql``,
+    bit for bit.
 
-    Pass a column NAME to render the whole expression as ONE
-    JVM-parsed SQL string: the Column build costs ~k·d·5 py4j round
-    trips of driver time (~20 s at 16×64 — measured, data-independent)
-    before any task runs; the SQL path is ~ms with a value-identical
-    tree (same left-associated sums, same casts — the
-    functions/vector.py operand discipline).
-
-    Limit (Column path only): janino caps generated methods at 64 KB,
-    which the unrolled form exceeds somewhere past ~64 centroids
-    (measured: 128×8 dies, 64×16 is fine — and even 16×64 dies when a
-    second copy lands in the same whole-stage method). The NAME path
-    emits the loop-shaped ``_centroid_structs_loop_sql`` form instead,
-    whose generated code is O(1) in k·d. Use ``assign_centroids`` to
-    dispatch automatically.
-    """
-    if isinstance(vec_col, str):
-        structs = _centroid_structs_loop_sql(centroids, f"`{vec_col}`")
-        return F.expr(f"array_min({structs}).i")
-    entries = []
-    for cid, c in enumerate(centroids):
-        d = None
-        for j, cj in enumerate(c):
-            diff = F.element_at(vec_col, j + 1).cast("double") - F.lit(float(cj))
-            term = diff * diff
-            d = term if d is None else d + term
-        entries.append(F.struct(d.alias("d"), F.lit(cid).alias("i")))
-    return F.array_min(F.array(*entries))["i"]
-
-
-def assign_centroid_sql(centroids: list[list[float]],
-                        vec_sql: str) -> Column:
-    """Loop-shaped nearest-centroid id over a SQL array FRAGMENT
-    (e.g. ``slice(embedding, 9, 8)`` for a PQ block) — the NAME path
-    of :func:`assign_centroid_expr` without the identifier quoting.
-    Same value-identity argument as `_centroid_structs_loop_sql`;
-    used where several assignments land in ONE projection (the PQ
-    per-block encode), which overflowed janino's 64 KB method budget
-    in the unrolled Column form and de-codegen'd the whole stage."""
-    structs = _centroid_structs_loop_sql(centroids, f"({vec_sql})")
-    return F.expr(f"array_min({structs}).i")
-
-
-def assign_centroid_udf(centroids: list[list[float]], vec_col: Column) -> Column:
-    """Nearest-centroid id as an Arrow-batched pandas UDF — the
-    large-codebook path (big ``k_centroids``/``k_codes`` overflow the
-    codegen'd expression's 64 KB method limit). The centroid matrix is
-    a closure-captured numpy array; per batch the distance is one BLAS
-    matmul: ``argmin(||c||² − 2 V·Cᵀ)`` (||v||² is row-constant). Same
-    first-minimum tie-break as the expression form; float rounding may
-    differ in the last ulp on exact ties (irrelevant for a coarse
-    quantizer)."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
+    BLAS only picks candidates. With u = 2⁻⁵³ and γₘ = mu/(1 − mu),
+    let M = (‖v‖ + max‖c‖)², D the exact distance, F its fold value and
+    A = ‖c‖² − 2v·c as BLAS computes it (any summation order):
+    - |A + ‖v‖² − D| ≤ γ_d(‖c‖² + 2‖v‖‖c‖) + u(1+γ_d)(‖v‖+‖c‖)²
+      ≤ γ_{d+1}·M (dot and norm errors, then the rounded subtraction);
+    - |F − D| ≤ γ_{d+2}·D ≤ γ_{d+2}·M (each (x−c)² carries γ₃, the
+      sequential sum of d non-negative terms γ_{d−1}).
+    So A_j − A_s > 4γ_{d+2}·M implies F_j > F_s. Every centroid whose
+    A is within that slack of the n-th smallest A is a candidate; any
+    other centroid loses to each of the n smallest-A ones under the
+    fold, so the fold's top n lies among the candidates, which are
+    re-ranked by the fold itself. Usually there are exactly n. The
+    slack carries 2⁻³⁰ relative headroom for rounding in computing it
+    and in the comparison. A row with fewer than n candidates (a NaN
+    coordinate) folds against all k."""
+    C = np.asarray(C, dtype=np.float64)
+    V = np.asarray(V, dtype=np.float64).reshape(-1, C.shape[1])
+    n = min(n, len(C))
+    m, d = V.shape
+    if m == 0:
+        return np.empty((0, n)), np.empty((0, n), dtype=np.int64)
     c_sq = (C * C).sum(axis=1)
+    A = V @ C.T
+    A *= -2.0
+    A += c_sq
+    A -= (A.min(axis=1, keepdims=True) if n == 1
+          else np.partition(A, n - 1, axis=1)[:, n - 1:n])
+    reach = np.sqrt((V * V).sum(axis=1)) + np.sqrt(c_sq.max())
+    u = (d + 2) * 2.0 ** -53
+    slack = 4.0 * u / (1 - u) * (1 + 2.0 ** -30) * reach * reach
+    cand = A <= slack[:, None]
+    cand[cand.sum(axis=1) < n] = True
+    rows, cols = np.nonzero(cand)
+    diff = (V[rows] - C[cols]).T
+    dist = np.zeros(len(rows))
+    for x in diff:
+        dist = dist + x * x
+    order = np.lexsort((cols, dist, rows))
+    first = np.concatenate(([0], np.cumsum(cand.sum(axis=1))[:-1]))
+    take = order[(first[:, None] + np.arange(n)).ravel()]
+    return dist[take].reshape(m, n), cols[take].reshape(m, n)
 
-    @pandas_udf("int")
-    def nearest(v: pd.Series) -> pd.Series:
-        V = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        if V.size == 0:
-            return pd.Series([], dtype="int32")
-        return pd.Series(
-            np.argmin(c_sq - 2.0 * (V @ C.T), axis=1).astype(np.int32)
-        )
 
-    return nearest(vec_col)
+def _arrow_rows(v, d: int):
+    """An Arrow ``list<double>`` batch as an (m × d) float64 matrix of
+    its non-null rows, plus the validity mask."""
+    valid = np.asarray(v.is_valid(), dtype=bool)
+    flat = v.flatten().to_numpy(zero_copy_only=False)
+    return flat.reshape(-1, d), valid
 
 
-def assign_centroids(centroids: list[list[float]], vec_col: Column | str,
-                     max_expr_centroids: int = 64,
-                     max_expr_literals: int = 1024) -> Column:
-    """Dispatch: codegen'd expression for small codebooks (scan-local,
-    zero Python; pass a column NAME for ms-cheap SQL-string plan
-    construction), Arrow-batched numpy for large ones."""
+def _nearest_udf(centroids: list[list[float]], n: int):
+    """``nearest_np`` as an Arrow UDF returning ``nearest_sql``'s
+    shape. A null vector gets what the expression gives it: every
+    distance null, so the ids in order."""
+    C = np.asarray(centroids, dtype=np.float64)
+    n = min(n, len(C))
+
+    @arrow_udf("array<struct<d:double,i:int>>")
+    def nearest(v: pa.Array) -> pa.Array:
+        V, valid = _arrow_rows(v, C.shape[1])
+        D = np.zeros((len(valid), n))
+        ids = np.tile(np.arange(n), (len(valid), 1))
+        D[valid], ids[valid] = nearest_np(V, C, n)
+        cells = pa.StructArray.from_arrays(
+            [pa.array(D.ravel(), mask=np.repeat(~valid, n)),
+             pa.array(ids.ravel().astype(np.int32))], names=["d", "i"])
+        offsets = np.arange(0, len(valid) * n + 1, n, dtype=np.int32)
+        return pa.ListArray.from_arrays(pa.array(offsets), cells)
+
+    return nearest
+
+
+def nearest_cells(centroids: list[list[float]], vec: Column | str,
+                  n: int = 1) -> Column:
+    """The ``n`` nearest centroids of each row's vector as sorted
+    ``(d, i)`` structs (``[0].i`` is the row's cell) — the one
+    nearest-centroid rule every cell assignment, soft top-n, probe list
+    and PQ code uses, so a point and a probe always agree on its cell.
+    ``vec`` is a column name or a Column. ``nearest_sql`` runs when
+    k·d ≤ ``NEAREST_SQL_MAX`` and ``vec`` is a name; otherwise (a
+    Column has no SQL text to inline) the Arrow UDF over
+    ``nearest_np``. The two return the same values."""
     k, d = len(centroids), len(centroids[0])
-    if k <= max_expr_centroids and k * d <= max_expr_literals:
-        return assign_centroid_expr(centroids, vec_col)
-    if isinstance(vec_col, str):
-        vec_col = F.col(vec_col)
-    return assign_centroid_udf(centroids, vec_col)
-
-
-def assign_centroids_top2_expr(centroids: list[list[float]],
-                               vec_col: str) -> Column:
-    """Top-2 nearest centroid ids as one codegen'd expression
-    (SemDeDup/IVF soft assignment): sort the (distance, id) structs
-    lexicographically — same (d, i) tie-break as the argmin form, so
-    ``cells[0]`` equals ``assign_centroid_expr`` exactly — and keep
-    the first two ids. Takes a column NAME for the same ms-cheap
-    SQL-string construction as the argmin form; janino limits apply
-    identically (≤64 centroids)."""
-    structs = _centroid_structs_loop_sql(centroids, f"`{vec_col}`")
-    return F.expr(
-        f"transform(slice(array_sort({structs}), 1, 2), s -> s.i)")
-
-
-def assign_centroids_top2_udf(centroids: list[list[float]],
-                              vec_col: Column) -> Column:
-    """Top-2 nearest centroid ids, Arrow-batched (the large-codebook
-    path — the SemDeDup regime's k≈n/1000 overflows the expression
-    form). ``argpartition`` pulls the 2 smallest in O(k), then a
-    2-element sort orders them (d, i)-lexicographically — the same
-    tie-break as the expression twin."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
-
-    @pandas_udf("array<int>")
-    def nearest2(v: pd.Series) -> pd.Series:
-        V = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        if V.size == 0:
-            return pd.Series([], dtype=object)
-        D = c_sq - 2.0 * (V @ C.T)
-        top2 = np.argpartition(D, 1, axis=1)[:, :2]
-        d2 = np.take_along_axis(D, top2, axis=1)
-        ordered = (d2[:, 0] < d2[:, 1]) | (
-            (d2[:, 0] == d2[:, 1]) & (top2[:, 0] < top2[:, 1]))
-        out = np.where(ordered[:, None], top2, top2[:, ::-1])
-        return pd.Series([row.astype(np.int32).tolist() for row in out])
-
-    return nearest2(vec_col)
+    if isinstance(vec, str) and k * d <= NEAREST_SQL_MAX:
+        return F.expr(nearest_sql(centroids, f"`{vec}`", n))
+    col = F.col(f"`{vec}`") if isinstance(vec, str) else vec
+    return _nearest_udf(centroids, n)(col.cast("array<double>"))
 
 
 def ivf_build(corpus: DataFrame, k_centroids: int = 16,
@@ -233,9 +191,9 @@ def ivf_build(corpus: DataFrame, k_centroids: int = 16,
     scale, write it ``partitionBy("centroid_id")``.
 
     With ``sample_fraction`` set, KMeans trains on a seeded sample and
-    the full corpus is assigned by ``assign_centroid_expr`` — the
-    scale path (SCALE.md): training cost is bounded by the sample, the
-    assignment is a codegen'd projection over one scan."""
+    the full corpus is assigned by ``nearest_cells`` — the scale path
+    (SCALE.md): training cost is bounded by the sample, the assignment
+    is one projection over one scan."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -248,8 +206,7 @@ def ivf_build(corpus: DataFrame, k_centroids: int = 16,
     centroids = [c.tolist() for c in model.clusterCenters()]
     if sample_fraction is not None:
         assigned = corpus.withColumn(
-            "centroid_id", assign_centroids(centroids, as_double(F.col(vec_col)))
-        )
+            "centroid_id", nearest_cells(centroids, vec_col)[0]["i"])
     else:
         full_feat = corpus.withColumn(
             "__features", array_to_vector(as_double(F.col(vec_col)))
@@ -288,7 +245,7 @@ def ivf_split_hot_cells(assigned: DataFrame,
     re-trained in place: ``ceil(cell/cap)`` sub-centroids are fit
     (deterministic `kmeans_np`) on a seeded, id-sorted sample of the
     cell's own members, and ONLY that cell's rows are re-assigned
-    among the new sub-centroids (one codegen'd projection over the
+    among the new sub-centroids (one projection over the
     hot partition — cold partitions are never read or rewritten,
     which on a ``partitionBy(centroid_id)`` layout makes the rebalance
     cost proportional to the hot data, not the corpus). The retired
@@ -339,7 +296,7 @@ def ivf_split_hot_cells(assigned: DataFrame,
         subs = kmeans_np(X, min(k_sub, len(X)), seed=seed)
         pieces.append(cell.withColumn(
             "centroid_id",
-            (assign_centroids(subs, as_double(F.col(vec_col)))
+            (nearest_cells(subs, vec_col)[0]["i"]
              + F.lit(next_id)).cast("int")))
         out_rows.extend((next_id + j, s) for j, s in enumerate(subs))
         next_id += len(subs)
@@ -349,6 +306,19 @@ def ivf_split_hot_cells(assigned: DataFrame,
     return out, out_rows
 
 
+def ivf_probe_ids(centroids: DataFrame, query: DataFrame, nprobe: int,
+                  query_vec_col: str = "query_vec") -> list[int]:
+    """The ids of the ``nprobe`` centroids nearest the one query row,
+    collected driver-side so a probe filters the corpus by a literal,
+    partition-pruned ``centroid_id IN (...)`` (a broadcast join would
+    scan every partition). The table is ≤ k rows, so it is ranked by
+    ``nearest_np`` on the driver — the cells' own assignment rule."""
+    cents = sorted(centroids.collect(), key=lambda r: r.centroid_id)
+    qv = query.select(query_vec_col).first()[0]
+    _, ids = nearest_np([qv], [r.centroid for r in cents], nprobe)
+    return [int(cents[i].centroid_id) for i in ids[0]]
+
+
 def ivf_search(assigned: DataFrame, centroids: DataFrame, query: DataFrame,
                k: int = 5, nprobe: int = 4, id_col: str = "vec_id",
                vec_col: str = "embedding", query_vec_col: str = "query_vec",
@@ -356,33 +326,18 @@ def ivf_search(assigned: DataFrame, centroids: DataFrame, query: DataFrame,
                probe_ids: list[int] | None = None) -> DataFrame:
     """Probe the nprobe nearest centroids, exact cosine within them.
 
-    The centroid shortlist (≤ nprobe ints) is computed on the tiny
-    centroid table and collected driver-side, so the corpus filter is
-    a *literal* ``centroid_id IN (...)`` — statically partition-pruned
-    on a ``partitionBy("centroid_id")`` layout (a broadcast join here
-    would scan every partition instead). Callers that already hold
-    the centroids driver-side (the deterministic kmeans_np tiers, or
-    an exhaustive probe) pass ``probe_ids`` directly and skip even
-    that ≤k-row job.
+    The centroid shortlist is ``ivf_probe_ids`` (a literal, statically
+    partition-pruned ``centroid_id IN (...)``). Callers that already
+    hold the centroids driver-side (the deterministic kmeans_np tiers,
+    or an exhaustive probe) pass ``probe_ids`` directly and skip even
+    that ≤k-row collect.
 
     Cells are probed by **squared euclidean** distance — the same
-    metric the vectors were assigned with (Voronoi cells are euclidean
+    rule the vectors were assigned with (Voronoi cells are euclidean
     constructs; ranking them by dot/cosine loses the query's own cell
     on non-normalized corpora)."""
     if probe_ids is None:
-        sq_dist = F.aggregate(
-            F.zip_with(F.col("centroid"), as_double(F.col(query_vec_col)),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda a, x: a + x,
-        )
-        probed = global_topk(
-            centroids.join(F.broadcast(query.select(query_vec_col)))
-            .withColumn("cdist", sq_dist)
-            .select("centroid_id", "cdist"),
-            [("cdist", True), ("centroid_id", True)],
-            nprobe,
-        ).select("centroid_id")
-        probe_ids = [r.centroid_id for r in probed.collect()]
+        probe_ids = ivf_probe_ids(centroids, query, nprobe, query_vec_col)
 
     candidates = assigned.filter(F.col("centroid_id").isin(probe_ids))
     score = cosine(as_double(F.col(vec_col)), as_double(F.col(query_vec_col)))

@@ -7,7 +7,8 @@ queries plan no longer applies).
 The all-pairs form is O(N·M) — 2.5×10¹⁹ pairs at 100 TB. This
 operator localizes it with the IVF coarse quantizer: right rows live
 in their nearest cell, left rows probe their ``nprobe`` nearest cells
-(an in-expression sorted slice — no Python, no extra scan), and
+(both ``operators/ann.py::nearest_cells`` — one rule, so a row's own
+cell is always its first probe; no extra scan), and
 scoring happens inside matched cells only: Σ_cells |L_c|·|R_c| pairs,
 a ``k_centroids/nprobe``-fold reduction with uniform cells.
 
@@ -27,42 +28,14 @@ oracle-checkable; approximation is an explicit smaller ``nprobe``
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_unrolled, dot_unrolled
+from .ann import nearest_cells
 from .topk import grouped_topk
 
-__all__ = ["probe_cells", "knn_join"]
-
-
-def probe_cells(centroids: list[list[float]], vec_col: Column | str,
-                nprobe: int) -> Column:
-    """Array of the ``nprobe`` nearest centroid ids — squared-euclid
-    ranking with centroid-id tie-break, as one codegen'd sorted-slice
-    expression (same metric as ``assign_centroids``, so a row's own
-    cell is always its first probe).
-
-    Pass a column NAME for the one-SQL-string build (~ms instead of
-    ~k·d·5 py4j round trips of driver time — the functions/vector.py
-    operand discipline; tree is value-identical)."""
-    if isinstance(vec_col, str):
-        from .ann import _centroid_structs_loop_sql
-
-        structs = _centroid_structs_loop_sql(centroids, f"`{vec_col}`")
-        return F.expr(
-            f"transform(slice(sort_array({structs}), 1, {int(nprobe)}),"
-            " s -> s.i)")
-    entries = []
-    for cid, c in enumerate(centroids):
-        d = None
-        for j, cj in enumerate(c):
-            diff = F.element_at(vec_col, j + 1).cast("double") - F.lit(float(cj))
-            term = diff * diff
-            d = term if d is None else d + term
-        entries.append(F.struct(d.alias("d"), F.lit(cid).alias("i")))
-    ranked = F.sort_array(F.array(*entries))  # (d, i) lexicographic
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["i"])
+__all__ = ["knn_join"]
 
 
 def knn_join(
@@ -83,15 +56,14 @@ def knn_join(
     dot if ``prenormalized``). ``nprobe=None`` probes every cell —
     exact. Output: (left_id, right_id, score, rank)."""
     np_ = len(centroids) if nprobe is None else nprobe
-    from .ann import assign_centroids
-
     r = right.select(
         F.col(right_id), F.col(right_vec).alias("__rv")
-    ).withColumn("cell", assign_centroids(centroids, "__rv"))
+    ).withColumn("cell", nearest_cells(centroids, "__rv")[0]["i"])
     l = left.select(
         F.col(left_id), F.col(left_vec).alias("__lv")
     ).withColumn(
-        "cell", F.explode(probe_cells(centroids, "__lv", np_))
+        "cell", F.explode(F.transform(nearest_cells(centroids, "__lv", np_),
+                                      lambda s: s["i"]))
     )
     if dim is not None:
         score = (dot_unrolled("__lv", "__rv", dim)

@@ -25,13 +25,15 @@ against the exact scan (tests/test_pq.py), like the other ANN tiers.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from ..functions.localframe import local_literal_df
 from ..functions.vector import _lit_array_sql
-from .ann import assign_centroids
+from .ann import (NEAREST_SQL_MAX, _arrow_rows, ivf_probe_ids, nearest_np,
+                  nearest_sql)
 from .topk import global_topk
 
 __all__ = ["pq_build", "pq_encode_udf", "pq_lut", "pq_score", "pq_search",
@@ -54,33 +56,26 @@ def pq_decode_np(codes, codebooks: list):
 
 
 def pq_encode_udf(codebooks: list, vec_col: Column) -> Column:
-    """All-block PQ encoding in one Arrow-batched pandas UDF → an
-    ``array<int>`` of ``n_blocks`` codes.
-
-    Per-block codegen'd assignment expressions are fine alone, but
-    projecting 8+ of them together overflows whole-stage codegen's
-    64 KB method budget and Spark silently falls back to interpreted
-    evaluation (measured 97 s vs ~15 s per 1M×16-d rows). This path
-    moves the whole encode into numpy: one matmul per block over the
-    Arrow batch, argmin over codewords — encode cost is BLAS-bound."""
-    from pyspark.sql.functions import pandas_udf
-
+    """All-block PQ encoding in one Arrow UDF → an ``array<int>`` of
+    ``n_blocks`` codes, each block's code ``nearest_np`` over that
+    block's slice — the codes ``pq_encode_frame``'s expression form
+    gives, at BLAS-class cost for codebooks past ``NEAREST_SQL_MAX``
+    (a null vector codes 0 in every block, as there)."""
     mats = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    sq = [(m * m).sum(axis=1) for m in mats]
     subdim = mats[0].shape[1]
 
-    @pandas_udf("array<int>")
-    def encode(v: pd.Series) -> pd.Series:
-        V = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        if V.size == 0:
-            return pd.Series([], dtype=object)
-        codes = np.empty((V.shape[0], len(mats)), dtype=np.int32)
-        for b, (C, c_sq) in enumerate(zip(mats, sq)):
-            sub = V[:, b * subdim:(b + 1) * subdim]
-            codes[:, b] = np.argmin(c_sq - 2.0 * (sub @ C.T), axis=1)
-        return pd.Series(list(codes))
+    @arrow_udf("array<int>")
+    def encode(v: pa.Array) -> pa.Array:
+        V, valid = _arrow_rows(v, subdim * len(mats))
+        codes = np.zeros((len(valid), len(mats)), dtype=np.int32)
+        for b, C in enumerate(mats):
+            codes[valid, b] = nearest_np(
+                V[:, b * subdim:(b + 1) * subdim], C)[1][:, 0]
+        offsets = np.arange(0, codes.size + 1, len(mats), dtype=np.int32)
+        return pa.ListArray.from_arrays(pa.array(offsets),
+                                        pa.array(codes.ravel()))
 
-    return encode(vec_col)
+    return encode(vec_col.cast("array<double>"))
 
 
 def pq_build(corpus: DataFrame, dim: int, n_blocks: int = 8,
@@ -112,31 +107,7 @@ def pq_build(corpus: DataFrame, dim: int, n_blocks: int = 8,
                        featuresCol="__features").fit(sub)
         codebooks.append([c.tolist() for c in model.clusterCenters()])
 
-    # one codegen'd expression per block stays in whole-stage codegen
-    # only while the *combined* projection is small; past that Spark
-    # silently drops to interpreted eval (~6× slower) — so any
-    # non-trivial codebook set encodes via the batched numpy UDF
-    if n_blocks * k_codes * subdim <= 512:
-        code_cols = [
-            assign_centroids(
-                codebooks[b],
-                F.slice(F.col(vec_col), b * subdim + 1, subdim)
-                .cast("array<double>"),
-            ).alias(f"code{b}")
-            for b in range(n_blocks)
-        ]
-        codes = corpus.select(F.col(id_col), *code_cols)
-    else:
-        codes = corpus.select(
-            F.col(id_col),
-            pq_encode_udf(
-                codebooks, F.col(vec_col).cast("array<double>")
-            ).alias("__codes"),
-        ).select(
-            F.col(id_col),
-            *[F.element_at("__codes", b + 1).alias(f"code{b}")
-              for b in range(n_blocks)],
-        )
+    codes = pq_encode_frame(corpus, codebooks, vec_col, id_col)
     return codes, codebooks
 
 
@@ -210,25 +181,7 @@ def ivfpq_search(assigned_codes: DataFrame, centroids: DataFrame,
         spark, [(query_vec,)], "query_vec array<double>")
 
     if probe_ids is None:
-        # probe by squared euclidean — the assignment metric (a
-        # dot-product ranking can miss the query's own Voronoi cell on
-        # non-normalized corpora, dropping the true neighbors before
-        # rescore ever runs)
-        probed = global_topk(
-            centroids.join(F.broadcast(qdf))
-            .withColumn(
-                "cdist",
-                F.aggregate(
-                    F.zip_with(F.col("centroid"), F.col("query_vec"),
-                               lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0), lambda a, x: a + x,
-                ),
-            )
-            .select("centroid_id", "cdist"),
-            [("cdist", True), ("centroid_id", True)],
-            nprobe,
-        )
-        probe_ids = [r.centroid_id for r in probed.collect()]
+        probe_ids = ivf_probe_ids(centroids, qdf, nprobe)
 
     candidates = assigned_codes.filter(F.col("centroid_id").isin(probe_ids))
     shortlist = pq_search(candidates, codebooks, query_vec, k=rescore,
@@ -245,36 +198,6 @@ def ivfpq_search(assigned_codes: DataFrame, centroids: DataFrame,
         .select(F.col(id_col), score.alias("score"))
     )
     return global_topk(exact, [("score", False), (id_col, True)], k)
-
-
-def pq_code_sql(codebook: list, vec_sql: str, off: int) -> str:
-    """One block's nearest-codeword id as a JVM-parseable SQL string
-    in the LOOP shape: distances as a ``transform`` over the codebook
-    array literal — each a ``zip_with`` + ``aggregate`` fold-sum of
-    (x−c)², bit-equal to the unrolled left-assoc chain (a left fold
-    from 0.0 equals it; the operators/pca.py proven pairing) — then
-    argmin via ``array_position(dists, array_min(dists))``, the same
-    first-minimum tie-break as the oracle's ``list_position``.
-
-    Why loop-shaped and not the fully-unrolled struct form: the
-    unrolled tree is O(k·subdim) expression NODES, and janino blows
-    the driver heap compiling it at large shapes (measured: OOM at
-    128 codes × 64-d and at the 768-d defaults, 16×16×48). This form
-    is O(1) nodes over two constant-folded array literals, so plan
-    size is independent of the codebook. The string form costs ~ms to
-    build where the Column form costs ~k·subdim·5 py4j round trips
-    (measured 10 s at 8×16×8)."""
-    from ..functions.vector import _lit_array_sql
-
-    subdim = len(codebook[0])
-    cb = "array(" + ", ".join(_lit_array_sql(cw) for cw in codebook) + ")"
-    sub = (f"slice(CAST({vec_sql} AS ARRAY<DOUBLE>), {off + 1}, "
-           f"{subdim})")
-    dists = (f"transform({cb}, cw -> aggregate(zip_with({sub}, cw, "
-             f"(x, c) -> (x - c) * (x - c)), CAST(0.0 AS DOUBLE), "
-             f"(a, x) -> a + x))")
-    return (f"CAST(array_position({dists}, array_min({dists})) - 1 "
-            f"AS INT)")
 
 
 def rotation_fold_sql(R: list, vec_sql: str) -> str:
@@ -303,23 +226,28 @@ def pq_encode_frame(df: DataFrame, codebooks: list,
                     rotation: list | None = None) -> DataFrame:
     """Encode a frame with FROZEN codebooks (the catalog sidecar
     writer — the PQ analog of ``sq_encode``): one scan-local
-    projection producing ``(id, carry..., code0..code{B-1})``. With
-    ``rotation`` (OPQ), rows rotate first through the fold-shape
-    expression and the argmin runs over the rotated doubles — same
-    float shapes as the ``ann_opq_top5`` builder, so a DuckDB oracle
+    projection producing ``(id, carry..., code0..code{B-1})``. Each
+    block's code is the nearest-centroid rule over its slice: per-block
+    ``nearest_sql`` while the whole projection's blocks·k·subdim is ≤
+    ``NEAREST_SQL_MAX``, one ``pq_encode_udf`` past it — the same codes
+    either way. With ``rotation`` (OPQ), rows rotate first through the
+    fold-shape expression and the codes come from the rotated doubles
+    — the ``ann_opq_top5`` builder's shapes, so a DuckDB oracle
     re-derives identical codes."""
-    n_blocks = len(codebooks)
+    n_blocks, k_codes = len(codebooks), len(codebooks[0])
     subdim = len(codebooks[0][0])
-    src = f"`{vec_col}`"
+    keep = [F.col(f"`{c}`") for c in (id_col, *carry_cols)]
+    name = vec_col
     if rotation is not None:
-        df = df.selectExpr(
-            *[f"`{c}`" for c in (id_col, *carry_cols)],
-            f"{rotation_fold_sql(rotation, src)} AS __rot",
-        )
-        src = "`__rot`"
+        df = df.select(*keep, F.expr(rotation_fold_sql(
+            rotation, f"`{vec_col}`")).alias("__rot"))
+        name = "__rot"
         df = df.localCheckpoint(eager=True)  # don't re-rotate per block
-    return df.selectExpr(
-        *[f"`{c}`" for c in (id_col, *carry_cols)],
-        *[f"{pq_code_sql(codebooks[b], src, b * subdim)} AS code{b}"
-          for b in range(n_blocks)],
-    )
+    if n_blocks * k_codes * subdim <= NEAREST_SQL_MAX:
+        return df.select(*keep, *[F.expr(nearest_sql(
+            cb, f"slice(`{name}`, {b * subdim + 1}, {subdim})") + "[0].i"
+        ).alias(f"code{b}") for b, cb in enumerate(codebooks)])
+    return df.select(*keep, pq_encode_udf(codebooks, F.col(f"`{name}`"))
+                     .alias("__codes")).select(*keep, *[
+                         F.col("__codes")[b].alias(f"code{b}")
+                         for b in range(n_blocks)])

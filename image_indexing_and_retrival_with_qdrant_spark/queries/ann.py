@@ -637,23 +637,21 @@ def _np_centroids(sf_dir: str, k: int = 16, seed: int = 42):
 
 def _np_probe(sf_dir: str, nprobe: int, k: int = 16,
               seed: int = 42) -> list[int]:
-    """Driver-side coarse probe over the kmeans_np centroids: the
-    SAME left-to-right float64 fold the Spark probe's zip_with/
-    aggregate evaluates and the oracle factories replicate, ties by
-    centroid_id — so the literal probe set is bit-identical to what
-    the skipped probe job would have collected."""
-    qvec = _np_query_vec(sf_dir)
-    dists = []
-    for cid, c in enumerate(_np_centroids(sf_dir, k=k, seed=seed)):
-        acc = 0.0
-        for x, y in zip(c, qvec):
-            acc += (x - y) * (x - y)
-        dists.append((acc, cid))
-    return sorted(cid for _, cid in sorted(dists)[:nprobe])
+    """Driver-side coarse probe over the kmeans_np centroids:
+    ``nearest_np``, the left-to-right float64 fold the layout's
+    assignment uses and the oracle factories replicate, ties by
+    centroid_id — so the literal probe set is bit-identical to a
+    probe job's."""
+    from ..operators.ann import nearest_np
+
+    _, ids = nearest_np([_np_query_vec(sf_dir)],
+                        _np_centroids(sf_dir, k=k, seed=seed), nprobe)
+    return sorted(int(i) for i in ids[0])
 
 
 def _duck_sq_dist(vec: str, c: list[float]) -> str:
-    """DuckDB twin of operators/ann.py::_sq_dist_sql — the same
+    """DuckDB twin of the nearest-centroid distance
+    (operators/ann.py::nearest_sql / nearest_np) — the same
     left-associated (elem − c)² sum in float64."""
     return "(" + " + ".join(
         f"((CAST({vec}[{j + 1}] AS DOUBLE) - {float(cj)!r})"
@@ -709,12 +707,11 @@ def _ivf_det_index(spark: SparkSession, sf_dir: str):
     is the usual ``partitionBy(centroid_id)`` layout."""
     key = _cache_key(spark, sf_dir)
     if key not in _IVF_DET_CACHE or not _session_alive(spark):
-        from ..operators.ann import _centroid_structs_loop_sql
+        from ..operators.ann import nearest_cells
 
         cents = _np_centroids(sf_dir)
         emb = load(spark, sf_dir, "embeddings")
-        structs = _centroid_structs_loop_sql(cents, "`embedding`")
-        best = F.expr(f"array_min({structs})")
+        best = nearest_cells(cents, "embedding")[0]
         # localCheckpoint, not persist: the 16×64-literal argmin
         # lineage costs ~1 s of driver-side plan re-analysis on EVERY
         # query planned over a persisted frame (measured 1.1-1.6 s vs
@@ -836,35 +833,20 @@ _PQ_DET_CACHE: dict = {}
 
 
 def _pq_det_index(spark: SparkSession, sf_dir: str, n_blocks: int = 8):
-    """Cached deterministic-PQ code table: the per-block argmin
-    encode (8 unrolled expressions in one projection — past codegen's
-    combined-method budget, so interpreted) runs ONCE per (session,
-    sf, n_blocks) and persists 8-byte code rows; queries pay only the
-    ADC LUT scan. Same build-outside-the-timer policy as every tier."""
+    """Cached deterministic-PQ code table: the per-block
+    nearest-codeword encode (``pq_encode_frame``) runs ONCE per
+    (session, sf, n_blocks) and persists 8-byte code rows; queries pay
+    only the ADC LUT scan. Same build-outside-the-timer policy as
+    every tier."""
     key = (*_cache_key(spark, sf_dir), n_blocks)
     if key not in _PQ_DET_CACHE or not _session_alive(spark):
-        from ..operators.ann import assign_centroid_sql
+        from ..operators.pq import pq_encode_frame
 
         cbs = _np_pq_codebooks(sf_dir, n_blocks=n_blocks)
-        subdim = len(cbs[0][0])
         emb = load(spark, sf_dir, "embeddings")
-        # loop-shaped per-block argmin over a slice fragment: the
-        # unrolled Column form (8 argmins in ONE projection) blew
-        # janino's 64 KB budget — the whole encode stage ran
-        # interpreted after a failed ~300 KB compile. Values are
-        # identical (loop-SQL parity note, operators/ann.py); the
-        # cached codes feed the same ADC scan.
-        code_cols = [
-            assign_centroid_sql(
-                cbs[b],
-                f"slice(embedding, {b * subdim + 1}, {subdim})",
-            ).alias(f"code{b}")
-            for b in range(len(cbs))
-        ]
         # localCheckpoint for the same lineage-cost reason as
-        # _ivf_det_index (8 unrolled per-block argmin expressions)
-        codes = emb.select(F.col("vec_id"),
-                           *code_cols).localCheckpoint(eager=True)
+        # _ivf_det_index
+        codes = pq_encode_frame(emb, cbs).localCheckpoint(eager=True)
         _PQ_DET_CACHE[key] = (codes, cbs)
     return _PQ_DET_CACHE[key]
 
@@ -1144,57 +1126,27 @@ _OPQ_DET_CACHE: dict = {}
 
 
 def _opq_det_index(spark: SparkSession, sf_dir: str, n_blocks: int = 8):
-    """Cached OPQ code table: one scan-local rotation pass (the
-    proven pca_project_expr ↔ list_dot_product pairing with a zero
-    mean), then the per-block argmin encode over slices of the
-    rotated array — both materialized once per (session, sf) with the
-    same localCheckpoint lineage-truncation policy as `_pq_det_index`
-    (the combined rotation + 8-block-argmin tree would otherwise be
-    re-analyzed and re-evaluated per query). On disk at 100 TB this
-    is the usual 8-byte-code sidecar; rotation rides the ingest scan."""
+    """Cached OPQ code table: ``pq_encode_frame`` with the rotation —
+    one scan-local rotation pass in the fold shape (the proven
+    pca_project_expr ↔ list_dot_product pairing with a zero mean; the
+    d×d unrolled form overflowed janino's method budget into
+    interpreted eval at 18.1 s/50k rows, the fold took 2.1 s), then the
+    per-block codes over slices of the rotated array — both
+    materialized once per (session, sf) with the same localCheckpoint
+    lineage-truncation policy as `_pq_det_index`. The one-time encode
+    is spread across the cores (the single-file fixture is one
+    partition otherwise; per-row expressions, order-independent). On
+    disk at 100 TB this is the usual 8-byte-code sidecar; rotation
+    rides the ingest scan."""
     key = (*_cache_key(spark, sf_dir), "opq", n_blocks)
     if key not in _OPQ_DET_CACHE or not _session_alive(spark):
-        from ..functions.vector import _lit_array_sql
+        from ..operators.pq import pq_encode_frame
 
         R, cbs = _np_opq(sf_dir, n_blocks=n_blocks)
-        d = len(R)
-        subdim = len(cbs[0][0])
-        # rotation in the FOLD shape (pca_project_expr's past-the-gate
-        # branch, bit-equal to the unrolled chain — operators/pca.py):
-        # the d×d unrolled form is 4096 terms, which overflows janino's
-        # method budget into interpreted eval at 18.1 s/50k rows; the
-        # loop-shaped HOF evaluates the same left-assoc sums in 2.1 s.
-        # The 8 argmin blocks still eval interpreted (the combined
-        # projection is past the budget, like _pq_det_index), so the
-        # one-time encode is spread across the cores (single-file
-        # fixture = one partition otherwise; per-row expressions,
-        # order-independent).
-        ce = (f"zip_with(CAST(`embedding` AS ARRAY<DOUBLE>), "
-              f"{_lit_array_sql([0.0] * d)}, (x, m) -> x - m)")
-        comps = [
-            f"aggregate(zip_with({ce}, {_lit_array_sql(row)}, "
-            f"(x, w) -> x * w), CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
-            for row in _opq_w(R)]
         emb = load(spark, sf_dir, "embeddings").repartition(
             spark.sparkContext.defaultParallelism)
-        rot = emb.select(
-            "vec_id",
-            F.expr("array(" + ", ".join(comps) + ")").alias("rot"),
-        ).localCheckpoint(eager=True)
-        # per-block argmin via the shared LOOP-shape SQL string
-        # (operators/pq.py::pq_code_sql): distances as a transform
-        # over the codebook array literal with a fold-sum per
-        # codeword — bit-equal to the unrolled left-assoc chain, with
-        # a plan size independent of the codebook (the unrolled form
-        # evaluated interpreted past janino's budget: ~10 s/50k rows
-        # at 8×16×8; the loop form whole-stage-compiles)
-        from ..operators.pq import pq_code_sql
-
-        codes = rot.selectExpr(
-            "vec_id",
-            *[f"{pq_code_sql(cbs[b], '`rot`', b * subdim)} AS code{b}"
-              for b in range(n_blocks)],
-        ).localCheckpoint(eager=True)
+        codes = pq_encode_frame(emb, cbs, rotation=R).localCheckpoint(
+            eager=True)
         _OPQ_DET_CACHE[key] = (codes, cbs)
     return _OPQ_DET_CACHE[key]
 

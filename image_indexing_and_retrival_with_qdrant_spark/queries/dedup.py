@@ -429,7 +429,7 @@ def dedup_semantic_soft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidate volume stays n²/k-bounded (≈4× hard blocking for
     top-2). Assignment, blocking, scoring, and the dedupe rule all
     hash-check against the DuckDB twin."""
-    from ..operators.ann import assign_centroids_top2_expr
+    from ..operators.ann import nearest_cells
     from ..operators.dedup import soft_blocked_near_pairs
     from .ann import _np_centroids
 
@@ -437,10 +437,8 @@ def dedup_semantic_soft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     rows = emb.select(
         "vec_id", "embedding",
-        F.transform(
-            assign_centroids_top2_expr(cents, "embedding"),
-            lambda c: c.cast("long"),
-        ).alias("cells"))
+        F.transform(nearest_cells(cents, "embedding", 2),
+                    lambda s: s["i"].cast("long")).alias("cells"))
     return soft_blocked_near_pairs(rows, F.col("cells"), min_cosine=0.3,
                                    block_out="cell",
                                    materialize_memberships=True)
@@ -462,7 +460,7 @@ def dedup_semantic_soft_layout_pairs(spark: SparkSession,
     import shutil
     import tempfile
 
-    from ..operators.ann import assign_centroids_top2_expr
+    from ..operators.ann import nearest_cells
     from ..operators.dedup import (
         soft_layout_near_pairs,
         write_soft_membership_layout,
@@ -473,10 +471,8 @@ def dedup_semantic_soft_layout_pairs(spark: SparkSession,
     emb = load(spark, sf_dir, "embeddings")
     rows = emb.select(
         "vec_id", "embedding",
-        F.transform(
-            assign_centroids_top2_expr(cents, "embedding"),
-            lambda c: c.cast("long"),
-        ).alias("cells"))
+        F.transform(nearest_cells(cents, "embedding", 2),
+                    lambda s: s["i"].cast("long")).alias("cells"))
     from ..bench_phases import phase
 
     path = tempfile.mkdtemp(prefix="qd_soft_members_")
@@ -584,7 +580,7 @@ def dedup_semantic_soft_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-2 assignment, soft edges, transitive closure, keep window —
     with a recursive CTE, so cross-cell chains must collapse
     identically in both engines."""
-    from ..operators.ann import _centroid_structs_loop_sql
+    from ..operators.ann import nearest_cells
     from ..operators.dedup import (
         connected_components,
         soft_blocked_near_pairs,
@@ -593,10 +589,9 @@ def dedup_semantic_soft_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cents = _np_centroids(sf_dir)
     emb = load(spark, sf_dir, "embeddings")
-    structs = _centroid_structs_loop_sql(cents, "`embedding`")
     rows = emb.select(
         "vec_id", "embedding",
-        F.expr(f"slice(array_sort({structs}), 1, 2)").alias("__s"),
+        nearest_cells(cents, "embedding", 2).alias("__s"),
     ).select(
         "vec_id", "embedding",
         F.expr("transform(__s, s -> CAST(s.i AS BIGINT))").alias("cells"),

@@ -79,27 +79,16 @@ def _np_rows(sf_dir: str):
 
 def _np_cells(sf_dir: str, k: int = 16) -> list[int]:
     """Per-row (ascending-id) nearest-centroid cell over the kmeans_np
-    codebook, distances accumulated LEFT-TO-RIGHT in float64 — the
-    same sequential fold Spark's unrolled assignment expression
-    evaluates (operators/ann.py::_sq_dist_sql), NOT numpy's pairwise
-    sum, so memberships are bit-identical to the `_ivf_det_index`
-    layout the routed builder shards on. First-min tie-break ≡ the
-    lexicographic struct min."""
+    codebook — ``nearest_np``, the one rule the `_ivf_det_index`
+    layout the routed builder shards on is assigned by, so memberships
+    are bit-identical to it."""
+    from ..operators.ann import nearest_np
+
     key = (sf_dir, k)
     if key not in _NP_CELLS:
-        cents = _np_centroids(sf_dir, k=k)
-        ids, X = _np_rows(sf_dir)
-        out = []
-        for row in X:
-            best_d, best_i = None, 0
-            for cid, c in enumerate(cents):
-                acc = 0.0
-                for x, y in zip(row, c):
-                    acc += (x - y) * (x - y)
-                if best_d is None or acc < best_d:
-                    best_d, best_i = acc, cid
-            out.append(best_i)
-        _NP_CELLS[key] = out
+        _, X = _np_rows(sf_dir)
+        _NP_CELLS[key] = [int(i) for i in nearest_np(
+            X, _np_centroids(sf_dir, k=k))[1][:, 0]]
     return _NP_CELLS[key]
 
 

@@ -1899,11 +1899,11 @@ def _hnsw_lifecycle_candidates(sf_dir: str,
             # rotation); rows rotate through the proven
             # pca_project_py pairing of the fold-shape expression;
             # encode = left-to-right (x−c)² fold + FIRST-min argmin —
-            # the same float shapes as pq_code_sql's aggregate fold +
-            # array_position; the walk space is pq_decode_np's
-            # reconstruction (the ROTATED space for OPQ — the walk
-            # query rotates too, in the caller), shared with the
-            # engine's build and search
+            # a reference twin of the nearest-centroid rule
+            # pq_encode_frame encodes by (operators/ann.py); the walk
+            # space is pq_decode_np's reconstruction (the ROTATED
+            # space for OPQ — the walk query rotates too, in the
+            # caller), shared with the engine's build and search
             from ..operators.pca import pca_project_py
             from ..operators.pq import pq_decode_np
 

@@ -1011,11 +1011,11 @@ def _np_pca_centroids(sf_dir: str, kc: int = _PCA_IVF_K):
 def _np_pca_probe(sf_dir: str, nprobe: int = 4) -> list[int]:
     """Driver-side coarse probe: project the query with EXPLICIT
     left-to-right float64 folds (the exact SQL shape — no BLAS, whose
-    summation order differs), then rank centroid distances the same
-    way, ties by centroid id."""
+    summation order differs), then rank the cells by ``nearest_np``,
+    the rule the layout was assigned by."""
     import os
 
-    from ..operators.ann import read_vectors_np
+    from ..operators.ann import nearest_np, read_vectors_np
 
     mu, W = _np_pca(sf_dir)
     q = read_vectors_np(os.path.join(sf_dir, "embeddings.parquet"))[7]
@@ -1025,13 +1025,8 @@ def _np_pca_probe(sf_dir: str, nprobe: int = 4) -> list[int]:
         for j, (m, x) in enumerate(zip(mu, row)):
             acc += (float(q[j]) - m) * x
         qp.append(acc)
-    dists = []
-    for cid, c in enumerate(_np_pca_centroids(sf_dir)):
-        acc = 0.0
-        for a, b in zip(qp, c):
-            acc += (a - float(b)) * (a - float(b))
-        dists.append((acc, cid))
-    return sorted(cid for _, cid in sorted(dists)[:nprobe])
+    _, ids = nearest_np([qp], _np_pca_centroids(sf_dir), nprobe)
+    return sorted(int(i) for i in ids[0])
 
 
 _PCA_IVF_CACHE: dict = {}
@@ -1045,7 +1040,7 @@ def _pca_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame first (the `_ivf_det_index` lineage-cut rationale), then
     assign over the materialized 8-d column. On disk this is the usual
     ``partitionBy(centroid_id)`` layout, built once."""
-    from ..operators.ann import assign_centroid_expr
+    from ..operators.ann import nearest_cells
     from .ann import _cache_key, _session_alive
 
     key = _cache_key(spark, sf_dir)
@@ -1057,7 +1052,7 @@ def _pca_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                        _pca_project_expr(mu, W).alias("pe")
                        ).localCheckpoint()
         _PCA_IVF_CACHE[key] = p.withColumn(
-            "cid", assign_centroid_expr(cents, "pe")).localCheckpoint()
+            "cid", nearest_cells(cents, "pe")[0]["i"]).localCheckpoint()
     return _PCA_IVF_CACHE[key]
 
 
@@ -1119,7 +1114,7 @@ def emb_pca_ivf_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF), probe the query's 4 nearest cells, exact full-width cosine
     over just the probed fraction. Assignment, probe, AND rescore are
     value-checked through the factory oracle. At 100 TB: the
-    projection+assignment is one codegen scan; cells become the usual
+    projection+assignment is one map-only scan; cells become the usual
     ``partitionBy(centroid_id)`` layout; the compressed routing table
     (16×8 floats) broadcasts for free."""
     probe = _np_pca_probe(sf_dir)

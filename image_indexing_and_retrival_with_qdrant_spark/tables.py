@@ -20,17 +20,23 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# (path, file mtime) -> schema. Schema inference on a parquet read is
-# a driver-side footer pass that Spark often runs as a 1-task job —
-# paid on EVERY load() call even though the fixture files never change
-# within a run. Same discipline as catalog._SCHEMA_CACHE: the key
-# carries the mtime, so a regenerated fixture re-infers. The events
+# path -> (mtime, schema), the one schema cache of every parquet read
+# (fixture loads and catalog tables/sidecars alike). Creating a parquet
+# DataFrame without a schema runs a driver-side footer pass that Spark
+# often launches as a 1-task JOB (measured: 40-70 ms + ~150 ms of
+# driver gap each; a warm catalog lifecycle query paid ~7 of them
+# re-reading sidecars it had just written). The key carries the path's
+# mtime: every Spark write — append, overwrite, partitionBy — rewrites
+# <root>/_SUCCESS, so a directory's mtime moves on ANY write through
+# any engine, and a regenerated fixture file re-infers. The events
 # schema depends on the nanosAsLong conf, but load() always sets that
 # conf before reading, so its cached schema is stable too.
 _SCHEMA_CACHE: dict[str, tuple[int, object]] = {}
 
 
 def _read_cached(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` with the schema cached per
+    (path, mtime)."""
     try:
         mtime = os.stat(path).st_mtime_ns
     except OSError:

@@ -353,8 +353,9 @@ def pca_sweep(spark, corpus, qids, qvecs, exact, k: int, out: dict) -> None:
     import tempfile
 
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroid_expr,
         kmeans_np,
+        nearest_cells,
+        nearest_np,
         read_vectors_np,
     )
     from image_indexing_and_retrival_with_qdrant_spark.queries.pipeline import (
@@ -378,9 +379,9 @@ def pca_sweep(spark, corpus, qids, qvecs, exact, k: int, out: dict) -> None:
         cents_pca = _np_pca_centroids(tmp)
         cents_raw = kmeans_np(X, len(cents_pca), seed=42)
         frame_raw = corpus.withColumn(
-            "cid", assign_centroid_expr(
-                [[float(x) for x in c] for c in cents_raw], "embedding")
-        ).localCheckpoint()
+            "cid", nearest_cells(
+                [[float(x) for x in c] for c in cents_raw], "embedding"
+            )[0]["i"]).localCheckpoint()
 
         def project(q):
             qp = []
@@ -392,13 +393,7 @@ def pca_sweep(spark, corpus, qids, qvecs, exact, k: int, out: dict) -> None:
             return qp
 
         def nearest(q, cents, nprobe):
-            dists = []
-            for cid, c in enumerate(cents):
-                acc = 0.0
-                for a, b in zip(q, c):
-                    acc += (float(a) - float(b)) * (float(a) - float(b))
-                dists.append((acc, cid))
-            return [cid for _, cid in sorted(dists)[:nprobe]]
+            return [int(i) for i in nearest_np([q], cents, nprobe)[1][0]]
 
         def qdf(qid):
             return spark.createDataFrame([(qvecs[qid],)],
@@ -441,6 +436,7 @@ def hnsw_sweep(spark, corpus, qids, qvecs, exact, k: int, out: dict) -> None:
     Feeds BASELINE.md §hnsw-recall and routing's HNSW ceilings."""
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
         kmeans_np,
+        nearest_np,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.hnsw import (
         _normalize_rows,
@@ -487,17 +483,15 @@ def hnsw_sweep(spark, corpus, qids, qvecs, exact, k: int, out: dict) -> None:
                      exact[q]) for q in qids]
         out[f"hnsw_recall@10_ef{ef}"] = round(float(np.mean(rs)), 3)
 
-    cents = np.asarray(kmeans_np(X, 16, seed=42))
-    d2 = np.stack([((X - c) ** 2).sum(axis=1) for c in cents], axis=1)
-    cells = np.argmin(d2, axis=1)
+    cents = kmeans_np(X, 16, seed=42)
+    cells = nearest_np(X, cents)[1][:, 0]
     routed = build_segments(
         {s: np.nonzero(cells == s)[0].tolist() for s in range(16)})
     for nprobe in (1, 2, 4, 8):
         rs = []
         for q in qids:
             qv = np.asarray(qvecs[q], dtype=np.float64)
-            cd = ((cents - qv) ** 2).sum(axis=1)
-            probe = np.argsort(cd, kind="stable")[:nprobe].tolist()
+            probe = nearest_np([qv], cents, nprobe)[1][0].tolist()
             rs.append(recall(topk_ids(routed, probe, qv, 32), exact[q]))
         out[f"hnsw_routed_recall@10_np{nprobe}"] = round(
             float(np.mean(rs)), 3)

@@ -476,11 +476,11 @@ def ivf_skew_stress(n: int = 10_000_000) -> None:
         l2_normalize,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroids,
         ivf_cell_counts,
         ivf_search,
         ivf_split_hot_cells,
         kmeans_np,
+        nearest_cells,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.knn import (
         dense_knn,
@@ -524,7 +524,7 @@ def ivf_skew_stress(n: int = 10_000_000) -> None:
         X = [r.embedding for r in sorted(cold_sample, key=lambda r: r[0])]
         cents = kmeans_np(X, 64, seed=42)
         assigned = corpus.withColumn(
-            "centroid_id", assign_centroids(cents, "embedding"))
+            "centroid_id", nearest_cells(cents, "embedding")[0]["i"])
         assigned.write.mode("overwrite").partitionBy(
             "centroid_id").parquet(layout)
         timings["stale_build_and_layout"] = round(time.perf_counter() - t0, 2)
@@ -835,7 +835,7 @@ def semdedup_stress(n: int = 1_000_000, k: int = 1000,
     game, and the cap-and-split policy (skew stress above) bounds the
     worst cell.
 
-    ``soft=1``: top-2 soft assignment (`assign_centroids_top2_udf` +
+    ``soft=1``: top-2 soft assignment (`nearest_cells(..., n=2)` +
     `soft_blocked_near_pairs`) — the boundary-miss fix: a planted
     pair is lost only when the copies share NONE of their 2 cells.
     Candidate volume ≈4× hard blocking; the operator explodes in-plan
@@ -852,9 +852,9 @@ def semdedup_stress(n: int = 1_000_000, k: int = 1000,
         l2_normalize,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroids,
         ivf_cell_counts,
         kmeans_np,
+        nearest_cells,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.dedup import (
         embedding_near_pairs,
@@ -894,16 +894,13 @@ def semdedup_stress(n: int = 1_000_000, k: int = 1000,
 
         t0 = time.perf_counter()
         if soft:
-            from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (  # noqa: E501
-                assign_centroids_top2_udf,
-            )
-
             assigned = corpus.withColumn(
-                "cells", assign_centroids_top2_udf(cents, F.col("embedding"))
+                "cells", F.transform(nearest_cells(cents, "embedding", 2),
+                                     lambda c: c["i"])
             ).withColumn("centroid_id", F.col("cells")[0])
         else:
             assigned = corpus.withColumn(
-                "centroid_id", assign_centroids(cents, F.col("embedding")))
+                "centroid_id", nearest_cells(cents, "embedding")[0]["i"])
         if soft == 2:
             from image_indexing_and_retrival_with_qdrant_spark.operators.dedup import (  # noqa: E501
                 write_soft_membership_layout,
@@ -1161,8 +1158,9 @@ def hnsw_stress(n: int = 1_000_000, dim: int = 64,
     The headline is build throughput (points/sec into graphs) and the
     routed-vs-exact wall ratio at equal recall."""
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroids,
         kmeans_np,
+        nearest_cells,
+        nearest_np,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.hnsw import (
         hnsw_layout,
@@ -1255,19 +1253,16 @@ def hnsw_stress(n: int = 1_000_000, dim: int = 64,
         cents = kmeans_np(Xs, n_segments, seed=42, max_iter=5)
         t0 = time.perf_counter()
         assigned = corpus.withColumn(
-            "cell", assign_centroids(cents, F.col("embedding")))
+            "cell", nearest_cells(cents, "embedding")[0]["i"])
         rlay_dir = os.path.join(lay_dir, "routed")
         (hnsw_layout(assigned, seg_col="cell")
          .write.mode("overwrite").partitionBy("segment").parquet(rlay_dir))
         out["routed_build_sec"] = round(time.perf_counter() - t0, 2)
         rlay = spark.read.parquet(rlay_dir)
 
-        C = np.asarray(cents)
         ts, rs = [], []
         for qid in qids:
-            qv = np.asarray(qvecs[qid], dtype=np.float64)
-            cd = ((C - qv) ** 2).sum(axis=1)
-            probe = np.argsort(cd, kind="stable")[:8].tolist()
+            probe = nearest_np([qvecs[qid]], cents, 8)[1][0].tolist()
             dt, got = timed_search(qid, segments=probe, layout=rlay)
             ts.append(dt)
             rs.append(len(got & exact_sets[qid]) / 10)
@@ -1751,6 +1746,56 @@ def _hash_vectors(spark, n: int, dim: int):
             / F.lit(1000000.0) for i in range(dim)]).alias("embedding"))
 
 
+def assign_cost(n: int = 20_000, dim: int = 64,
+                ks: tuple = (4, 8, 16, 32, 64, 128, 256)) -> None:
+    """The table behind ``operators/ann.py::NEAREST_SQL_MAX``: for each
+    codebook size k over a cached ``n × dim`` corpus, the median of 3
+    warm wall seconds of one assignment pass in each form of the
+    nearest-centroid rule — the SQL expression (``nearest_sql``) and
+    the Arrow UDF over ``nearest_np`` — the form the gate picks, and
+    whether the SQL form's projection is whole-stage compiled (a
+    ``*(n)`` marker in the executed plan). Asserts that both forms
+    give every row the same cell."""
+    from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
+        NEAREST_SQL_MAX,
+        _nearest_udf,
+        kmeans_np,
+        nearest_sql,
+    )
+
+    spark = get_spark("stress-assign",
+                      cpus=os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    spark.sparkContext.setLogLevel("ERROR")
+    corpus = _hash_vectors(spark, n, dim).localCheckpoint(eager=True)
+    X = [r.embedding for r in corpus.orderBy("vec_id").limit(4096).collect()]
+
+    def wall(col) -> float:
+        ts = []
+        for _ in range(4):  # one warm-up, then 3 timed
+            t0 = time.perf_counter()
+            corpus.select(col.alias("c")).write.format("noop").mode(
+                "overwrite").save()
+            ts.append(time.perf_counter() - t0)
+        return sorted(ts[1:])[1]
+
+    print(f"rows={n} dim={dim} gate={NEAREST_SQL_MAX}")
+    print(f"{'k':>5} {'k*d':>6} {'sql_s':>7} {'udf_s':>7} {'gate':>5}"
+          f"  sql_codegen")
+    for k in ks:
+        cents = kmeans_np(X, k, seed=42, max_iter=3)
+        sql = F.expr(nearest_sql(cents, "`embedding`") + "[0].i")
+        udf = _nearest_udf(cents, 1)(F.col("embedding"))[0]["i"]
+        assert corpus.filter(sql != udf).count() == 0, f"forms disagree at k={k}"
+        plan = corpus.select(sql.alias("c"))._jdf.queryExecution() \
+            .executedPlan().toString()
+        codegen = any(line.lstrip(" +-:").startswith("*(")
+                      and "Project" in line for line in plan.splitlines())
+        gate = "sql" if k * dim <= NEAREST_SQL_MAX else "udf"
+        print(f"{k:>5} {k * dim:>6} {wall(sql):>7.2f} {wall(udf):>7.2f} "
+              f"{gate:>5}  {codegen}")
+    spark.stop()
+
+
 def scorer_cost(n: int = 1000, dim: int = 64, runs: int = 5) -> None:
     """Median CPU per top-10 dense search over a cached ``n × dim``
     corpus for each scorer form: the query as a broadcast one-row
@@ -1896,6 +1941,9 @@ def main() -> None:
         for name, n in counts.items():
             print(f"{n:6d}  {name}")
         print(f"{sum(counts.values()):6d}  total")
+        return
+    if len(sys.argv) > 1 and sys.argv[1] == "assign":
+        assign_cost(*[int(a) for a in sys.argv[2:]])
         return
     if len(sys.argv) > 1 and sys.argv[1] == "scorer":
         scorer_cost(*[int(a) for a in sys.argv[2:]])

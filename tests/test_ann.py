@@ -86,54 +86,18 @@ def test_lsh_self_hit_and_recall(spark, sf_smoke):
     assert recall >= 0.3, f"LSH recall@10 too low: {recall}"
 
 
-def test_udf_assignment_matches_expr_and_survives_big_codebooks(spark, sf_smoke):
-    """The Arrow-batched numpy assignment agrees with the codegen'd
-    expression, and handles codebooks past janino's 64 KB method limit
-    (128 centroids × 8 dims crashes the unrolled expression with
-    'Code grows beyond 64 KB')."""
-    import numpy as np
-
-    from image_indexing_and_retrival_with_qdrant_spark.functions.vector import (
-        as_double,
-    )
-    from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroid_expr,
-        assign_centroid_udf,
-        assign_centroids,
-    )
-
-    emb = load(spark, sf_smoke, "embeddings")
-    rng = np.random.RandomState(5)
-    small = rng.standard_normal((8, 64)).tolist()
-    v = as_double(F.col("embedding"))
-    by_expr = {r.vec_id: r.c for r in emb.select(
-        "vec_id", assign_centroid_expr(small, v).alias("c")).collect()}
-    by_udf = {r.vec_id: r.c for r in emb.select(
-        "vec_id", assign_centroid_udf(small, v).alias("c")).collect()}
-    assert by_expr == by_udf
-
-    big = rng.standard_normal((128, 8)).tolist()
-    sub = F.slice(F.col("embedding"), 1, 8).cast("array<double>")
-    got = emb.select("vec_id", assign_centroids(big, sub).alias("c")).collect()
-    assert len(got) == emb.count()
-    assert all(0 <= r.c < 128 for r in got)
-
-
 def test_expr_assignment_matches_ml_transformer(spark, sf_smoke):
     """Sample-trained + expression-assigned IVF must agree with the
     ml-transformer assignment for the same centroids."""
     emb = load(spark, sf_smoke, "embeddings")
     a1, c1 = _ivf_built(spark, sf_smoke, 8)
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroid_expr,
-    )
-    from image_indexing_and_retrival_with_qdrant_spark.functions.vector import (
-        as_double,
+        nearest_cells,
     )
 
     cents = [r.centroid for r in c1.orderBy("centroid_id").collect()]
     a2 = emb.withColumn(
-        "centroid_id", assign_centroid_expr(cents, as_double(F.col("embedding")))
+        "centroid_id", nearest_cells(cents, "embedding")[0]["i"]
     )
     m1 = {r.vec_id: r.centroid_id for r in a1.select("vec_id", "centroid_id").collect()}
     m2 = {r.vec_id: r.centroid_id for r in a2.select("vec_id", "centroid_id").collect()}
@@ -331,35 +295,3 @@ def test_ivf_split_hot_cells(spark, sf_smoke):
                                           cap_fraction=0.9)
     assert same is re_assigned and sorted(c for c, _ in same_rows) == \
         sorted(cids)
-
-
-def test_top2_assignment_expr_udf_agree(spark, sf_smoke):
-    """Soft (top-2) assignment: the Arrow-batched numpy form agrees
-    with the codegen'd struct-sort expression, and cells[0] equals
-    the hard argmin assignment (same (d, i) tie-break)."""
-    import numpy as np
-
-    from image_indexing_and_retrival_with_qdrant_spark.functions.vector import (
-        as_double,
-    )
-    from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroid_expr,
-        assign_centroids_top2_expr,
-        assign_centroids_top2_udf,
-    )
-
-    emb = load(spark, sf_smoke, "embeddings")
-    rng = np.random.RandomState(7)
-    cents = rng.standard_normal((8, 64)).tolist()
-    v = as_double(F.col("embedding"))
-    by_expr = {r.vec_id: r.c for r in emb.select(
-        "vec_id",
-        assign_centroids_top2_expr(cents, "embedding").alias("c"),
-    ).collect()}
-    by_udf = {r.vec_id: list(r.c) for r in emb.select(
-        "vec_id", assign_centroids_top2_udf(cents, v).alias("c")).collect()}
-    assert {k: list(vv) for k, vv in by_expr.items()} == by_udf
-    hard = {r.vec_id: r.c for r in emb.select(
-        "vec_id", assign_centroid_expr(cents, v).alias("c")).collect()}
-    assert all(by_expr[i][0] == hard[i] for i in hard)
-    assert all(c[0] != c[1] for c in by_expr.values())

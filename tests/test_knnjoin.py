@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from image_indexing_and_retrival_with_qdrant_spark.operators.ann import ivf_build
 from image_indexing_and_retrival_with_qdrant_spark.operators.knnjoin import (
     knn_join,
-    probe_cells,
 )
 from image_indexing_and_retrival_with_qdrant_spark.registry import REGISTRY
 from image_indexing_and_retrival_with_qdrant_spark.tables import load
@@ -42,13 +41,14 @@ def _setup(spark, sf_smoke):
 
 def test_probe_cells_first_is_own_cell(spark, sf_smoke):
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroids,
+        nearest_cells,
     )
 
     emb, cents, _ = _setup(spark, sf_smoke)
     df = emb.select(
-        assign_centroids(cents, F.col("embedding")).alias("own"),
-        probe_cells(cents, F.col("embedding"), 3).alias("probes"),
+        nearest_cells(cents, F.col("embedding"))[0]["i"].alias("own"),
+        F.transform(nearest_cells(cents, F.col("embedding"), 3),
+                    lambda s: s["i"]).alias("probes"),
     )
     rows = df.collect()
     assert all(r.probes[0] == r.own for r in rows)

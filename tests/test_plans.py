@@ -229,8 +229,8 @@ def test_soft_membership_layout_join_is_exchange_free(spark, sf_smoke,
     from pyspark.sql import functions as F
 
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroids_top2_udf,
         kmeans_np,
+        nearest_cells,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.dedup import (
         soft_layout_near_pairs,
@@ -243,7 +243,8 @@ def test_soft_membership_layout_join_is_exchange_free(spark, sf_smoke,
          sorted(emb.limit(256).collect(), key=lambda r: r.vec_id)]
     cents = kmeans_np(X, 4, seed=42, max_iter=3)
     assigned = emb.withColumn(
-        "cells", assign_centroids_top2_udf(cents, F.col("embedding")))
+        "cells", F.transform(nearest_cells(cents, F.col("embedding"), 2),
+                             lambda s: s["i"]))
     write_soft_membership_layout(
         assigned, F.col("cells"), str(tmp_path / "members"),
         "soft_members_plan_test", buckets=4, id_col="vec_id")

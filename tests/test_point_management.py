@@ -1022,3 +1022,46 @@ def test_payload_ops_keep_vector_sidecars(spark, tmp_path, shape):
         assert {r.id: r.lang for r in ivf.filter(
             F.col("id") <= 3).collect()} == {0: "de", 1: "xx", 2: "xx",
                                              3: "yy"}
+
+
+def test_schema_cache_partition_only_write_then_new_key(spark, tmp_path):
+    """The one parquet schema cache (``tables._read_cached``) is keyed
+    on the directory's mtime. A file-scoped point op on a payload-index
+    layout lands only in partition subdirectories (through
+    ``_swap_staged_files``), so the root's mtime does not move — safe,
+    because a file-scoped op never changes the columns. A
+    ``set_payload`` that adds a new key is a schema change and rewrites
+    table-wide, so on an IVF-indexed collection the new column reads
+    back from the table and from the cells layout."""
+    import random
+
+    from image_indexing_and_retrival_with_qdrant_spark.catalog import (
+        _read_parquet,
+    )
+
+    rnd = random.Random(11)
+    coll = create_collection(str(tmp_path), "sc", dim=4, normalize=False,
+                             indexing_threshold=1, k_centroids=2)
+    coll.create_payload_index(spark, "tenant")
+    coll.upsert(spark, spark.createDataFrame(
+        [(i, [rnd.gauss(0.0, 1.0) for _ in range(4)],
+          ("acme", "beta", "corp", "dyne")[i % 4], i) for i in range(200)],
+        "id long, embedding array<double>, tenant string, price long"))
+    assert coll.has_index()
+    _read_parquet(spark, coll.path)  # warm the cache
+    root_mtime = os.stat(coll.path).st_mtime_ns
+    before = set(os.listdir(coll.path))
+
+    assert coll.set_payload(spark, {"price": -1}, [3]) == 1
+    assert os.stat(coll.path).st_mtime_ns == root_mtime
+    assert set(os.listdir(coll.path)) == before
+    assert coll.read(spark).filter(F.col("id") == 3).first().price == -1
+
+    assert coll.set_payload(spark, {"flag": "hot"}, [5, 6]) == 2
+    got = {r.id: r.flag for r in coll.read(spark).select(
+        "id", "flag").collect()}
+    assert got[5] == got[6] == "hot" and got[7] is None
+    cells = _read_parquet(spark, coll._ivf_points)
+    assert "flag" in cells.columns
+    assert {r.id for r in cells.filter(F.col("flag") == "hot")
+            .select("id").collect()} == {5, 6}

@@ -173,8 +173,8 @@ def test_soft_layout_pairs_match_inplan(spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 
     from image_indexing_and_retrival_with_qdrant_spark.operators.ann import (
-        assign_centroids_top2_udf,
         kmeans_np,
+        nearest_cells,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.dedup import (
         soft_blocked_near_pairs,
@@ -188,7 +188,8 @@ def test_soft_layout_pairs_match_inplan(spark, sf_smoke, tmp_path):
          sorted(emb.collect(), key=lambda r: r.vec_id)][:512]
     cents = kmeans_np(X, 6, seed=42, max_iter=5)
     assigned = emb.withColumn(
-        "cells", assign_centroids_top2_udf(cents, F.col("embedding")))
+        "cells", F.transform(nearest_cells(cents, F.col("embedding"), 2),
+                             lambda s: s["i"]))
 
     ref = sorted((r.id_a, r.id_b, r.cosine) for r in soft_blocked_near_pairs(
         assigned, F.col("cells"), id_col="vec_id",
