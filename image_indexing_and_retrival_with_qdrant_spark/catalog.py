@@ -327,43 +327,61 @@ def _drift_verdict(counts: dict, k: int, base: float | None,
     return verdict
 
 
-class _CellLayout:
-    """One trained, cell-partitioned layout: the IVF points layout
-    (every column of the table, cells by ``centroid_id``, centroid
-    table beside it) or one PCA space's projected cells (``(id,
-    pvec)`` rows, cells by ``pcell`` carved in the compressed space,
-    components and centroids frozen in the space's meta). Both train
-    once past their threshold, append with frozen cells, meter drift
-    against the balance recorded when the cells were trained and
-    retrain on demand, through the same Collection methods."""
+class _Layout:
+    """One row of the declared layout table (``Collection._layouts``):
+    a layout derived from the point table, for one space.
 
-    def __init__(self, coll: "Collection", space: str | None = None,
-                 pca: bool = False):
-        meta = coll.meta
-        self.cfg = meta if space is None else meta["vectors"][space]
-        self.space, self.pca = space, pca
-        if pca:
-            self.path, self.key = coll._pca_path_for(space), "pcell"
-            self.state = ("pca_mu", "pca_w", "pca_centroids",
-                          "pca_balance_ratio")
-            self.maintained = self.cfg.get("transform") == "pca"
-            self.threshold = int(meta.get("indexing_threshold") or 1)
-        else:
-            self.path, self.key = coll._ivf_points, "centroid_id"
-            self.state = ("index_built", "index_k", "index_balance_ratio")
-            # a transform collection's cells are its PCA space's
-            self.maintained = bool(meta.get("indexing_threshold")
-                                   and not meta.get("transform"))
-            self.threshold = meta.get("indexing_threshold")
-        self.baseline = self.state[-1]
+    - ``kind``: ``cells`` (the IVF points layout: every column, cells
+      by ``centroid_id``, centroid table beside it), ``codes`` (a
+      space's quantizer codes), ``graphs`` (per-cell HNSW),
+      ``postings`` (a sparse space's inverted index and its ``.df``)
+      or ``pca`` (a PCA space's projected cells by ``pcell``).
+    - ``paths``: its files; the snapshot, restore and delete set.
+    - ``source``: the row it derives from, ``(kind, space)``, or None
+      for the point table itself; a change to the source re-derives it.
+    - ``key``: the partition column (None: unpartitioned).
+    - ``state``: the meta keys it owns in ``cfg``, its built marker
+      first. Its source changing drops the marker; the layout itself
+      being dropped or retrained drops them all.
+    - ``gate``: the config key that decides whether it is maintained;
+      ``maintained()`` reads that decision off the current meta.
+    - ``threshold``: the point count at which a maintained layout is
+      due (None: never pending on its own).
+    - ``payload``: it copies the payload, so a payload-only write
+      refreshes it.
+    - ``drift``: its remedy for a skewed verdict — ``split`` (split or
+      rebuild), ``rebuild`` (rebuild only) or None (no drift meter).
+    - ``write(spark, incoming, id_col, vec_col, rewrote)``: its writer."""
+
+    def __init__(self, kind: str, space: str | None, cfg: dict,
+                 paths: list, source, key, state: tuple, gate: str,
+                 maintained, threshold=None, payload: bool = False,
+                 drift: str | None = None, write=None):
+        self.kind, self.space, self.cfg = kind, space, cfg
+        self.paths, self.path = paths, paths[0]
+        self.source, self.key, self.state = source, key, state
+        self.gate, self.maintained = gate, maintained
+        self.threshold, self.payload, self.drift = threshold, payload, drift
+        self.write, self.baseline = write, state[-1]
 
     @property
-    def trained(self) -> bool:
+    def id(self) -> tuple:
+        return self.kind, self.space
+
+    @property
+    def built(self) -> bool:
         return bool(self.cfg.get(self.state[0]))
 
     @property
+    def present(self) -> bool:
+        return self.built or any(os.path.exists(p) for p in self.paths)
+
+    def due(self, n: int | None) -> bool:
+        return self.threshold is not None and (n or 0) >= self.threshold
+
+    @property
     def k(self) -> int:
-        if self.pca:
+        if self.kind == "pca":
             return len(self.cfg.get("pca_centroids") or ()) or 1
         return int(self.cfg.get("index_k")
                    or self.cfg.get("k_centroids") or 16)
@@ -395,54 +413,38 @@ class Collection:
     def info(self, spark: SparkSession | None = None) -> dict:
         """Qdrant ``get_collection`` analog: status + config + counts.
         ``status`` is ``green`` (index current or not required) or
-        ``yellow`` (indexing threshold crossed but layout missing, or
-        an unexecuted ``index_drift()`` rebuild/split verdict —
-        Qdrant's optimizing state). Config echoes the frozen creation
-        meta; counts need a SparkSession (omitted → counts are None,
-        the metadata-only form)."""
+        ``yellow`` (a maintained layout past its threshold but not
+        built — the IVF cells, a PCA space, a sparse space's postings,
+        the graphs over built cells — or an unexecuted rebuild/split
+        drift verdict: Qdrant's optimizing state). ``index_drift`` is
+        the IVF cells' verdict; ``pca_drift`` is the PCA space's
+        verdict on a single-space collection and ``{space: verdict}``
+        over the PCA spaces of a named one (None without one). Config
+        echoes the frozen creation meta; counts need a SparkSession
+        (omitted → counts are None, the metadata-only form)."""
         cfg = {k: v for k, v in self.meta.items()
                if k not in ("payload_indexes",)}
         # footer-metadata count: Qdrant's get_collection likewise
         # reports points_count from segment metadata, not a scan
         n = self.count(spark, exact=False) if spark is not None else None
-        threshold = self.meta.get("indexing_threshold")
-        needs_index = (threshold is not None and n is not None
-                       and n >= threshold)
-        # a sparse space past its full_scan_threshold without a built
-        # posting layout is the same optimizing state
-        sparse_pending = any(
-            c.get("full_scan_threshold") is not None
-            and not c.get("postings_built")
-            and n is not None and n >= c["full_scan_threshold"]
-            for c in (self.meta.get("sparse_vectors") or {}).values())
-        # a pending drift verdict (rebuild/split recommended but not
-        # executed — drift_auto=None, or action="rebuild" under the
-        # "split" policy) is the same optimizing-needed state
-        drift, pdrift = self.index_drift(), self.pca_drift()
-        # a transform="pca" collection's deferred build IS its index
-        # (the raw auto-index is replaced — create_collection docs):
-        # the pending state is "threshold crossed, transform
-        # untrained", not the absent raw layout
-        pending_index = (needs_index and not self.has_index())
-        if self.meta.get("transform") == "pca":
-            pending_index = needs_index and "pca_mu" not in self.meta
-        # an hnsw_config collection whose cells exist but whose graph
-        # sidecar lags is the same optimizing state
-        hnsw_pending = (bool(self.meta.get("hnsw"))
-                        and self.has_index() and not self._has_hnsw())
-        status = "yellow" if (pending_index
-                              or hnsw_pending
-                              or sparse_pending
-                              or (drift or {}).get("action")
-                              or (pdrift or {}).get("action")) \
+        rows = self._layouts()
+        drifts = {lay.id: self._layout_drift(lay) for lay in rows
+                  if lay.drift}
+        pca = {lay.space: drifts[lay.id] for lay in rows
+               if lay.kind == "pca" and lay.maintained()}
+        status = "yellow" if (
+            any(lay.maintained() and not lay.built and lay.due(n)
+                for lay in rows)
+            or any((v or {}).get("action") for v in drifts.values())) \
             else "green"
         return {
             "status": status,
             "points_count": n,
             "indexed": self.has_index(),
             "hnsw_built": self._has_hnsw(),
-            "index_drift": drift,
-            "pca_drift": pdrift,
+            "index_drift": drifts[("cells", None)],
+            "pca_drift": (pca or None) if self.meta.get("vectors")
+            else drifts[("pca", None)],
             "payload_indexes": list(self.meta.get(
                 "payload_indexes") or ()),
             "segments_count": len([f for f in os.listdir(self.path)
@@ -455,8 +457,8 @@ class Collection:
     #
     # A snapshot is a byte copy of the collection's full state: the
     # main parquet table, the meta sidecar, and every derived layout
-    # (IVF partitions, centroid table, quantized codes) — so a
-    # restored collection searches identically, index and all, with no
+    # (every path of every ``_layouts()`` row) — so a restored
+    # collection searches identically, index and all, with no
     # rebuild. Qdrant snapshots are likewise whole-collection tar
     # files (storage + indexes). Parquet files are immutable once
     # written, so at 100 TB the copy is embarrassingly parallel and
@@ -465,16 +467,10 @@ class Collection:
     # the same idea.
 
     def _state_paths(self) -> list[str]:
-        """Every on-disk path that makes up this collection's state."""
-        spaces = [None, *(self.meta.get("vectors") or ())]
-        sparse = list(self.meta.get("sparse_vectors") or ())
-        return [p for p in (self.path, self._ivf_points,
-                            self._ivf_centroids, self._hnsw_graphs,
-                            *(self._codes_path_for(s) for s in spaces),
-                            *(self._pca_path_for(s) for s in spaces),
-                            *(self._postings_path_for(s) for s in sparse),
-                            *(self._postings_path_for(s) + ".df"
-                              for s in sparse))
+        """Every on-disk path that makes up this collection's state:
+        the point table and every layout row's paths."""
+        return [p for p in (self.path, *(p for lay in self._layouts()
+                                         for p in lay.paths))
                 if os.path.exists(p)]
 
     def _snap_dir(self, name: str) -> str:
@@ -617,7 +613,7 @@ class Collection:
         - ``action=None``: healthy.
 
         Returns None when no IVF layout exists."""
-        return self._layout_drift(_CellLayout(self))
+        return self._layout_drift(self._row("cells"))
 
     def pca_drift(self, space: str | None = None) -> dict | None:
         """``index_drift()``'s verdict for a PCA-transformed space's
@@ -631,7 +627,7 @@ class Collection:
         just re-partitions a wrong projection). The remedy is
         ``rebuild_transform()``. Returns None without a trained
         transform."""
-        return self._layout_drift(_CellLayout(self, space, pca=True))
+        return self._layout_drift(self._row("pca", space))
 
     def rebuild_transform(self, spark: SparkSession,
                           space: str | None = None,
@@ -645,8 +641,8 @@ class Collection:
         so components, cells, and the drift baseline all re-place).
         Other spaces keep their files. Returns the refreshed
         ``pca_drift()``."""
-        layout = _CellLayout(self, space, pca=True)
-        if not layout.maintained:
+        layout = self._row("pca", space)
+        if not layout.maintained():
             raise ValueError("no PCA transform on this space")
         self._retrain(spark, layout, id_col, vec_col)
         return self.pca_drift(space)
@@ -689,38 +685,125 @@ class Collection:
         return mean_pool_flat(F.col(vec_col).cast("array<double>"),
                               int(self.meta["dim"]))
 
-    # -- cell layouts: the IVF points layout and each PCA space ----------
+    # -- the layout table: every derived layout, one row each -----------
 
-    #: the IVF cells and the layouts keyed on them, in the one order
-    #: they derive: codes over the cells, graphs over the codes
-    _CELL_STACK = ("cells", "codes", "graphs")
+    def _row(self, kind: str, space: str | None = None) -> _Layout:
+        """The one declaration of each layout kind, instantiated for
+        one space (``space=None``: the single space; postings take a
+        sparse space's name)."""
+        meta = self.meta
+        cfg = (meta["sparse_vectors"][space] if kind == "postings"
+               else meta if space is None else meta["vectors"][space])
+        if kind == "cells":
+            # a transform collection's cells are its PCA space's
+            lay = _Layout(
+                kind, None, meta, [self._ivf_points, self._ivf_centroids],
+                None, "centroid_id",
+                ("index_built", "index_k", "index_balance_ratio"),
+                "indexing_threshold",
+                lambda: bool(meta.get("indexing_threshold")
+                             and not meta.get("transform")),
+                meta.get("indexing_threshold"), payload=True, drift="split")
+        elif kind == "pca":
+            lay = _Layout(
+                kind, space, cfg, [self._pca_path_for(space)], None,
+                "pcell", ("pca_mu", "pca_w", "pca_centroids",
+                          "pca_balance_ratio"), "indexing_threshold",
+                lambda: cfg.get("transform") == "pca",
+                int(meta.get("indexing_threshold") or 1), drift="rebuild")
+        elif kind == "codes":
+            # the single space's codes share the IVF cells while they
+            # exist; named spaces never auto-index, so theirs stay flat.
+            # Train params outlive the cells (never re-derived from them)
+            return _Layout(
+                kind, space, cfg, [self._codes_path_for(space)],
+                ("cells", None) if space is None else None,
+                "centroid_id" if space is None else None,
+                ("codes_layout", "sq_mins", "sq_steps", "pq_codebooks",
+                 "opq_rotation"), "quantization",
+                lambda: bool(cfg.get("quantization")),
+                write=functools.partial(self._refresh_quant_one, cfg=cfg,
+                                        space=space))
+        elif kind == "graphs":
+            # over the codes when quantized, else over the cells: either
+            # way after both, and dropped with the cells
+            return _Layout(
+                kind, None, meta, [self._hnsw_graphs], ("codes", None),
+                "segment", ("hnsw_built",), "hnsw",
+                lambda: bool(meta.get("hnsw") and self.has_index()
+                             and os.path.isdir(self._ivf_points)),
+                0, write=self._refresh_hnsw)
+        else:
+            path = self._postings_path_for(space)
+            return _Layout(
+                kind, space, cfg, [path, path + ".df"], None, "bucket",
+                ("postings_built", "n_points"), "full_scan_threshold",
+                lambda: cfg.get("full_scan_threshold") is not None,
+                cfg.get("full_scan_threshold"),
+                write=functools.partial(self._refresh_postings, space))
+        lay.write = functools.partial(self._refresh_cells, lay)
+        return lay
 
-    def _refresh_cell_stack(self, spark: SparkSession,
-                            incoming: DataFrame | None, id_col: str,
-                            vec_col: str, rewrote: bool,
-                            stages: tuple = _CELL_STACK) -> None:
-        """Re-derive the IVF cells and the layouts keyed on them in
-        their one order: the cells, the codes sidecar partitioned by
-        the same ``centroid_id``, then the graphs (a quantized
-        collection builds them over the codes, so the codes must be
-        current first). Writes, the threshold crossing, a quantizer
-        switch, a split and a retrain all run through here; ``stages``
-        names the suffix a caller re-derives (a split or a quantizer
-        switch starts at the codes) or the cells alone (a payload-only
-        write)."""
-        run = {"cells": functools.partial(self._refresh_cells,
-                                          _CellLayout(self)),
-               "codes": self._refresh_quant, "graphs": self._refresh_hnsw}
-        for stage in stages:
-            run[stage](spark, incoming, id_col, vec_col, rewrote)
+    def _layouts(self) -> list[_Layout]:
+        """The layout table: one row per derived layout and space, in
+        dependency order — the IVF cells, each space's codes (the
+        single space's over the cells), the graphs (over the codes or
+        the cells), then the rows sourced from the point table alone:
+        each sparse space's postings and each space's PCA cells. Every
+        trigger walks it through ``_derive``; snapshots, restore,
+        delete, ``info()`` and the drift policy read it."""
+        spaces = list(self.meta.get("vectors") or ()) or [None]
+        return [self._row("cells"),
+                *(self._row("codes", s) for s in spaces),
+                self._row("graphs"),
+                *(self._row("postings", s)
+                  for s in self.meta.get("sparse_vectors") or ()),
+                *(self._row("pca", s) for s in spaces)]
 
-    def _pca_layouts(self) -> list[_CellLayout]:
-        """Every PCA-transformed space's cell layout."""
-        layouts = (_CellLayout(self, s, pca=True)
-                   for s in self.meta.get("vectors") or [None])
-        return [lay for lay in layouts if lay.maintained]
+    def _derive(self, spark: SparkSession, id_col: str, vec_col: str,
+                touched=lambda lay: False, changed=(),
+                incoming: DataFrame | None = None, rewrote: bool = True,
+                write: bool = False) -> None:
+        """The one layout maintenance walk: ``_layouts()`` in
+        dependency order, for every trigger.
 
-    def _refresh_cells(self, layout: _CellLayout, spark: SparkSession,
+        - A row the trigger touches (``touched(row)``, or named in
+          ``changed``) is refreshed while its gate maintains it — on a
+          write (``write``: ``incoming`` appended, or the table
+          ``rewrote``) always, on any other trigger only when it is not
+          built — and dropped once its gate no longer maintains it.
+        - A row whose source changed in this walk (built, dropped or
+          re-derived; ``changed`` seeds it) loses its files and built
+          marker and re-derives whole: it is never left partitioned by,
+          or built over, a layout that is gone.
+
+        The triggers: a write (every row; a payload-only write, the
+        rows that copy the payload), a threshold change (the rows of
+        that gate), a retrain, quantizer switch or ``hnsw_config``
+        change (``_retrain``: the row itself) and a split (the cells
+        changed in place)."""
+        changed = set(changed)
+        data = write or self._has_data(spark)
+        for lay in self._layouts():
+            stale = lay.source in changed
+            if stale:
+                changed.add(lay.id)
+                if lay.present:
+                    self._drop_layout(lay, trained=False)
+            elif not (lay.id in changed or touched(lay)):
+                continue
+            if not lay.maintained():
+                if lay.present:
+                    self._drop_layout(lay)
+                    changed.add(lay.id)
+            elif data and (write or stale or not lay.built):
+                built = lay.built
+                lay.write(spark, None if stale else incoming, id_col,
+                          lay.vec(vec_col), rewrote or stale)
+                if lay.built != built:
+                    changed.add(lay.id)
+
+    def _refresh_cells(self, layout: _Layout, spark: SparkSession,
                        incoming: DataFrame | None, id_col: str,
                        vec_col: str, rewrote: bool) -> None:
         """Maintain one cell layout after a write. The first write at
@@ -733,9 +816,7 @@ class Collection:
         (``_layout_drift``) and remedied by an explicit retrain. The
         balance baseline is recorded only when cells are trained, so a
         rewrite keeps a pending verdict."""
-        if not layout.maintained:
-            return
-        fresh = not layout.trained
+        fresh = not layout.built
         if fresh:
             source = self._train_cells(spark, layout, id_col, vec_col)
             if source is None:
@@ -748,7 +829,7 @@ class Collection:
         if fresh:
             self._record_baseline(layout)
 
-    def _train_cells(self, spark: SparkSession, layout: _CellLayout,
+    def _train_cells(self, spark: SparkSession, layout: _Layout,
                      id_col: str, vec_col: str) -> DataFrame | None:
         """The one cell trainer, once the table holds the layout's
         threshold of points: the id-ordered prefix of the routing
@@ -775,14 +856,14 @@ class Collection:
                 or layout.cfg.get("k_centroids") or 16)
         # a PCA fit takes the whole bounded prefix; raw cells take
         # FAISS's 256 points per centroid, floored for tiny k
-        cap = (PCA_TRAIN_CAP if layout.pca
+        cap = (PCA_TRAIN_CAP if layout.kind == "pca"
                else max(4096, min(PCA_TRAIN_CAP, 256 * k)))
         X = self._train_prefix(table.select(F.col(id_col), as_double(
             self._routing(table, vec_col)).alias("__rv")),
             id_col, "__rv", cap)
         if not X:
             return None
-        if layout.pca:
+        if layout.kind == "pca":
             mu, W = pca_train_np(X, int(layout.cfg["pca_dim"]))
             layout.cfg["pca_mu"], layout.cfg["pca_w"] = mu, W
             X = [pca_project_py(mu, W, v) for v in X]
@@ -790,7 +871,7 @@ class Collection:
                               kmeans_np(X, min(k, len(X)), seed=42))
         return table
 
-    def _store_centroids(self, spark: SparkSession, layout: _CellLayout,
+    def _store_centroids(self, spark: SparkSession, layout: _Layout,
                          cents) -> None:
         """Freeze a layout's trained (or split) cells: a PCA space
         keeps them in its meta; the IVF layout writes its centroid
@@ -800,7 +881,7 @@ class Collection:
         doubles through Double.parseDouble) — and records its cell
         count."""
         cents = [[float(x) for x in c] for c in cents]
-        if layout.pca:
+        if layout.kind == "pca":
             layout.cfg["pca_centroids"] = cents
             return
         local_literal_df(
@@ -810,7 +891,7 @@ class Collection:
         self._centroid_cache = None
         self.meta.update(index_built=True, index_k=len(cents))
 
-    def _write_cells(self, spark: SparkSession, layout: _CellLayout,
+    def _write_cells(self, spark: SparkSession, layout: _Layout,
                      source: DataFrame, id_col: str, vec_col: str,
                      mode: str) -> None:
         """The one cell writer: each row of ``source`` takes its
@@ -820,7 +901,7 @@ class Collection:
         with its frozen (mu, W)."""
         if vec_col not in source.columns or _is_nested(source, vec_col):
             return
-        if layout.pca:
+        if layout.kind == "pca":
             from .operators.pca import pca_project_expr
 
             cfg = layout.cfg
@@ -835,7 +916,7 @@ class Collection:
         (source.withColumn(layout.key, nearest_cells(cents, route)[0]["i"])
          .write.mode(mode).partitionBy(layout.key).parquet(layout.path))
 
-    def _record_baseline(self, layout: _CellLayout) -> None:
+    def _record_baseline(self, layout: _Layout) -> None:
         """Record the balance ratio of just-trained cells (first
         build, retrain, split) as the layout's drift baseline: the
         natural KMeans imbalance the cells start from."""
@@ -844,41 +925,42 @@ class Collection:
             layout.cfg[layout.baseline] = verdict["balance_ratio"]
         self._save_meta()
 
-    def _layout_drift(self, layout: _CellLayout) -> dict | None:
+    def _layout_drift(self, layout: _Layout) -> dict | None:
         """The drift verdict of a trained layout from its partition
         footers (no Spark job); the caps are the collection's
         ``drift_cell_cap`` / ``drift_growth_cap``."""
-        if not layout.trained:
+        if not layout.built:
             return None
         return _drift_verdict(
             self._partition_footer_counts(layout.path, layout.key),
             layout.k, layout.cfg.get(layout.baseline),
             float(self.meta.get("drift_cell_cap", 4.0)),
             float(self.meta.get("drift_growth_cap", 1.5)),
-            split=not layout.pca)
+            split=layout.drift == "split")
 
-    def _drop_cells(self, layout: _CellLayout) -> None:
-        """Forget a layout's cells: trained state and baseline leave
-        the meta, the files go."""
-        for key in layout.state:
+    def _drop_layout(self, layout: _Layout, trained: bool = True) -> None:
+        """The one drop: a layout's files go, and its meta keys — all
+        of them (trained state, baseline), or with ``trained=False``
+        only its built marker, when its source changed under it (a
+        quantizer's train params outlive the cells its codes were
+        partitioned by). ``_derive`` then re-derives or drops every
+        row sourced from it."""
+        for key in layout.state if trained else layout.state[:1]:
             layout.cfg.pop(key, None)
-        shutil.rmtree(layout.path, ignore_errors=True)
-        if not layout.pca:
-            shutil.rmtree(self._ivf_centroids, ignore_errors=True)
-            self._centroid_cache = None
+        for path in layout.paths:
+            shutil.rmtree(path, ignore_errors=True)
+        self._centroid_cache = None
         self._save_meta()
 
-    def _retrain(self, spark: SparkSession, layout: _CellLayout,
+    def _retrain(self, spark: SparkSession, layout: _Layout,
                  id_col: str, vec_col: str) -> None:
-        """Retrain one cell layout on the current table and re-derive
-        only the layouts keyed on it: the IVF cells take their codes
-        and graphs along, a PCA space nothing else."""
-        self._drop_cells(layout)
-        if layout.pca:
-            self._refresh_cells(layout, spark, None, id_col,
-                                layout.vec(vec_col), True)
-        else:
-            self._refresh_cell_stack(spark, None, id_col, vec_col, True)
+        """Drop one layout and re-derive it and every layout sourced
+        from it on the current table: a cell retrain takes the codes
+        and graphs along (a PCA space nothing else), a quantizer
+        switch the graphs, an ``hnsw_config`` change the graphs
+        alone."""
+        self._drop_layout(layout)
+        self._derive(spark, id_col, vec_col, changed={layout.id})
 
     # -- per-segment HNSW graphs (hnsw_config parity) ---------------------
 
@@ -1008,9 +1090,10 @@ class Collection:
         """Maintain the per-cell HNSW graph sidecar after a write
         (``hnsw_config`` collections — Qdrant builds one HNSW per
         segment past ``indexing_threshold``; here segment = IVF cell,
-        the routed composition). Runs after the cells and the codes
-        (``_refresh_cell_stack``), so the ``.ivf`` layout already
-        holds the appended rows. ONE graph job and ONE write per refresh: a
+        the routed composition). Its layout row comes after the cells
+        and the codes (``_layouts``), so the ``.ivf`` layout already
+        holds the appended rows, and ``_derive`` calls it only while
+        the cells exist. ONE graph job and ONE write per refresh: a
         rewrite or first build regenerates every cell's graph; an
         append touches only the cells the incoming batch lands in
         (dynamic partition overwrite — the ``split_hot_cells``
@@ -1025,15 +1108,7 @@ class Collection:
         the sidecar is bit-reproducible — which (with the
         deterministic prefix-trained cells) is what lets the lifecycle
         oracle re-derive the whole read path."""
-        cfg = self.meta.get("hnsw")
-        if not cfg:
-            return
-        if not self.has_index() or not os.path.isdir(self._ivf_points):
-            if self.meta.pop("hnsw_built", None):
-                # index dropped (threshold disabled): graphs go too
-                shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
-                self._save_meta()
-            return
+        cfg = self.meta["hnsw"]
         from pyspark.sql import Window
 
         from .operators.hnsw import hnsw_layout
@@ -1050,8 +1125,8 @@ class Collection:
         if quant is not None and (
                 self.meta.get("codes_layout") != "cells"
                 or not os.path.isdir(self._codes_path)):
-            # no composed codes layout to graph over yet (the
-            # quant refresh runs first in _post_write, so this only
+            # no composed codes layout to graph over yet (the codes
+            # row re-derives before the graphs row, so this only
             # happens pre-index or on a flat legacy sidecar)
             return
         data_cols, data_schema, decode = quant or (None, None, None)
@@ -1060,7 +1135,7 @@ class Collection:
                 F.col(vec_col).isNotNull())
         else:
             # hnsw_config × quantization: the graph lives over the
-            # CODES sidecar (cells-partitioned by _refresh_quant) —
+            # CODES sidecar (cells-partitioned by _refresh_quant_one) —
             # the sidecar stores codes + links only, and the walk
             # decodes per segment (_hnsw_quant_parts)
             layout = _read_parquet(spark, self._codes_path).filter(
@@ -1182,7 +1257,7 @@ class Collection:
         codes and graphs keyed on them (the maintenance analog of
         dropping and re-creating Qdrant's index); the ``drift_auto``
         policy then applies to the fresh layout."""
-        self._retrain(spark, _CellLayout(self), id_col, vec_col)
+        self._retrain(spark, self._row("cells"), id_col, vec_col)
         self._auto_drift(spark, id_col, vec_col)
 
     def split_hot_cells(self, spark: SparkSession,
@@ -1220,7 +1295,7 @@ class Collection:
                 "collections; use rebuild_index()")
         from .operators.ann import ivf_split_hot_cells
 
-        layout = _CellLayout(self)
+        layout = self._row("cells")
         cap = (cap_fraction if cap_fraction is not None
                else float(self.meta.get("drift_cell_cap", 4.0)) / layout.k)
         cents = self._centroids(spark)
@@ -1248,8 +1323,7 @@ class Collection:
                 os.rename(cell(old_id), cell(new_id))
         self._store_centroids(spark, layout, [c for _, c in cent_rows])
         self._record_baseline(layout)
-        self._refresh_cell_stack(spark, None, id_col, vec_col, True,
-                                 ("codes", "graphs"))
+        self._derive(spark, id_col, vec_col, changed={layout.id})
         return self.index_drift()
 
     _UNSET = object()
@@ -1298,7 +1372,11 @@ class Collection:
           ``quantization`` on an hnsw collection rebuilds the graphs
           over the new codes (or back over full vectors on None).
 
-        Omitted arguments stay unchanged."""
+        Omitted arguments stay unchanged. Every change goes through
+        the layout walk (``_derive``): a threshold change builds the
+        layouts of that gate now due and drops the ones it no longer
+        maintains, and every layout sourced from one that changed
+        re-derives (codes leave a dropped cell set, graphs go with it)."""
         if sparse_vectors is not None:
             sv = self.meta.get("sparse_vectors") or {}
             for sname, diff in sparse_vectors.items():
@@ -1306,25 +1384,12 @@ class Collection:
                     raise ValueError(f"unknown sparse space {sname!r} "
                                      f"(have {sorted(sv)})")
                 sv[sname].update(_sparse_space_rules(sname, diff))
-                if "full_scan_threshold" in diff \
-                        and diff["full_scan_threshold"] is None:
-                    # disabling the sparse index takes the layout with
-                    # it (same rule as indexing_threshold: a live
-                    # layout would silently go stale)
-                    for key in ("full_scan_threshold", "postings_built",
-                                "n_points"):
-                        sv[sname].pop(key, None)
-                    for path in (self._postings_path_for(sname),
-                                 self._postings_path_for(sname) + ".df"):
-                        shutil.rmtree(path, ignore_errors=True)
+                if sv[sname].get("full_scan_threshold") is None:
+                    # disabled: absent, as create_collection stores it
+                    sv[sname].pop("full_scan_threshold", None)
             self._save_meta()
-            if any("full_scan_threshold" in d
-                   for d in sparse_vectors.values()) \
-                    and self._has_data(spark):
-                # lowering the threshold below the current point count
-                # builds on the spot (Qdrant rebuilds on optimizer-
-                # config changes too)
-                self._refresh_postings(spark, None, id_col, rewrote=True)
+            self._derive(spark, id_col, vec_col,
+                         lambda lay: lay.gate == "full_scan_threshold")
         if self.meta.get("vectors") is not None and (
                 quantization is not self._UNSET
                 or indexing_threshold is not self._UNSET
@@ -1356,22 +1421,9 @@ class Collection:
                                    vec_col)
         if indexing_threshold is not self._UNSET:
             self.meta["indexing_threshold"] = indexing_threshold
-            if indexing_threshold is None and self.has_index():
-                # a disabled threshold must take the LAYOUT with it:
-                # the cells are no longer maintained, so a live layout
-                # would go stale on the next upsert while search kept
-                # routing through it — silently dropping new points
-                # from every non-exact search
-                self._drop_cells(_CellLayout(self))
-                # graphs shard on the cells — they go with the layout
-                self.meta.pop("hnsw_built", None)
-                shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
             self._save_meta()
-            if (indexing_threshold is not None and self._has_data(spark)
-                    and not self.has_index()
-                    and self.count(spark, exact=False) >= indexing_threshold):
-                # the layouts a threshold-crossing upsert derives
-                self._refresh_cell_stack(spark, None, id_col, vec_col, True)
+            self._derive(spark, id_col, vec_col,
+                         lambda lay: lay.gate == "indexing_threshold")
         if drift_auto is not self._UNSET:
             _drift_auto_rule(drift_auto, self.meta.get("indexing_threshold"),
                              self.meta.get("transform"),
@@ -1388,57 +1440,36 @@ class Collection:
                 self._auto_drift(spark, id_col, vec_col)
         if hnsw_config is not self._UNSET:
             if hnsw_config is None:
-                had = self.meta.pop("hnsw", None)
-                self.meta.pop("hnsw_built", None)
-                self._save_meta()
-                if had:
-                    shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
+                self.meta.pop("hnsw", None)
             else:
                 self.meta["hnsw"] = _hnsw_validate(
                     hnsw_config, self.meta.get("indexing_threshold"),
                     self.meta.get("metric"),
                     self.meta.get("quantization"),
                     self.meta.get("transform"))
-                # an m/ef_construct change means NEW graphs
-                self.meta.pop("hnsw_built", None)
-                self._save_meta()
-                if self._has_data(spark) and self.has_index():
-                    self._refresh_hnsw(spark, None, id_col, vec_col,
-                                       rewrote=True)
+            # an m/ef_construct change means NEW graphs
+            self._retrain(spark, self._row("graphs"), id_col, vec_col)
 
     def _set_quantization(self, spark: SparkSession, space: str | None,
                           q: str | None, id_col: str, vec_col: str) -> None:
         """Switch one space's quantizer (``space=None``: the single
-        space) under the create rules: the old quantizer's frozen train
-        params go, HNSW graphs built over its codes are dropped, and the
-        codes sidecar is dropped (``q=None``) or re-encoded over the
-        current table. The single space re-derives the cell stack from
-        the codes on, so its graphs rebuild over the new codes (or
-        over full vectors on None)."""
+        space) under the create rules: its codes layout is retrained
+        (``_retrain`` — the old train params and sidecar go, then the
+        codes re-encode over the current table, or stay gone on
+        ``q=None``), and the graphs sourced from the codes rebuild over
+        the new codes (or over full vectors on None)."""
         cfg = self.meta if space is None else self.meta["vectors"][space]
         rules = _dense_space_rules(
             cfg["dim"], cfg.get("multivector"), q, None, None,
             cfg.get("datatype"), cfg.get("transform"), cfg.get("pca_dim"))
         if cfg.get("hnsw"):
             _hnsw_quant_rule(cfg.get("metric"), q)
-        for key in _QUANT_PARAMS:
+        for key in ("pq_blocks", "pq_codes"):
             cfg.pop(key, None)
         cfg["quantization"] = q
         cfg.update((k, rules[k]) for k in ("pq_blocks", "pq_codes")
                    if k in rules)
-        if cfg.pop("hnsw_built", None):
-            shutil.rmtree(self._hnsw_graphs, ignore_errors=True)
-        self._save_meta()
-        if q is None:
-            shutil.rmtree(self._codes_path_for(space), ignore_errors=True)
-        if not self._has_data(spark):
-            return
-        if space is None:
-            self._refresh_cell_stack(spark, None, id_col, vec_col, True,
-                                     ("codes", "graphs"))
-        elif q is not None:
-            self._refresh_quant_one(spark, None, id_col, space, True, cfg,
-                                    space)
+        self._retrain(spark, self._row("codes", space), id_col, vec_col)
 
     # -- named vector spaces (Qdrant vectors_config={name: ...}) ----------
 
@@ -1718,10 +1749,10 @@ class Collection:
         os.rename(tmp, dpath)
         return n
 
-    def _refresh_postings(self, spark: SparkSession,
-                          incoming: DataFrame | None,
-                          id_col: str, rewrote: bool) -> None:
-        """Maintain each sparse space's posting layout after a write
+    def _refresh_postings(self, space: str, spark: SparkSession,
+                          incoming: DataFrame | None, id_col: str,
+                          vec_col: str, rewrote: bool) -> None:
+        """Maintain one sparse space's posting layout after a write
         (Qdrant builds its sparse inverted index at upsert once past
         ``full_scan_threshold``). Appends write only the incoming
         batch's postings into the existing bucket dirs; a rewrite
@@ -1729,27 +1760,20 @@ class Collection:
         surviving table. ``n_points`` (the space's IDF N — points
         carrying the space) is maintained alongside so probes never
         re-count the corpus."""
-        sv = self.meta.get("sparse_vectors") or {}
-        changed = False
-        for name, cfg in sv.items():
-            if cfg.get("full_scan_threshold") is None:
-                continue
-            built = bool(cfg.get("postings_built"))
-            if built and not rewrote and incoming is not None:
-                cfg["n_points"] = cfg.get("n_points", 0) + \
-                    self._write_postings(incoming, name, id_col, "append")
-                changed = True
-                continue
-            if built or (self._has_data(spark) and
-                         self.count(spark, exact=False)
-                         >= cfg["full_scan_threshold"]):
-                full = _read_parquet(spark, self.path)
-                cfg["n_points"] = self._write_postings(
-                    full, name, id_col, "overwrite")
-                cfg["postings_built"] = True
-                changed = True
-        if changed:
-            self._save_meta()
+        cfg = self.meta["sparse_vectors"][space]
+        built = bool(cfg.get("postings_built"))
+        if built and not rewrote and incoming is not None:
+            cfg["n_points"] = cfg.get("n_points", 0) + \
+                self._write_postings(incoming, space, id_col, "append")
+        elif built or (self._has_data(spark) and
+                       self.count(spark, exact=False)
+                       >= cfg["full_scan_threshold"]):
+            cfg["n_points"] = self._write_postings(
+                _read_parquet(spark, self.path), space, id_col, "overwrite")
+            cfg["postings_built"] = True
+        else:
+            return
+        self._save_meta()
 
     @staticmethod
     def _train_prefix(table: DataFrame, id_col: str, vec_col: str,
@@ -1778,37 +1802,21 @@ class Collection:
         rows.sort(key=lambda r: r[0])
         return [list(r["__v"]) for r in rows]
 
-    def _refresh_quant(self, spark: SparkSession, incoming: DataFrame | None,
-                       id_col: str, vec_col: str, rewrote: bool) -> None:
-        """Maintain the quantized-code sidecar(s) after a write. SQ
-        trains per-dim (min, step) ONCE on first build and freezes
-        them in the config (Qdrant quantizes with build-time stats
-        too); later upserts encode only the incoming batch with the
-        frozen params. BQ is trainless. A rewrite (merge conflict /
-        delete / compact) re-encodes the surviving table — same cost
-        shape as the scan that produced it. Named collections loop
-        every quantized space (each has its own sidecar + train
-        params; named collections never auto-index, so their layouts
-        are always flat)."""
-        named = self.meta.get("vectors")
-        if named:
-            for sname, scfg in named.items():
-                if scfg.get("quantization"):
-                    self._refresh_quant_one(spark, incoming, id_col,
-                                            sname, rewrote, scfg, sname)
-            return
-        if self.meta.get("quantization"):
-            self._refresh_quant_one(spark, incoming, id_col, vec_col,
-                                    rewrote, self.meta, None)
-
     def _refresh_quant_one(self, spark: SparkSession,
                            incoming: DataFrame | None, id_col: str,
                            vec_col: str, rewrote: bool, cfg: dict,
                            space: str | None) -> None:
-        """One space's sidecar maintenance; ``cfg`` is the dict the
-        quantizer config and frozen train params live in (the meta
-        itself for single-space collections, the space's sub-dict for
-        named ones — both persist through ``_save_meta``)."""
+        """The writer of one space's codes row: maintain its quantized
+        sidecar after a write. SQ trains per-dim (min, step) ONCE on
+        first build and freezes them in the config (Qdrant quantizes
+        with build-time stats too); later upserts encode only the
+        incoming batch with the frozen params. BQ is trainless. A
+        rewrite (merge conflict / delete / compact) re-encodes the
+        surviving table — same cost shape as the scan that produced
+        it. ``cfg`` is the dict the quantizer config and frozen train
+        params live in (the meta itself for single-space collections,
+        the space's sub-dict for named ones — both persist through
+        ``_save_meta``)."""
         qz = quantizer(cfg)
         if not qz.trained:
             # train ONCE and freeze the params in the config (Qdrant
@@ -1841,8 +1849,8 @@ class Collection:
         # partitionBy(centroid_id) so the quantized prefetch inside
         # probed cells is statically partition-pruned — the composed
         # read path scans (nprobe/kc) × the 4-32×-smaller codes, not
-        # the full-precision cells. Runs AFTER the cells
-        # (_refresh_cell_stack), so the centroid set is current. A flat-layout
+        # the full-precision cells. The codes row follows the cells row
+        # (``_layouts``), so the centroid set is current. A flat-layout
         # sidecar left from before the index crossed its threshold is
         # re-encoded whole (one scan, same cost shape as the index
         # build that just happened).
@@ -1855,8 +1863,8 @@ class Collection:
             incoming, rewrote = None, True
         # Whole-table encodes on an index-maintained collection read
         # the CELLS LAYOUT instead of the main table: the layout holds
-        # the same rows (every write path refreshes it first —
-        # _post_write ordering) with centroid_id already materialized
+        # the same rows (every trigger refreshes it first — the
+        # table's dependency order) with centroid_id already materialized
         # as the partition column, so re-running the k·d assignment
         # over the corpus here was a duplicated full pass (guide §2.4).
         # It is also the FAITHFUL source after split_hot_cells: the
@@ -1864,9 +1872,8 @@ class Collection:
         # in place, which a fresh global argmin over the merged
         # centroid set does not always reproduce — codes must share
         # the points layout's cells for probe pruning to be complete.
-        # Gated on indexing_threshold: only then does _refresh_cells
-        # maintain the layout on every write (a threshold dropped by
-        # update_collection would leave it stale).
+        # Gated on indexing_threshold: only then does the cells row
+        # maintain the layout on every write.
         use_layout = (cells and (rewrote or incoming is None)
                       and bool(self.meta.get("indexing_threshold")))
         source = (_read_parquet(spark, self._ivf_points) if use_layout
@@ -2104,18 +2111,13 @@ class Collection:
         """Refresh every derived layout after a main-table write. A
         payload-only write (``vectors_changed=False``: the payload
         point ops, payload-index create/drop) leaves the point set
-        and every vector as they were, so only ``.ivf`` — the one
-        layout that copies the payload — is re-derived; the codes,
-        graph, postings and PCA sidecars hold ids and vector data
-        only and keep their bytes."""
-        self._refresh_cell_stack(
-            spark, incoming, id_col, vec_col, rewrote,
-            self._CELL_STACK if vectors_changed else ("cells",))
-        if vectors_changed:
-            self._refresh_postings(spark, incoming, id_col, rewrote)
-            for layout in self._pca_layouts():
-                self._refresh_cells(layout, spark, incoming, id_col,
-                                    layout.vec(vec_col), rewrote)
+        and every vector as they were, so only the rows that copy the
+        payload (``.ivf``) re-derive; the codes, graph, postings and
+        PCA sidecars hold ids and vector data only and keep their
+        bytes. The drift policy then reads the fresh verdicts."""
+        self._derive(spark, id_col, vec_col,
+                     lambda lay: vectors_changed or lay.payload,
+                     incoming=incoming, rewrote=rewrote, write=True)
         self._auto_drift(spark, id_col, vec_col)
 
     def _auto_drift(self, spark: SparkSession, id_col: str,
@@ -2142,7 +2144,9 @@ class Collection:
         policy = self.meta.get("drift_auto")
         if not policy:
             return
-        for layout in (_CellLayout(self), *self._pca_layouts()):
+        for layout in self._layouts():
+            if not layout.drift:
+                continue
             action = (self._layout_drift(layout) or {}).get("action")
             if action == "rebuild" and policy == "rebuild":
                 self._retrain(spark, layout, id_col, vec_col)
@@ -3792,25 +3796,6 @@ class Collection:
             df = df.drop(*[c for c in drop if c in df.columns])
         return self._apply_with_payload(df, with_payload, id_col, vec_col)
 
-    def _has_derived_layouts(self) -> bool:
-        """Whether any derived layout (IVF, quantized codes — top-level
-        or per-named-space, sparse postings) exists or is configured:
-        the rewrite paths must run ``_post_write`` exactly when this is
-        true, else a delete/merge leaves a stale layout serving removed
-        points. (The old guard checked only ``has_index() or
-        meta['quantization']`` — named-space codes and posting layouts
-        went stale on deletes.)"""
-        named = self.meta.get("vectors") or {}
-        sv = self.meta.get("sparse_vectors") or {}
-        return (self.has_index() or bool(self.meta.get("quantization"))
-                or bool(self.meta.get("transform"))
-                or bool(self.meta.get("hnsw"))
-                or any(s.get("quantization") or s.get("transform")
-                       for s in named.values())
-                or any(s.get("postings_built")
-                       or s.get("full_scan_threshold") is not None
-                       for s in sv.values()))
-
     def _rewrite(self, spark: SparkSession, table: DataFrame,
                  id_col: str, vec_col: str,
                  post_write: bool = True,
@@ -3825,7 +3810,7 @@ class Collection:
         self._write_main(table, "overwrite", staging)
         shutil.rmtree(self.path)
         os.rename(staging, self.path)
-        if post_write and self._has_derived_layouts():
+        if post_write:
             self._post_write(spark, None, id_col, vec_col, rewrote=True,
                              vectors_changed=vectors_changed)
 
@@ -3898,7 +3883,7 @@ class Collection:
             self._write_main(transform(subset.drop("__file")), "overwrite",
                              staging)
             self._swap_staged_files(staging, files)
-            if post_write and self._has_derived_layouts():
+            if post_write:
                 self._post_write(spark, None, id_col, vec_col, rewrote=True,
                                  vectors_changed=vectors_changed)
         return int(sum(r["__n"] for r in per_file))
@@ -4243,10 +4228,6 @@ def delete_collection(root: str, name: str) -> bool:
 # (Qdrant has one VectorParams type for the single vector and for every
 # named vector alike).
 
-# frozen quantizer train params: they belong to the config that trained
-# them, so a quantizer switch drops them
-_QUANT_PARAMS = ("sq_mins", "sq_steps", "codes_layout", "pq_codebooks",
-                 "opq_rotation", "pq_blocks", "pq_codes")
 _PCA_KNOBS = ("pca_dim needs transform='pca' (the PCA knobs "
               "pca_dim/k_centroids need transform='pca')")
 

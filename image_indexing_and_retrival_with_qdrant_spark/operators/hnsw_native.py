@@ -77,15 +77,29 @@ def load():
     return _LIB or None
 
 
+def _reference_digest() -> str:
+    """Digest of the Python reference the probe compares the kernel
+    against: ``hnsw.py``, which holds the build and search beams
+    (``_build_py``, ``_search_py``) and the helpers they call. The
+    whole file, read as bytes (~0.1 ms, where ``inspect.getsource``
+    of the six functions costs ~15 ms in every Python worker): an
+    edit anywhere in it re-runs the probe once."""
+    with open(os.path.join(os.path.dirname(__file__), "hnsw.py"),
+              "rb") as f:
+        return hashlib.md5(f.read()).hexdigest()[:16]
+
+
 def _marker_path() -> str | None:
     """Per-box parity-probe verdict cache: the probe (hnsw.py's
     ``_native_usable``) is a few hundred ms of Python builds — fine
     once per box, wasteful once per forked Python worker. Keyed on
-    the kernel digest (via the .so path) AND the numpy version, since
-    the probe certifies 'this .so reproduces THIS numpy's bits'."""
+    the kernel digest (via the .so path), the numpy version AND the
+    Python reference's digest, since the probe certifies 'this .so
+    reproduces THIS reference under THIS numpy's bits': a changed
+    Python beam with an unchanged C source must re-probe."""
     if _SO_PATH is None:
         return None
-    return f"{_SO_PATH}.ok-np{np.__version__}"
+    return f"{_SO_PATH}.ok-np{np.__version__}-ref{_reference_digest()}"
 
 
 def probe_ok_cached() -> bool:

@@ -6,8 +6,8 @@ collection crosses ``indexing_threshold``
 (``with_colpali_v1.3/incremental_indexing_colpali_with_qdrant.py:132``);
 the engine-native analog here trains a learned dimensionality
 reduction at that same threshold, projects every point into an
-``r``-dim sidecar maintained by the point ops (the ``_refresh_quant``
-discipline), and routes searches through IVF cells carved in the
+``r``-dim sidecar maintained by the point ops (a ``pca`` row of the
+catalog's layout table, ``Collection._layouts``), and routes searches through IVF cells carved in the
 COMPRESSED space — the probe scans ``r/d`` of the bytes, the
 oversampled shortlist is exact-rescored at full width.
 

@@ -19,7 +19,8 @@ At 100 TB: materialize the exploded posting frame once, partitioned
 by ``idx`` bucket — per-query cost becomes a bucket-pruned scan of
 |q| term buckets, never the full corpus; same layout story as BM25's
 (term, doc, tf) frame (SCALE.md §Sparse). ``Collection`` implements
-exactly this (``full_scan_threshold`` → ``_refresh_postings``); pass
+exactly this (``full_scan_threshold`` gates a ``postings`` row of its
+layout table, ``Collection._layouts``); pass
 the pruned layout scan back in via ``sparse_knn(postings=)``.
 
 Vocabulary assignment (``term_vocabulary``) is prefix-blocked: ranks

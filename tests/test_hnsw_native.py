@@ -132,3 +132,27 @@ def test_env_gate_disables_kernel(monkeypatch):
         assert hnsw_native.load() is None
     finally:
         monkeypatch.setattr(hnsw_native, "_LIB", None)
+
+
+def test_probe_marker_keyed_on_python_reference(monkeypatch, tmp_path):
+    """The cached "probe ok" verdict certifies the kernel against the
+    Python reference it was compared with: a changed reference digest
+    (an edit to the Python beam with the C source unchanged) lands on
+    a different marker, so the cached verdict no longer applies and
+    the parity probe runs again."""
+    hnsw_native.load()
+    monkeypatch.setattr(hnsw_native, "_SO_PATH", str(tmp_path / "k.so"))
+    hnsw_native.mark_probe_ok()
+    old = hnsw_native._marker_path()
+    assert hnsw_native.probe_ok_cached()
+    monkeypatch.setattr(hnsw_native, "_reference_digest",
+                        lambda: "0123456789abcdef")
+    assert hnsw_native._marker_path() != old
+    assert not hnsw_native.probe_ok_cached()
+    ran = []
+    monkeypatch.setattr(hnsw, "_NATIVE_OK", None)
+    monkeypatch.setattr(hnsw, "_build_py", lambda *a: ran.append(a) or [])
+    # the probe re-runs (it calls the reference) and, with this
+    # stand-in reference disagreeing with the kernel, refuses it
+    assert hnsw._native_usable() is False
+    assert ran and not hnsw_native.probe_ok_cached()

@@ -119,7 +119,7 @@ def test_nprobe_narrows_and_filter_falls_back(spark, tmp_path):
 
 def test_point_ops_maintain_sidecar(spark, tmp_path):
     """delete / merge-upsert / compact refresh the projected layout —
-    the `_refresh_quant` discipline on the PCA sidecar."""
+    the PCA row of the layout table re-derives on every write."""
     c = create_collection(str(tmp_path), "pc", dim=6, normalize=False,
                           transform="pca", pca_dim=3,
                           indexing_threshold=1, k_centroids=4)
