@@ -1942,9 +1942,10 @@ class Collection:
         is inlined as literals for one query, or rides a broadcast
         ``local_literal_df`` for a batch — ONE codes pass for every
         query — and the same score expression ranks the codes; only
-        the leaf differs (``global_topk``, a TakeOrderedAndProject
-        heap, vs the map-side-pruned per-query ``grouped_topk``)."""
-        from .operators.topk import global_topk, grouped_topk
+        the leaf differs (``operators/topk.py::topk``: a
+        TakeOrderedAndProject heap, or map-side-pruned per-query
+        top-m)."""
+        from .operators.topk import topk
 
         qz = quantizer(self.meta if cfg is None else cfg)
         codes = _read_parquet(spark, self._codes_path_for(space))
@@ -1959,9 +1960,7 @@ class Collection:
                 f"query_idx int, {qz.operand_col} {qz.operand_type}")))
         scored = codes.select(*lead, F.col(id_col), qz.score(
             qz.operand_col if batch else ops[0]).alias(qz.key))
-        order = [(qz.key, qz.ascending), (id_col, True)]
-        out = (grouped_topk(scored, lead, order, m) if batch
-               else global_topk(scored, order, m))
+        out = topk(scored, lead, [(qz.key, qz.ascending), (id_col, True)], m)
         return out.select(*lead, id_col, *(
             [F.col(qz.key).alias("score")] if with_scores else []))
 
@@ -2032,31 +2031,27 @@ class Collection:
         compute-at-read pooling remains as the fallback for
         collections written without it (same values either way)."""
         from .functions.vector import cosine, mean_pool_flat
-        from .operators.topk import global_topk, grouped_topk
+        from .operators.topk import topk
 
         if vec_col + "__pooled" in corpus.columns:
             pooled = F.col(vec_col + "__pooled").cast("array<double>")
         else:
             pooled = mean_pool_flat(F.col(vec_col).cast("array<double>"), dim)
-        if not batch:
-            (pooled_q,) = pooled_qs
-            qlit = F.array(*[F.lit(float(x)) for x in pooled_q])
-            keep = global_topk(
-                corpus.select(F.col(id_col),
-                              cosine(pooled, qlit).alias("__ps")),
-                [("__ps", False), (id_col, True)], m,
-            ).select(id_col)
-        else:
+        lead = ["query_idx"] if batch else []
+        if batch:
             qdf = _query_frame(corpus.sparkSession, pooled_qs, "__pq")
             scored = (corpus.select(F.col(id_col), pooled.alias("__pd"))
                       .join(F.broadcast(qdf))
                       .select(id_col, "query_idx",
                               cosine(F.col("__pd"), F.col("__pq"))
                               .alias("__ps")))
-            keep = grouped_topk(scored, ["query_idx"],
-                                [("__ps", False), (id_col, True)], m,
-                                rank_col=None).select(id_col).distinct()
-        ids = [r[id_col] for r in keep.collect()]  # ≤ Q·m rows
+        else:
+            qlit = F.array(*[F.lit(float(x)) for x in pooled_qs[0]])
+            scored = corpus.select(F.col(id_col),
+                                   cosine(pooled, qlit).alias("__ps"))
+        keep = topk(scored, lead, [("__ps", False), (id_col, True)], m,
+                    rank_col=None).select(id_col)
+        ids = sorted({r[id_col] for r in keep.collect()})  # ≤ Q·m rows
         return corpus.filter(literal_in(id_col, ids))
 
     def _mv_quant_shortlist(self, spark: SparkSession,
@@ -2072,11 +2067,12 @@ class Collection:
         inflate to floats JVM-side), keep the top ``m`` per query,
         return the ids (for a ``batch``, the union of the per-query
         shortlists) for the exact full-width rescore's literal
-        ``IN``. Every query scores in ONE Arrow pass of the
-        multi-query capture scorer (one query is element 1 of a
-        one-query call — the same matmul); the leaf is a
-        TakeOrderedAndProject heap for one query, map-side-pruned
-        per-query top-m for a batch. The sidecar read is restricted first: to the graph
+        ``IN``. Every query scores in ONE Arrow pass of the capture
+        scorer (`operators/maxsim.py::maxsim_capture_udf`; one query
+        is element 0 of a one-query call — the same matmul); the leaf
+        is ``topk``: a TakeOrderedAndProject heap for one query,
+        map-side-pruned per-query top-m for a batch. The sidecar read
+        is restricted first: to the graph
         beam's ``ids`` (hnsw_config collections), or to the probed
         ``probe`` cells (statically partition-pruned on the shared
         IVF layout), else the flat codes scan — in every case the
@@ -2084,7 +2080,7 @@ class Collection:
         round to 6 before ranking (ties by id), the
         shortlist-determinism discipline every oracle-twinned tier
         uses (registry.py docstring)."""
-        from .operators.topk import global_topk, grouped_topk
+        from .operators.topk import topk
 
         codes = _read_parquet(spark, self._codes_path_for(space))
         if probe is not None and "centroid_id" in codes.columns:
@@ -2099,11 +2095,9 @@ class Collection:
             else codes.select(id_col, arr[0].alias("__s")))
         scored = scored.select(id_col, *lead,
                                F.round("__s", 6).alias("score"))
-        order = [("score", False), (id_col, True)]
-        keep = (grouped_topk(scored, lead, order, m, rank_col=None)
-                .select(id_col).distinct() if batch
-                else global_topk(scored, order, m).select(id_col))
-        return [r[id_col] for r in keep.collect()]
+        keep = topk(scored, lead, [("score", False), (id_col, True)], m,
+                    rank_col=None).select(id_col)
+        return sorted({r[id_col] for r in keep.collect()})
 
     def _post_write(self, spark: SparkSession, incoming: DataFrame | None,
                     id_col: str, vec_col: str, rewrote: bool,
@@ -2209,7 +2203,8 @@ class Collection:
             # a part-table sidecar would read as NULL on old rows and
             # silently drop them from stage 1. Such collections keep
             # the compute-at-read fallback until a full rewrite.
-            existing_cols = set(_read_parquet(spark, self.path).columns)
+            table = _read_parquet(spark, self.path)
+            existing_cols = set(table.columns)
             stale = [c for c in points.columns
                      if c.endswith("__pooled") and c not in existing_cols]
             if stale:
@@ -2234,8 +2229,27 @@ class Collection:
                     "(read them back via Collection.read, or supply "
                     "nested multivectors and let the write path derive "
                     "the sidecars)")
+            # every data file keeps ONE schema (a reader infers it from
+            # whichever file it samples): a payload column the batch
+            # lacks appends as typed NULL, and a column the table lacks
+            # is a table-wide schema change — the existing rows are
+            # rewritten with it NULL in the same staged swap that adds
+            # the batch, the path set_payload takes for a new key
+            new = {f.name: F.lit(None).cast(f.dataType)
+                   for f in points.schema.fields
+                   if f.name not in existing_cols}
+            if points.columns != table.columns:
+                points = points.select(*[
+                    c if c in points.columns
+                    else F.lit(None).cast(table.schema[c].dataType).alias(c)
+                    for c in table.columns], *new)
+            if new:
+                kept = table if mode != "merge" else table.join(
+                    points.select(id_col), on=id_col, how="left_anti")
+                self._rewrite(spark, kept.withColumns(new).unionByName(
+                    points), id_col, vec_col)
+                return
         if mode == "merge" and self._has_data(spark):
-            existing = _read_parquet(spark, self.path)
             incoming_ids = points.select(id_col)
             # replace-on-conflict (Qdrant upsert overwrites by id),
             # through the SHARED file-scoped machinery
@@ -2257,7 +2271,7 @@ class Collection:
                                        how="left_anti"),
                 id_col, vec_col, post_write=False)
             if n_conflicts:
-                self._write_main(points.select(*existing.columns), "append")
+                self._write_main(points, "append")
                 self._post_write(spark, None, id_col, vec_col,
                                  rewrote=True)
                 return
@@ -2434,11 +2448,11 @@ class Collection:
                        offset: int = 0, with_vectors: bool = False,
                        batch: bool = False) -> DataFrame:
         """Search one sparse space (Qdrant ``query=SparseVector(...)``
-        + ``using=<sparse name>``). Each query is ``(indices, values)``
-        or ``{"indices": ..., "values": ...}``; scoring is the sparse
-        dot product via the broadcast-pruned posting explode
-        (`operators/sparse.py::sparse_knn`; a ``batch`` shares ONE
-        posting pass, `sparse_knn_batch`, results tagged
+        + ``using=<sparse name>``) for Q ≥ 1 queries. Each query is
+        ``(indices, values)`` or ``{"indices": ..., "values": ...}``;
+        scoring is the sparse dot product via the broadcast-pruned
+        posting join (`operators/sparse.py::sparse_knn`: every query
+        shares ONE posting pass, a ``batch``'s results are tagged
         ``query_idx``), with the space's declared ``modifier`` applied
         — IDF statistics always come from the WHOLE collection (Qdrant
         computes them at index time), so a request filter narrows
@@ -2447,12 +2461,10 @@ class Collection:
         re-shuffles."""
         from pyspark.sql import Window
 
-        from .operators.sparse import sparse_knn, sparse_knn_batch
+        from .operators.sparse import sparse_knn
 
         qs = [(q["indices"], q["values"]) if isinstance(q, dict)
               else (list(q[0]), list(q[1])) for q in query_vectors]
-        if not batch and len(qs[0][0]) != len(qs[0][1]):
-            raise ValueError("sparse query indices/values length mismatch")
         idx_c, val_c = name + "__sidx", name + "__sval"
         table = self.read(spark)
         query_filter = as_predicate(query_filter)
@@ -2484,13 +2496,8 @@ class Collection:
             kw = dict(stats_corpus=full if (scfg.get("modifier")
                                             and query_filter is not None)
                       else None)
-        if batch:
-            hits = sparse_knn_batch(src, qs, k=k, id_col=id_col,
-                                    modifier=scfg.get("modifier"), **kw)
-        else:
-            hits = sparse_knn(src, list(qs[0][0]), list(qs[0][1]),
-                              k=k + (offset or 0), id_col=id_col,
-                              modifier=scfg.get("modifier"), **kw)
+        hits = sparse_knn(src, qs, k=k + (offset or 0), id_col=id_col,
+                          modifier=scfg.get("modifier"), batch=batch, **kw)
         if score_threshold is not None:
             hits = hits.filter(F.col("score") >= score_threshold)
         if offset:
@@ -2807,14 +2814,12 @@ class Collection:
                    normalize: bool, decode=None) -> list:
         """Per-segment HNSW beam search over each query's probed cells
         (partition-pruned read of the graph sidecar, beam ``plan.ef``
-        per segment) → candidate rows. A batch shares one pass over the
-        probe-union of the sidecar (and one deserialize per segment)
-        while every query walks only ITS cells; its rows carry
-        ``query_id``."""
-        from .operators.hnsw import (
-            hnsw_layout_search,
-            hnsw_layout_search_batch,
-        )
+        per segment) → candidate rows carrying ``query_id``: ONE walk
+        (`operators/hnsw.py::hnsw_layout_search_batch`) for Q ≥ 1 — a
+        batch shares one pass over the probe-union of the sidecar (and
+        one deserialize per segment) while every query walks only ITS
+        cells."""
+        from .operators.hnsw import hnsw_layout_search_batch
 
         graphs = _read_parquet(spark, self._hnsw_graphs)
         # list the segment directory ONCE for a batch — per-query
@@ -2823,14 +2828,10 @@ class Collection:
             self.meta.get("hnsw") or {}).get("max_segment_size") else None)
         segs = [self._hnsw_segments(self._probe(spark, [v], plan.nprobe),
                                     names=names) for v in route_qvs]
-        kw = dict(ef=plan.ef, id_type=id_type, normalize=normalize,
-                  decode=decode)
-        if plan.batch:
-            return hnsw_layout_search_batch(
-                graphs, list(enumerate(walk_qvs)),
-                query_segments=dict(enumerate(segs)), **kw).collect()
-        return hnsw_layout_search(graphs, walk_qvs[0], segments=segs[0],
-                                  **kw).collect()
+        return hnsw_layout_search_batch(
+            graphs, list(enumerate(walk_qvs)),
+            query_segments=dict(enumerate(segs)), ef=plan.ef,
+            id_type=id_type, normalize=normalize, decode=decode).collect()
 
     def _run_dense(self, spark: SparkSession, plan: SearchPlan, qs: list,
                    cfg: dict, corpus: DataFrame, query_filter, per_query,
@@ -2947,8 +2948,9 @@ class Collection:
         never joined on as a column, so the scan carries only doc bytes
         (at ColPali shape a query array is tens of KB per row,
         BASELINE.md §MaxSim-at-shape) and docs cross Arrow once
-        regardless of Q."""
-        from .operators.maxsim import maxsim_knn, maxsim_knn_batch
+        regardless of Q. One scorer and one ``maxsim_knn`` serve Q ≥ 1;
+        only the leaf differs (``operators/topk.py::topk``)."""
+        from .operators.maxsim import maxsim_knn
 
         vec_col, dim, batch = cfg["vec_col"], cfg.get("dim"), plan.batch
         qvs = [[[float(x) for x in v] for v in q] for q in qs]
@@ -2996,11 +2998,10 @@ class Collection:
         elif plan.shortlist == "pooled":
             corpus = self._maxsim_stage1(corpus, pooled, plan.m, id_col,
                                          vec_col, dim, batch=batch)
-        kw = dict(k=k, id_col=id_col, mv_col=vec_col, payload_cols=payload,
-                  score_threshold=score_threshold, flat_dim=dim)
-        if batch:
-            return maxsim_knn_batch(corpus, None, queries_flat=flats, **kw)
-        return maxsim_knn(corpus, None, query_flat=flats[0], **kw)
+        return maxsim_knn(corpus, None, k=k, id_col=id_col, mv_col=vec_col,
+                          payload_cols=payload, flat_dim=dim,
+                          score_threshold=score_threshold,
+                          queries_flat=flats, batch=batch)
 
     def _ranks_ascending(self, using: str | None, vec_col: str) -> bool:
         """Whether a space's scores rank ascending (distance metrics)

@@ -78,11 +78,12 @@ def operand_col(x: Column | str | Sequence[float]) -> Column:
 # The one width gate of every unrolled scorer: past it the builders
 # return their loop-shaped twins (aggregate(zip_with(...))) — the same
 # left-to-right float64 fold, so the same bits. The loop form keeps a
-# literal query as ONE referenced constant, so its generated code does
-# not depend on the query (no class compiled per search) and stays
-# O(1) in dim however often the optimizer copies the expression (a
-# score_threshold filter pushed through the projection inlines it
-# twice). The unrolled sum skips zip_with's per-row array but its code
+# literal query as ONE referenced constant and is not whole-stage
+# compiled: the executed plan shows it as an interpreted Project (no
+# *(n) codegen marker), so no class is compiled per search and its
+# size stays O(1) in dim however often the optimizer copies the
+# expression (a score_threshold filter pushed through the projection
+# inlines it twice). The unrolled sum skips zip_with's per-row array but its code
 # grows with dim: janino's 64 KB method limit drops the whole stage to
 # interpreted somewhere between 512 and 768 terms, and long before
 # that its codegen costs more than it saves. Median process-tree CPU

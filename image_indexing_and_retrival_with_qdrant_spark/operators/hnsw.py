@@ -73,8 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["hnsw_level", "hnsw_build_np", "hnsw_search_np",
-           "hnsw_layout", "hnsw_layout_search",
-           "hnsw_layout_search_batch", "LAYOUT_SCHEMA"]
+           "hnsw_layout", "hnsw_layout_search_batch", "LAYOUT_SCHEMA"]
 
 _LEVEL_CAP = 16  # < 1e-7 odds at m=8; bounds sidecar width
 # elementwise-op budget for _select_heuristic's one-block pairwise
@@ -503,7 +502,7 @@ def hnsw_search_np(levels, adj, Xn, qvec, ef: int,
     provably-exhaustive mode the static-oracle twin registers (that
     mode always walks the Python path; the C kernel serves the
     sub-linear case). ``packed`` (optional) is a reused
-    ``hnsw_native.pack_graph`` result so batch callers pay the
+    ``hnsw_native.pack_graph`` result so the layout walk pays the
     adjacency flattening once per segment, not per query."""
     n = len(levels)
     q = np.asarray(qvec, dtype=np.float64)
@@ -687,72 +686,29 @@ def hnsw_layout(df: DataFrame, n_segments: int | None = None,
         "segment").applyInPandas(build, schema)
 
 
-def hnsw_layout_search(layout: DataFrame, qvec, ef: int,
-                       segments: list[int] | None = None,
-                       id_type: str = "bigint",
-                       normalize: bool = True,
-                       decode=None) -> DataFrame:
-    """Per-segment beam search over a built layout → candidate ids
-    (``segment, vec_id``), ≤ef per segment. ``segments`` prunes the
-    probe to a literal IN — partition pruning when the layout is
-    written ``partitionBy(segment)`` (the routed composition passes
-    the nprobe nearest cells). The caller rescores the bounded union
-    with the engine's exact cosine (literal-IN pruned scan + global
-    top-k). ``decode`` must be the SAME callable the layout was built
-    with (quantized layouts — module comment above); None reads the
-    plain ``embedding`` column."""
-    if segments is not None:
-        layout = layout.filter(F.col("segment").isin([int(s) for s
-                                                      in segments]))
-    q = [float(x) for x in qvec]
-    decode = _default_decode if decode is None else decode
-    # sidecars persisted before the pos column existed restore build
-    # order by vec_id (their ids were unique by construction — append
-    # mode only ever writes pos-bearing layouts)
-    sort_col = "pos" if "pos" in layout.columns else "vec_id"
-
-    def search(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_col, kind="stable")
-        ids = pdf["vec_id"].tolist()
-        levels = pdf["level"].tolist()
-        # links are POSITIONS in build (pos) order (see LAYOUT_SCHEMA):
-        # the Arrow arrays are the adjacency, no conversion pass
-        adj = pdf["links"].tolist()
-        X = decode(pdf)
-        Xn = _normalize_rows(X) if normalize else X
-        res = hnsw_search_np(levels, adj, Xn, q, ef=ef,
-                             normalize=normalize)
-        return pd.DataFrame({
-            "segment": pdf["segment"].iloc[0],
-            "vec_id": [ids[p] for _, p in res],
-        })
-
-    # no pin_group_parallelism here (unlike the builds): a walk's work
-    # is proportional to the bytes it deserializes, so AQE sizing the
-    # exchange by bytes is right, and each extra Python task costs a
-    # fixed ~0.2-0.27 s of worker CPU (SCALE.md)
-    return layout.groupBy("segment").applyInPandas(
-        search, f"segment bigint, vec_id {id_type}")
-
-
 def hnsw_layout_search_batch(layout: DataFrame, queries, ef: int,
                              segments: list[int] | None = None,
                              query_segments: dict | None = None,
                              id_type: str = "bigint",
                              normalize: bool = True,
                              decode=None) -> DataFrame:
-    """Batched per-segment beam search: ``queries`` is a list of
-    ``(query_id, vector)``. Every query shares ONE segment
-    deserialize + normalize pass (the engine's batch-shares-one-pass
-    discipline — sparse/quantized batches do the same), which is the
-    dominant per-query cost of the single-query form at scale
-    (measured on the 100k stress: the walk is µs, the Arrow
-    deserialize is the read path). ``query_segments`` (query_id →
-    iterable of segment ids) restricts each query to ITS OWN probed
-    cells — the scan prunes to the union, each query walks only its
-    probe set, so batch ≡ per-query single searches exactly. Emits
+    """Per-segment beam search over a built layout for Q ≥ 1 queries:
+    ``queries`` is a list of ``(query_id, vector)`` (one search is
+    ``[(0, q)]``). Every query shares ONE segment deserialize +
+    normalize pass (the engine's batch-shares-one-pass discipline —
+    sparse/quantized batches do the same), which is the dominant
+    per-query cost at scale (measured on the 100k stress: the walk is
+    µs, the Arrow deserialize is the read path). ``segments`` prunes
+    the probe to a literal IN — partition pruning when the layout is
+    written ``partitionBy(segment)`` (the routed composition passes
+    the nprobe nearest cells); ``query_segments`` (query_id → iterable
+    of segment ids) restricts each query to ITS OWN probed cells — the
+    scan prunes to the union, each query walks only its probe set, so
+    a batch ≡ per-query searches exactly. ``decode`` must be the SAME
+    callable the layout was built with (quantized layouts — module
+    comment above); None reads the plain ``embedding`` column. Emits
     ``(segment, query_id, vec_id)`` candidates, ≤ef per (query,
-    segment)."""
+    segment); the caller rescores the bounded union exactly."""
     if query_segments is not None and segments is None:
         segments = sorted({int(s) for ss in query_segments.values()
                            for s in ss})
@@ -764,6 +720,9 @@ def hnsw_layout_search_batch(layout: DataFrame, queries, ef: int,
              {int(q): {int(s) for s in ss}
               for q, ss in query_segments.items()})
     decode = _default_decode if decode is None else decode
+    # sidecars persisted before the pos column existed restore build
+    # order by vec_id (their ids were unique by construction — append
+    # mode only ever writes pos-bearing layouts)
     sort_col = "pos" if "pos" in layout.columns else "vec_id"
 
     def search(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -771,21 +730,23 @@ def hnsw_layout_search_batch(layout: DataFrame, queries, ef: int,
         seg = int(pdf["segment"].iloc[0])
         ids = pdf["vec_id"].tolist()
         levels = pdf["level"].tolist()
+        # links are POSITIONS in build (pos) order (see LAYOUT_SCHEMA):
+        # the Arrow arrays are the adjacency, no conversion pass
         adj = pdf["links"].tolist()
         X = decode(pdf)
         Xn = _normalize_rows(X) if normalize else X
-        # flatten the adjacency ONCE per segment for the C beam —
-        # the per-query pack was the batch form's residual overhead
+        walks = [(qid, qv) for qid, qv in qlist
+                 if qsegs is None or seg in qsegs.get(qid, ())]
+        # flatten the adjacency ONCE per walked segment for the C beam
+        # (the condition under which hnsw_search_np would pack it)
         packed = None
-        if len(levels) > ef and _native_usable():
+        if walks and len(levels) > ef and _native_usable():
             from . import hnsw_native
 
             packed = hnsw_native.pack_graph(levels, adj)
         out_q: list[int] = []
         out_v: list[int] = []
-        for qid, qv in qlist:
-            if qsegs is not None and seg not in qsegs.get(qid, ()):
-                continue
+        for qid, qv in walks:
             res = hnsw_search_np(levels, adj, Xn, qv, ef=ef,
                                  normalize=normalize, packed=packed)
             out_q += [qid] * len(res)
@@ -796,6 +757,9 @@ def hnsw_layout_search_batch(layout: DataFrame, queries, ef: int,
             "vec_id": out_v,
         })
 
-    # byte-sized exchange, as in hnsw_layout_search
+    # no pin_group_parallelism here (unlike the builds): a walk's work
+    # is proportional to the bytes it deserializes, so AQE sizing the
+    # exchange by bytes is right, and each extra Python task costs a
+    # fixed ~0.2-0.27 s of worker CPU (SCALE.md)
     return layout.groupBy("segment").applyInPandas(
         search, f"segment bigint, query_id bigint, vec_id {id_type}")

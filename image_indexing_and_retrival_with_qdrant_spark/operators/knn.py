@@ -14,8 +14,10 @@ Semantics pinned by the reference:
 
 Plan shape: ``corpus → [pushed filter] → score (JVM codegen) → top-k``.
 One catalog query is an array literal inside the score expression: no
-join and no broadcast job, and above the unrolling gate the generated
-code does not depend on the query. A query FRAME (a batch, or a
+join and no broadcast job; above the unrolling gate the score is the
+loop form, which the executed plan runs as an interpreted ``Project``
+(no whole-stage code), its literal query one referenced constant. A
+query FRAME (a batch, or a
 registry builder's data-derived query) is crossed with the corpus as
 ``crossJoin(broadcast(queries))`` — a BroadcastNestedLoopJoin, the
 query side tiny, the corpus never shuffled. The single-query top-k is

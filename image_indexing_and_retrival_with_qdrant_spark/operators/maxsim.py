@@ -34,13 +34,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot
-from .topk import global_topk
+from .topk import global_topk, topk
 
-__all__ = ["maxsim_score_udf", "maxsim_score_flat_const_udf",
-           "maxsim_score_flat_multi_udf", "halfvec_encode_udf",
-           "halfvec_decode_udf", "maxsim_score_codes_multi_udf",
-           "maxsim_knn", "maxsim_knn_batch",
-           "maxsim_knn_exact", "as_multivector"]
+__all__ = ["maxsim_score_udf", "maxsim_score_flat_udf",
+           "maxsim_capture_udf", "halfvec_encode_udf",
+           "halfvec_decode_udf", "maxsim_knn", "maxsim_knn_exact",
+           "as_multivector"]
 
 
 def halfvec_encode_udf(vec_col: Column) -> Column:
@@ -84,102 +83,6 @@ def halfvec_decode_udf(vec_col: Column) -> Column:
         ])
 
     return _dec(vec_col)
-
-
-def _codes_batch(codes: pd.Series, dim: int):
-    """(B, n, dim) float64 code tensor from a uniform-width Arrow
-    batch — packed uint8 ``binary`` cells (the write format) or int
-    arrays (compatibility) alike."""
-    first = codes.iloc[0]
-    if isinstance(first, (bytes, bytearray)):
-        C = np.stack([np.frombuffer(b, dtype=np.uint8) for b in codes])
-        return np.asarray(C, dtype=np.float64).reshape(len(codes), -1,
-                                                       dim)
-    return np.asarray(np.stack(codes.to_numpy()),
-                      dtype=np.float64).reshape(len(codes), -1, dim)
-
-
-def _codes_row(c, dim: int):
-    if isinstance(c, (bytes, bytearray)):
-        return np.frombuffer(c, dtype=np.uint8).astype(
-            np.float64).reshape(-1, dim)
-    return np.asarray(c, dtype=np.float64).reshape(-1, dim)
-
-
-def maxsim_score_codes_multi_udf(dim: int, mins: Sequence[float],
-                                 steps: Sequence[float],
-                                 queries_flat: Sequence[Sequence[float]]):
-    """MaxSim scorer over SQ CODES of a flat multivector (the
-    quantized tier of a MaxSim collection): each codes cell — packed
-    uint8 ``binary`` or ``array<int>`` — dequantizes to bucket centers
-    ``min_j + (c + 0.5)·step_j`` (dim j = position mod dim —
-    per-subvector params). Codes cross Arrow once and every query
-    scores against the decoded centers in the concatenated-matmul
-    shape of ``maxsim_score_flat_multi_udf``; returns ``array<double>``
-    of per-query approximate scores. One query is element 1 of a
-    one-query call — the same matmul on the same operands as the
-    per-query segment of a batch. The full-width column is only read
-    by the exact rescore of the survivors (the dense codes-shortlist
-    posture applied to MaxSim)."""
-    Qs = [np.asarray(list(q), dtype=np.float64).reshape(-1, dim)
-          for q in queries_flat]
-    Qall = np.concatenate(Qs, axis=0)
-    splits = np.cumsum([q.shape[0] for q in Qs])[:-1]
-    mn = np.asarray(list(mins), dtype=np.float64)
-    st = np.asarray(list(steps), dtype=np.float64)
-
-    @F.pandas_udf("array<double>")
-    def _score(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=object)
-        if codes.map(len).nunique() == 1:
-            C = _codes_batch(codes, dim)
-            D = mn + (C + 0.5) * st
-            sims = np.matmul(Qall[None], D.transpose(0, 2, 1))
-            per_vec = sims.max(axis=2)
-            scores = np.stack(
-                [seg.sum(axis=1)
-                 for seg in np.split(per_vec, splits, axis=1)],
-                axis=1)
-            return pd.Series(list(scores))
-        out = []
-        for c in codes:
-            C = _codes_row(c, dim)
-            D = mn + (C + 0.5) * st
-            out.append(np.array(
-                [(Q @ D.T).max(axis=1).sum() for Q in Qs]))
-        return pd.Series(out)
-
-    return _score
-
-
-def _flat_batch(doc_flat: pd.Series, dim: int):
-    """(B, n, dim) float64 tensor from a uniform-width Arrow batch of
-    flat multivectors — float arrays or fp16-bytes cells alike."""
-    first = doc_flat.iloc[0]
-    if isinstance(first, (bytes, bytearray)):
-        D = np.stack([np.frombuffer(b, dtype=np.float16)
-                      for b in doc_flat])
-        return np.asarray(D, dtype=np.float64).reshape(len(doc_flat), -1,
-                                                       dim)
-    return np.asarray(
-        np.stack(doc_flat.to_numpy()), dtype=np.float64
-    ).reshape(len(doc_flat), -1, dim)
-
-
-def _flat_row(d, dim: int):
-    if isinstance(d, (bytes, bytearray)):
-        return np.frombuffer(d, dtype=np.float16).astype(
-            np.float64).reshape(-1, dim)
-    return np.asarray(d, dtype=np.float64).reshape(-1, dim)
-
-
-def _flat_width(doc_flat: pd.Series) -> pd.Series:
-    """Per-cell element count (bytes cells count fp16 elements)."""
-    first = doc_flat.iloc[0]
-    if isinstance(first, (bytes, bytearray)):
-        return doc_flat.map(lambda b: len(b) // 2)
-    return doc_flat.map(len)
 
 
 def as_multivector(col: Column, dim: int, n: int) -> Column:
@@ -248,73 +151,66 @@ def maxsim_score_flat_udf(dim: int):
     return _score
 
 
-def maxsim_score_flat_const_udf(dim: int, query_flat: Sequence[float]):
-    """Flat scorer with the query CAPTURED in the UDF closure instead
-    of joined on as a column. At reference shape (ColPali ~1030×128,
-    README.md:91) the query array is tens of KB; the column form
-    duplicates it onto every corpus row — at 1M docs that is tens of
-    GB of pure query bytes through codegen + Arrow. The capture form
-    ships it once per task via the pickled closure, and the scan
-    pipeline carries only (id, doc_flat). Same stacked-matmul batch
-    path as maxsim_score_flat_udf, so scores are bit-identical
-    (pinned in tests/test_maxsim_flat.py)."""
-    Q = np.asarray(list(query_flat), dtype=np.float64).reshape(-1, dim)
+def maxsim_capture_udf(dim: int, queries_flat: Sequence[Sequence[float]],
+                       sq: tuple | None = None):
+    """The capture scorer: ALL queries live in the UDF closure instead
+    of being joined on as a column, and every doc row scores against
+    each of them in one pass, returning ``array<double>`` of
+    ``len(queries_flat)`` scores (a single search reads element 0).
+    At reference shape (ColPali ~1030×128, README.md:91) a query
+    array is tens of KB; the column form duplicates it onto every
+    corpus row — at 1M docs tens of GB of pure query bytes through
+    codegen + Arrow — and a column-join batch ships every doc Q
+    times. The capture form ships the queries once per task via the
+    pickled closure, and docs cross Arrow ONCE regardless of Q.
 
-    @F.pandas_udf("double")
-    def _score(doc_flat: pd.Series) -> pd.Series:
-        if len(doc_flat) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        if _flat_width(doc_flat).nunique() == 1:
-            D = _flat_batch(doc_flat, dim)               # (B, n, dim)
-            sims = np.matmul(Q[None], D.transpose(0, 2, 1))  # (B, q, n)
-            return pd.Series(sims.max(axis=2).sum(axis=1))
-        out = np.empty(len(doc_flat), dtype=np.float64)
-        for i, d in enumerate(doc_flat):
-            out[i] = (Q @ _flat_row(d, dim).T).max(axis=1).sum()
-        return pd.Series(out)
+    The only part that varies is the decode of a cell to float64
+    rows: float arrays; fp16 ``binary`` (``halfvec_encode_udf`` — the
+    halved scan → Arrow byte stream); or, with ``sq=(mins, steps)``,
+    SQ codes (packed uint8 ``binary`` or ``array<int>``) dequantized
+    to bucket centres ``min_j + (c + 0.5)·step_j`` (dim j = position
+    mod dim) — the quantized tier of a MaxSim space, whose full-width
+    column only the exact rescore of the survivors reads.
 
-    return _score
-
-
-def maxsim_score_flat_multi_udf(dim: int,
-                                queries_flat: Sequence[Sequence[float]]):
-    """Multi-query capture scorer: ALL queries live in the closure and
-    every doc row scores against each of them in one pass, returning
-    ``array<double>`` of ``len(queries)`` scores. The column-join
-    batch form ships every doc row Q times through the join + Arrow;
-    this ships docs ONCE regardless of Q — at ColPali shape with a
-    Q-query batch, that is a Q× cut of the dominant byte stream.
-    Per-query math is the same stacked matmul as the single-query
-    capture scorer, so scores are bit-identical (pinned)."""
+    A uniform-width Arrow batch (fixed-layout embedders, and always
+    the fixtures) scores as ONE stacked matmul: every query's
+    subvectors concatenated into one (Σq_i, dim) matrix against the
+    (B, n, dim) doc stack (a 4-D broadcast matmul over docs × queries
+    measured 2.3× SLOWER at shape: numpy loops non-BLAS over the
+    doubly-batched slices), then max over doc vectors and a sum over
+    each query's row segment. Each (q, n) slice is the same dgemm the
+    per-row loop runs, so a query's score is bit-identical whatever
+    the batch around it (pinned in tests/test_maxsim_flat.py). Ragged
+    batches fall back to the per-row loop."""
     Qs = [np.asarray(list(q), dtype=np.float64).reshape(-1, dim)
           for q in queries_flat]
-    # ALL queries' subvectors concatenated into ONE (Σq_i, dim) matrix
-    # — the per-batch compute is then the SAME 3-D stacked matmul as
-    # the single-query scorer (a 4-D broadcast matmul over (docs ×
-    # queries) measured 2.3× SLOWER at shape: numpy loops non-BLAS
-    # over the doubly-batched slices); per-query scores come from
-    # max-over-doc-vecs then summing each query's row segment.
     Qall = np.concatenate(Qs, axis=0)
     splits = np.cumsum([q.shape[0] for q in Qs])[:-1]
+    if sq is None:
+        packed, decode = np.float16, (lambda D: D)
+    else:
+        mn, st = (np.asarray(list(v), dtype=np.float64) for v in sq)
+        packed, decode = np.uint8, (lambda C: mn + (C + 0.5) * st)
 
     @F.pandas_udf("array<double>")
-    def _score(doc_flat: pd.Series) -> pd.Series:
-        if len(doc_flat) == 0:
+    def _score(cells: pd.Series) -> pd.Series:
+        if len(cells) == 0:
             return pd.Series([], dtype=object)
-        if _flat_width(doc_flat).nunique() == 1:
-            D = _flat_batch(doc_flat, dim)            # (B, n, dim)
-            sims = np.matmul(Qall[None], D.transpose(0, 2, 1))
-            per_vec = sims.max(axis=2)                # (B, Σq)
-            scores = np.stack(
-                [seg.sum(axis=1)                      # same np.sum as
+        rows = [np.frombuffer(c, dtype=packed)
+                if isinstance(c, (bytes, bytearray)) else c for c in cells]
+        if cells.map(len).nunique() == 1:
+            D = decode(np.asarray(np.stack(rows), dtype=np.float64)
+                       .reshape(len(rows), -1, dim))  # (B, n, dim)
+            per_vec = np.matmul(Qall[None], D.transpose(0, 2, 1)).max(
+                axis=2)                               # (B, Σq)
+            return pd.Series(list(np.stack(
+                [seg.sum(axis=1)
                  for seg in np.split(per_vec, splits, axis=1)],
-                axis=1)                               # (B, Qn)
-            return pd.Series(list(scores))
+                axis=1)))                             # (B, Qn)
         out = []
-        for d in doc_flat:
-            D = _flat_row(d, dim)
-            out.append(np.array(
-                [(Q @ D.T).max(axis=1).sum() for Q in Qs]))
+        for r in rows:
+            D = decode(np.asarray(r, dtype=np.float64).reshape(-1, dim))
+            out.append(np.array([(Q @ D.T).max(axis=1).sum() for Q in Qs]))
         return pd.Series(out)
 
     return _score
@@ -322,7 +218,7 @@ def maxsim_score_flat_multi_udf(dim: int,
 
 def maxsim_knn(
     corpus: DataFrame,
-    query: DataFrame,
+    query: DataFrame | None,
     k: int | None = 5,
     id_col: str = "vec_id",
     mv_col: str = "vectors",
@@ -332,123 +228,66 @@ def maxsim_knn(
     score_threshold: float | None = None,
     round_digits: int | None = 6,
     flat_dim: int | None = None,
-    query_flat: Sequence[float] | None = None,
+    queries_flat: Sequence[Sequence[float]] | None = None,
+    batch: bool = False,
 ) -> DataFrame:
-    """Single-query MaxSim top-k via the vectorized pandas-UDF scorer.
+    """MaxSim top-k for Q ≥ 1 queries via the vectorized pandas-UDF
+    scorers (``query_batch_points`` for multivector collections when
+    ``batch``).
 
-    With ``query_flat`` (a plain list, requires ``flat_dim``) the
-    query is captured in the scorer closure instead of broadcast-
-    joined as a column — the at-shape path: the scan carries only
-    ``(id, doc_flat)``, no per-row query copy (see
-    ``maxsim_score_flat_const_udf``). ``query`` is ignored then.
+    With ``queries_flat`` (flat query vectors, requires ``flat_dim``)
+    the query set is captured in the scorer closure
+    (``maxsim_capture_udf``) — the at-shape path: the scan carries
+    only ``(id, doc_flat)`` and docs cross Arrow once. A single search
+    reads element 0 of the score array; a ``batch`` posexplodes it
+    into ``(query_idx, score)``. The leaf is ``topk``: one query's
+    TakeOrderedAndProject heap, or per-query top-k for a batch (Spark's
+    partial ``WindowGroupLimit`` caps its shuffle at
+    ``partitions×Q×k`` rows). ``mv_col`` may be an fp16 ``binary``
+    column (``halfvec_encode_udf``).
 
-    With ``flat_dim`` set, ``mv_col``/``query_mv_col`` are flat
-    arrays (n×dim doubles) and the cheap flat scorer is used. On the
-    capture paths ``mv_col`` may also be an fp16 ``binary`` column
-    (``halfvec_encode_udf``) — the scorers detect bytes cells, decode
-    with ``np.frombuffer`` and upcast to float64, halving the scan →
-    Arrow byte stream at ColPali width.
+    Without ``queries_flat``, ``query`` is a ONE-row frame whose
+    ``query_mv_col`` is broadcast-joined onto every doc: flat arrays
+    (n×dim doubles) with ``flat_dim``, else nested multivectors (the
+    compatibility reader). This column form scores one query.
 
     ``prefilter``/``score_threshold`` mirror the dense path
     (``knn.dense_knn``): the payload predicate runs *before* scoring
     (Catalyst pushes it into the scan), the threshold after — matching
     Qdrant's ``query_points(query_filter=..., score_threshold=...)``
     surface, which the reference declares on multivector calls too
-    (``with_colpali_v1.3/qdrant_query_with_colpali.py:109-114``)."""
+    (``with_colpali_v1.3/qdrant_query_with_colpali.py:109-114``).
+    ``k=None`` (threshold-only / feed-a-ranker) returns every scored
+    row."""
     if prefilter is not None:
         corpus = corpus.filter(prefilter)
-    if query_flat is not None:
+    lead = ["query_idx"] if batch else []
+    if queries_flat is not None:
         if flat_dim is None:
-            raise ValueError("query_flat requires flat_dim")
-        score = maxsim_score_flat_const_udf(flat_dim, query_flat)(
-            F.col(mv_col))
-        if round_digits is not None:
-            score = F.round(score, round_digits)
-        scored = corpus.select(id_col, *payload_cols, score.alias("score"))
+            raise ValueError("queries_flat requires flat_dim")
+        if not batch and len(queries_flat) != 1:
+            raise ValueError("a single MaxSim search takes one query")
+        arr = maxsim_capture_udf(flat_dim, queries_flat)(F.col(mv_col))
+        scored = corpus.select(id_col, *payload_cols, *(
+            [F.posexplode(arr).alias("query_idx", "__s")] if batch
+            else [arr[0].alias("__s")]))
+        score = F.col("__s")
     else:
-        if flat_dim is not None:
-            score = maxsim_score_flat_udf(flat_dim)(
-                F.col(mv_col), F.col(query_mv_col)
-            )
-        else:
-            score = maxsim_score_udf()(F.col(mv_col), F.col(query_mv_col))
-        if round_digits is not None:
-            score = F.round(score, round_digits)
-        scored = (
-            corpus.join(F.broadcast(query.select(query_mv_col)))
-            .withColumn("score", score)
-            .select(id_col, *payload_cols, "score")
-        )
+        if batch:
+            raise ValueError("the query-frame form scores one query")
+        scored = corpus.join(F.broadcast(query.select(query_mv_col)))
+        score = (maxsim_score_udf() if flat_dim is None
+                 else maxsim_score_flat_udf(flat_dim))(
+            F.col(mv_col), F.col(query_mv_col))
+    if round_digits is not None:
+        score = F.round(score, round_digits)
+    scored = scored.select(*lead, id_col, *payload_cols,
+                           score.alias("score"))
     if score_threshold is not None:
         scored = scored.filter(F.col("score") >= score_threshold)
     if k is None:  # threshold-only / feed-a-ranker: no limit
         return scored
-    return global_topk(scored, [("score", False), (id_col, True)], k)
-
-
-def maxsim_knn_batch(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    mv_col: str = "vectors",
-    query_id_col: str = "query_idx",
-    query_mv_col: str = "query_vectors",
-    payload_cols: Sequence[str] = (),
-    prefilter: Column | None = None,
-    score_threshold: float | None = None,
-    round_digits: int | None = 6,
-    flat_dim: int | None = None,
-    queries_flat: Sequence[Sequence[float]] | None = None,
-) -> DataFrame:
-    """Batched MaxSim (``query_batch_points`` for multivector
-    collections): broadcast the query set, score every (doc × query)
-    pair in one corpus pass with the vectorized scorer, rank per query.
-    Same shuffle discipline as ``dense_knn_batch``: Spark's partial
-    ``WindowGroupLimit`` caps the window's shuffle at
-    ``partitions×Q×k`` rows.
-
-    With ``queries_flat`` (list of flat query vectors, requires
-    ``flat_dim``; ``queries`` is ignored) the whole batch is captured
-    in the scorer closure: docs cross Arrow once with an
-    ``array<double>`` of per-query scores posexploded into
-    ``(query_idx, score)`` — no join, no Q× doc duplication
-    (see ``maxsim_score_flat_multi_udf``)."""
-    if prefilter is not None:
-        corpus = corpus.filter(prefilter)
-    if queries_flat is not None:
-        if flat_dim is None:
-            raise ValueError("queries_flat requires flat_dim")
-        arr = maxsim_score_flat_multi_udf(flat_dim, queries_flat)(
-            F.col(mv_col))
-        score = F.col("__s")
-        if round_digits is not None:
-            score = F.round(score, round_digits)
-        scored = corpus.select(
-            F.col(id_col), *payload_cols,
-            F.posexplode(arr).alias(query_id_col, "__s"),
-        ).select(query_id_col, id_col, *payload_cols,
-                 score.alias("score"))
-    else:
-        if flat_dim is not None:
-            score = maxsim_score_flat_udf(flat_dim)(
-                F.col(mv_col), F.col(query_mv_col))
-        else:
-            score = maxsim_score_udf()(F.col(mv_col), F.col(query_mv_col))
-        if round_digits is not None:
-            score = F.round(score, round_digits)
-        scored = (
-            corpus.join(
-                F.broadcast(queries.select(query_id_col, query_mv_col)))
-            .withColumn("score", score)
-            .select(query_id_col, id_col, *payload_cols, "score")
-        )
-    if score_threshold is not None:
-        scored = scored.filter(F.col("score") >= score_threshold)
-    from .topk import grouped_topk
-
-    return grouped_topk(
-        scored, [query_id_col], [("score", False), (id_col, True)], k)
+    return topk(scored, lead, [("score", False), (id_col, True)], k)
 
 
 def maxsim_knn_exact(

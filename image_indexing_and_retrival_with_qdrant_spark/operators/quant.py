@@ -32,7 +32,7 @@ from __future__ import annotations
 import numpy as np
 
 from .bq import bq_decode_np, bq_encode, bq_query_words, bq_score
-from .maxsim import maxsim_score_codes_multi_udf
+from .maxsim import maxsim_capture_udf
 from .pq import pq_decode_np, pq_encode_frame, pq_lut, pq_score
 from .sq import sq_decode_np, sq_encode, sq_encode_flat, sq_score
 from .sq import sq_train, sq_train_flat
@@ -97,8 +97,9 @@ class _SQ(_Quantizer):
     def maxsim(self, queries_flat: list):
         """A multivector space's approximate-MaxSim scorer: codes →
         ``array<double>`` of per-query scores."""
-        return maxsim_score_codes_multi_udf(
-            self.dim, self.cfg["sq_mins"], self.cfg["sq_steps"], queries_flat)
+        return maxsim_capture_udf(
+            self.dim, queries_flat,
+            sq=(self.cfg["sq_mins"], self.cfg["sq_steps"]))
 
 
 class _BQ(_Quantizer):

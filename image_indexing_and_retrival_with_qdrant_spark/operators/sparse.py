@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..functions.localframe import local_literal_df
 
 from ..functions.text import tokens
-from .topk import global_topk
+from .topk import topk
 
 __all__ = ["term_vocabulary", "sparse_from_text", "sparse_postings",
            "sparse_knn"]
@@ -126,8 +126,7 @@ def sparse_postings(corpus: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def sparse_knn(corpus: DataFrame | None, query_indices: list,
-               query_values: list,
+def sparse_knn(corpus: DataFrame | None, queries: list,
                k: int = 10, id_col: str = "doc_id",
                round_digits: int | None = 6,
                modifier: str | None = None,
@@ -135,10 +134,15 @@ def sparse_knn(corpus: DataFrame | None, query_indices: list,
                stats_corpus: DataFrame | None = None,
                postings: DataFrame | None = None,
                candidates: DataFrame | None = None,
-               df_stats: DataFrame | None = None) -> DataFrame:
-    """Top-k by sparse dot product against one query. The broadcast
-    query side prunes the exploded postings to query terms before any
-    shuffle.
+               df_stats: DataFrame | None = None,
+               batch: bool = False) -> DataFrame:
+    """Top-k by sparse dot product for Q ≥ 1 queries, each an
+    ``(indices, values)`` pair. ALL queries share ONE posting pass:
+    the broadcast query side (every query's terms tagged
+    ``query_idx``) prunes the exploded postings to query terms before
+    any shuffle; points score per (query, point). The leaf is
+    ``topk``: one query's heap, or per-query top-k with a ``rank`` for
+    a ``batch`` (results tagged ``query_idx``).
 
     ``modifier="idf"`` (Qdrant ``SparseVectorParams(modifier=
     Modifier.IDF)`` — the BM42 configuration): each query value is
@@ -146,7 +150,8 @@ def sparse_knn(corpus: DataFrame | None, query_indices: list,
     ``ln((N − df + 0.5) / (df + 0.5) + 1)`` with ``df`` = points
     containing the term and ``N`` = point count (``n_points`` or a
     count job). df is computed from the already-query-pruned postings
-    (|q| keys, exact integer counts). IDF weights make the per-doc
+    (exact distinct-id counts per term, once across the batch). IDF
+    weights make the per-doc
     contributions irrational doubles, so the doc score folds
     left-to-right in ascending index order
     (``aggregate(array_sort(collect_list(...)))``) instead of a
@@ -167,12 +172,16 @@ def sparse_knn(corpus: DataFrame | None, query_indices: list,
     points (the filtered-search path); IDF statistics still come from
     the full ``postings`` frame. Scoring is identical either way —
     results are bit-equal to the explode form."""
+    if not batch and len(queries) != 1:
+        raise ValueError("a single sparse search takes one query")
+    rows = []
+    for qi, (idx, vals) in enumerate(queries):
+        if len(idx) != len(vals):
+            raise ValueError("sparse query indices/values length mismatch")
+        rows += [(qi, int(i), float(v)) for i, v in zip(idx, vals)]
     spark = (corpus or postings).sparkSession
-    qdf = local_literal_df(
-        spark,
-        [(int(i), float(v)) for i, v in zip(query_indices, query_values)],
-        "idx bigint, qval double",
-    )
+    qdf = local_literal_df(spark, rows,
+                           "query_idx int, idx bigint, qval double")
     posting = (postings.select(id_col, "idx", "val")
                if postings is not None
                else sparse_postings(corpus, id_col=id_col))
@@ -215,72 +224,6 @@ def sparse_knn(corpus: DataFrame | None, query_indices: list,
         score = F.sum(F.col("val") * F.col("qval"))
     if round_digits is not None:
         score = F.round(score, round_digits)
-    scored = pruned.groupBy(id_col).agg(score.alias("score"))
-    return global_topk(scored, [("score", False), (id_col, True)], k)
-
-
-def sparse_knn_batch(corpus: DataFrame | None, queries: list, k: int = 10,
-                     id_col: str = "doc_id",
-                     round_digits: int | None = 6,
-                     modifier: str | None = None,
-                     n_points: int | None = None,
-                     stats_corpus: DataFrame | None = None,
-                     postings: DataFrame | None = None,
-                     df_stats: DataFrame | None = None) -> DataFrame:
-    """Batched sparse top-k: ``queries`` is a list of
-    ``(indices, values)`` pairs; ALL queries share ONE posting pass
-    (the broadcast side is the union of every query's terms tagged
-    ``query_idx``), grouped per (query, point) and ranked per query —
-    the sparse twin of ``dense_knn_batch``'s single-scan plan. Scoring
-    and the IDF modifier match :func:`sparse_knn` exactly (same fold
-    discipline, df per term computed once across the batch).
-    ``postings`` swaps in the persisted inverted-index frame exactly
-    as in :func:`sparse_knn` (bit-equal results)."""
-    from .topk import grouped_topk
-
-    spark = (corpus or postings).sparkSession
-    rows = [(qi, int(i), float(v))
-            for qi, (idx, vals) in enumerate(queries)
-            for i, v in zip(idx, vals)]
-    qdf = local_literal_df(spark, rows,
-                           "query_idx int, idx bigint, qval double")
-    posting = (postings.select(id_col, "idx", "val")
-               if postings is not None
-               else sparse_postings(corpus, id_col=id_col))
-    pruned = posting.join(F.broadcast(qdf), on="idx")
-    if modifier == "idf":
-        if (n_points is None and stats_corpus is None and corpus is None
-                and df_stats is None):
-            raise ValueError("idf over a postings frame needs n_points "
-                             "(distinct ids are a posting-wide agg)")
-        stats = corpus if stats_corpus is None else stats_corpus
-        n = float(n_points if n_points is not None else stats.count())
-        if df_stats is not None:
-            dfreq = df_stats.select("idx", "df")  # index-time stats
-        else:
-            terms = qdf.select("idx").distinct()
-            stats_posting = (posting if stats_corpus is None
-                             else sparse_postings(stats, id_col=id_col))
-            dfreq = (stats_posting
-                     .join(F.broadcast(terms), on="idx")
-                     .groupBy("idx").agg(
-                         F.count_distinct(F.col(id_col)).cast("double")
-                         .alias("df")))
-        idf = F.log((F.lit(n) - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5)) + F.lit(1.0))
-        pruned = (pruned.join(F.broadcast(dfreq), on="idx")
-                  .withColumn("qval", F.col("qval") * idf))
-        score = F.aggregate(
-            F.array_sort(F.collect_list(
-                F.struct(F.col("idx"),
-                         (F.col("val") * F.col("qval")).alias("c")))),
-            F.lit(0.0), lambda acc, x: acc + x["c"])
-    elif modifier is not None:
-        raise ValueError(f"unknown sparse modifier {modifier!r}")
-    else:
-        score = F.sum(F.col("val") * F.col("qval"))
-    if round_digits is not None:
-        score = F.round(score, round_digits)
-    scored = pruned.groupBy("query_idx", id_col).agg(score.alias("score"))
-    return grouped_topk(scored, ["query_idx"],
-                        [("score", False), (id_col, True)], k)
+    lead = ["query_idx"] if batch else []
+    scored = pruned.groupBy(*lead, id_col).agg(score.alias("score"))
+    return topk(scored, lead, [("score", False), (id_col, True)], k)

@@ -20,6 +20,11 @@ The reference's ``limit=top_k`` on ``query_points``
   above it the results are identical and only the shuffle is
   unpruned.
 
+``topk`` is the one leaf rule of a search for Q ≥ 1: no lead columns
+(a single search) → ``global_topk``; ``["query_idx"]`` (a batch) →
+``grouped_topk``. A single search and a batch otherwise share their
+whole scoring body.
+
 Determinism: callers must supply a total order (tie-break keys), else
 top-k content at rank boundaries is engine-dependent.
 """
@@ -31,7 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["global_topk", "grouped_topk", "order_cols", "top_groups"]
+__all__ = ["global_topk", "grouped_topk", "order_cols", "top_groups",
+           "topk"]
 
 OrderSpec = Sequence[tuple[str | Column, bool]]  # (column or name, ascending)
 
@@ -62,6 +68,21 @@ def grouped_topk(
     if rank_col:
         return ranked.withColumnRenamed("__rank", rank_col)
     return ranked.drop("__rank")
+
+
+def topk(
+    df: DataFrame,
+    lead: Sequence[str],
+    order: OrderSpec,
+    k: int,
+    rank_col: str | None = "rank",
+) -> DataFrame:
+    """The leaf of a search for Q ≥ 1: the heap for a single search
+    (no ``lead``), exact per-query top-k over the ``lead`` key (the
+    batch's ``query_idx``, ranked into ``rank_col``) otherwise."""
+    if lead:
+        return grouped_topk(df, lead, order, k, rank_col=rank_col)
+    return global_topk(df, order, k)
 
 
 def top_groups(

@@ -31,7 +31,7 @@ from ..operators.hnsw import (
     _normalize_rows,
     hnsw_build_np,
     hnsw_layout,
-    hnsw_layout_search,
+    hnsw_layout_search_batch,
     hnsw_search_np,
 )
 from ..operators.topk import global_topk
@@ -209,8 +209,8 @@ def _search(spark: SparkSession, sf_dir: str, ef: int,
             routed: bool = False) -> DataFrame:
     lay = _hnsw_index(spark, sf_dir, routed=routed)
     segments = _np_probe(sf_dir, _NPROBE) if routed else None
-    cand = hnsw_layout_search(lay, _np_query_vec(sf_dir), ef=ef,
-                              segments=segments).collect()
+    cand = hnsw_layout_search_batch(lay, [(0, _np_query_vec(sf_dir))],
+                                    ef=ef, segments=segments).collect()
     return _rescore_top5(spark, sf_dir, sorted(r.vec_id for r in cand))
 
 
@@ -284,7 +284,6 @@ def ann_hnsw_batch_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized-prefetch discipline. Per-query oracle: the driver twin
     re-derives each query's shortlist from the SAME shared graphs and
     DuckDB recomputes score + rank."""
-    from ..operators.hnsw import hnsw_layout_search_batch
     from ..operators.knn import dense_knn_batch
 
     emb = load(spark, sf_dir, "embeddings")

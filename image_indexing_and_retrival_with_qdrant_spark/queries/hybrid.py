@@ -171,7 +171,7 @@ def hybrid_sparse_dense_rrf_top10(spark: SparkSession, sf_dir: str) -> DataFrame
     vocab = term_vocabulary(docs)
     corpus = sparse_from_text(docs, vocab)
     qrow = corpus.filter(F.col("doc_id") == 0).collect()[0]
-    sp = sparse_knn(corpus, list(qrow.indices), list(qrow.values), k=_DEPTH)
+    sp = sparse_knn(corpus, [(qrow.indices, qrow.values)], k=_DEPTH)
 
     emb = load(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0).select(

@@ -242,7 +242,7 @@ def maxsim_recall_routed_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _batch_two_stage_oracle() -> str:
     """Batched two-stage twin: per-query pooled-cosine top-200, UNION
     of shortlists, exact MaxSim per query over the union, top-3 per
-    query — mirroring batched `_maxsim_stage1` + `maxsim_knn_batch`
+    query — mirroring batched `_maxsim_stage1` + `maxsim_knn(batch=True)`
     (each query ranks the whole union, a superset of its own
     shortlist)."""
     pd = [_pool_dim("e.emb", j) for j in range(1, _DIM + 1)]

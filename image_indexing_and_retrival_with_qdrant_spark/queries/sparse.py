@@ -48,7 +48,7 @@ def sparse_knn_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = term_vocabulary(docs)
     corpus = sparse_from_text(docs, vocab)
     qrow = corpus.filter(F.col("doc_id") == 0).collect()[0]
-    return sparse_knn(corpus, list(qrow.indices), list(qrow.values), k=10)
+    return sparse_knn(corpus, [(qrow.indices, qrow.values)], k=10)
 
 
 _SPARSE_IDF_ORACLE = r"""
@@ -104,8 +104,8 @@ def sparse_idf_knn_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus = sparse_from_text(docs, vocab).persist()
         corpus.count()
         qrow = corpus.filter(F.col("doc_id") == 0).collect()[0]
-    return sparse_knn(corpus, list(qrow.indices), list(qrow.values),
-                      k=10, modifier="idf")
+    return sparse_knn(corpus, [(qrow.indices, qrow.values)], k=10,
+                      modifier="idf")
 
 
 _SPARSE_SPACE_ORACLE = r"""

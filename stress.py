@@ -199,7 +199,7 @@ def maxsim_at_shape(n: int = 1_000_000, n_vecs: int = 64, dim: int = 128,
             if query_capture:
                 return maxsim_knn(
                     corpus, None, k=10, id_col="vec_id", mv_col="flat",
-                    flat_dim=dim, query_flat=qflat,
+                    flat_dim=dim, queries_flat=[qflat],
                 ).collect()
             return maxsim_knn(
                 corpus, query, k=10, id_col="vec_id", mv_col="flat",
@@ -237,14 +237,8 @@ def maxsim_at_shape(n: int = 1_000_000, n_vecs: int = 64, dim: int = 128,
         assert exact[0].vec_id == qid
         exact_ids = {r.vec_id for r in exact}
 
-        # batched queries at shape: column-join (the broadcast join
-        # duplicates every doc row Q times through Arrow) vs the
-        # captured batch (docs cross once, per-query scores
-        # posexploded). Q=4 short queries.
-        from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import (
-            maxsim_knn_batch,
-        )
-
+        # batched queries at shape: the captured batch (docs cross
+        # once, per-query scores posexploded). Q=4 short queries.
         if row_bytes <= 65536:  # calibrated at 64×128; one full extra
             qrows = corpus.filter(F.col("vec_id").isin(100, 200, 300, 400)) \
                 .select("flat").collect()  # scan is redundant at width
@@ -257,21 +251,10 @@ def maxsim_at_shape(n: int = 1_000_000, n_vecs: int = 64, dim: int = 128,
             else:
                 qflats = [[float(x) for x in r.flat[:n_qvecs * dim]]
                           for r in qrows]
-            if n <= 200_000 and dtype == "f32":  # query-column form
-                # takes float arrays only (see above)
-                qdf = spark.createDataFrame(
-                    [(i, qf) for i, qf in enumerate(qflats)],
-                    "query_idx int, query_vectors array<double>")
-                t0 = time.perf_counter()
-                maxsim_knn_batch(
-                    corpus, qdf, k=10, id_col="vec_id", mv_col="flat",
-                    query_mv_col="query_vectors", flat_dim=dim).collect()
-                timings["batch4_querycol"] = round(
-                    time.perf_counter() - t0, 2)
             t0 = time.perf_counter()
-            bout = maxsim_knn_batch(
+            bout = maxsim_knn(
                 corpus, None, k=10, id_col="vec_id", mv_col="flat",
-                flat_dim=dim, queries_flat=qflats).collect()
+                flat_dim=dim, queries_flat=qflats, batch=True).collect()
             timings["batch4_captured"] = round(time.perf_counter() - t0, 2)
             assert {r.query_idx for r in bout} == {0, 1, 2, 3}
 
@@ -295,7 +278,7 @@ def maxsim_at_shape(n: int = 1_000_000, n_vecs: int = 64, dim: int = 128,
         ids = [r.vec_id for r in short.collect()]
         two = maxsim_knn(
             corpus.filter(F.col("vec_id").isin(ids)), None, k=10,
-            id_col="vec_id", mv_col="flat", flat_dim=dim, query_flat=qflat,
+            id_col="vec_id", mv_col="flat", flat_dim=dim, queries_flat=[qflat],
         ).collect()
         timings[f"two_stage_rescore{rescore}"] = round(
             time.perf_counter() - t0, 2)
@@ -334,8 +317,8 @@ def mv_quant_at_shape(n: int = 100_000, n_vecs: int = 1030,
     import numpy as _np
 
     from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import (
+        maxsim_capture_udf,
         maxsim_knn,
-        maxsim_score_codes_multi_udf,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.knn import dense_knn
     from image_indexing_and_retrival_with_qdrant_spark.operators.sq import (
@@ -399,7 +382,7 @@ def mv_quant_at_shape(n: int = 100_000, n_vecs: int = 1030,
         t0 = time.perf_counter()
         exact = maxsim_knn(corpus, None, k=10, id_col="vec_id",
                            mv_col="flat", flat_dim=dim,
-                           query_flat=qflat).collect()
+                           queries_flat=[qflat]).collect()
         timings["exact_scan_f16"] = round(time.perf_counter() - t0, 2)
         exact_ids = {r.vec_id for r in exact}
 
@@ -407,8 +390,8 @@ def mv_quant_at_shape(n: int = 100_000, n_vecs: int = 1030,
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        str(max(16, (32 << 20) // code_bytes)))
         t0 = time.perf_counter()
-        score = F.element_at(maxsim_score_codes_multi_udf(
-            dim, mins, steps, [qflat])(F.col("codes")), 1)
+        score = maxsim_capture_udf(dim, [qflat], sq=(mins, steps))(
+            F.col("codes"))[0]
         short = global_topk(
             codes.select("vec_id", F.round(score, 6).alias("score")),
             [("score", False), ("vec_id", True)], m)
@@ -420,7 +403,7 @@ def mv_quant_at_shape(n: int = 100_000, n_vecs: int = 1030,
         quant = maxsim_knn(
             corpus.filter(F.col("vec_id").isin(ids)), None, k=10,
             id_col="vec_id", mv_col="flat", flat_dim=dim,
-            query_flat=qflat).collect()
+            queries_flat=[qflat]).collect()
         timings[f"quant_total_rescore{m}"] = round(
             time.perf_counter() - t0, 2)
         quant_recall = len({r.vec_id for r in quant} & exact_ids) / 10
@@ -437,7 +420,7 @@ def mv_quant_at_shape(n: int = 100_000, n_vecs: int = 1030,
         two = maxsim_knn(
             corpus.filter(F.col("vec_id").isin(pids)), None, k=10,
             id_col="vec_id", mv_col="flat", flat_dim=dim,
-            query_flat=qflat).collect()
+            queries_flat=[qflat]).collect()
         timings[f"two_stage_rescore{m}"] = round(
             time.perf_counter() - t0, 2)
         two_recall = len({r.vec_id for r in two} & exact_ids) / 10
@@ -1164,7 +1147,7 @@ def hnsw_stress(n: int = 1_000_000, dim: int = 64,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.hnsw import (
         hnsw_layout,
-        hnsw_layout_search,
+        hnsw_layout_search_batch,
     )
     from image_indexing_and_retrival_with_qdrant_spark.operators.topk import (
         global_topk,
@@ -1220,8 +1203,9 @@ def hnsw_stress(n: int = 1_000_000, dim: int = 64,
 
         def timed_search(qid, segments=None, layout=lay):
             t0 = time.perf_counter()
-            cand = sorted(r.vec_id for r in hnsw_layout_search(
-                layout, qvecs[qid], ef=32, segments=segments).collect())
+            cand = sorted(r.vec_id for r in hnsw_layout_search_batch(
+                layout, [(0, qvecs[qid])], ef=32,
+                segments=segments).collect())
             got = {r.vec_id for r in global_topk(
                 corpus.filter(F.col("vec_id").isin(cand)).crossJoin(
                     F.broadcast(qdf(qid))).select(

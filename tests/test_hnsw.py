@@ -10,7 +10,7 @@ from image_indexing_and_retrival_with_qdrant_spark.operators.hnsw import (
     derive_entry,
     hnsw_build_np,
     hnsw_layout,
-    hnsw_layout_search,
+    hnsw_layout_search_batch,
     hnsw_level,
     hnsw_search_np,
 )
@@ -113,7 +113,8 @@ def test_spark_layout_matches_driver_twin(spark, sf_smoke):
 
     emb = load(spark, sf_smoke, "embeddings")
     lay = hnsw_layout(emb, n_segments=4, m=8, ef_construct=64)
-    got = hnsw_layout_search(lay, _np_query_vec(sf_smoke), ef=32).collect()
+    got = hnsw_layout_search_batch(
+        lay, [(0, _np_query_vec(sf_smoke))], ef=32).collect()
     assert sorted(r.vec_id for r in got) == \
         _np_hnsw_candidates(sf_smoke, 32)
 
@@ -125,12 +126,9 @@ def test_registered_queries_hash_match(spark, sf_smoke):
 
 
 def test_batch_search_matches_single(spark, sf_smoke):
-    """The batched per-segment search returns each query's single-query
-    candidate set exactly (one shared deserialize is an execution
-    detail, not a semantic one)."""
-    from image_indexing_and_retrival_with_qdrant_spark.operators.hnsw import (
-        hnsw_layout_search_batch,
-    )
+    """The walk over a batch returns each query's one-query candidate
+    set exactly (one shared deserialize is an execution detail, not a
+    semantic one)."""
     from image_indexing_and_retrival_with_qdrant_spark.queries.hnsw import (
         _hnsw_index,
         _np_query_vec,
@@ -140,8 +138,8 @@ def test_batch_search_matches_single(spark, sf_smoke):
     qs = [(q, _np_query_vec(sf_smoke, q)) for q in (1, 2)]
     batch = hnsw_layout_search_batch(lay, qs, ef=16).collect()
     for qid, qv in qs:
-        single = sorted(r.vec_id for r in
-                        hnsw_layout_search(lay, qv, ef=16).collect())
+        single = sorted(r.vec_id for r in hnsw_layout_search_batch(
+            lay, [(qid, qv)], ef=16).collect())
         got = sorted(r.vec_id for r in batch if r.query_id == qid)
         assert got == single
 
@@ -169,8 +167,8 @@ def test_routed_probes_only_nprobe_segments(spark, sf_smoke):
 
     lay = _hnsw_index(spark, sf_smoke, routed=True)
     probe = _np_probe(sf_smoke, 4)
-    got = hnsw_layout_search(lay, _np_query_vec(sf_smoke), ef=32,
-                             segments=probe)
+    got = hnsw_layout_search_batch(lay, [(0, _np_query_vec(sf_smoke))],
+                                   ef=32, segments=probe)
     segs = {r.segment for r in got.select("segment").distinct().collect()}
     assert segs <= set(probe)
     plan = got._jdf.queryExecution().explainString(

@@ -806,14 +806,15 @@ def _spy_graph_calls(monkeypatch):
     import image_indexing_and_retrival_with_qdrant_spark.operators.hnsw as H
 
     calls = {"n": 0, "ef": None}
-    orig = H.hnsw_layout_search
+    orig = H.hnsw_layout_search_batch
 
-    def spy(layout, qvec, ef, **kw):
+    def spy(layout, queries, ef, **kw):
+        assert len(queries) == 1  # a single search walks one query
         calls["n"] += 1
         calls["ef"] = ef
-        return orig(layout, qvec, ef, **kw)
+        return orig(layout, queries, ef, **kw)
 
-    monkeypatch.setattr(H, "hnsw_layout_search", spy)
+    monkeypatch.setattr(H, "hnsw_layout_search_batch", spy)
     return calls
 
 

@@ -30,25 +30,25 @@ def test_flat_scorer_matches_nested(spark, sf_smoke):
 
 
 def test_stacked_batch_scorer_matches_relational(spark, sf_smoke):
-    """The stacked fast path with DISTINCT queries per row (uniform
-    lengths → one batched matmul) must equal the pure-relational
-    scorer per query — pins that the (B, q, n) matmul slices are the
-    same dgemms the per-row loop runs, including tie order."""
+    """The captured batch scorer (uniform lengths → one stacked
+    matmul over every query) must equal the pure-relational scorer
+    per query — pins that the (B, Σq, n) matmul slices are the same
+    dgemms the per-row loop runs, including tie order."""
     from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import (
-        maxsim_knn_batch,
         maxsim_knn_exact,
     )
 
     emb = load(spark, sf_smoke, "embeddings")
     flat = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vectors"))
-    queries = emb.filter(F.col("vec_id").isin(1, 2)).select(
-        F.col("vec_id").alias("query_idx"),
-        F.col("embedding").cast("array<double>").alias("query_vectors"))
-    batched = maxsim_knn_batch(flat, queries, k=5, flat_dim=8)
+    qrows = emb.filter(F.col("vec_id").isin(1, 2)).orderBy(
+        "vec_id").collect()
+    batched = maxsim_knn(flat, None, k=5, flat_dim=8, batch=True,
+                         queries_flat=[[float(x) for x in r.embedding]
+                                       for r in qrows])
     got = {qid: [] for qid in (1, 2)}
     for r in batched.orderBy("query_idx", "rank").collect():
-        got[r.query_idx].append((r.vec_id, r.score))
+        got[r.query_idx + 1].append((r.vec_id, r.score))
     for qid in (1, 2):
         nested_q = emb.filter(F.col("vec_id") == qid).select(
             as_multivector(F.col("embedding"), 8, 8).alias("query_vectors"))
@@ -126,7 +126,7 @@ def test_search_batch_multivector_hnsw_ef_needs_hnsw_config(spark, tmp_path):
         coll.search_batch(spark, [q, q], k=2, hnsw_ef=16)
 
 def test_query_capture_matches_query_column(spark, sf_smoke):
-    """maxsim_knn(query_flat=...) (query captured in the UDF closure —
+    """maxsim_knn(queries_flat=...) (query captured in the UDF closure —
     the at-shape path, no per-row query copy) must be bit-identical to
     the query-as-column form."""
     from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import maxsim_knn
@@ -142,21 +142,21 @@ def test_query_capture_matches_query_column(spark, sf_smoke):
                           flat_dim=8).collect()
     cap_form = maxsim_knn(corpus, None, k=10, id_col="vec_id",
                           mv_col="flat", flat_dim=8,
-                          query_flat=qflat).collect()
+                          queries_flat=[qflat]).collect()
     assert [(r.vec_id, r.score) for r in col_form] == \
            [(r.vec_id, r.score) for r in cap_form]
 
 
 def test_multi_query_capture_matches_single_capture(spark, sf_smoke):
-    """The multi-query capture scorer must produce bit-identical
-    scores to the single-query capture scorer run per query, for
-    uniform and ragged doc shapes alike."""
+    """The one capture scorer gives each query of a batch the bits a
+    one-query call gives it, over every cell decode — float32
+    arrays, fp16 bytes and SQ codes (bucket centres) — for uniform
+    and ragged doc shapes alike."""
     from pyspark.sql import functions as F
 
     from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import (
-        maxsim_knn_batch,
-        maxsim_score_flat_const_udf,
-        maxsim_score_flat_multi_udf,
+        halfvec_encode_udf,
+        maxsim_capture_udf,
     )
 
     dim = 4
@@ -167,18 +167,34 @@ def test_multi_query_capture_matches_single_capture(spark, sf_smoke):
         "vec_id long, vectors array<double>")
     queries = [[1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 1.0, 0.0],
                [0.0, 1.0, 0.0, 0.0]]
-    multi = {r.vec_id: r.s for r in docs.select(
-        "vec_id", maxsim_score_flat_multi_udf(dim, queries)(
-            F.col("vectors")).alias("s")).collect()}
-    for qi, q in enumerate(queries):
-        single = {r.vec_id: r.s for r in docs.select(
-            "vec_id", maxsim_score_flat_const_udf(dim, q)(
-                F.col("vectors")).alias("s")).collect()}
-        for vid in single:
-            assert multi[vid][qi] == single[vid], (vid, qi)
+    sq = ([-1.0, -0.5, 0.0, -2.0], [0.01, 0.02, 0.005, 0.03])
+
+    @F.pandas_udf("binary")
+    def to_codes(v):  # uint8 codes, one per element
+        return v.map(lambda x: bytes(int(c * 37) % 256 for c in x))
+
+    inputs = [
+        (docs.select("vec_id", F.col("vectors").cast("array<float>")
+                     .alias("cell")), None),
+        (docs.select("vec_id", halfvec_encode_udf(F.col("vectors"))
+                     .alias("cell")), None),
+        (docs.select("vec_id", to_codes(F.col("vectors")).alias("cell")),
+         sq),
+    ]
+    for cells, params in inputs:
+        multi = {r.vec_id: r.s for r in cells.select(
+            "vec_id", maxsim_capture_udf(dim, queries, params)(
+                F.col("cell")).alias("s")).collect()}
+        for qi, q in enumerate(queries):
+            single = {r.vec_id: r.s for r in cells.select(
+                "vec_id", maxsim_capture_udf(dim, [q], params)(
+                    F.col("cell")).alias("s")).collect()}
+            assert set(single) == {1, 2, 3}
+            for vid in single:
+                assert multi[vid][qi] == single[vid][0], (params, vid, qi)
     # end-to-end batch: ranked per query_idx, same as per-query top-k
-    out = maxsim_knn_batch(docs, None, k=2, mv_col="vectors",
-                           flat_dim=dim, queries_flat=queries).collect()
+    out = maxsim_knn(docs, None, k=2, mv_col="vectors", flat_dim=dim,
+                     queries_flat=queries, batch=True).collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r.query_idx, []).append(r)
@@ -187,6 +203,11 @@ def test_multi_query_capture_matches_single_capture(spark, sf_smoke):
     # q1 = [0,1,0,0]: docs 1 and 2 both contain it exactly (score 1.0)
     # → id tie-break ranks 1 then 2
     assert [(r.vec_id, r.score) for r in by_q[1]] == [(1, 1.0), (2, 1.0)]
+    for qi, q in enumerate(queries):
+        single = maxsim_knn(docs, None, k=2, mv_col="vectors",
+                            flat_dim=dim, queries_flat=[q]).collect()
+        assert [(r.vec_id, r.score) for r in single] == \
+            [(r.vec_id, r.score) for r in by_q[qi]]
 
 
 def test_collection_search_batch_multivector_capture(spark, tmp_path):
@@ -233,7 +254,7 @@ def test_halfvec_scorer_matches_fp16_reference(spark):
 
     got = {r.vec_id: r.score for r in maxsim_knn(
         half, None, k=None, id_col="vec_id", mv_col="flat",
-        flat_dim=dim, query_flat=qflat).collect()}
+        flat_dim=dim, queries_flat=[qflat]).collect()}
     Q = np.asarray(qflat, dtype=np.float64).reshape(-1, dim)
     for i, flat in rows:
         D = np.asarray(flat, dtype=np.float16).astype(
@@ -244,10 +265,10 @@ def test_halfvec_scorer_matches_fp16_reference(spark):
     # fp32 and fp16 rankings agree at this precision/scale
     full = [r.vec_id for r in maxsim_knn(
         corpus, None, k=5, id_col="vec_id", mv_col="flat",
-        flat_dim=dim, query_flat=qflat).collect()]
+        flat_dim=dim, queries_flat=[qflat]).collect()]
     halfk = [r.vec_id for r in maxsim_knn(
         half, None, k=5, id_col="vec_id", mv_col="flat",
-        flat_dim=dim, query_flat=qflat).collect()]
+        flat_dim=dim, queries_flat=[qflat]).collect()]
     assert full == halfk
 
 
@@ -259,7 +280,7 @@ def test_halfvec_batch_scorer_and_nulls(spark):
 
     from image_indexing_and_retrival_with_qdrant_spark.operators.maxsim import (
         halfvec_encode_udf,
-        maxsim_knn_batch,
+        maxsim_knn,
     )
 
     dim = 4
@@ -273,9 +294,9 @@ def test_halfvec_batch_scorer_and_nulls(spark):
     half = half.filter(F.col("flat").isNotNull())
     qflats = [[float(x) for x in rng.standard_normal(dim)]
               for _ in range(2)]
-    out = maxsim_knn_batch(half, None, k=3, id_col="vec_id",
-                           mv_col="flat", flat_dim=dim,
-                           queries_flat=qflats).collect()
+    out = maxsim_knn(half, None, k=3, id_col="vec_id", mv_col="flat",
+                     flat_dim=dim, queries_flat=qflats,
+                     batch=True).collect()
     assert {r.query_idx for r in out} == {0, 1}
     Q0 = np.asarray(qflats[0], dtype=np.float64).reshape(-1, dim)
     best = max(

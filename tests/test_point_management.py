@@ -1065,3 +1065,48 @@ def test_schema_cache_partition_only_write_then_new_key(spark, tmp_path):
     assert "flag" in cells.columns
     assert {r.id for r in cells.filter(F.col("flag") == "hot")
             .select("id").collect()} == {5, 6}
+
+
+def test_upsert_keeps_one_file_schema(spark, tmp_path):
+    """Every main-table write leaves ONE file schema, so what a read
+    sees never depends on which file Spark samples for the schema. A
+    batch lacking a payload column an earlier ``set_payload`` added
+    appends it as typed NULL; a batch carrying a new column (plain
+    append or merge) rewrites the table with it, NULL on the old rows.
+    Values survive ``compact``."""
+    import pyarrow.parquet as pq
+
+    def footers():
+        return {frozenset(pq.read_schema(os.path.join(root, f)).names)
+                for root, _dirs, files in os.walk(coll.path)
+                for f in files if f.endswith(".parquet")}
+
+    def batch(lo, extra=None):
+        cols = "id long, embedding array<double>"
+        rows = [(i, [float(i), 1.0, 0.0, 0.5]) for i in range(lo, lo + 10)]
+        if extra:
+            cols += f", {extra} string"
+            rows = [r + (f"{extra}{r[0]}",) for r in rows]
+        return spark.createDataFrame(rows, cols)
+
+    coll = create_collection(str(tmp_path), "one", dim=4, normalize=False)
+    coll.upsert(spark, batch(0))
+    coll.set_payload(spark, {"tier": 2}, [1])
+    coll.upsert(spark, batch(10))
+    assert len(footers()) == 1
+    coll.upsert(spark, batch(20, "color"))
+    coll.upsert(spark, batch(25, "shape"), mode="merge")
+    assert len(footers()) == 1
+    coll.upsert(spark, batch(35))
+    assert len(footers()) == 1
+    for _ in range(2):
+        got = {r.id: (r.tier, r.color, r.shape) for r in coll.read(spark)
+               .select("id", "tier", "color", "shape").collect()}
+        assert len(got) == 45
+        assert got[1] == (2, None, None) and got[0] == (None, None, None)
+        assert got[20] == (None, "color20", None)
+        assert got[25] == (None, None, "shape25")  # merge replaced 25..29
+        assert got[34] == (None, None, "shape34")
+        assert got[35] == (None, None, None)
+        coll.compact(spark)
+        assert len(footers()) == 1

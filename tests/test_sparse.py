@@ -45,7 +45,7 @@ def test_sparse_knn_exact_dot(spark):
     x_id, y_id = [r.term_id for r in
                   vocab.filter(F.col("term").isin("x", "y"))
                   .orderBy("term").collect()]
-    out = sparse_knn(corpus, [x_id, y_id], [1.0, 2.0], k=10).collect()
+    out = sparse_knn(corpus, [([x_id, y_id], [1.0, 2.0])], k=10).collect()
     assert [(r.doc_id, r.score) for r in out] == [(1, 4.0), (2, 2.0)]
 
 
@@ -57,7 +57,7 @@ def test_self_query_score_is_norm_squared(spark, sf_smoke):
     vocab = term_vocabulary(docs)
     corpus = sparse_from_text(docs, vocab)
     q = corpus.filter(F.col("doc_id") == 0).collect()[0]
-    out = sparse_knn(corpus, list(q.indices), list(q.values), k=1000).collect()
+    out = sparse_knn(corpus, [(q.indices, q.values)], k=1000).collect()
     self_score = {r.doc_id: r.score for r in out}[0]
     assert self_score == sum(v * v for v in q.values)
 
@@ -119,13 +119,13 @@ def test_sparse_idf_downweights_common_terms(spark):
          (1, [0], [3.0]),           # spams the common term
          (2, [0, 1], [1.0, 1.0])],  # true match on the rare term
         "doc_id int, indices array<bigint>, values array<double>")
-    plain = sparse_knn(corpus, [0, 1], [1.0, 1.0], k=3).collect()
+    plain = sparse_knn(corpus, [([0, 1], [1.0, 1.0])], k=3).collect()
     assert plain[0].doc_id == 1  # tf dot rewards the spam
-    idf = sparse_knn(corpus, [0, 1], [1.0, 1.0], k=3,
+    idf = sparse_knn(corpus, [([0, 1], [1.0, 1.0])], k=3,
                      modifier="idf").collect()
     assert {idf[0].doc_id, idf[1].doc_id} == {0, 2}  # rare term wins
     with pytest.raises(ValueError, match="unknown sparse modifier"):
-        sparse_knn(corpus, [0], [1.0], modifier="bm25")
+        sparse_knn(corpus, [([0], [1.0])], modifier="bm25")
 
 
 def test_sparse_space_collection_surface(spark, sf_smoke, tmp_path):
@@ -158,7 +158,7 @@ def test_sparse_space_collection_surface(spark, sf_smoke, tmp_path):
     # ranking must equal the operator-level scorer (self-match is NOT
     # guaranteed first under IDF — rare-term-heavy docs may outscore)
     full = coll.search(spark, qv, k=5).collect()
-    ref = sparse_knn(enc, qv[0], qv[1], k=5, modifier="idf").collect()
+    ref = sparse_knn(enc, [qv], k=5, modifier="idf").collect()
     assert [(r.id, r.score) for r in full] == \
         [(r.doc_id, r.score) for r in ref]
     assert "lang" in full[0].asDict()
@@ -213,7 +213,7 @@ def test_sparse_space_collection_surface(spark, sf_smoke, tmp_path):
         mpts.select(F.col("id").alias("doc_id"),
                     F.col("sparse__sidx").alias("indices"),
                     F.col("sparse__sval").alias("values")),
-        qv[0], qv[1], k=3).collect()
+        [qv], k=3).collect()
     assert dense_hits.count() == 3
     assert [(r.id, r.score) for r in sparse_hits] == \
         [(r.doc_id, r.score) for r in mref]
@@ -223,8 +223,11 @@ def test_sparse_space_collection_surface(spark, sf_smoke, tmp_path):
 
 
 def test_sparse_batch_matches_single(spark, sf_smoke, tmp_path):
-    """sparse search_batch ≡ per-query sparse search, both plain and
-    IDF-modified, with the single shared posting pass."""
+    """sparse search_batch ≡ per-query sparse search — plain and
+    IDF-modified, over the array form and the postings layout
+    (``full_scan_threshold`` crossed), filtered and not — with the
+    single shared posting pass. Every query of a batch is validated
+    like a single one."""
     from image_indexing_and_retrival_with_qdrant_spark.catalog import (
         create_collection,
     )
@@ -237,27 +240,32 @@ def test_sparse_batch_matches_single(spark, sf_smoke, tmp_path):
                    F.col("indices").alias("text__sidx"),
                    F.col("values").alias("text__sval"))
         .join(docs.select(F.col("doc_id").alias("id"), "lang"), on="id"))
-    for mod in (None, "idf"):
+    qrows = enc.filter(F.col("doc_id").isin(0, 1)).orderBy(
+        "doc_id").collect()
+    qs = [(list(r.indices), list(r.values)) for r in qrows]
+    en = F.col("lang") == "en"
+    for mod, fst in ((None, None), ("idf", None), ("idf", 10)):
         coll = create_collection(
-            str(tmp_path), f"sp_{mod}",
-            sparse_vectors={"text": {"modifier": mod}})
+            str(tmp_path), f"sp_{mod}_{fst}", sparse_vectors={
+                "text": {"modifier": mod, "full_scan_threshold": fst}})
         coll.upsert(spark, points)
-        qrows = enc.filter(F.col("doc_id").isin(0, 1)).orderBy(
-            "doc_id").collect()
-        qs = [(list(r.indices), list(r.values)) for r in qrows]
-        batch = coll.search_batch(spark, qs, k=3).collect()
-        for qi, q in enumerate(qs):
-            single = coll.search(spark, q, k=3).collect()
-            got = [(r.id, r.score) for r in batch if r.query_idx == qi]
-            assert got == [(r.id, r.score) for r in single], (mod, qi)
+        assert bool(coll.meta["sparse_vectors"]["text"].get(
+            "postings_built")) == (fst is not None)
+        for flt in (None, en):
+            batch = coll.search_batch(spark, qs, k=3,
+                                      query_filter=flt).collect()
+            for qi, q in enumerate(qs):
+                single = coll.search(spark, q, k=3,
+                                     query_filter=flt).collect()
+                got = [(r.id, r.score) for r in batch if r.query_idx == qi]
+                assert got == [(r.id, r.score) for r in single], \
+                    (mod, fst, flt, qi)
+        with pytest.raises(ValueError, match="length mismatch"):
+            coll.search_batch(spark, [qs[0], ([1, 2, 3], [1.0])], k=3)
     # filtered batch keeps collection-wide IDF stats (scores unchanged)
-    coll = create_collection(str(tmp_path), "sp_idf",
-                             sparse_vectors={"text": {"modifier": "idf"}})
-    coll.upsert(spark, points)
     allsc = {(r.query_idx, r.id): r.score for r in
              coll.search_batch(spark, qs, k=coll.count(spark)).collect()}
-    filt = coll.search_batch(spark, qs, k=3,
-                             query_filter=F.col("lang") == "en").collect()
+    filt = coll.search_batch(spark, qs, k=3, query_filter=en).collect()
     langs = {r.id: r.lang for r in points.select("id", "lang").collect()}
     assert filt and all(langs[r.id] == "en" for r in filt)
     assert all(allsc[(r.query_idx, r.id)] == r.score for r in filt)
@@ -287,7 +295,7 @@ def test_update_collection_sparse_modifier(spark, sf_smoke, tmp_path):
     # re-open: the meta change must be durable
     coll2 = Collection(str(tmp_path), "sp")
     idf = [(r.id, r.score) for r in coll2.search(spark, qv, k=5).collect()]
-    ref = sparse_knn(enc, qv[0], qv[1], k=5, modifier="idf").collect()
+    ref = sparse_knn(enc, [qv], k=5, modifier="idf").collect()
     assert idf == [(r.doc_id, r.score) for r in ref]
     assert idf != plain
     with _pytest.raises(ValueError, match="unknown sparse space"):
@@ -325,7 +333,7 @@ def test_sparse_recommend(spark, sf_smoke, tmp_path):
         q[i] = q.get(i, 0.0) - v
     items = sorted(q.items())
     ref = sparse_knn(enc.filter(~F.col("doc_id").isin(0, 1, 2)),
-                     [i for i, _ in items], [v for _, v in items],
+                     [([i for i, _ in items], [v for _, v in items])],
                      k=5).collect()
     assert [(r.id, r.score) for r in got] == \
         [(r.doc_id, r.score) for r in ref]
